@@ -14,6 +14,9 @@ wins CPU on a few gates but loses driver-subset wall geomean is a
 regression by the driver's ground truth (the round-16 lesson).
 
 Usage: benchdiff.py BASELINE.json CANDIDATE.json [--top N]
+
+Exits 1, naming the query, when a headline query is missing from either
+file.
 """
 import json
 import math
@@ -45,6 +48,13 @@ def main():
     dropped = sorted(set(bq) - set(cq))
     if dropped:
         print(f"!! queries dropped from candidate: {dropped}")
+    # a headline geomean over a subset silently leaves the missing queries out
+    missing = [(side, q) for side, qs in (("baseline", bq), ("candidate", cq))
+               for q in HEADLINE if q not in qs]
+    if missing:
+        for side, q in missing:
+            print(f"!! headline query {q} missing from {side}", file=sys.stderr)
+        sys.exit(1)
     speedups = {q: bq[q] / cq[q] for q in common if cq[q] > 0}
     norm = {q: (bq[q] / bcal) / (cq[q] / ccal) for q in common if cq[q] > 0}
     head = [q for q in HEADLINE if q in speedups]

@@ -11,8 +11,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
 import graft.filter.FilterCompiler
-import graft.queryengine.{Completion, FlowTable, LineInput, LineQuery,
-  LineStats, SankeyInput, SankeyQuery, Widgets}
+import graft.queryengine.{CodegenPosture, Completion, FlowTable, LineInput,
+  LineQuery, LineStats, SankeyInput, SankeyQuery, Widgets}
 import graft.schema.Schema
 
 /** Thin JSON API mirroring the reference console's endpoints (SURVEY §3,
@@ -26,6 +26,32 @@ import graft.schema.Schema
   * Built on the JDK HttpServer + Spark's bundled Jackson (zero extra
   * dependencies); the engine itself stays a library — this is the optional
   * last layer of SURVEY §7.
+  *
+  * INTERPRETED POSTURE for small stores: a cache miss over a main table
+  * whose stored bytes are at most the session's
+  * `autoBroadcastJoinThreshold` (the stores' small-regime bound; ≤ 0
+  * means never small) runs with whole-stage codegen off and
+  * `spark.sql.codegen.factoryMode=NO_CODEGEN`. Spark compiles Java for
+  * every plan it has not seen, and console plans are rarely seen twice:
+  * range bounds arrive as long/timestamp literals inlined into the
+  * generated code, and the JVM-wide codegen cache (100 entries) evicts
+  * the rest. At console-store scale that compile time was most of a
+  * miss, while interpreting a few MB costs less than compiling for it
+  * (ClickHouse, which the reference console targets, likewise
+  * interprets and compiles only expressions it has seen repeatedly).
+  * Rollups are reductions of the main table, so its size bounds every
+  * table the resolver can route to. The size comes from
+  * [[FlowTable.bytesAtMost]] (a cap-bounded file listing, no Spark job);
+  * a table without it keeps the compiled path, as does every store
+  * above the bound ([[CodegenPosture]]).
+  *
+  * The posture is a session-wide [[graft.ConfWindow]]. That is safe
+  * because `HttpServer` dispatches requests on one thread, so requests
+  * never overlap, and stream micro-batches run in a cloned session the
+  * window does not touch. The remaining caveat: an ad-hoc query run on
+  * the same session while a request is in flight also runs interpreted
+  * — correct, only slower. Give such traffic its own
+  * `spark.newSession()`.
   */
 final class ConsoleApi(spark: SparkSession, schema: Schema,
     tables: Seq[FlowTable], port: Int = 0,
@@ -127,7 +153,8 @@ final class ConsoleApi(spark: SparkSession, schema: Schema,
   private def contextCached(path: String, ttlMs: Long)(key: Req => String)(
       f: Req => ObjectNode): Unit = {
     registeredTtls(path) = ttlMs
-    context(path)(r => cache.getOrCompute(key(r), ttlMs)(f(r)))
+    context(path)(r => cache.getOrCompute(key(r), ttlMs)(
+      CodegenPosture.interpretedIfSmall(spark, tables)(f(r))))
   }
 
   private def strings(node: JsonNode, field: String): Seq[String] =

@@ -26,7 +26,13 @@ final case class FlowTable(
     /** Newest-data probe for partitioned stores (one-directory read);
       * consumers fall back to a MAX() aggregation when absent.
       */
-    newestHint: Option[() => Option[Timestamp]] = None) {
+    newestHint: Option[() => Option[Timestamp]] = None,
+    /** Size probe for stored tables: whether the table's stored bytes
+      * are at most the given cap, from a file listing that stops once
+      * it passes the cap (no Spark job). Consumers treat a table
+      * without it as large.
+      */
+    bytesAtMost: Option[Long => Boolean] = None) {
 
   /** Scan for a time range: partition-pruned when the store supports it.
     * Callers still apply their exact `TimeReceived` predicate — the

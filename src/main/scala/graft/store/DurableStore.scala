@@ -54,8 +54,7 @@ private[graft] trait DurableStore {
     val it = fs.listFiles(dir, true)
     while (it.hasNext) {
       val st = it.next()
-      val n = st.getPath.getName
-      if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) {
+      if (StoreListing.isDataFile(st)) {
         bytes += st.getLen
         files += 1
       }
@@ -198,26 +197,11 @@ private[graft] trait DurableStore {
     */
   protected def invertStoreRows: Long = 4000000L
 
-  /** Whether `table`'s data bytes are ≤ `cap` — one recursive listing
-    * that stops as soon as the cap is exceeded, so a huge store pays a
-    * bounded prefix of its file walk, never the whole listing. Missing
-    * table counts as small (nothing stored).
+  /** Whether `table`'s data bytes are ≤ `cap` ([[StoreListing.bytesAtMost]]:
+    * one cap-bounded listing; a missing table counts as small).
     */
-  protected def tableBytesAtMost(table: String, cap: Long): Boolean = {
-    val dir = hPath(s"$path/$table")
-    if (!fs.exists(dir)) return true
-    var bytes = 0L
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) {
-        bytes += st.getLen
-        if (bytes > cap) return false
-      }
-    }
-    true
-  }
+  protected def tableBytesAtMost(table: String, cap: Long): Boolean =
+    StoreListing.bytesAtMost(fs, hPath(s"$path/$table"), cap)
 
   /** [[probeAntiJoin]]'s size-regime dispatch: whether `table` is
     * SMALL enough that the plain `probe LEFT ANTI stored` beats the
@@ -259,8 +243,7 @@ private[graft] trait DurableStore {
     val it = fs.listFiles(dir, true)
     while (it.hasNext) {
       val st = it.next()
-      val n = st.getPath.getName
-      if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) {
+      if (StoreListing.isDataFile(st)) {
         bytes += st.getLen
         // past max(plainCap, 10 GiB) neither gate can pass: the byte
         // gate by definition, the footer gate because that many bytes
@@ -407,10 +390,10 @@ private[graft] trait DurableStore {
     * tables cross the ceiling and the next ingest adapts again);
     * bulk loads are the from-scratch pipelines' territory by the
     * stores' own scaladoc. Suspension is a reference-counted
-    * session-conf toggle — concurrent ingests (two streams, one
-    * session) may overlap, and AQE-off is always CORRECT (execution
-    * granularity, not semantics), so an overlap at worst costs a
-    * concurrent big query its adaptivity for the window.
+    * session-conf window ([[graft.ConfWindow]]) — concurrent ingests
+    * (two streams, one session) may overlap, and AQE-off is always
+    * CORRECT (execution granularity, not semantics), so an overlap at
+    * worst costs a concurrent big query its adaptivity for the window.
     *
     * DEPLOYMENT NOTE — session isolation: the toggle is scoped to THIS
     * store's SparkSession, never the whole SparkContext. A long-lived
@@ -460,8 +443,10 @@ private[graft] trait DurableStore {
       val width = math.min(sessionParts.toLong, math.max(
         smallRegimeMinPartitions.toLong,
         (sizes.sum + advisory - 1) / advisory)).toInt
-      DurableStore.AdaptiveToggle.enter(spark, width)
-      try f finally DurableStore.AdaptiveToggle.exit(spark)
+      // the OUTERMOST window's width holds — a nested window shares
+      // its ingest's consulted tables
+      graft.ConfWindow(spark, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> width.toString)(f)
     }
   }
 
@@ -722,31 +707,21 @@ private[graft] trait DurableStore {
   private def localizeIfSmall(side: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val df = spark.read.schema(schema).parquet(side)
-    var bytes = 0L
-    val it = fs.listFiles(hPath(side), true)
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (st.isFile && !n.startsWith("_") && !n.startsWith("."))
-        bytes += st.getLen
-    }
-    if (bytes > DurableStore.localAcceptBytes) df
-    else try spark.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
-    catch {
-      // type-mismatch safety net (ADVICE r16): the explicit schema comes
-      // from the REPLAYING batch's id column — if a replay ever presents
-      // the id with a different type than the session that wrote the
-      // sidecar (int vs long), the schema'd read can fail where the old
-      // self-describing read did not. Fall back to inference + cast so
-      // a drifted replay degrades to one inference job, never a crash.
-      case scala.util.control.NonFatal(_) =>
-        val inferred = spark.read.parquet(side)
-          .select(schema.fields.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-        spark.createDataFrame(
-          java.util.Arrays.asList(inferred.collect(): _*), inferred.schema)
-    }
+    def local(d: DataFrame): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(d.collect(): _*), d.schema)
+    if (!StoreListing.bytesAtMost(fs, hPath(side),
+        DurableStore.localAcceptBytes)) df
+    else
+      // type-mismatch safety net: the explicit schema comes from the
+      // REPLAYING batch's id column — if a replay ever presents the id
+      // with a different type than the session that wrote the sidecar
+      // (long vs int), the schema'd read fails where a self-describing
+      // read does not. Fall back to inference + cast so a drifted
+      // replay degrades to one inference job, never a crash; any other
+      // failure (IO, a vanished file) surfaces as itself.
+      DurableStore.onSchemaMismatch(local(df))(
+        local(spark.read.parquet(side).select(schema.fields.map(f =>
+          col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)))
   }
 
   /** RDD ids of the current un-id'd ingest's accepted-set checkpoint,
@@ -1011,63 +986,35 @@ private[graft] object DurableStore {
             e: java.util.Map.Entry[String, V]): Boolean = size() > cap
       })
 
-  /** Reference-counted session-wide AQE suspension for
-    * [[DurableStore.withSmallRegimeScheduling]]: first enter saves
-    * the session's setting and disables, last exit restores — keyed
-    * per session so two stores on one session nest correctly.
+  /** Whether `e` (or any cause in its chain) is a read-side type
+    * mismatch: parquet data whose physical type cannot convert to the
+    * requested schema's, which Spark raises as a
+    * `SchemaColumnConvertNotSupportedException` wrapped in a
+    * `SparkException` / `QueryExecutionException`.
     */
-  private object AdaptiveToggle {
-    private val key = "spark.sql.adaptive.enabled"
-    private val partsKey = "spark.sql.shuffle.partitions"
-    /** per-session: (depth, saved AQE, saved shuffle width) — the saves
-      * capture PRESENCE, not just value (see enter).
-      */
-    private val state = new java.util.IdentityHashMap[SparkSession,
-      (Int, Option[String], Option[String])]()
-    def enter(spark: SparkSession, parts: Int): Unit = state.synchronized {
-      Option(state.get(spark)) match {
-        case None =>
-          // capture presence, not just value: exit restores by UNSET
-          // when the session never set the key, so the window leaves
-          // no materialized explicit setting behind (and a session
-          // that was tracking the global default keeps tracking it).
-          // getOption can't detect presence (it surfaces the
-          // registered default), so presence = an explicitly-set
-          // session entry.
-          def saved(k: String): Option[String] =
-            if (spark.conf.getAll.contains(k)) Some(spark.conf.get(k))
-            else None
-          val savedAqe = saved(key)
-          val savedParts = saved(partsKey)
-          spark.conf.set(key, "false")
-          // the window's shuffle width (derived from the regime's own
-          // measured bytes); the OUTERMOST window's width wins — a
-          // nested window shares its ingest's consulted tables
-          spark.conf.set(partsKey, parts.toString)
-          state.put(spark, (1, savedAqe, savedParts))
-          ()
-        case Some((d, a, p)) =>
-          state.put(spark, (d + 1, a, p))
-          ()
-      }
+  private[store] def isSchemaMismatch(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: org.apache.spark.sql.execution.datasources
+        .SchemaColumnConvertNotSupportedException => true
+      case _ => false
     }
-    def exit(spark: SparkSession): Unit = state.synchronized {
-      Option(state.get(spark)).foreach { case (d, a, p) =>
-        if (d <= 1) {
-          a match {
-            case Some(v) => spark.conf.set(key, v)
-            case None => spark.conf.unset(key)
-          }
-          p match {
-            case Some(v) => spark.conf.set(partsKey, v)
-            case None => spark.conf.unset(partsKey)
-          }
-          state.remove(spark)
-        } else state.put(spark, (d - 1, a, p))
-        ()
-      }
+
+  /** `primary`, or `fallback` when `primary` fails on a schema mismatch
+    * ([[isSchemaMismatch]]) — any other failure propagates untouched.
+    * When the fallback fails as well, its exception is thrown with the
+    * first one attached as suppressed, so neither cause is lost.
+    */
+  private[store] def onSchemaMismatch[T](primary: => T)(fallback: => T): T =
+    try primary
+    catch {
+      case first: Exception if isSchemaMismatch(first) =>
+        try fallback
+        catch {
+          case second: Exception =>
+            second.addSuppressed(first)
+            throw second
+        }
     }
-  }
 
   /** The one key=value parse of a `store.meta` shape pin — shared by
     * instance validation and operational reopen, so the two can never

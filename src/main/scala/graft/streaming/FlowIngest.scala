@@ -31,9 +31,11 @@ object FlowIngest {
       .trigger(trigger)
       // batch id flows through to the store's per-table commit markers:
       // foreachBatch is at-least-once, and a replayed id must not append
-      // its rows twice (see FlowStore.writeBatch)
+      // its rows twice. writeBatch skips an empty batch on its own
+      // cached frame: probing `batch` here would execute the stream's
+      // plan twice and double every observe() count inside it
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) store.writeBatch(enrich(batch), Some(id))
+        store.writeBatch(enrich(batch), Some(id))
       }
       .start()
 

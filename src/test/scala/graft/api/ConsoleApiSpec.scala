@@ -18,9 +18,13 @@ class ConsoleApiSpec extends SparkSpec {
   private val client = HttpClient.newHttpClient()
   private val mapper = new ObjectMapper()
 
-  private def send(method: String, path: String, body: String) = {
+  private def send(method: String, path: String, body: String) =
+    sendTo(api, method, path, body)
+
+  private def sendTo(to: ConsoleApi, method: String, path: String,
+      body: String) = {
     val req = HttpRequest.newBuilder(
-      URI.create(s"http://127.0.0.1:${api.boundPort}$path"))
+      URI.create(s"http://127.0.0.1:${to.boundPort}$path"))
       .method(method, HttpRequest.BodyPublishers.ofString(body)).build()
     val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
     (resp.statusCode(), mapper.readTree(resp.body()))
@@ -245,6 +249,91 @@ class ConsoleApiSpec extends SparkSpec {
     val before = api.cache.size
     val (c4, _) = post("/api/v0/console/graph/line", """{"start":"nope"}""")
     assert(c4 == 400 && api.cache.size == before)
+  }
+
+  test("every endpoint answers identically interpreted and compiled") {
+    // a FlowStore carries the size probe that selects the posture; the
+    // broadcast threshold forces either side (≤ 0 means never small)
+    val root = java.nio.file.Files.createTempDirectory("posture").toString
+    val store = new graft.store.FlowStore(spark, root)
+    store.writeBatch(EventFlows.flows(spark, "/root/testdata/sf0.001"))
+    val posed = new ConsoleApi(spark, FlowSchema.schema, store.tables()).start()
+    val range = """"start":"2024-01-01T00:00:00Z","end":"2024-01-08T00:00:00Z""""
+    val requests = Seq(
+      "POST" -> "/api/v0/console/graph/line" -> s"""{$range,"points":7,
+        |"dimensions":["InIfName"],"limit":2,"units":"pps"}""".stripMargin,
+      "POST" -> "/api/v0/console/graph/line" -> s"""{$range,"points":14,
+        |"dimensions":["SrcCountry"],"limit":3,"bidirectional":true,
+        |"filter":"InIfBoundary = external"}""".stripMargin,
+      "POST" -> "/api/v0/console/graph/line" -> """{"start":"2024-01-03T00:00:00Z",
+        |"end":"2024-01-03T12:00:00Z","points":12,"dimensions":["SrcPort"],
+        |"limit":3,"previous-period":true}""".stripMargin,
+      "POST" -> "/api/v0/console/graph/sankey" -> s"""{$range,
+        |"dimensions":["SrcCountry","DstCountry"],"limit":3}""".stripMargin,
+      "POST" -> "/api/v0/console/graph/table-interval" -> s"""{$range,"points":7}""",
+      "POST" -> "/api/v0/console/filter/validate" -> """{"filter":"SrcPort >= 1024"}""",
+      "POST" -> "/api/v0/console/filter/complete" -> """{"what":"SrcAddr "}""",
+      "GET" -> "/api/v0/console/widget/top/protocol" -> "",
+      "GET" -> "/api/v0/console/widget/top/src-port" -> "",
+      "GET" -> "/api/v0/console/widget/graph?points=24" -> "",
+      "GET" -> "/api/v0/console/widget/flow-rate" -> "",
+      "GET" -> "/api/v0/console/widget/flow-last" -> "",
+      "GET" -> "/api/v0/console/widget/exporters" -> "")
+    // which executions ran whole-stage generated code
+    import scala.jdk.CollectionConverters._
+    val compiled = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+        compiled.add(Plans.collectWithSubqueries(qe.executedPlan) {
+          case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+        }.nonEmpty)
+        ()
+      }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val codegenKeys = Seq("spark.sql.codegen.factoryMode",
+      "spark.sql.codegen.wholeStage")
+    val codegenBefore = codegenKeys.map(spark.conf.getAll.get)
+    val thrKey = "spark.sql.autoBroadcastJoinThreshold"
+    val thrBefore = spark.conf.getAll.get(thrKey)
+    def answers(threshold: String): (Seq[String], Seq[Boolean]) = {
+      spark.conf.set(thrKey, threshold)
+      posed.cache.invalidateAll()
+      org.apache.spark.graft.ListenerFlush.waitUntilEmpty(spark.sparkContext)
+      compiled.clear()
+      val out = requests.map { case ((method, path), body) =>
+        val (code, json) = sendTo(posed, method, path, body)
+        assert(code == 200, s"$path answered $code: $json")
+        json.toString
+      }
+      org.apache.spark.graft.ListenerFlush.waitUntilEmpty(spark.sparkContext)
+      (out, compiled.asScala.toSeq)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val (interpreted, onPlans) = answers((1L << 30).toString)
+      val (generated, offPlans) = answers("-1")
+      assert(onPlans.nonEmpty && !onPlans.contains(true),
+        "a small store must run its requests without generated code")
+      assert(offPlans.contains(true),
+        "a store past the threshold must keep the compiled path")
+      requests.zip(interpreted.zip(generated)).foreach {
+        case ((_, body), (a, b)) =>
+          assert(a == b, s"posture changed the answer to $body")
+      }
+      // the posture window closed with its requests
+      assert(codegenKeys.map(spark.conf.getAll.get) == codegenBefore)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      thrBefore match {
+        case Some(v) => spark.conf.set(thrKey, v)
+        case None => spark.conf.unset(thrKey)
+      }
+      posed.stop()
+    }
   }
 
   override def afterAll(): Unit = {

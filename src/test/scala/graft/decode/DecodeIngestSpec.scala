@@ -152,20 +152,19 @@ class DecodeIngestSpec extends SparkSpec {
     assert(decoded.agg(max("SamplingRate")).collect()(0).getLong(0) == 30000L)
   }
 
-  test("decode drop metrics surface per cause through observe()") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
+  /** 4 good flows plus one drop of each cause: truncated protobuf, a
+    * data datagram from an exporter that never sent templates, an
+    * unknown decoder id, and an sFlow payload too short to carry a
+    * header.
+    */
+  private def dropMix: Seq[DecodePipeline.RawEnvelope] = {
     val src = Ip.parse("127.0.0.1")
-    // 4 good flows…
     val good = Seq("template", "data")
       .flatMap(n => Pcap.datagrams(pcapRes(n))).zipWithIndex.map { case (d, j) =>
         DecodePipeline.envelope(j.toLong, RawFlow.encode(RawFlow(
           timeReceived = d.tsSec, payload = d.payload, sourceAddress = src,
           decoder = RawFlow.DecoderNetflow)))
       }
-    // …plus one drop of each cause: truncated protobuf, a data datagram
-    // from an exporter that never sent templates, an unknown decoder id,
-    // and an sFlow payload too short to carry a header
     val badProto = DecodePipeline.RawEnvelope("ff", 100L,
       Array[Byte](0x08, 0x80.toByte))
     val noTemplate = Pcap.datagrams(pcapRes("data")).zipWithIndex.map {
@@ -181,17 +180,28 @@ class DecodeIngestSpec extends SparkSpec {
     val shortSflow = DecodePipeline.envelope(400L, RawFlow.encode(RawFlow(
       timeReceived = 1L, payload = Array[Byte](0, 0, 0, 5),
       sourceAddress = Ip.parse("10.2.2.2"), decoder = RawFlow.DecoderSflow)))
+    good ++ Seq(badProto) ++ noTemplate ++ Seq(unknownDecoder, shortSflow)
+  }
 
+  /** The `decode` observer's totals over a query's progress reports. */
+  private def decodeTotals(q: org.apache.spark.sql.streaming.StreamingQuery)
+      : Map[String, Long] = {
+    val metrics = q.recentProgress.toSeq
+      .flatMap(p => Option(p.observedMetrics.get("decode")))
+    ("flows" +: DecodePipeline.Drop.all.map(c => s"dropped_$c"))
+      .map(n => n -> metrics.map(_.getAs[Long](n)).sum).toMap
+  }
+
+  test("decode drop metrics surface per cause through observe()") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
     val mem = MemoryStream[DecodePipeline.RawEnvelope]
     val q = DecodePipeline.observed(mem.toDS()).writeStream
       .format("memory").queryName("obs_decode")
       .trigger(Trigger.ProcessingTime(0L)).start()
-    mem.addData(good ++ Seq(badProto) ++ noTemplate ++
-      Seq(unknownDecoder, shortSflow))
+    mem.addData(dropMix)
     q.processAllAvailable()
-    val metrics = q.recentProgress.toSeq
-      .flatMap(p => Option(p.observedMetrics.get("decode")))
-    def total(name: String): Long = metrics.map(_.getAs[Long](name)).sum
+    val total = decodeTotals(q)
     q.stop()
 
     assert(total("flows") == 4L)
@@ -203,6 +213,29 @@ class DecodeIngestSpec extends SparkSpec {
     assert(total("dropped_bad_source") == 0L)
     // drop rows never reach the sink — only decoded flows
     assert(spark.table("obs_decode").count() == 4L)
+  }
+
+  test("FlowIngest.start observes each decoded flow and drop exactly once") {
+    // the store fan-out runs several write actions over one micro-batch;
+    // the batch's plan (and the decode observer inside it) must still
+    // execute once, so the counts equal the decoder's own
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("decode-observe").toString
+    val mem = MemoryStream[DecodePipeline.RawEnvelope]
+    val q = FlowIngest.start(DecodePipeline.observed(mem.toDS()),
+      new FlowStore(spark, root), checkpoint = s"$root/_checkpoint",
+      enrich = enrich, trigger = Trigger.ProcessingTime(0L))
+    mem.addData(dropMix)
+    q.processAllAvailable()
+    val total = decodeTotals(q)
+    q.stop()
+
+    assert(total == Map("flows" -> 4L, "dropped_malformed_envelope" -> 1L,
+      "dropped_template_missing" -> 1L, "dropped_unknown_decoder" -> 1L,
+      "dropped_malformed_datagram" -> 1L, "dropped_non_encap" -> 0L,
+      "dropped_bad_source" -> 0L))
+    assert(spark.read.parquet(s"$root/flows").count() == 4L)
   }
 
   test("bounded reorder window restores seq order without a group sort") {

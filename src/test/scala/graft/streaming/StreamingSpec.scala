@@ -446,6 +446,49 @@ class FlowStoreSpec extends SparkSpec {
       .where(col("p_date") === "2024-01-01").count() > 0)
   }
 
+  test("dataNow follows appends to the newest partition, memoized between them") {
+    val root = java.nio.file.Files.createTempDirectory("store").toString
+    val store = new FlowStore(spark, root)
+    store.writeBatch(mkFlows("2024-03-01", 30))
+    val w = new graft.queryengine.Widgets(graft.schema.FlowSchema.schema,
+      store.tables())
+    val first = ts("2024-03-01T00:00:00Z").toInstant.plusSeconds(29 * 40L)
+    assert(w.dataNow().toInstant == first.plusSeconds(1))
+    // an unchanged newest partition answers from the memo: no Spark job
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(w.dataNow().toInstant == first.plusSeconds(1))
+      org.apache.spark.graft.ListenerFlush.waitUntilEmpty(spark.sparkContext)
+      assert(jobs.get() == 0, s"memoized dataNow ran ${jobs.get()} job(s)")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // a later append into the SAME date partition moves it
+    val later = mkFlows("2024-03-01", 30)
+      .withColumn("TimeReceived",
+        col("TimeReceived") + expr("INTERVAL 2 HOURS"))
+    store.writeBatch(later)
+    assert(w.dataNow().toInstant == first.plusSeconds(2 * 3600 + 1))
+    // and the size probe sees the appended bytes
+    val main = store.tables().find(_.name == "flows").get
+    assert(main.bytesAtMost.get(Long.MaxValue))
+    assert(!main.bytesAtMost.get(1L))
+  }
+
+  test("an empty batch writes nothing") {
+    val root = java.nio.file.Files.createTempDirectory("store").toString
+    val store = new FlowStore(spark, root)
+    store.writeBatch(mkFlows("2024-03-01", 1).limit(0), Some(0L))
+    assert(Seq("flows", "flows_1m", "flows_5m", "flows_1h", "exporters")
+      .forall(t => !new java.io.File(s"$root/$t").exists()))
+    assert(store.lastCommitted("flows") == -1L)
+  }
+
   test("streaming ingest fans batches through foreachBatch") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -464,10 +507,12 @@ class FlowStoreSpec extends SparkSpec {
       .withColumn("InIfBoundary", lit("external"))
       .withColumn("OutIfBoundary", lit("internal"))
     val store = new FlowStore(spark, root)
-    val q = FlowIngest.start(stream, store,
-      checkpoint = s"$root/_checkpoint", trigger = Trigger.AvailableNow())
+    // data first: AvailableNow fixes its end offset when the query
+    // starts, so rows added after start() can miss the only trigger
     mem.addData((ts("2024-03-01T00:00:10Z"), 100L, 2L, 1000L),
       (ts("2024-03-01T00:00:50Z"), 200L, 3L, 1000L))
+    val q = FlowIngest.start(stream, store,
+      checkpoint = s"$root/_checkpoint", trigger = Trigger.AvailableNow())
     q.processAllAvailable()
     q.stop()
     assert(spark.read.parquet(s"$root/flows").count() == 2)
