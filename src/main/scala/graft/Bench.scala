@@ -10,46 +10,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // experiment knobs (A/B lanes for optimization work): defaults are
-    // the driver contract's exact values — an unset environment runs
-    // the same session the driver measures
-    val shufParts =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // shuffle-writer choice: SPARK DEFAULT (200 → bypass writer below
-    // 200 reduce partitions). Round 16 shipped a session-wide sort-path
-    // default (threshold=1), validated on four store gates with a CPU
-    // lens — and the driver's wall ground truth falsified it: 17/24
-    // driver-bench queries regressed >10% (geomean 0.79), heap peak
-    // doubled, CPU rose 2–10× on untouched queries (per-task sorter
-    // setup + serialization + memory pages the bypass writer never
-    // pays, × every shuffle in 188 queries). The store gates' win came
-    // from the regime WIDTH (8 vs 32 — 4× fewer bypass files), not the
-    // writer: at width 8 the r16 A/B lanes read sort≈bypass (67.9 vs
-    // 69.4 CPU s on q_store_collapse). Scoping the sort writer to the
-    // store windows is mechanically impossible — SortShuffleManager
-    // .registerShuffle reads the threshold from its constructor
-    // SparkConf (the SparkEnv conf, immutable after context start;
-    // verified against the spark-core 4.1.2 bytecode), so no runtime
-    // session set can ever take effect. Env knob kept for A/B lanes.
-    val bypassThr =
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "200")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.shuffle.sort.bypassMergeThreshold", bypassThr)
-      // raw local fs: the default checksummed LocalFileSystem shadows
-      // EVERY created file with a .crc twin (doubling create/rename/
-      // delete metadata ops on the store dirs); file: is a local-bench
-      // substrate only — production store paths are HDFS/object-store
-      // schemes where this key is inert. Env-overridable for A/B.
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS_IMPL",
-          "org.apache.hadoop.fs.RawLocalFileSystem"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle writer: Spark's default; OPTIMIZATION_r17.md has why the
+    // round-16 sort-path default was reverted
+    val spark = Session.local("graft-bench")
     // Warmup. A parquet count() is metadata-only (row-group stats), so it
     // warms neither the vectorized reader nor any operator codegen;
     // instead (1) materialize every table's columns once, and (2) JIT the
@@ -144,7 +107,7 @@ object Bench {
       } finally src.close()
     } catch { case scala.util.control.NonFatal(_) => None }
     val cores = Runtime.getRuntime.availableProcessors.toLong
-    // Driver-JOB counter per repetition (the JobAudit lens, in the
+    // Driver-JOB counter per repetition (kept in the
     // committed artifact): job counts are MACHINE-INVARIANT — identical
     // plans schedule identical jobs regardless of machine-day — so a
     // wall-clock move at an unchanged job count reads as machine drift

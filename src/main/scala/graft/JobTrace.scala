@@ -2,14 +2,13 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-clock trace for one SparkEntry query — the drill-down
-  * behind JobAudit's totals: where a ~90-job composed store drive
-  * actually spends its wall. Prints every job's duration, call site
-  * and task count (slowest first), plus per-stage shuffle/input bytes
-  * for the slowest jobs, so the expensive ACTION inside a multi-batch
-  * lifecycle is attributable from one run.
+  * behind the bench's per-query job counts: where a ~90-job composed
+  * store drive actually spends its wall. Prints every job's duration,
+  * call site and task count (slowest first), plus per-stage
+  * shuffle/input bytes for the slowest jobs, so the expensive ACTION
+  * inside a multi-batch lifecycle is attributable from one run.
   *
   * Usage: runMain graft.JobTrace <sfDir> <query> [topN]
   */
@@ -18,25 +17,7 @@ object JobTrace {
     val sfDir = args(0)
     val name = args(1)
     val topN = if (args.length > 2) args(2).toInt else 25
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // mirror Bench's session (Spark-default bypass writer — see Bench)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "200"))
-      // raw local fs: the default checksummed LocalFileSystem shadows
-      // EVERY created file with a .crc twin (doubling create/rename/
-      // delete metadata ops on the store dirs); file: is a local-bench
-      // substrate only — production store paths are HDFS/object-store
-      // schemes where this key is inert. Env-overridable for A/B.
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS_IMPL",
-          "org.apache.hadoop.fs.RawLocalFileSystem"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-jobtrace")
     final case class Job(id: Int, start: Long, callSite: String,
         var end: Long = -1L, var tasks: Int = 0)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()

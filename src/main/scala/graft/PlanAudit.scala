@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for representative queries — the
   * scale-readiness audit loop: check filter pushdown (PushedFilters),
   * column pruning (ReadSchema), join strategies (Broadcast vs SortMerge),
@@ -10,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = Tables.session("plan-audit")
+    val spark = Session.local("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q_agg_units", "q_line", "q_dedup_minhash", "q_sim_topk",

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Builds the ×N replicated rehearsal corpora ([[ScaleRehearsal]]'s
@@ -15,13 +14,7 @@ object ReplicateCorpus {
     val src = args(0)
     val out = args(1)
     val n = args(2).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-replicate-corpus")
 
     val reps = spark.range(n).select(col("id").as("replica"))
     def replicate(table: String, idCol: String): Unit = {

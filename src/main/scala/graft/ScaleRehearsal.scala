@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.dedup.Dedup
 import graft.operators.similarity.{CosineSearch, KMeans, SemDedup}
@@ -41,14 +40,7 @@ object ScaleRehearsal {
     // id-hash bucket modulus for the durable-store sections (0 =
     // unbucketed, the default layout; see ReleaseStore.stateBuckets)
     val storeBuckets = args.lift(4).map(_.toInt).getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-scale-rehearsal")
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()

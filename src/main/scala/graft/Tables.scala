@@ -45,17 +45,4 @@ object Tables {
         case (d, _) => d
       }
     })
-
-  /** A standard local session for mains/tests. */
-  def session(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-      .getOrCreate()
-  }
 }

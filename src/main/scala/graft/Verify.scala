@@ -1,38 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Trailing query
+  * names restrict the dump to those queries; oracle_sql.json is always
+  * complete.
+  * Usage: runMain graft.Verify <sfDir> <outDir> [query...]
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // mirror Bench's session (Spark-default bypass writer — see Bench
-      // for why the r16 sort-path default was reverted)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "200"))
-      // raw local fs: the default checksummed LocalFileSystem shadows
-      // EVERY created file with a .crc twin (doubling create/rename/
-      // delete metadata ops on the store dirs); file: is a local-bench
-      // substrate only — production store paths are HDFS/object-store
-      // schemes where this key is inert. Env-overridable for A/B.
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS_IMPL",
-          "org.apache.hadoop.fs.RawLocalFileSystem"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query...]")
+    val sfDir = args(0); val outDir = args(1); val only = args.drop(2).toSet
+    val unknown = only -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = Session.local("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // Local-iteration filter: SPARK_GRAFT_ONLY=q_a,q_b runs a subset.
-    // The driver never sets it, so the gate always runs everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

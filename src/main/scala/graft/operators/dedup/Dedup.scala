@@ -1725,12 +1725,13 @@ object Dedup {
     // a quadratic blocking join
     // empties filter outside the persist (see portableHashedShingles);
     // the cached rows carry the 8-byte sketch plus the set size so the
-    // filter never re-tokenizes — codegen subexpression elimination
-    // shares the one shingles() evaluation between the two columns
+    // filter never re-tokenizes. The shingles are projected once and both
+    // columns read them: CollapseProject does not inline a non-cheap
+    // expression its consumer reads twice, so the sharing does not rest
+    // on codegen subexpression elimination
     val withSim = graft.ScratchCache.persist(graft.operators.Spread.wide(df)
-      .select(col(idCol).as("id"),
-        simhash(TextAnalysis.shingles(col(textCol))).as("sh"),
-        size(TextAnalysis.shingles(col(textCol))).as("__n")))
+      .select(col(idCol).as("id"), TextAnalysis.shingles(col(textCol)).as("__s"))
+      .select(col("id"), simhash(col("__s")).as("sh"), size(col("__s")).as("__n")))
       .where(col("__n") > 0).select(col("id"), col("sh"))
     hammingPairs(withSim, maxHamming, chunks = 4)
   }
@@ -1748,12 +1749,13 @@ object Dedup {
       maxHamming: Int = 3): DataFrame = {
     def hash48(s: Column): Column =
       graft.expressions.PortableHash.md5Prefix48(s)
-    // empties filter outside the persist — see simhashPairs
+    // empties filter outside the persist, shingles hashed once — see
+    // simhashPairs; the hashed array has one entry per shingle
     val withSim = graft.ScratchCache.persist(graft.operators.Spread.wide(df)
       .select(col(idCol).as("id"),
-        Sketches.simhash64(
-          transform(TextAnalysis.shingles(col(textCol)), hash48(_))).as("sh"),
-        size(TextAnalysis.shingles(col(textCol))).as("__n")))
+        transform(TextAnalysis.shingles(col(textCol)), hash48(_)).as("__h"))
+      .select(col("id"), Sketches.simhash64(col("__h")).as("sh"),
+        size(col("__h")).as("__n")))
       .where(col("__n") > 0).select(col("id"), col("sh"))
     hammingPairs(withSim, maxHamming, chunks = 3, strictRecall = false)
   }
@@ -1803,8 +1805,6 @@ object Dedup {
     // beats N iteration jobs; the distributed loop below is the path for
     // graphs that don't fit
     val p0count = p0.count()
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc-debug] edges=$p0count driverPath=${p0count <= driverEdgeLimit}")
     if (p0count <= driverEdgeLimit) {
       val spark = pairs.sparkSession
       import spark.implicits._

@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
 object PruneBench {
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.Tables.session("prune-bench")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("prune-bench")
     val root = java.nio.file.Files.createTempDirectory("prunebench").toString
     val store = new FlowStore(spark, root)
 

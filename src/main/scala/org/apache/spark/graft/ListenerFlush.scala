@@ -3,7 +3,7 @@ package org.apache.spark.graft
 import org.apache.spark.SparkContext
 
 /** Package-private-bridge to the listener bus's flush: per-query
-  * driver-JOB counts (graft.Bench, graft.JobAudit) delta a
+  * driver-JOB counts (graft.Bench) delta a
   * SparkListener's counters around a timed run, and the bus is async —
   * without a flush the delta can lag the jobs the run actually
   * scheduled. `LiveListenerBus.waitUntilEmpty` is `private[spark]`

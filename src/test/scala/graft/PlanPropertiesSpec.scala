@@ -36,6 +36,24 @@ class PlanPropertiesSpec extends SparkSpec {
     }
   }
 
+  test("q_dedup_simhash and its portable twin persist one shingles evaluation") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    object aqe extends AdaptiveSparkPlanHelper
+    for (name <- Seq("q_dedup_simhash", "q_dedup_simhash_port")) {
+      // a self-join reads one persisted frame through two relations
+      val cached = SparkEntry.queries(name)(spark, sf).queryExecution
+        .optimizedPlan.collect { case r: InMemoryRelation => r.cacheBuilder }
+        .distinct.map(_.cachedPlan)
+      val shingles = cached.flatMap(aqe.flatMap(_)(_.expressions.flatMap(
+        _.collect { case w: graft.expressions.WordShingles => w })))
+      ScratchCache.releaseAll(spark)
+      assert(cached.nonEmpty, s"$name persists no projection")
+      assert(shingles.size == 1,
+        s"$name evaluates word_shingles ${shingles.size} times:\n${cached.mkString("\n")}")
+    }
+  }
+
   test("q_sim_topk broadcasts queries and pushes the rank limit down") {
     val p = plan("q_sim_topk")
     assert(p.contains("BroadcastExchange"), "query side must broadcast")

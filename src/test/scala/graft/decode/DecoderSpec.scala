@@ -127,6 +127,42 @@ class DecoderSpec extends AnyFunSuite {
     assert(r.state.recordsDropped == 1)
   }
 
+  // a template id the exporter re-announces with a different field layout
+  // replaces the earlier one: later data decodes with the new layout
+  test("netflow v9: a re-announced template replaces the earlier layout") {
+    def u16(v: Int): Array[Byte] =
+      Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
+    def u32(v: Long): Array[Byte] = Array((v >> 24).toByte, (v >> 16).toByte,
+      (v >> 8).toByte, v.toByte)
+    def datagram(sets: Array[Byte]*): Array[Byte] =
+      u16(9) ++ u16(sets.length) ++ u32(0) ++ u32(1700000000L) ++ u32(1) ++
+        u32(0) ++ sets.flatten
+    // template set (id 0) announcing template 256 with (type, length) pairs
+    def template(fields: (Int, Int)*): Array[Byte] =
+      u16(0) ++ u16(8 + 4 * fields.length) ++ u16(256) ++ u16(fields.length) ++
+        fields.flatMap { case (t, l) => u16(t) ++ u16(l) }
+    def data(rec: Array[Byte]): Array[Byte] =
+      u16(256) ++ u16(4 + rec.length) ++ rec
+    val opts = DecodeOptions(DecodeOptions.TsInput)
+    // v1: IN_BYTES(1)/4, PROTOCOL(4)/1, IPV4_SRC_ADDR(8)/4
+    val v1 = NetflowDecoder.decode(datagram(template(1 -> 4, 4 -> 1, 8 -> 4)),
+      localhost, 0L, opts, TemplateState.empty)
+    val old = NetflowDecoder.decode(
+      datagram(data(u32(100) ++ Array(6.toByte) ++ Array[Byte](10, 0, 0, 1))),
+      localhost, 0L, opts, v1.state)
+    assert(old.flows.map(f => (f.Bytes, f.Proto, Ip.render(f.SrcAddr))) ==
+      Seq((100L, 6L, "10.0.0.1")))
+    // v2 under the same id: IPV4_SRC_ADDR(8)/4, IN_BYTES(1)/4, L4_DST_PORT(11)/2
+    val v2 = NetflowDecoder.decode(datagram(template(8 -> 4, 1 -> 4, 11 -> 2)),
+      localhost, 0L, opts, old.state)
+    val r = NetflowDecoder.decode(
+      datagram(data(Array[Byte](10, 0, 0, 9) ++ u32(500) ++ u16(443))),
+      localhost, 0L, opts, v2.state)
+    assert(r.error.isEmpty && !r.templatesMissing)
+    assert(r.flows.map(f => (f.Bytes, f.Proto, f.DstPort,
+      Ip.render(f.SrcAddr))) == Seq((500L, 0L, 443, "10.0.0.9")))
+  }
+
   // root.go:141-147 — ErrorTemplateNotFound aborts the WHOLE datagram:
   // a datagram mixing decodable data sets with an unknown-template set
   // yields zero flows, not just a skipped set; templates stay registered

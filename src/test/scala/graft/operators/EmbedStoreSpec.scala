@@ -248,8 +248,9 @@ class EmbedStoreSpec extends SparkSpec {
       mem.toDS().map(EmbedStoreSpec.row _).toDF("id", "embedding"),
       checkpoint,
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val q1 = start()
+    // data first: AvailableNow fixes its end offset at start()
     mem.addData(1L, 50L)
+    val q1 = start()
     q1.awaitTermination()
     // crash window: the batch landed but the checkpoint never committed
     val commitDir = new java.io.File(s"$checkpoint/commits")

@@ -322,8 +322,9 @@ class MediaStoreSpec extends SparkSpec {
     def start() = store.start(
       mem.toDS().map(MediaStoreSpec.image _), checkpoint,
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val q1 = start()
+    // data first: AvailableNow fixes its end offset at start()
     mem.addData(1L, 2L)
+    val q1 = start()
     q1.awaitTermination()
     // crash window: the batch landed in the store but the CHECKPOINT
     // never committed it — recovery must replay it as a no-op
@@ -512,8 +513,9 @@ class MediaStoreSpec extends SparkSpec {
     def start() = store.startClips(
       mem.toDS().map(MediaStoreSpec.video _), checkpoint,
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val q1 = start()
+    // data first: AvailableNow fixes its end offset at start()
     mem.addData(1L) // the full 4-frame clip
+    val q1 = start()
     q1.awaitTermination()
     // crash window: the batch landed but the checkpoint never
     // committed — recovery must replay it as a no-op

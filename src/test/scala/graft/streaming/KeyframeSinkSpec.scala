@@ -81,8 +81,9 @@ class KeyframeSinkSpec extends SparkSpec {
     def start() = sink.start(
       mem.toDS().map(KeyframeSinkSpec.clip _), checkpoint,
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val q1 = start()
+    // data first: AvailableNow fixes its end offset at start()
     mem.addData(1L, 2L)
+    val q1 = start()
     q1.awaitTermination()
     // crash window: the batch landed in the sink but the CHECKPOINT
     // never committed it — recovery must replay it as a no-op

@@ -562,76 +562,6 @@ class FlowStoreSpec extends SparkSpec {
   }
 }
 
-class TemplateCacheSpec extends SparkSpec {
-  import TemplateCache._
-
-  test("data records decode only after their template arrives") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[RawRecord]
-    // one continuous query, two micro-batches: per-exporter state persists
-    // in the state store between batches
-    val q = decode(mem.toDS()).writeStream
-      .format("memory").queryName("tcache")
-      .outputMode("append").start()
-
-    // batch 1: exporter A learns template 5; one decodable data record,
-    // one record for unknown template 9 (dropped + counted)
-    mem.addData(
-      RawRecord("expA", "template", 5, "SrcAddr,DstAddr,Bytes"),
-      RawRecord("expA", "data", 5, "10.0.0.1,10.0.0.2,100"),
-      RawRecord("expA", "data", 9, "x,y"))
-    q.processAllAvailable()
-    val b1 = spark.table("tcache").as[DecodedRecord].collect()
-    assert(b1.length == 1)
-    assert(b1.head.fields ==
-      Map("SrcAddr" -> "10.0.0.1", "DstAddr" -> "10.0.0.2", "Bytes" -> "100"))
-
-    // batch 2: template 9 arrives and decodes against the retained state;
-    // exporter B has its own (empty) template set
-    mem.addData(
-      RawRecord("expA", "template", 9, "Proto,Port"),
-      RawRecord("expA", "data", 9, "6,443"),
-      RawRecord("expB", "data", 5, "1,2,3"))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("tcache").as[DecodedRecord].collect()
-    assert(rows.length == 2) // expB's record never decodes
-    val t9 = rows.find(_.templateId == 9).get
-    assert(t9.fields == Map("Proto" -> "6", "Port" -> "443"))
-    // the unknown-template drop from batch 1 shows in the counter
-    assert(t9.misses == 1)
-  }
-
-  test("value/field count mismatch drops and counts, never truncates") {
-    import spark.implicits._
-    val ds = Seq(
-      RawRecord("e", "template", 1, "A,B,C", seq = 1),
-      RawRecord("e", "data", 1, "1,2", seq = 2),      // too few values
-      RawRecord("e", "data", 1, "1,2,3,4", seq = 3),  // too many
-      RawRecord("e", "data", 1, "1,2,3", seq = 4)).toDS()
-    val rows = TemplateCache.decode(ds).collect()
-    assert(rows.length == 1)
-    assert(rows.head.fields == Map("A" -> "1", "B" -> "2", "C" -> "3"))
-    assert(rows.head.misses == 2) // both malformed records counted
-  }
-
-  test("template refresh replaces field names") {
-    import spark.implicits._
-    // batch Dataset path: same operator, no stream needed
-    // sequence numbers pin the order; partition order is irrelevant
-    val ds = Seq(
-      RawRecord("e", "data", 1, "3,4", seq = 4),
-      RawRecord("e", "template", 1, "A,B", seq = 1),
-      RawRecord("e", "data", 1, "1,2", seq = 2),
-      RawRecord("e", "template", 1, "X,Y", seq = 3)).toDS().repartition(4)
-    val out = decode(ds).collect().sortBy(_.fields.values.min)
-    assert(out.length == 2)
-    assert(out(0).fields == Map("A" -> "1", "B" -> "2"))
-    assert(out(1).fields == Map("X" -> "3", "Y" -> "4"))
-  }
-}
-
 class StreamingTopKSpec extends SparkSpec {
 
   test("the top-k sketch aggregates inside a windowed streaming query") {
