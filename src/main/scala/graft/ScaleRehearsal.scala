@@ -18,15 +18,10 @@ import graft.operators.text.{Dsir, TextAnalysis}
   * is a comma-separated subset of
   * ngram,lsh,semdedup,dsir,release,eightpass,lshrelease,increleaselsh,
   * increlease,collapse,storeincr,storescratch,storecollapse,exactstate,
-  * annx,imagedup,avdup,mediastore,clipstore,embedstore,bucketregime,
-  * frontier
-  * (default:
-  * all EXCEPT bucketregime, whose 10⁸-row synthetic seed is its own
-  * workload — request it explicitly; storescratch is storeincr's
-  * from-scratch parity target and requires storeincr) — the full
-  * rehearsal at 10× takes ~40 min, a single section minutes. arg 4 is
-  * the durable stores' id-hash bucket modulus (0 = unbucketed), arg 5
-  * the bucketregime seed row count (default 10⁸).
+  * annx,imagedup,avdup,mediastore,clipstore,embedstore,frontier
+  * (default: all; storescratch is storeincr's from-scratch parity
+  * target and requires storeincr) — the full rehearsal at 10× takes
+  * ~40 min, a single section minutes.
   */
 object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
@@ -34,12 +29,7 @@ object ScaleRehearsal {
     val capOverride = args.lift(1).map(_.toInt)
     val kCells = args.lift(2).map(_.toInt).getOrElse(8)
     val sections = args.lift(3).map(_.split(',').toSet)
-    def run(s: String): Boolean =
-      if (s == "bucketregime") sections.exists(_.contains(s))
-      else sections.forall(_.contains(s))
-    // id-hash bucket modulus for the durable-store sections (0 =
-    // unbucketed, the default layout; see ReleaseStore.stateBuckets)
-    val storeBuckets = args.lift(4).map(_.toInt).getOrElse(0)
+    def run(s: String): Boolean = sections.forall(_.contains(s))
     val spark = Session.local("graft-scale-rehearsal")
 
     def timed[T](f: => T): (T, Double) = {
@@ -312,7 +302,7 @@ object ScaleRehearsal {
       val dir = java.nio.file.Files.createTempDirectory("storeincr")
         .toFile.getAbsolutePath
       val store = new graft.operators.dedup.ReleaseStore(spark, dir,
-        "doc_id", "text", lshFront = true, stateBuckets = storeBuckets)
+        "doc_id", "text", lshFront = true)
       val slices = 10
       // slice 9 is HELD OUT for the small-batch tail below
       val walls = (0 until slices - 1).map { i =>
@@ -325,12 +315,8 @@ object ScaleRehearsal {
         walls.map(w => f"$w%.1f").mkString("[", ",", "]")
       // the STEADY-STATE cadence: small novel batches (the 5-second
       // micro-batch regime) against the full stored corpus — these
-      // walls must track BATCH size, not stored-corpus size. When
-      // storeBuckets > 0, the id-hash bucket layout additionally prunes
-      // every id-keyed anti-join and the candidate scoring read to the
-      // touched partition dirs (the default run measures the unbucketed
-      // layout). Uses held out docs: the last big slice arrives as 5
-      // small sub-batches.
+      // walls must track BATCH size, not stored-corpus size. Uses held
+      // out docs: the last big slice arrives as 5 small sub-batches.
       val heldOut = docs.where(pmod(col("doc_id"), lit(slices)) === slices - 1)
       val smallWalls = (0 until 5).map { j =>
         val sb = heldOut.where(
@@ -395,7 +381,7 @@ object ScaleRehearsal {
           val dir = java.nio.file.Files
             .createTempDirectory(s"exactstate_$name").toFile.getAbsolutePath
           val store = new graft.operators.dedup.ReleaseStore(spark, dir,
-            "doc_id", "text", stateBuckets = storeBuckets)
+            "doc_id", "text")
           val slices = 5
           (0 until slices - 1).foreach { i =>
             val b = docs.where(pmod(col("doc_id"), lit(slices)) === i)
@@ -445,8 +431,7 @@ object ScaleRehearsal {
       val dir = java.nio.file.Files.createTempDirectory("storecoll")
         .toFile.getAbsolutePath
       val store = new graft.operators.dedup.ReleaseStore(spark, dir,
-        "doc_id", "text", lshFront = true, collapseFront = true,
-        stateBuckets = storeBuckets)
+        "doc_id", "text", lshFront = true, collapseFront = true)
       val slices = 10
       val splits = docs.stat.approxQuantile("doc_id",
         (1 until slices).map(_.toDouble / slices).toArray, 0.0)
@@ -679,7 +664,7 @@ object ScaleRehearsal {
       h.count()
       val dir = java.nio.file.Files.createTempDirectory("mediastore")
         .toFile.getAbsolutePath
-      val store = new MediaStore(spark, dir, stateBuckets = storeBuckets)
+      val store = new MediaStore(spark, dir)
       val hk = h.withColumn("kind", lit("image"))
       (0L until 5L).foreach { b =>
         val (_, t) = timed(
@@ -770,7 +755,7 @@ object ScaleRehearsal {
       // the DURABLE embedding-dedup cadence at this corpus size: the
       // (replicated) embeddings arrive as 10 id-sliced batches into an
       // EmbedStore (batch self-join + batch×stored sign-LSH postings
-      // equi-join + bucket-pruned exact-cosine verification, marker-
+      // equi-join + candidate-only exact-cosine verification, marker-
       // guarded appends). The replicated corpus is the WORST case —
       // every source vector is an N-member exact-duplicate clique, so
       // the verified pair OUTPUT is quadratic in the replication
@@ -890,80 +875,6 @@ object ScaleRehearsal {
       out += "embedstore_rehash_batch_secs" ->
         rehashWalls.map(w => f"$w%.1f").mkString("[", ",", "]")
       ScratchCache.releaseAll(spark)
-    }
-
-    if (run("bucketregime")) {
-      // THE BUCKETED LAYOUT IN ITS CLAIMED REGIME (round-12 verdict
-      // #2): the stateBuckets scaladoc argues the id-hash layout wins
-      // once id-keyed state outgrows cheap columnar scans, with
-      // modulus ≫ batch ids and small micro-batches. This section
-      // MEASURES that regime's shape — 10⁸ stored prints (arg 5), 16
-      // Ki buckets (arg 4 overrides), 500-id micro-batches — in BOTH
-      // layouts, end to end: accepted-id resolution + prints replay
-      // guard (the id-keyed anti-joins the prune accelerates) + the
-      // content hammingJoin (a full columnar scan by design in either
-      // layout) + the pair-key guard. Seeding writes DIRECTLY into
-      // each table layout: at 10⁸ random hashes every 16-bit chunk
-      // value carries ~6k rows, so seeding through ingest would pay a
-      // near-quadratic banded self-join no production store pays in
-      // one batch (state accretes across many). 10 plants per batch
-      // hit distinct seed hashes at Hamming 0, so pair parity across
-      // layouts is a positive check (12 × 10 = 120 expected).
-      import graft.operators.dedup.MediaStore
-      val regimeRows = args.lift(5).map(_.toLong).getOrElse(100000000L)
-      val regimeBuckets = if (storeBuckets > 0) storeBuckets else 16384
-      val batchSize = 500L
-      val nBatches = 12
-      out += "bucketregime_rows" -> regimeRows
-      out += "bucketregime_buckets" -> regimeBuckets
-      // arg 6 restricts the layouts (flat | bucketed) — an A/B against
-      // a code change only needs the side the change touches
-      val layouts = args.lift(6) match {
-        case Some("flat") => Seq(0)
-        case Some("bucketed") => Seq(regimeBuckets)
-        case _ => Seq(0, regimeBuckets)
-      }
-      layouts.foreach { layout =>
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"bucketregime$layout")
-          .toFile.getAbsolutePath
-        val store = new MediaStore(spark, dir, stateBuckets = layout)
-        // pin the shape + create the tables with one probe row, then
-        // seed the bulk directly in the pinned layout
-        store.ingest(spark.range(1)
-          .select((col("id") + lit(3000000000L)).as("id"),
-            xxhash64(col("id"), lit("pin")).as("sh"),
-            lit("image").as("kind")), Some(0L))
-        val seed = spark.range(regimeRows).select(col("id"),
-          xxhash64(col("id"), lit("seed")).as("sh"),
-          lit("image").as("kind"), lit(0L).as("batch"))
-        val (_, tSeed) = timed {
-          if (layout > 0)
-            seed.withColumn("__bucket",
-                pmod(xxhash64(col("id")), lit(layout)).cast("int"))
-              .repartition(col("__bucket"))
-              .write.partitionBy("__bucket").mode("append")
-              .parquet(s"$dir/prints")
-          else seed.write.mode("append").parquet(s"$dir/prints")
-        }
-        out += s"bucketregime_${layout}_seed_sec" -> tSeed
-        (1 to nBatches).foreach { b =>
-          val idBase = regimeRows + 1000000L * b
-          val batch = spark.range(batchSize).select(
-            (col("id") + lit(idBase)).as("id"),
-            when(col("id") < 10,
-                xxhash64(col("id") + lit(b * 1000L), lit("seed")))
-              .otherwise(xxhash64(col("id") + lit(idBase), lit("novel")))
-              .as("sh"),
-            lit("image").as("kind"))
-          val (_, t) = timed(store.ingest(batch, Some(b.toLong)))
-          out += s"bucketregime_${layout}_batch${b}_sec" -> t
-        }
-        val (pn, tp) = timed(store.pairs.count())
-        out += s"bucketregime_${layout}_pairs" -> pn
-        out += s"bucketregime_${layout}_pairs_read_sec" -> tp
-        ScratchCache.releaseAll(spark)
-      }
     }
 
     if (run("frontier")) {

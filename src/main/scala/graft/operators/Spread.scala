@@ -28,6 +28,12 @@ import org.apache.spark.sql.DataFrame
   *    per-row work it parallelizes: past it the scan splits well on
   *    its own.
   *
+  * SCOPE: splittable formats only. The byte bound assumes a big scan
+  * splits by itself, which holds for parquet (every call site reads
+  * parquet) but not for one large non-splittable file (gzip'd text or
+  * CSV): past the bound such a file is left serial, the one case
+  * guide §2.5 names. Repartition that read explicitly instead.
+  *
   * Results are unchanged: every consumer is set-level (joins and
   * aggregations over hashes/counts), and Spark's sort-before-
   * repartition keeps the round-robin assignment deterministic under

@@ -1,6 +1,6 @@
 package graft.operators.dedup
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
   LongType, StructField, StructType}
@@ -21,7 +21,7 @@ import graft.operators.similarity.CosineSearch
   * join on (tbl, bucket) — equi-joins on data-INDEPENDENT signatures
   * (seeded hyperplanes), so batch and stored sides hashed in different
   * ingests collide exactly as a one-shot corpus would — and verifies
-  * candidates by exact cosine over bucket-pruned stored vectors.
+  * candidates by exact cosine over the candidates' stored vectors.
   * Stored×stored is never re-paired. UNION COMPLETENESS: a candidate
   * pair {a, b} with b accepted no earlier than a is generated exactly
   * once, by b's batch (a's postings stored, b's in batch; or the batch
@@ -46,16 +46,13 @@ import graft.operators.similarity.CosineSearch
   * derived data, rebuilt from `vecs` at the new width and re-pinned
   * without touching `pairs`. The verification read itself remains a
   * corpus-linear columnar scan — embarrassingly parallel per-file on
-  * a real cluster (~50 GB of vecs at 10⁸×64 dims), and id-hash dir
-  * pruning (`stateBuckets`) only shortcuts it when the batch's
-  * candidate ids are FEWER than the bucket modulus (uniformly-hashed
-  * ids touch ~every dir otherwise).
+  * a real cluster (~50 GB of vecs at 10⁸×64 dims).
   *
   * Tables ride the [[graft.store.DurableStore]] discipline shared with
   * [[ReleaseStore]]/[[MediaStore]] (commit markers, accepted-id
-  * sidecars, move-aside installs, compaction healing) and the
-  * [[graft.store.BucketedTables]] opt-in id-hash layout. Same ID
-  * CONTRACT: first write wins; a re-crawled id is ignored.
+  * sidecars, move-aside installs, compaction healing), one flat
+  * parquet dir per table. Same ID CONTRACT: first write wins; a
+  * re-crawled id is ignored.
   *
   * SHAPE PIN: `thresholdE6`/`bits`/`tables`/`seed` determine what the
   * persisted postings and pairs MEAN; all are pinned in `store.meta`
@@ -71,9 +68,8 @@ final class EmbedStore(protected val spark: SparkSession,
       * semantics). Pinned.
       */
     thresholdE6: Long,
-    bits: Int = 8, tables: Int = 4, seed: Long = 7L,
-    stateBuckets: Int = 0)
-    extends graft.store.DurableStore with graft.store.BucketedTables {
+    bits: Int = 8, tables: Int = 4, seed: Long = 7L)
+    extends graft.store.DurableStore {
 
   /** The LIVE sign-LSH width: starts at the constructor's `bits`,
     * moves only through a completed [[rehash]] (pin-wins like every
@@ -92,28 +88,6 @@ final class EmbedStore(protected val spark: SparkSession,
   private val pairsSchema = StructType(Seq(
     StructField("id_a", LongType), StructField("id_b", LongType),
     StructField("sim_e6", LongType), StructField("batch", LongType)))
-
-  /** The LIVE bucket count — the [[MediaStore]] pin-wins rule, probed
-    * against `vecs`.
-    */
-  protected lazy val effectiveBuckets: Int =
-    graft.store.DurableStore.readMeta(fs, hPath(s"$path/store.meta")) match {
-      case Some(m) => m.get("buckets").map(_.toInt).getOrElse(0)
-      case None =>
-        recoverTable("vecs") // an aside must not blind the layout probe
-        if (fs.exists(hPath(s"$path/vecs"))) {
-          val bucketed = fs.listStatus(hPath(s"$path/vecs"))
-            .exists(_.getPath.getName.startsWith("__bucket="))
-          if (bucketed) {
-            if (stateBuckets <= 0) throw new IllegalStateException(
-              s"store at $path has a bucketed layout but no shape pin " +
-              "(a pin install crashed): reopen with the ORIGINAL " +
-              "stateBuckets to re-pin")
-            validateRepin("vecs", "id", stateBuckets)
-            stateBuckets
-          } else 0
-        } else stateBuckets
-    }
 
   /** The stored vector projections (id, cv, cv_n, batch). */
   def vectors: DataFrame = {
@@ -134,7 +108,8 @@ final class EmbedStore(protected val spark: SparkSession,
   private def shapeMap: Map[String, String] =
     Map("thresholdE6" -> thresholdE6.toString, "bits" -> liveBits.toString,
       "tables" -> tables.toString, "seed" -> seed.toString,
-      "buckets" -> effectiveBuckets.toString)
+      // one flat layout ([[ReleaseStore]]'s shape pin has why)
+      "buckets" -> "0")
 
   private def checkShape(pin: Boolean): Unit =
     graft.store.DurableStore.readMeta(fs, hPath(s"$path/store.meta")) match {
@@ -202,25 +177,23 @@ final class EmbedStore(protected val spark: SparkSession,
         val fresh =
           if (fs.exists(hPath(s"$path/vecs")))
             probeAntiJoin(bv,
-              readTable("vecs", vecsSchema, bucketsOf(bv, "id"))
-                .select(col("id")),
+              readTable("vecs", vecsSchema).select(col("id")),
               Seq("id"), "vecs",
               probeKeys = Some(accepted.select(col("__bid").as("id"))))
           else bv
-        appendBucketed(fresh.withColumn("batch",
-          lit(batchId.getOrElse(-1L))), "id", s"$path/vecs")
+        fresh.withColumn("batch", lit(batchId.getOrElse(-1L)))
+          .write.mode(SaveMode.Append).parquet(s"$path/vecs")
       }
       markers.guarded("postings", batchId) {
         val fresh =
           if (fs.exists(hPath(s"$path/postings")))
             probeAntiJoin(bPost,
-              readTable("postings", postingsSchema,
-                bucketsOf(bPost, "id")).select(col("id")),
+              readTable("postings", postingsSchema).select(col("id")),
               Seq("id"), "postings",
               probeKeys = Some(accepted.select(col("__bid").as("id"))))
           else bPost
-        appendBucketed(fresh.withColumn("batch",
-          lit(batchId.getOrElse(-1L))), "id", s"$path/postings")
+        fresh.withColumn("batch", lit(batchId.getOrElse(-1L)))
+          .write.mode(SaveMode.Append).parquet(s"$path/postings")
       }
       markers.guarded("pairs", batchId) {
         // the stored probe side is postings MINUS this batch's accepted
@@ -244,14 +217,13 @@ final class EmbedStore(protected val spark: SparkSession,
         val cand = graft.ScratchCache.persist(
           cSelf.unionAll(cCross).distinct())
         // verification vectors: the batch's own plus ONLY the stored
-        // candidates' (bucket-pruned scan — the FAT read tracks
-        // candidate volume, not corpus)
+        // candidates'
         val candIds = graft.ScratchCache.persist(
           cand.select(col("id_a").as("id"))
             .unionAll(cand.select(col("id_b").as("id"))).distinct())
         val storedV =
           if (fs.exists(hPath(s"$path/vecs")))
-            readTable("vecs", vecsSchema, bucketsOf(candIds, "id"))
+            readTable("vecs", vecsSchema)
               .join(broadcast(candIds), Seq("id"), "left_semi")
               .join(broadcast(accepted), col("id") === col("__bid"),
                 "left_anti")
@@ -273,12 +245,12 @@ final class EmbedStore(protected val spark: SparkSession,
         val fresh =
           if (fs.exists(hPath(s"$path/pairs")))
             probeAntiJoin(delta,
-              readTable("pairs", pairsSchema, bucketsOf(delta, "id_a"))
+              readTable("pairs", pairsSchema)
                 .select(col("id_a"), col("id_b")),
               Seq("id_a", "id_b"), "pairs")
           else delta
-        appendBucketed(fresh.withColumn("batch",
-          lit(batchId.getOrElse(-1L))), "id_a", s"$path/pairs")
+        fresh.withColumn("batch", lit(batchId.getOrElse(-1L)))
+          .write.mode(SaveMode.Append).parquet(s"$path/pairs")
       }
       }
       }
@@ -435,12 +407,7 @@ final class EmbedStore(protected val spark: SparkSession,
             dim, nb, tables, seed)
           .join(v.select(col("id"), col("batch")), Seq("id"))
           .select(col("id"), col("tbl"), col("bucket"), col("batch"))
-        if (effectiveBuckets > 0)
-          installTable(s"$path/postings",
-            posts.withColumn("__bucket", bucketOf(col("id")))
-              .repartition(col("__bucket")),
-            ".compact", Seq("__bucket"))
-        else installTable(s"$path/postings",
+        installTable(s"$path/postings",
           posts.repartition(spark.sparkContext.defaultParallelism),
           ".compact")
       }
@@ -462,10 +429,8 @@ final class EmbedStore(protected val spark: SparkSession,
       autoRehash: Boolean = false): Unit = {
     checkShape(pin = false)
     if (autoRehash) widthAdvisory().foreach(rehash)
-    val layout = if (effectiveBuckets > 0) Seq("__bucket") else Nil
-    Seq("vecs", "postings", "pairs")
-      .foreach(compactTable(_, targetFileBytes, layout))
-    compactTable("clusters", targetFileBytes)
+    Seq("vecs", "postings", "pairs", "clusters")
+      .foreach(compactTable(_, targetFileBytes))
     pruneSidecars(Seq("vecs", "postings", "pairs"))
   }
 }
@@ -507,7 +472,6 @@ object EmbedStore {
         s"shape pin at $path/store.meta carries no '$f'"))
     new EmbedStore(spark, path, thresholdE6 = req("thresholdE6").toLong,
       bits = req("bits").toInt, tables = req("tables").toInt,
-      seed = req("seed").toLong,
-      stateBuckets = m.get("buckets").map(_.toInt).getOrElse(0))
+      seed = req("seed").toLong)
   }
 }

@@ -65,24 +65,18 @@ import graft.operators.multimodal.Multimodal
   * validated on every entry point — [[MediaStore.open]] reconstructs a
   * store from its pin.
   *
-  * LAYOUT: with `stateBuckets` > 0, `prints` buckets by
-  * `pmod(xxhash64(id), stateBuckets)` and `pairs` by the same hash of
-  * `id_a` ([[graft.store.BucketedTables]]), so the id-keyed replay
+  * LAYOUT: every table is one flat parquet dir. The id-keyed replay
   * guards — accepted-id resolution, the prints dedup anti-join, the
-  * pair-key anti-join — prune to the buckets the batch (or its pair
-  * delta) actually touches instead of scanning the whole stored state
-  * per micro-batch. The [[Dedup.hammingJoin]] probe legitimately reads
-  * ALL stored prints (a content probe can match any id — though a
-  * micro batch's collected chunk values pre-prune it to the rows that
-  * can candidate at all, [[Dedup.hammingPrefilter]]). A LAYOUT
-  * property pinned in `store.meta` (the pin wins on reopen). DEFAULT 0
-  * (unbucketed) — measured at 10⁸ prints / 16 Ki buckets / 500-id
-  * batches, the layout only ever lost (~2×): see the rewritten
-  * [[ReleaseStore.stateBuckets]] guidance and PLANS.md round 13.
+  * pair-key anti-join — stream the stored side against a broadcast
+  * probe when it is big ([[graft.store.DurableStore.probeAntiJoin]]),
+  * and the [[Dedup.hammingJoin]] probe legitimately reads ALL stored
+  * prints (a content probe can match any id — though a micro batch's
+  * collected chunk values pre-prune it to the rows that can candidate
+  * at all, [[Dedup.hammingPrefilter]]).
   */
 final class MediaStore(protected val spark: SparkSession,
     protected val path: String,
-    maxHamming: Int = 3, chunks: Int = 4, stateBuckets: Int = 0,
+    maxHamming: Int = 3, chunks: Int = 4,
     /** Frame-level Hamming radius of the CLIP plane's alignment
       * matches (0 = exact hash equality, [[Multimodal.clipAlignment]]'s
       * default). Pinned: the stored `clippairs` mean nothing at a
@@ -95,7 +89,7 @@ final class MediaStore(protected val spark: SparkSession,
       * radius.
       */
     clipMaxFrames: Int = 4096)
-    extends graft.store.DurableStore with graft.store.BucketedTables {
+    extends graft.store.DurableStore {
 
   private val printsSchema = StructType(Seq(
     StructField("id", LongType), StructField("sh", LongType),
@@ -114,34 +108,6 @@ final class MediaStore(protected val spark: SparkSession,
     StructField("offset", LongType),
     StructField("containment_pm", LongType),
     StructField("kind", StringType), StructField("batch", LongType)))
-
-  /** The LIVE bucket count: the pin wins; a pinned store without the
-    * field is pre-bucketing history (unbucketed, 0); an unpinned store
-    * with existing UNBUCKETED tables stays unbucketed; only a genuinely
-    * fresh store takes the constructor value. Bucketed-but-unpinned
-    * (a pin install crashed) refuses unless the caller re-states the
-    * original modulus — the [[ReleaseStore]] rule, same rationale.
-    */
-  protected lazy val effectiveBuckets: Int =
-    graft.store.DurableStore.readMeta(fs, hPath(s"$path/store.meta")) match {
-      case Some(m) => m.get("buckets").map(_.toInt).getOrElse(0)
-      case None =>
-        recoverTable("prints") // an aside must not blind the layout probe
-        if (fs.exists(hPath(s"$path/prints"))) {
-          val bucketed = fs.listStatus(hPath(s"$path/prints"))
-            .exists(_.getPath.getName.startsWith("__bucket="))
-          if (bucketed) {
-            if (stateBuckets <= 0) throw new IllegalStateException(
-              s"store at $path has a bucketed layout but no shape pin " +
-              "(a pin install crashed): reopen with the ORIGINAL " +
-              "stateBuckets to re-pin")
-            // the re-stated modulus is checkable against the layout —
-            // refuse a refutable guess before it corrupts replay guards
-            validateRepin("prints", "id", stateBuckets)
-            stateBuckets
-          } else 0
-        } else stateBuckets
-    }
 
   /** The fingerprint corpus (id, sh, batch) — explicit schema so a
     * store whose only appends were all-empty frames still reads.
@@ -183,7 +149,8 @@ final class MediaStore(protected val spark: SparkSession,
 
   private def shapeMap: Map[String, String] =
     Map("maxHamming" -> maxHamming.toString, "chunks" -> chunks.toString,
-      "buckets" -> effectiveBuckets.toString, "kinded" -> "1",
+      // one flat layout ([[ReleaseStore]]'s shape pin has why)
+      "buckets" -> "0", "kinded" -> "1",
       "clipHamming" -> clipMaxHamming.toString,
       "clipMaxFrames" -> clipMaxFrames.toString)
 
@@ -270,19 +237,17 @@ final class MediaStore(protected val spark: SparkSession,
       markers.guarded("prints", batchId) {
         // probe-inverted anti-join against the LIVE table: a replay
         // after a landed-but-unmarked append finds its rows present and
-        // appends nothing. Bucket-pruned — stored rows outside the
-        // batch ids' hash buckets cannot match — and never sorted
-        // (probeAntiJoin streams the store against a broadcast probe).
+        // appends nothing. Never sorted (probeAntiJoin streams the
+        // store against a broadcast probe).
         val fresh =
           if (fs.exists(hPath(s"$path/prints")))
             probeAntiJoin(bPrints,
-              readTable("prints", printsSchema, bucketsOf(bPrints, "id"))
-                .select(col("id")),
+              readTable("prints", printsSchema).select(col("id")),
               Seq("id"), "prints", probeRows = bRows,
               probeKeys = Some(accepted.select(col("__bid").as("id"))))
           else bPrints
-        appendBucketed(fresh.withColumn("batch",
-          lit(batchId.getOrElse(-1L))), "id", s"$path/prints")
+        fresh.withColumn("batch", lit(batchId.getOrElse(-1L)))
+          .write.mode(SaveMode.Append).parquet(s"$path/prints")
       }
       markers.guarded("pairs", batchId) {
         // the stored side is prints MINUS this batch's accepted ids —
@@ -316,23 +281,22 @@ final class MediaStore(protected val spark: SparkSession,
             col("kind"))
         val self = Dedup.hammingPairs(bPrints, maxHamming, chunks,
           blockCols = Seq("kind"))
-        // the delta is candidate-volume-bounded — persist it so the
-        // replay guard can prune the stored-pairs scan to the buckets
-        // its id_a values hash into (one tiny collect)
+        // the delta is candidate-volume-bounded — persisted because a
+        // big-store replay guard counts it before the append writes it
         val delta = graft.ScratchCache.persist(cross.unionByName(self))
         // anti-join on the pair key: a pair is generated by exactly one
         // ingest, so an id already paired ⟺ the landed-append +
         // uncommitted-marker replay window (the dedupAppend discipline,
-        // keyed by (id_a, id_b) instead of id). Bucket-pruned by id_a.
+        // keyed by (id_a, id_b) instead of id).
         val fresh =
           if (fs.exists(hPath(s"$path/pairs")))
             probeAntiJoin(delta,
-              readTable("pairs", pairsSchema, bucketsOf(delta, "id_a"))
+              readTable("pairs", pairsSchema)
                 .select(col("id_a"), col("id_b")),
               Seq("id_a", "id_b"), "pairs")
           else delta
-        appendBucketed(fresh.withColumn("batch",
-          lit(batchId.getOrElse(-1L))), "id_a", s"$path/pairs")
+        fresh.withColumn("batch", lit(batchId.getOrElse(-1L)))
+          .write.mode(SaveMode.Append).parquet(s"$path/pairs")
       }
       }
       }
@@ -446,13 +410,12 @@ final class MediaStore(protected val spark: SparkSession,
         val fresh =
           if (fs.exists(hPath(s"$path/clipframes")))
             probeAntiJoin(bFrames,
-              readTable("clipframes", clipFramesSchema,
-                bucketsOf(bFrames, "id")).select(col("id")),
+              readTable("clipframes", clipFramesSchema).select(col("id")),
               Seq("id"), "clipframes",
               probeKeys = Some(accepted.select(col("__bid").as("id"))))
           else bFrames
-        appendBucketed(fresh.withColumn("batch",
-          lit(batchId.getOrElse(-1L))), "id", s"$path/clipframes")
+        fresh.withColumn("batch", lit(batchId.getOrElse(-1L)))
+          .write.mode(SaveMode.Append).parquet(s"$path/clipframes")
       }
       markers.guarded("clippairs", batchId) {
         val packedKey =
@@ -488,15 +451,13 @@ final class MediaStore(protected val spark: SparkSession,
           .unionAll(crossM.select(col("id_b").as("id_a"),
             col("id_a").as("id_b")))
         // per-clip frame counts: the batch's own, plus ONLY the stored
-        // clips the cross matches touched (bucket-pruned scan — count
-        // cost tracks candidate volume, not corpus)
+        // clips the cross matches touched
         val bCounts = bFrames.groupBy(col("id"), col("kind"))
           .agg(count(lit(1)).as("frames_a"))
           .select(col("id"), col("frames_a"), col("kind"))
         val candS = graft.ScratchCache.persist(crossM
           .select(expr(s"id_b div $clipMaxFrames").as("id")).distinct())
-        val sCounts = readTable("clipframes", clipFramesSchema,
-            bucketsOf(candS, "id"))
+        val sCounts = readTable("clipframes", clipFramesSchema)
           .join(broadcast(candS), Seq("id"), "left_semi")
           .groupBy(col("id"), col("kind"))
           .agg(count(lit(1)).as("frames_a"))
@@ -509,13 +470,12 @@ final class MediaStore(protected val spark: SparkSession,
         val fresh =
           if (fs.exists(hPath(s"$path/clippairs")))
             probeAntiJoin(delta,
-              readTable("clippairs", clipPairsSchema,
-                bucketsOf(delta, "id_a"))
+              readTable("clippairs", clipPairsSchema)
                 .select(col("id_a"), col("id_b")),
               Seq("id_a", "id_b"), "clippairs")
           else delta
-        appendBucketed(fresh.withColumn("batch",
-          lit(batchId.getOrElse(-1L))), "id_a", s"$path/clippairs")
+        fresh.withColumn("batch", lit(batchId.getOrElse(-1L)))
+          .write.mode(SaveMode.Append).parquet(s"$path/clippairs")
       }
       }
       }
@@ -645,14 +605,9 @@ final class MediaStore(protected val spark: SparkSession,
         }
         val km = graft.ScratchCache.persist(
           kinds.select(col("id"), col("kind")).dropDuplicates("id"))
-        val layout = if (effectiveBuckets > 0) Seq("__bucket") else Nil
-        def install(name: String, df: DataFrame, idc: String): Unit =
+        def install(name: String, df: DataFrame): Unit =
           if (fs.exists(hPath(s"$path/$name")))
-            installTable(s"$path/$name",
-              if (layout.isEmpty) df
-              else df.withColumn("__bucket", bucketOf(col(idc)))
-                .repartition(col("__bucket")),
-              ".kinds", layout)
+            installTable(s"$path/$name", df, ".kinds")
         // legacy parquet footers lack `kind`: the schema'd read nulls
         // it, the join refills it — so a re-entered half-migration
         // re-derives the same rows
@@ -664,8 +619,7 @@ final class MediaStore(protected val spark: SparkSession,
             s"backfillKinds mapping does not cover every stored id at " +
             s"$path/prints - an unmapped print would carry a null kind " +
             "and silently pair with nothing")
-        install("prints", pr.select(printsSchema.fieldNames.map(col): _*),
-          "id")
+        install("prints", pr.select(printsSchema.fieldNames.map(col): _*))
         val ka = km.select(col("id").as("id_a"), col("kind"))
         install("pairs",
           readTable("pairs", pairsSchema).drop("kind")
@@ -673,8 +627,7 @@ final class MediaStore(protected val spark: SparkSession,
             .join(km.select(col("id").as("id_b"),
               col("kind").as("__kb")), Seq("id_b"))
             .where(col("kind") === col("__kb"))
-            .select(pairsSchema.fieldNames.map(col): _*),
-          "id_a")
+            .select(pairsSchema.fieldNames.map(col): _*))
         // label water marks predate the pair correction — rebuild
         fs.delete(hPath(s"$path/clusters"), true)
         writeShapePin(meta + ("kinded" -> "1"))
@@ -689,11 +642,8 @@ final class MediaStore(protected val spark: SparkSession,
     */
   def compact(targetFileBytes: Long = 256L * 1024 * 1024): Unit = {
     checkShape(pin = false)
-    val layout =
-      if (effectiveBuckets > 0) Seq("__bucket") else Nil
-    Seq("prints", "pairs", "clipframes", "clippairs")
-      .foreach(compactTable(_, targetFileBytes, layout))
-    compactTable("clusters", targetFileBytes)
+    Seq("prints", "pairs", "clipframes", "clippairs", "clusters")
+      .foreach(compactTable(_, targetFileBytes))
     pruneSidecars(Seq("prints", "pairs"))
     // the clip plane's own namespace: its sidecars prune against ITS
     // tables' markers (never written ⇒ lastCommitted −1 ⇒ no-op)
@@ -774,9 +724,6 @@ object MediaStore {
         s"shape pin at $path/store.meta carries no '$f'")).toInt
     new MediaStore(spark, path, maxHamming = req("maxHamming"),
       chunks = req("chunks"),
-      // layout: effectiveBuckets reads the pin anyway (pin wins);
-      // passing it keeps the constructed shape equal to the pinned one
-      stateBuckets = m.get("buckets").map(_.toInt).getOrElse(0),
       // clip-plane pins appear at first ingestClips; a pre-clip pin
       // reopens with the defaults (validated when the plane is used)
       clipMaxHamming = m.get("clipHamming").map(_.toInt).getOrElse(0),

@@ -99,38 +99,6 @@ final class ReleaseStore(protected val spark: SparkSession,
       * dedup) on first ingest.
       */
     collapseFront: Boolean = false,
-    /** Id-hash bucket count for the LAYOUT of the id-keyed tables
-      * (`docs`, `shingles`/`bands`/`prefixes`, `members`): when > 0,
-      * rows are written under `__bucket = pmod(xxhash64(id), buckets)`
-      * partition dirs, so every id-keyed anti-join (accepted-id
-      * resolution, the dedupAppend replay guards) and the candidate
-      * scoring read prune to the buckets the probing ids can hash into
-      * instead of scanning the whole stored table. A LAYOUT property
-      * pinned at store creation (`store.meta`); the effective value
-      * always comes from the pin on reopen, and pre-pin legacy stores
-      * stay unbucketed (0). Candidate PROBES (bands, prefix index) are
-      * keyed by band/shingle, not id — they remain columnar scans of
-      * stored state by design.
-      *
-      * DEFAULT 0 (unbucketed) — and MEASUREMENT FOUND NO WINNING
-      * REGIME (PLANS.md round 13, `bucketregime`): at 10⁸ id-keyed
-      * rows / 16 Ki buckets / 500-id micro-batches — the exact shape
-      * the layout was argued for — the bucketed store ran ~2× SLOWER
-      * end to end, because the costs the prune was aimed at are
-      * better removed elsewhere: the replay-guard anti-joins that
-      * used to sort the whole store per batch are probe-INVERTED now
-      * ([[graft.store.DurableStore.probeAntiJoin]] streams the store
-      * against a broadcast probe), and content probes were never
-      * id-prunable. Meanwhile the layout taxes EVERY scan with
-      * per-dir listing/open overhead and its partition metadata
-      * overflows the planner's file-listing cache. (Earlier ×10
-      * measurement, same verdict from the small side: 256 buckets
-      * made 5k-doc batch walls 25–32 s vs 7–10 s unbucketed.) The
-      * machinery stays pin-governed and spec-pinned for tables that
-      * genuinely need dir-level pruning; nothing in this repo
-      * recommends setting it.
-      */
-    stateBuckets: Int = 0,
     /** Stored-corpus row count past which the EXACT front engages both
       * its maintained sidecars ([[exactStateMinRows]]'s doc — the
       * measured 50k default; exists-wins once created). A tuning knob,
@@ -139,46 +107,10 @@ final class ReleaseStore(protected val spark: SparkSession,
       * restate it (an already-created sidecar keeps maintaining
       * regardless).
       */
-    exactSidecarMinRows: Long = 50000L) extends graft.store.DurableStore
-    with graft.store.BucketedTables {
+    exactSidecarMinRows: Long = 50000L) extends graft.store.DurableStore {
 
   require(!collapseFront || (lshFront && maxShingleDf.isEmpty),
     "collapseFront requires the uncapped lshFront store (stateEnabled)")
-
-  /** The LIVE bucket count: the pin wins; a pinned store without the
-    * field is pre-bucketing history (unbucketed, 0); an unpinned store
-    * with existing UNBUCKETED tables stays unbucketed; only a genuinely
-    * fresh store takes the constructor value. An unpinned store whose
-    * tables ARE bucketed lost its pin mid-install — the dirs cannot
-    * reveal the modulus, and guessing wrong silently corrupts every
-    * replay guard (pruned anti-joins miss stored ids, re-accepted ids
-    * append duplicates under committed markers) — so the caller must
-    * re-state the original modulus to re-pin; a zero/absent constructor
-    * value refuses.
-    */
-  protected lazy val effectiveBuckets: Int = readShape() match {
-    case Some(m) => m.get("buckets").map(_.toInt).getOrElse(0)
-    case None =>
-      recoverTable("docs") // an aside must not blind the layout probe
-      if (fs.exists(hPath(s"$path/docs"))) {
-        val bucketed = fs.listStatus(hPath(s"$path/docs"))
-          .exists(_.getPath.getName.startsWith("__bucket="))
-        if (bucketed) {
-          if (stateBuckets <= 0) throw new IllegalStateException(
-            s"store at $path has a bucketed layout but no shape pin " +
-            "(a pin install crashed): reopen with the ORIGINAL " +
-            "stateBuckets to re-pin - the layout cannot reveal its " +
-            "own modulus and a wrong guess corrupts the replay guards")
-          // the re-stated modulus is checkable against the layout —
-          // refuse a refutable guess before it corrupts replay guards
-          validateRepin("docs", idCol, stateBuckets)
-          stateBuckets
-        } else 0
-      } else stateBuckets
-  }
-
-  // bucketOf / readTable / bucketsOf / appendBucketed live in
-  // graft.store.BucketedTables (shared with MediaStore)
 
   /** LSH-FRONT STATE TABLES — `shingles` (id, sh), `bands`
     * (id, band, bh) and `prefixes` (id, s), appended per batch under
@@ -342,21 +274,16 @@ final class ReleaseStore(protected val spark: SparkSession,
     */
   @volatile private var docIdsLive: Boolean = false
 
-  /** Bucket-pruned accepted-id resolution, routed through the narrow
-    * `docids` sidecar when this ingest proved it consistent — the
-    * consulted scan is then statically small (one long column), so the
-    * plain anti-join broadcasts under static planning too (the regime
+  /** Accepted-id resolution routed through the narrow `docids`
+    * sidecar when this ingest proved it consistent — the consulted
+    * scan is then statically small (one long column), so the plain
+    * anti-join broadcasts under static planning too (the regime
     * suspends AQE).
     */
   protected override def storedAcceptIds(idColName: String, table: String,
       batchIds: DataFrame): DataFrame =
     if (table == "docs" && docIdsUsable)
-      readTable("docids",
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            batchIds.schema("__bid").dataType))),
-        bucketsOf(batchIds, "__bid"))
-        .select(col("id").as("__bid"))
+      super.storedAcceptIds("id", "docids", batchIds)
     else super.storedAcceptIds(idColName, table, batchIds)
 
   /** Decide the sidecar dispatch, then prove (or restore) `docids` ==
@@ -386,13 +313,8 @@ final class ReleaseStore(protected val spark: SparkSession,
     (docsRows, sideRows) match {
       case (Some(d), Some(i)) if d == i => docIdsUsable = true
       case (Some(_), _) =>
-        val ids = docs.select(col(idCol).as("id"))
-        if (effectiveBuckets > 0)
-          installTable(s"$path/docids",
-            ids.withColumn("__bucket", bucketOf(col("id")))
-              .repartition(col("__bucket")),
-            ".backfill", Seq("__bucket"))
-        else installTable(s"$path/docids", ids, ".backfill")
+        installTable(s"$path/docids", docs.select(col(idCol).as("id")),
+          ".backfill")
         docIdsUsable = true
       case _ => () // footer walk capped: docs stays the consulted scan
     }
@@ -429,9 +351,11 @@ final class ReleaseStore(protected val spark: SparkSession,
     "portable" -> portable.toString,
     "containPm" -> math.round(containThreshold * 1000).toString,
     "k" -> k.toString, "bands" -> bands.toString, "seed" -> seed.toString,
-    // the EFFECTIVE layout, not the constructor default: a reopen can
-    // never re-shape existing partition dirs
-    "buckets" -> effectiveBuckets.toString)
+    // one file layout, no id-hash partition dirs (the bucketed layout
+    // measured slower in every regime, PLANS.md round 13, and is gone):
+    // a store an older build pinned with buckets > 0 is refused here
+    // instead of misread
+    "buckets" -> "0")
 
   private def shapePin = hPath(s"$path/store.meta")
 
@@ -472,11 +396,8 @@ final class ReleaseStore(protected val spark: SparkSession,
 
   def docs: DataFrame = {
     recoverTable("docs")
-    readInferred(s"$path/docs").drop("__bucket")
+    readInferred(s"$path/docs")
   }
-
-  // storedAcceptIds: the bucket-pruned override lives in
-  // graft.store.BucketedTables
 
   /** The accumulated scored pair set. `batch` records which ingest
     * generated each row (−1 for un-id'd batch calls) — the water mark
@@ -604,9 +525,6 @@ final class ReleaseStore(protected val spark: SparkSession,
       else f
     val (accepted, bState, bShExact) = regime {
     val accepted = narrowRegime(acceptedIds(batch, batchId))
-    // the touched-bucket set (one tiny collect): every id-keyed
-    // anti-join below prunes its stored-side scan to these partitions
-    val batchBuckets = bucketsOf(accepted, "__bid")
     // state backfill + appends run BEFORE the docs append: backfill
     // derives state from docs MINUS the current batch's accepted ids
     // (whose rows the marker-guarded appends below own), so a replay
@@ -614,18 +532,17 @@ final class ReleaseStore(protected val spark: SparkSession,
     val bState =
       if (stateEnabled) {
         ensureState(accepted)
-        Some(appendState(batch, accepted, batchId, batchBuckets))
+        Some(appendState(batch, accepted, batchId))
       } else None
     val bShExact =
       if (exactState) {
         ensureExactShingles(accepted)
-        Some(appendExactShingles(batch, accepted, batchId, batchBuckets))
+        Some(appendExactShingles(batch, accepted, batchId))
       } else None
     markers.guarded("docs", batchId) {
       // anti-join against the LIVE table: a replay after a landed-but-
       // unmarked append finds its rows present and appends nothing
-      // (bucket-pruned: rows outside the batch's buckets cannot match;
-      // consulted through the docids sidecar when proven consistent —
+      // (consulted through the docids sidecar when proven consistent —
       // a replay's landed rows are visible there too, because the
       // footer-count gate already healed any docs/docids skew)
       val base = batch.dropDuplicates(idCol)
@@ -638,13 +555,13 @@ final class ReleaseStore(protected val spark: SparkSession,
             Seq(idCol), "docs",
             probeKeys = Some(accepted.select(col("__bid").as(idCol))))
         else base
-      appendBucketed(fresh, idCol, s"$path/docs")
+      fresh.write.mode(SaveMode.Append).parquet(s"$path/docs")
       // the narrow id sidecar lands SECOND (docids ⊆ docs across any
       // crash — the ensureDocIds invariant), via the idempotent
       // anti-join append — only when the size dispatch keeps it live
       if (docIdsLive)
         narrowRegime(dedupAppend(accepted.select(col("__bid").as("id")),
-          "docids", batchBuckets, accepted))
+          "docids", accepted))
     }
     (accepted, bState, bShExact)
     }
@@ -701,22 +618,21 @@ final class ReleaseStore(protected val spark: SparkSession,
     * and lands the other). An id in the frame that is already stored
     * can ONLY be that window — re-crawled ids never reach a state
     * append (the accepted set excludes them) — and the join's right
-    * side is one column-pruned id scan, bucket-pruned (the frame's ids
-    * are accepted ids, so stored rows outside the batch's buckets
-    * cannot collide) and probe-inverted when big: the probe key set IS
-    * the accepted ids — already materialized as the sidecar — so the
-    * store is streamed against a broadcast, never sorted.
+    * side is one column-pruned id scan, probe-inverted when big: the
+    * probe key set IS the accepted ids — already materialized as the
+    * sidecar — so the store is streamed against a broadcast, never
+    * sorted.
     */
   private def dedupAppend(frame: DataFrame, table: String,
-      batchBuckets: Option[Seq[Int]], accepted: DataFrame): Unit = {
+      accepted: DataFrame): Unit = {
     val fresh =
       if (fs.exists(hPath(s"$path/$table")))
         probeAntiJoin(frame,
-          readTable(table, frame.schema, batchBuckets).select(col("id")),
+          readTable(table, frame.schema).select(col("id")),
           Seq("id"), table,
           probeKeys = Some(accepted.select(col("__bid").as("id"))))
       else frame
-    appendBucketed(fresh, "id", s"$path/$table")
+    fresh.write.mode(SaveMode.Append).parquet(s"$path/$table")
   }
 
   /** Backfill the exact front's `shingles` state from the stored
@@ -730,13 +646,8 @@ final class ReleaseStore(protected val spark: SparkSession,
     if (fs.exists(hPath(s"$path/shingles"))) return
     val base = docs.join(broadcast(accepted),
       col(idCol) === col("__bid"), "left_anti")
-    val sh = Dedup.hashedShingles(base, idCol, textCol, portable)
-    if (effectiveBuckets > 0)
-      installTable(s"$path/shingles",
-        sh.withColumn("__bucket", bucketOf(col("id")))
-          .repartition(col("__bucket")),
-        ".backfill", Seq("__bucket"))
-    else installTable(s"$path/shingles", sh, ".backfill")
+    installTable(s"$path/shingles",
+      Dedup.hashedShingles(base, idCol, textCol, portable), ".backfill")
   }
 
   /** Shingle the batch's accepted rows and append them to the exact
@@ -746,13 +657,12 @@ final class ReleaseStore(protected val spark: SparkSession,
     * (a deterministic function of the sidecar-pinned accepted set).
     */
   private def appendExactShingles(batch: DataFrame, accepted: DataFrame,
-      batchId: Option[Long],
-      batchBuckets: Option[Seq[Int]]): DataFrame = {
+      batchId: Option[Long]): DataFrame = {
     val bdocs = batch.dropDuplicates(idCol)
       .join(accepted, col(idCol) === col("__bid"), "left_semi")
     val bsh = Dedup.hashedShingles(bdocs, idCol, textCol, portable)
     markers.guarded("shingles", batchId) {
-      dedupAppend(bsh, "shingles", batchBuckets, accepted)
+      dedupAppend(bsh, "shingles", accepted)
     }
     bsh
   }
@@ -802,10 +712,9 @@ final class ReleaseStore(protected val spark: SparkSession,
   }
 
   private def appendState(batch: DataFrame, accepted: DataFrame,
-      batchId: Option[Long],
-      batchBuckets: Option[Seq[Int]]): (DataFrame, DataFrame, DataFrame) = {
+      batchId: Option[Long]): (DataFrame, DataFrame, DataFrame) = {
     def dedupAppend(frame: DataFrame, table: String): Unit =
-      this.dedupAppend(frame, table, batchBuckets, accepted)
+      this.dedupAppend(frame, table, accepted)
     val bdocs = batch.dropDuplicates(idCol)
       .join(accepted, col(idCol) === col("__bid"), "left_semi")
     val bshAll = Dedup.hashedShingles(bdocs, idCol, textCol, portable)
@@ -911,18 +820,9 @@ final class ReleaseStore(protected val spark: SparkSession,
       }
     // move-aside install: upgrades overwrite EXISTING per-doc tables; a
     // crash mid-sequence re-enters here (members still missing) and
-    // rebuilds the same content. Id-keyed tables rebuild under the
-    // store's layout (scored is pair-keyed — plain).
+    // rebuilds the same content
     def install(name: String, df: DataFrame): Unit =
-      if (effectiveBuckets > 0 && name != "scored")
-        // clustered like appendBucketed: without the repartition the
-        // partitioned write emits one file per (task × bucket) — the
-        // measured small-files regression
-        installTable(s"$path/$name",
-          df.withColumn("__bucket", bucketOf(col("id")))
-            .repartition(col("__bucket")),
-          ".backfill", Seq("__bucket"))
-      else installTable(s"$path/$name", df, ".backfill")
+      installTable(s"$path/$name", df, ".backfill")
     if (missing.contains("shingles")) install("shingles", sh)
     if (missing.contains("bands"))
       install("bands", bandsOf(sh))
@@ -1038,13 +938,8 @@ final class ReleaseStore(protected val spark: SparkSession,
     val candIds = graft.ScratchCache.persist(
       cand.select(col("id_a").as("id"))
         .unionAll(cand.select(col("id_b").as("id"))).distinct())
-    // the scoring read is the FAT scan (full shingle arrays) — prune it
-    // to the candidates' buckets; sparse candidate sets (the re-crawl
-    // steady state) touch a fraction of the partition dirs
-    val candSh = readTable("shingles", bsh.schema,
-      bucketsOf(candIds, "id"))
-    Dedup.scoreCandidates(cand,
-      candSh.join(broadcast(candIds), Seq("id"), "left_semi"))
+    Dedup.scoreCandidates(cand, readTable("shingles", bsh.schema)
+      .join(broadcast(candIds), Seq("id"), "left_semi"))
   }
 
   /** Start the continuous durable release over a document STREAM: each
@@ -1237,14 +1132,8 @@ final class ReleaseStore(protected val spark: SparkSession,
     // state tables compact under the same swap discipline; a missing
     // table (exact-front store, pre-state history, per-doc store
     // without members) is skipped
-    val bucketed: Set[String] =
-      if (effectiveBuckets > 0) Set("docs", "members", "docids") ++
-        stateTables
-      else Set.empty
-    (Seq("docs", "scored", "members", "docids") ++ stateTables).foreach { t =>
-      compactTable(t, targetFileBytes,
-        if (bucketed(t)) Seq("__bucket") else Nil)
-    }
+    (Seq("docs", "scored", "members", "docids") ++ stateTables)
+      .foreach(compactTable(_, targetFileBytes))
     pruneSidecars(Seq("docs", "scored"))
   }
 }

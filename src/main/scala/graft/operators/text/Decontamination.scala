@@ -32,43 +32,6 @@ object Decontamination {
         countDistinct("g").as("hit_ngrams"))
   }
 
-  /** [[overlap]] with a Bloom prefilter for very large benchmark suites:
-    * when the distinct benchmark n-gram set is too big to broadcast as a
-    * hash relation (hundreds of eval sets × long documents), ship a
-    * fixed-size Bloom filter instead and let ~(1−fpp) of the corpus's
-    * n-grams die in a codegen'd scan-side predicate
-    * (`BloomFilterMightContain` — the same native expression Spark's
-    * runtime join filters inject). Only the surviving sliver meets the
-    * exact (id, gram) join, so false positives are removed and the output
-    * is IDENTICAL to [[overlap]] — the bloom only moves where the
-    * filtering happens. The exact-join side stays a broadcast here;
-    * shuffle both sides when even that exceeds executor memory.
-    */
-  def overlapBloom(corpus: DataFrame, benchmark: DataFrame, idCol: String,
-      textCol: String, n: Int = 8, fpp: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    val bench = graft.ScratchCache.persist(grams(benchmark, idCol, textCol, n)
-      .select(col("id").as("bench_id"), col("g")).distinct())
-    val distinctGrams = bench.select("g").distinct()
-    val nGrams = math.max(1L, distinctGrams.count())
-    val bf = distinctGrams.stat.bloomFilter("g", nGrams, fpp)
-    val bytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      bos.toByteArray
-    }
-    val mightContain = GraftBridge.column(
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        GraftBridge.expression(lit(bytes)),
-        GraftBridge.expression(col("g"))))
-    grams(corpus, idCol, textCol, n)
-      .where(mightContain)
-      .join(broadcast(bench), Seq("g"))
-      .groupBy("id")
-      .agg(countDistinct("bench_id").as("hit_docs"),
-        countDistinct("g").as("hit_ngrams"))
-  }
-
   private def grams(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = df.select(col(idCol).as("id"),
     explode(transform(

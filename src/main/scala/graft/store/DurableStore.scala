@@ -403,7 +403,7 @@ private[graft] trait DurableStore {
     * cached data): a sibling session's `spark.sql.adaptive.enabled` —
     * and with it skew-join mitigation for query traffic — is untouched
     * while an ingest window is open (spec-pinned in
-    * BucketedTablesSpec).
+    * DurableStoreSpec).
     */
   protected def withSmallRegimeScheduling[T](tables: Seq[String])
       (f: => T): T = {
@@ -545,12 +545,10 @@ private[graft] trait DurableStore {
     * the restored copy.
     */
   protected def installTable(dir: String, df: DataFrame,
-      suffix: String, partitionCols: Seq[String] = Nil): Unit = {
+      suffix: String): Unit = {
     val tmp = s"$dir$suffix.tmp"
     val old = s"$dir$suffix.old"
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
-      .parquet(tmp)
+    df.write.mode(SaveMode.Overwrite).parquet(tmp)
     fs.delete(hPath(old), true)
     if (fs.exists(hPath(dir)) && !fs.rename(hPath(dir), hPath(old)))
       throw new java.io.IOException(s"installTable: cannot move $dir aside")
@@ -581,17 +579,11 @@ private[graft] trait DurableStore {
     * all-empty frame writes only _SUCCESS) — legal store state but
     * unreadable without a schema, and nothing to compact either way.
     */
-  protected def compactTable(name: String, targetBytes: Long,
-      partitionCols: Seq[String] = Nil): Unit =
+  protected def compactTable(name: String, targetBytes: Long): Unit =
     writeLock.synchronized {
       val dir = s"$path/$name"
       recoverTable(name)
       if (!fs.exists(hPath(dir))) return
-      // partitioned tables keep their layout: rows are clustered by the
-      // partition columns so each value lands in ONE task → one file
-      // per live partition dir, bounded regardless of how many
-      // micro-batch appends accumulated. Data bytes are summed
-      // recursively (partition layouts nest their files one dir down).
       val it = fs.listFiles(hPath(dir), true)
       var bytes = 0L
       while (it.hasNext) {
@@ -600,20 +592,12 @@ private[graft] trait DurableStore {
       }
       if (bytes == 0L) return
       val k = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      val src = readInferred(dir)
-      // unpartitioned tables COALESCE instead of repartitioning:
-      // compaction only needs to concatenate small files into ≤k
-      // bigger ones, and coalesce does it with a narrow dependency —
-      // no shuffle of the whole table (at 100 TB the compaction
-      // shuffle would rewrite the table through the network twice),
-      // and no AQE stage jobs on the driver. Partitioned tables keep
-      // the clustering repartition: their contract is one file per
-      // live partition value, which needs the hash exchange.
-      val repart =
-        if (partitionCols.isEmpty) src.coalesce(k)
-        else src.repartition(k, partitionCols.map(
-          org.apache.spark.sql.functions.col): _*)
-      installTable(dir, repart, ".compact", partitionCols)
+      // COALESCE, not repartition: compaction only needs to
+      // concatenate small files into ≤k bigger ones, and coalesce does
+      // it with a narrow dependency — no shuffle of the whole table (at
+      // 100 TB the compaction shuffle would rewrite the table through
+      // the network twice), and no AQE stage jobs on the driver
+      installTable(dir, readInferred(dir).coalesce(k), ".compact")
     }
 
   /** A batch's ACCEPTED ids: in-batch-deduped, minus ids already in the
@@ -681,14 +665,30 @@ private[graft] trait DurableStore {
   }
 
   /** The stored-id frame [[resolveAccepted]]'s anti-join reads (one
-    * column `__bid`). Stores with a prunable layout override this to
-    * scan only the partitions `batchIds` (a `__bid` frame) can hash
-    * into — a stored row outside the batch's buckets cannot match any
-    * batch id, so pruning preserves the accepted set exactly.
+    * column `__bid`), read at the batch ids' type through [[readTable]]
+    * — an inferred read would pay a schema-inference job per store
+    * instance on the ingest path.
     */
   protected def storedAcceptIds(idColName: String, table: String,
       batchIds: DataFrame): DataFrame =
-    readInferred(s"$path/$table").select(col(idColName).as("__bid"))
+    readTable(table, org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField(idColName,
+          batchIds.schema("__bid").dataType))))
+      .select(col(idColName).as("__bid"))
+
+  /** Read a store table with an explicit logical schema. A
+    * never-ingested table reads as a literal empty frame (a monitoring
+    * read before the first micro-batch is legal), and a table whose
+    * only appends were all-empty frames still reads: the schema is
+    * given, not inferred from data files.
+    */
+  protected def readTable(table: String,
+      logical: org.apache.spark.sql.types.StructType): DataFrame =
+    if (!fs.exists(hPath(s"$path/$table")))
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        logical)
+    else spark.read.schema(logical).parquet(s"$path/$table")
 
   /** The accepted-id sidecar as a driver-LOCAL relation when its
     * parquet is small (one fs listing to decide, one collect job to
@@ -756,11 +756,11 @@ private[graft] trait DurableStore {
     * BIG store: `probe LEFT ANTI stored` hashes its RIGHT side, so
     * Catalyst cannot broadcast the store and plans a sort-merge join
     * — a full shuffle + sort of EVERY stored key per micro-batch
-    * (measured at 10⁸ stored prints: ~100 s per 500-id batch, in
-    * either bucket layout). Inverting streams the store ONCE against
-    * a broadcast probe: `present = stored SEMI broadcast(probe)` is
-    * bounded by the probe size, and the final `probe ANTI
-    * broadcast(present)` touches only tiny frames. Falls back to the
+    * (measured at 10⁸ stored prints: ~100 s per 500-id batch).
+    * Inverting streams the store ONCE against a broadcast probe:
+    * `present = stored SEMI broadcast(probe)` is bounded by the probe
+    * size, and the final `probe ANTI broadcast(present)` touches only
+    * tiny frames. Falls back to the
     * plain anti-join when the probe is too big to broadcast. Callers
     * that already know the probe's cardinality or hold its
     * materialized key set pass `probeRows`/`probeKeys` so the
@@ -770,10 +770,8 @@ private[graft] trait DurableStore {
     * extra keys can only add `present` rows that match no probe row,
     * so the anti-join's result is unchanged.
     *
-    * `storedTable` names the table `stored` scans — the dispatch
-    * lists the FULL table even when the scan is bucket-pruned, which
-    * can only err toward the inversion (still correct, still probe-
-    * bounded).
+    * `storedTable` names the table `stored` scans (the dispatch lists
+    * it once).
     */
   protected def probeAntiJoin(probe: DataFrame, stored: DataFrame,
       keys: Seq[String], storedTable: String,

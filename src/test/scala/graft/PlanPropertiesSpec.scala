@@ -54,6 +54,78 @@ class PlanPropertiesSpec extends SparkSpec {
     }
   }
 
+  private object aqe
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Every physical plan a query persists, nested persists included
+    * (a cache built over another cache scans it as a leaf).
+    */
+  private def cachedPlans(name: String)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation,
+      InMemoryTableScanExec}
+    def nested(p: SparkPlan): Seq[SparkPlan] =
+      p +: aqe.collect(p) { case s: InMemoryTableScanExec =>
+        s.relation.cacheBuilder.cachedPlan }.flatMap(nested)
+    SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
+      .collect { case r: InMemoryRelation => r.cacheBuilder.cachedPlan }
+      .flatMap(nested).distinct
+  }
+
+  /** `size(x) > 0`: the empties filter the dedup fronts apply to their
+    * persisted shingle arrays.
+    */
+  private def isEmptiesFilter(
+      e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{GreaterThan, Literal,
+      Size}
+    e.exists {
+      case GreaterThan(Size(_, _), Literal(0, _)) => true
+      case _ => false
+    }
+  }
+
+  test("q_dedup_ngram plans the spread and the wideThenFold fold as round-robin exchanges") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plans = cachedPlans("q_dedup_ngram")
+    ScratchCache.releaseAll(spark)
+    val widths = plans.flatMap(aqe.collect(_) {
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] =>
+        e.outputPartitioning.numPartitions
+    })
+    // the one-file corpus scan spreads to the session's cores, and the
+    // shingled rows fold back to width / 8 (at least 2)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(widths.sorted == Seq(math.max(2, cores / 8), cores),
+      s"expected the spread ($cores) and the fold exchange, got " +
+      s"${widths.mkString(",")}:\n${plans.mkString("\n")}")
+  }
+
+  test("q_dedup_minhash filters empties above the cache, never under the spread exchange") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val optimized = SparkEntry.queries("q_dedup_minhash")(spark, sf)
+      .queryExecution.optimizedPlan
+    val above = optimized.collect {
+      case f @ Filter(c, _: InMemoryRelation) if isEmptiesFilter(c) => f
+      case f @ Filter(c, Project(_, _: InMemoryRelation))
+          if isEmptiesFilter(c) => f
+    }
+    val under = cachedPlans("q_dedup_minhash").flatMap(aqe.collect(_) {
+      case f: FilterExec if isEmptiesFilter(f.condition) => f
+    })
+    ScratchCache.releaseAll(spark)
+    assert(above.nonEmpty, s"no empties filter over the cache:\n$optimized")
+    // pushed into the persisted subtree, the filter would run the whole
+    // shingle+hash projection once more, serially, below the spread
+    assert(under.isEmpty,
+      s"empties filter inside the persisted plan:\n${under.mkString("\n")}")
+  }
+
   test("q_sim_topk broadcasts queries and pushes the rank limit down") {
     val p = plan("q_sim_topk")
     assert(p.contains("BroadcastExchange"), "query side must broadcast")

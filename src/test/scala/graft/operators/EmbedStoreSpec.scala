@@ -184,6 +184,24 @@ class EmbedStoreSpec extends SparkSpec {
     graft.ScratchCache.releaseAll(spark)
   }
 
+  test("a store pinned with a bucketed layout refuses to open") {
+    // an older build could pin buckets > 0 and write id-hash partition
+    // dirs; the one flat layout must refuse such a store at its entry
+    // points instead of reading it as flat
+    val dir = Files.createTempDirectory("embbucketpin").toFile.getAbsolutePath
+    new EmbedStore(spark, dir, thresholdE6 = T).ingest(b0, batchId = Some(0L))
+    val meta = java.nio.file.Paths.get(s"$dir/store.meta")
+    Files.write(meta, new String(Files.readAllBytes(meta), "UTF-8")
+      .replace("buckets=0", "buckets=8").getBytes("UTF-8"))
+    val store = EmbedStore.open(spark, dir)
+    val e = intercept[IllegalStateException] {
+      store.ingest(b1, batchId = Some(1L))
+    }
+    assert(e.getMessage.contains("buckets=8"))
+    intercept[IllegalStateException](store.vectors)
+    assert(store.lastCommitted("vecs") == 0L)
+  }
+
   test("bitsFor sizes the width to the corpus") {
     assert(EmbedStore.bitsFor(1000L) == 9)
     assert(EmbedStore.bitsFor(100000L) == 16)

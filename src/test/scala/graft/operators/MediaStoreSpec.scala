@@ -216,7 +216,7 @@ class MediaStoreSpec extends SparkSpec {
 
   test("a never-ingested store's accessors read empty instead of throwing") {
     val dir = Files.createTempDirectory("mediafresh").toFile.getAbsolutePath
-    val store = new MediaStore(spark, dir) // default: unbucketed
+    val store = new MediaStore(spark, dir)
     assert(store.prints.count() == 0 && store.pairs.count() == 0)
     assert(store.clusters().count() == 0)
   }
@@ -237,73 +237,22 @@ class MediaStoreSpec extends SparkSpec {
     graft.ScratchCache.releaseAll(spark)
   }
 
-  test("a bucketed store that lost its pin refuses to guess the modulus") {
-    val dir = Files.createTempDirectory("mediapinloss").toFile.getAbsolutePath
-    val store = new MediaStore(spark, dir, stateBuckets = 8)
-    // enough ids that every bucket dir exists (makes the wrong-modulus
-    // refutations below deterministic)
-    store.ingest(prints((100L to 131L).map(i =>
-      i -> (i * 0x9e3779b97f4a7c15L)): _*), batchId = Some(0L))
-    store.ingest(b0, batchId = Some(1L))
-    assert(new java.io.File(s"$dir/store.meta").delete()) // pin-install crash
+  test("a store pinned with a bucketed layout refuses to open") {
+    // an older build could pin buckets > 0 and write id-hash partition
+    // dirs; the one flat layout must refuse such a store at its entry
+    // points instead of reading it as flat
+    val dir = Files.createTempDirectory("mediabucketpin").toFile.getAbsolutePath
+    new MediaStore(spark, dir).ingest(b0, batchId = Some(0L))
+    val meta = java.nio.file.Paths.get(s"$dir/store.meta")
+    Files.write(meta, new String(Files.readAllBytes(meta), "UTF-8")
+      .replace("buckets=0", "buckets=8").getBytes("UTF-8"))
+    val store = MediaStore.open(spark, dir)
     val e = intercept[IllegalStateException] {
-      new MediaStore(spark, dir).ingest(b1, batchId = Some(2L))
+      store.ingest(b1, batchId = Some(1L))
     }
-    assert(e.getMessage.contains("bucketed layout but no shape pin"))
-    // a compact-crash aside must not BLIND the layout probe into
-    // silently adopting the constructor default over the real modulus
-    assert(new java.io.File(s"$dir/prints")
-      .renameTo(new java.io.File(s"$dir/prints.compact.old")))
-    val eAside = intercept[IllegalStateException] {
-      new MediaStore(spark, dir).ingest(b1, batchId = Some(2L))
-    }
-    assert(eAside.getMessage.contains("bucketed layout but no shape pin"))
-    assert(!new java.io.File(s"$dir/prints.compact.old").exists())
-    // a re-stated modulus is VALIDATED against the layout, not trusted:
-    // 4 is refuted by the existing __bucket=7 dir; 16 passes the dir
-    // range but the sampled dir's ids don't hash to it at that modulus
-    val e4 = intercept[IllegalStateException] {
-      new MediaStore(spark, dir, stateBuckets = 4)
-        .ingest(b1, batchId = Some(2L))
-    }
-    assert(e4.getMessage.contains("rejected"))
-    val e16 = intercept[IllegalStateException] {
-      new MediaStore(spark, dir, stateBuckets = 16)
-        .ingest(b1, batchId = Some(2L))
-    }
-    assert(e16.getMessage.contains("rejected"))
-    // re-stating the original modulus re-pins and continues
-    val re = new MediaStore(spark, dir, stateBuckets = 8)
-    re.ingest(b1, batchId = Some(2L))
-    re.ingest(b2, batchId = Some(3L))
-    assert(rows(re.pairs.drop("batch")) == rows(Dedup.hammingPairs(
-      allPrints.unionByName(prints((100L to 131L).map(i =>
-        i -> (i * 0x9e3779b97f4a7c15L)): _*)),
-      maxHamming = 3, blockCols = Seq("kind"))))
-  }
-
-  test("bucketed layout: the pin wins over a different constructor default, parity holds") {
-    val dir = Files.createTempDirectory("mediabuckets").toFile.getAbsolutePath
-    val store = new MediaStore(spark, dir, stateBuckets = 8)
-    store.ingest(b0, batchId = Some(0L))
-    assert(new java.io.File(s"$dir/prints").listFiles()
-      .exists(_.getName.startsWith("__bucket=")), "prints not bucketed")
-    // a reopen with a DIFFERENT default adopts the pinned layout — no
-    // partition dir outside the pinned modulus ever appears, in prints
-    // (keyed by id) OR pairs (keyed by id_a)
-    val re = new MediaStore(spark, dir, stateBuckets = 64)
-    re.ingest(b1, batchId = Some(1L))
-    re.ingest(b2, batchId = Some(2L))
-    re.compact(targetFileBytes = 1L)
-    Seq("prints", "pairs").foreach { t =>
-      val bks = spark.read.parquet(s"$dir/$t")
-        .select(col("__bucket").cast("int")).distinct()
-        .collect().map(_.getInt(0))
-      assert(bks.nonEmpty && bks.forall(b => b >= 0 && b < 8),
-        s"$t stateBuckets pin violated: ${bks.mkString(",")}")
-    }
-    assert(rows(re.pairs.drop("batch")) == rows(wantPairs))
-    graft.ScratchCache.releaseAll(spark)
+    assert(e.getMessage.contains("buckets=8"))
+    intercept[IllegalStateException](store.prints)
+    assert(store.lastCommitted("prints") == 0L)
   }
 
   test("soak: streaming ingest with kill before checkpoint commit + compaction between restarts") {

@@ -2173,23 +2173,6 @@ class PipelineOpsSpec extends SparkSpec {
       (3L, 2L, 0L, 0L)))
   }
 
-  test("bloom-prefiltered decontamination equals the exact path") {
-    import graft.operators.text.Decontamination
-    val rnd = new scala.util.Random(11)
-    def sentence(i: Long) =
-      (0 until 12).map(j => s"w${(i * 31 + j * 7 + rnd.nextInt(3)) % 40}")
-        .mkString(" ")
-    val corpus = (0L until 200L).map(i => (i, sentence(i))).toDF("doc_id", "text")
-    val bench = (0L until 20L).map(i => (i, sentence(i * 9))).toDF("doc_id", "text")
-    val exact = Decontamination.overlap(corpus, bench, "doc_id", "text", n = 3)
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val bloom = Decontamination.overlapBloom(corpus, bench, "doc_id", "text",
-        n = 3, fpp = 0.05)
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(exact.nonEmpty, "fixture should produce overlaps")
-    assert(bloom == exact)
-  }
-
   test("char trigrams stream occurrences and guard short texts") {
     val df = Seq((1L, "Abcd"), (2L, "ab"), (3L, "aaaa")).toDF("doc_id", "text")
     val out = df.select(col("doc_id"),

@@ -116,9 +116,7 @@ class ReleaseStoreSpec extends SparkSpec {
       .count(_.getName.startsWith("batch=")) == 3)
 
     store.compact()
-    // bounded: both tables collapse to a single file under the default
-    // (unbucketed) layout — the bucketed layout-preserving compaction
-    // contract is pinned by the dedicated layout specs; committed
+    // bounded: both tables collapse to a single file; committed
     // batches' sidecars are pruned; markers survive
     assert(files("scored") == 1)
     assert(files("docs") == 1)
@@ -321,7 +319,6 @@ class ReleaseStoreSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def files(t: String): Set[String] = {
-      // recursive: bucketed tables nest their files one dir down
       val p = new org.apache.hadoop.fs.Path(s"$dir/$t")
       if (!fs.exists(p)) Set.empty
       else {
@@ -926,32 +923,23 @@ class ReleaseStoreSpec extends SparkSpec {
     graft.ScratchCache.releaseAll(spark)
   }
 
-  test("bucketed layout: the pin wins over a different constructor default, parity holds") {
-    val dir = Files.createTempDirectory("relbuckets").toFile.getAbsolutePath
-    val store = new ReleaseStore(spark, dir, "doc_id", "text",
-      lshFront = true, stateBuckets = 8)
-    store.ingest(b0, batchId = Some(0L))
-    assert(new java.io.File(s"$dir/docs").listFiles()
-      .exists(_.getName.startsWith("__bucket=")), "docs not bucketed")
-    // a reopen with a DIFFERENT default adopts the pinned layout — no
-    // partition dir outside the pinned modulus ever appears
-    val re = new ReleaseStore(spark, dir, "doc_id", "text",
-      lshFront = true, stateBuckets = 64)
-    re.ingest(b1, batchId = Some(1L))
-    re.ingest(b2, batchId = Some(2L))
-    val bks = spark.read.parquet(s"$dir/shingles")
-      .select(col("__bucket").cast("int")).distinct()
-      .collect().map(_.getInt(0))
-    assert(bks.nonEmpty && bks.forall(b => b >= 0 && b < 8),
-      s"stateBuckets pin violated: ${bks.mkString(",")}")
-    val all = b0.unionByName(b1).unionByName(b2)
-    val q = all.select(col("doc_id").as("id"), col("n_chars").as("q"))
-    val got = re.products(threshold = 0.5, quality = q)
-    val want = Dedup.releasePipelineLsh(all, "doc_id", "text",
-      threshold = 0.5, maxShingleDf = None, quality = q)
-    assert(rows(got.pairs) == rows(want.pairs))
-    assert(rows(got.containment) == rows(want.containment))
-    graft.ScratchCache.releaseAll(spark)
+  test("a store pinned with a bucketed layout refuses to open") {
+    // an older build could pin buckets > 0 and write id-hash partition
+    // dirs; the one flat layout must refuse such a store at its entry
+    // points instead of reading it as flat
+    val dir = Files.createTempDirectory("relbucketpin").toFile.getAbsolutePath
+    new ReleaseStore(spark, dir, "doc_id", "text", lshFront = true)
+      .ingest(b0, batchId = Some(0L))
+    val meta = java.nio.file.Paths.get(s"$dir/store.meta")
+    Files.write(meta, new String(Files.readAllBytes(meta), "UTF-8")
+      .replace("buckets=0", "buckets=8").getBytes("UTF-8"))
+    val store = ReleaseStore.open(spark, dir)
+    val e = intercept[IllegalStateException] {
+      store.ingest(b1, batchId = Some(1L))
+    }
+    assert(e.getMessage.contains("buckets=8"))
+    intercept[IllegalStateException](store.compact())
+    assert(store.lastCommitted("docs") == 0L)
   }
 
   test("soak: kill before commit + replay + compaction between restarts") {

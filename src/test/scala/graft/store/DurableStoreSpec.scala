@@ -3,39 +3,30 @@ package graft.store
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 import java.nio.file.Files
 
-/** The bucket-layout contracts the stores' performance posture rests
-  * on, pinned at the FILE level: a clustered append writes one file
-  * per touched bucket (not one per task × bucket — the small-files
-  * regression that made ×10 batch walls 10–20× worse before the
-  * repartition), and a pruned read opens only the probed buckets'
-  * files.
+/** The shared [[DurableStore]] machinery the durable stores' ingest
+  * posture rests on: the replay-guard anti-join dispatch, the footer-
+  * stat unmarked probe, the small-regime scheduling window (AQE and
+  * shuffle width, session-scoped, restored by unset) and the scan-width
+  * estimate — each pinned on a bare test store over hand-written
+  * tables.
   */
-class BucketedTablesSpec extends SparkSpec {
+class DurableStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private class Probe(val s: SparkSession, val p: String, val mod: Int,
+  private class Probe(val s: SparkSession, val p: String,
       rowCeiling: Long = 4000000L, plainBytes: Long = 64L * 1024 * 1024,
       coldCap: Int = DurableStore.footerColdReadCap,
       walkCap: Int = DurableStore.footerWalkMaxFiles)
-      extends DurableStore with BucketedTables {
+      extends DurableStore {
     protected def spark: SparkSession = s
     protected def path: String = p
-    protected lazy val effectiveBuckets: Int = mod
     protected override def invertStoreRows: Long = rowCeiling
     protected override def plainStoreBytes: Long = plainBytes
     protected override def footerColdReadCap: Int = coldCap
     protected override def footerWalkMaxFiles: Int = walkCap
-    def read(table: String, logical: StructType,
-        buckets: Option[Seq[Int]]): DataFrame =
-      readTable(table, logical, buckets)
-    def append(df: DataFrame, idCol: String, dir: String): Unit =
-      appendBucketed(df, idCol, dir)
-    def bucketSet(ids: DataFrame, c: String): Option[Seq[Int]] =
-      bucketsOf(ids, c)
-    def bucketCol(c: org.apache.spark.sql.Column) = bucketOf(c)
     def guardAnti(pr: DataFrame, stored: DataFrame, keys: Seq[String],
         table: String): DataFrame =
       probeAntiJoin(pr, stored, keys, table)
@@ -46,69 +37,6 @@ class BucketedTablesSpec extends SparkSpec {
     def smallSched[T](tables: Seq[String])(f: => T): T =
       withSmallRegimeScheduling(tables)(f)
     def small(table: String): Boolean = storedIsSmall(table)
-  }
-
-  private val logical = StructType(Seq(StructField("id", LongType)))
-
-  test("clustered append: one file per touched bucket per batch") {
-    val dir = Files.createTempDirectory("bt").toFile.getAbsolutePath
-    val probe = new Probe(spark, dir, 8)
-    // 200 ids spread over >1 task: without the repartition this writes
-    // (tasks × buckets) files
-    probe.append(spark.range(200).select(col("id")).repartition(4),
-      "id", s"$dir/t")
-    val files = new java.io.File(s"$dir/t").listFiles()
-      .filter(_.getName.startsWith("__bucket="))
-      .map(d => d.getName -> d.listFiles()
-        .count(_.getName.endsWith(".parquet"))).toMap
-    assert(files.size == 8, s"expected 8 bucket dirs: $files")
-    assert(files.values.forall(_ == 1),
-      s"one file per bucket per append: $files")
-    // a second append adds at most one more per touched bucket
-    probe.append(spark.range(50).select(col("id")), "id", s"$dir/t")
-    val after = new java.io.File(s"$dir/t").listFiles()
-      .filter(_.getName.startsWith("__bucket="))
-      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
-    assert(after.forall(_ <= 2))
-  }
-
-  test("pruned read opens only the probed buckets' files and keeps the logical shape") {
-    val dir = Files.createTempDirectory("bt2").toFile.getAbsolutePath
-    val probe = new Probe(spark, dir, 8)
-    probe.append(spark.range(400).select(col("id")), "id", s"$dir/t")
-    // probe ids that hash into a known strict subset of buckets
-    val probeIds = spark.range(400).select(col("id"))
-      .where(probe.bucketCol(col("id")).isin(1, 5))
-    val bs = probe.bucketSet(probeIds, "id")
-    assert(bs == Some(Seq(1, 5)) || bs == Some(Seq(5, 1)), s"got $bs")
-    val pruned = probe.read("t", logical, bs)
-    assert(pruned.schema == logical) // __bucket never leaks
-    // the physical scan's partition pruning — inputFiles reports the
-    // relation's full listing regardless of filters, so assert on the
-    // planned scan's selected partition dirs
-    val scan = pruned.queryExecution.sparkPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.head
-    val listing = scan.selectedPartitions
-    val dirs = listing.toPartitionArray
-      .map(f => new org.apache.hadoop.fs.Path(f.urlEncodedPath)
-        .getParent.getName).toSet
-    assert(listing.partitionCount == 2 &&
-      dirs == Set("__bucket=1", "__bucket=5"),
-      s"pruned read planned over: $dirs")
-    // and the pruned read IS the probed subset
-    assert(pruned.count() == probeIds.count())
-    // full read sees everything
-    assert(probe.read("t", logical, None).count() == 400)
-  }
-
-  test("a table with no partition dirs yet reads as a literal empty frame") {
-    val dir = Files.createTempDirectory("bt3").toFile.getAbsolutePath
-    val probe = new Probe(spark, dir, 8)
-    probe.append(spark.range(10).where(lit(false)).select(col("id")),
-      "id", s"$dir/t") // all-empty append: only _SUCCESS lands
-    val df = probe.read("t", logical, Some(Seq(3)))
-    assert(df.schema == logical && df.count() == 0)
   }
 
   test("replay-guard dispatch: small stores keep the plain anti-join, big stores invert") {
@@ -122,7 +50,7 @@ class BucketedTablesSpec extends SparkSpec {
     // broadcast(present)). All paths must agree on the result.
     import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
     val dir = Files.createTempDirectory("bt4").toFile.getAbsolutePath
-    val probe = new Probe(spark, dir, 0)
+    val probe = new Probe(spark, dir)
     spark.range(2000).select(col("id"))
       .write.parquet(s"$dir/t")
     val stored = spark.read.parquet(s"$dir/t")
@@ -139,13 +67,13 @@ class BucketedTablesSpec extends SparkSpec {
       // plain (2000 rows shuffle for free; the inversion's overhead
       // loses) — footer row counts decide, not bytes
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-      val fatStore = new Probe(spark, dir, 0, plainBytes = 1024L)
+      val fatStore = new Probe(spark, dir, plainBytes = 1024L)
       val fat = fatStore.guardAnti(pr, stored, Seq("id"), "t")
       assert(joins(fat) == 1,
         "modest rows must keep the plain anti-join even over the " +
         "byte thresholds")
       // over the byte thresholds AND the row ceiling: invert
-      val bigStore = new Probe(spark, dir, 0, rowCeiling = 100L,
+      val bigStore = new Probe(spark, dir, rowCeiling = 100L,
         plainBytes = 1024L)
       val big = bigStore.guardAnti(pr, stored, Seq("id"), "t")
       assert(joins(big) == 2, "big store must plan the two-join inversion")
@@ -161,7 +89,7 @@ class BucketedTablesSpec extends SparkSpec {
     // (−2) files — and fall back to the one-row probe ONLY when a
     // file's stats straddle −1 without containing it
     val dir = Files.createTempDirectory("bt6").toFile.getAbsolutePath
-    val probe = new Probe(spark, dir, 0)
+    val probe = new Probe(spark, dir)
     def write(table: String, batches: Seq[Long]): Unit =
       batches.toDF("batch").select(col("batch").cast(LongType))
         .coalesce(1).write.mode("append").parquet(s"$dir/$table")
@@ -192,7 +120,7 @@ class BucketedTablesSpec extends SparkSpec {
   test("small-regime scheduling suspends AQE for the window (ref-counted) and big regimes keep it") {
     val aqeKey = "spark.sql.adaptive.enabled"
     val dir = Files.createTempDirectory("bt7").toFile.getAbsolutePath
-    val probe = new Probe(spark, dir, 0)
+    val probe = new Probe(spark, dir)
     val before = spark.conf.get(aqeKey)
     // small regime (a missing table is small): suspended for the
     // window, nested entries ref-count, restored after
@@ -216,7 +144,7 @@ class BucketedTablesSpec extends SparkSpec {
     val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-      val big = new Probe(spark, dir, 0, rowCeiling = 100L,
+      val big = new Probe(spark, dir, rowCeiling = 100L,
         plainBytes = 1024L)
       big.smallSched(Seq("t")) {
         assert(spark.conf.get(aqeKey) == before,
@@ -236,7 +164,7 @@ class BucketedTablesSpec extends SparkSpec {
     val ingestSession = spark.newSession()
     val querySession = spark.newSession()
     querySession.conf.set(aqeKey, "true")
-    val store = new Probe(ingestSession, dir, 0)
+    val store = new Probe(ingestSession, dir)
     val testSessionBefore = spark.conf.get(aqeKey)
     store.smallSched(Seq("t")) {
       assert(ingestSession.conf.get(aqeKey) == "false")
@@ -250,7 +178,7 @@ class BucketedTablesSpec extends SparkSpec {
   test("small-regime window narrows the shuffle width from measured bytes and restores it") {
     val partsKey = "spark.sql.shuffle.partitions"
     val dir = Files.createTempDirectory("btw").toFile.getAbsolutePath
-    val probe = new Probe(spark, dir, 0)
+    val probe = new Probe(spark, dir)
     // the width clamps to the session default — raise it so the floor
     // (8) is visible from the test session's 4
     spark.conf.set(partsKey, "32")
@@ -284,7 +212,7 @@ class BucketedTablesSpec extends SparkSpec {
     val advBefore = spark.conf.get(adv)
     try {
       spark.conf.set(adv, math.max(1L, bytes / 5).toString)
-      val floored = new Probe(spark, dir, 0) {
+      val floored = new Probe(spark, dir) {
         override protected def smallRegimeMinPartitions: Int = 1
       }
       floored.smallSched(Seq("t")) {
@@ -308,7 +236,7 @@ class BucketedTablesSpec extends SparkSpec {
     val s2 = spark.newSession()
     s2.conf.unset(aqeKey)
     assume(!s2.conf.getAll.contains(aqeKey))
-    val store = new Probe(s2, dir, 0)
+    val store = new Probe(s2, dir)
     store.smallSched(Seq("t")) {
       assert(s2.conf.get(aqeKey) == "false")
     }
@@ -329,12 +257,12 @@ class BucketedTablesSpec extends SparkSpec {
         .coalesce(1).write.mode("append").parquet(s"$dir/$table")
     // 3 id'd files: decidable when the cold cap allows, None past it
     write("m", Seq(0L)); write("m", Seq(1L)); write("m", Seq(2L))
-    val capped = new Probe(spark, dir, 0, coldCap = 0)
+    val capped = new Probe(spark, dir, coldCap = 0)
     assert(capped.allMarked("m") == None,
       "past the cold-read cap the verdict falls back to the Spark probe")
     assert(!capped.unmarkedProbe("m", spark.read.parquet(s"$dir/m")),
       "the fallback probe still answers correctly")
-    val uncapped = new Probe(spark, dir, 0)
+    val uncapped = new Probe(spark, dir)
     assert(uncapped.allMarked("m") == Some(true))
     // storedIsSmall: over the byte gates with more files than the walk
     // cap → the footer-row gate is skipped (dispatch says big), while
@@ -342,10 +270,10 @@ class BucketedTablesSpec extends SparkSpec {
     val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-      val overflow = new Probe(spark, dir, 0, plainBytes = 1L, walkCap = 2)
+      val overflow = new Probe(spark, dir, plainBytes = 1L, walkCap = 2)
       assert(!overflow.small("m"),
         "past the status-buffer cap the footer gate must be skipped")
-      val roomy = new Probe(spark, dir, 0, plainBytes = 1L)
+      val roomy = new Probe(spark, dir, plainBytes = 1L)
       assert(roomy.small("m"), "3 rows is small by footer count")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
   }
@@ -356,7 +284,7 @@ class BucketedTablesSpec extends SparkSpec {
     // real scan narrows — the estimate must still err LOW (≤ the
     // planned width), or a needed post-compact widen gets skipped.
     val dir = Files.createTempDirectory("bt5").toFile.getAbsolutePath
-    val probe = new Probe(spark, dir, 0)
+    val probe = new Probe(spark, dir)
     // ~9 MB of incompressible longs in ONE file: big enough that
     // total/minPartitionNum dominates the 4 MB open cost
     spark.range(1150000).select(xxhash64(col("id")).as("id"))
