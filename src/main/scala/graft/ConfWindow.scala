@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.SQLConf
 
 /** Session conf overrides for the span of one block — the one window
-  * behind every runtime posture the engine switches: the durable
-  * stores' small-regime scheduling (AQE off, narrowed shuffle width)
-  * and the console's interpreted posture (codegen off).
+  * behind every runtime posture the engine switches. Both postures in
+  * use are [[smallRegime]]: the durable stores' small-regime
+  * scheduling, and the console's miss posture, which adds codegen off
+  * on top.
   *
   * Reference-counted per (session, key): the first window to set a key
   * saves the session's setting and installs its value; a nested window
@@ -35,6 +37,44 @@ object ConfWindow {
       settings.foreach { case (k, v) => enter(spark, k, v); entered += k }
       f
     } finally entered.foreach(exit(spark, _))
+  }
+
+  /** Run `f` in the small-data posture: adaptive query execution off
+    * and the shuffle width derived from `bytes`, the measured size of
+    * the data `f` reads, plus any `extra` settings.
+    *
+    * AQE materializes every exchange as a separately scheduled job, and
+    * at this scale its adaptations (post-shuffle coalescing, skew
+    * splits, runtime join switches) act on stats that are uniformly
+    * tiny, so the per-exchange job floor is pure scheduling cost. The
+    * window does the coalescing itself instead ("fewer, larger
+    * partitions"): at KB–MB per exchange a session-default width
+    * (cores locally, hundreds on a cluster) makes the dominant cost the
+    * shuffle file machinery — one shuffle file per (map task ×
+    * partition) and one parquet file per write partition. Stack samples
+    * of a composed store drive put `DiskBlockObjectWriter.initialize`,
+    * `BypassMergeSortShuffleWriter` and `HadoopOutputFile.create` on
+    * top (q_store_collapse CPU 182 s → 69 s at width 8, wall 25.0 →
+    * 15.3 s, identical results; OPTIMIZATION_r16.md). The width is
+    * `min(session width, max(minPartitions, ceil(bytes / advisory)))`,
+    * at the advisory partition size AQE would coalesce to, so data
+    * nearing the caller's small bound is back at the session width
+    * before the posture disengages — never a constant tuned to one box.
+    *
+    * The OUTERMOST window's settings hold (see [[apply]]): a nested
+    * posture shares its caller's measured data.
+    */
+  def smallRegime[T](spark: SparkSession, bytes: Long, minPartitions: Int,
+      extra: (String, String)*)(f: => T): T = {
+    val conf = spark.sessionState.conf
+    val advisory = math.max(1L,
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    val width = math.min(conf.numShufflePartitions.toLong,
+      math.max(minPartitions.toLong, (bytes + advisory - 1) / advisory))
+    val settings = Seq(
+      SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false",
+      SQLConf.SHUFFLE_PARTITIONS.key -> width.toString) ++ extra
+    apply(spark, settings: _*)(f)
   }
 
   private def enter(spark: SparkSession, key: String, value: String): Unit =

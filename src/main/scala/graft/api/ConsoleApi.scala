@@ -27,31 +27,46 @@ import graft.schema.Schema
   * dependencies); the engine itself stays a library — this is the optional
   * last layer of SURVEY §7.
   *
-  * INTERPRETED POSTURE for small stores: a cache miss over a main table
-  * whose stored bytes are at most the session's
-  * `autoBroadcastJoinThreshold` (the stores' small-regime bound; ≤ 0
-  * means never small) runs with whole-stage codegen off and
-  * `spark.sql.codegen.factoryMode=NO_CODEGEN`. Spark compiles Java for
-  * every plan it has not seen, and console plans are rarely seen twice:
-  * range bounds arrive as long/timestamp literals inlined into the
-  * generated code, and the JVM-wide codegen cache (100 entries) evicts
-  * the rest. At console-store scale that compile time was most of a
-  * miss, while interpreting a few MB costs less than compiling for it
-  * (ClickHouse, which the reference console targets, likewise
-  * interprets and compiles only expressions it has seen repeatedly).
-  * Rollups are reductions of the main table, so its size bounds every
-  * table the resolver can route to. The size comes from
-  * [[FlowTable.bytesAtMost]] (a cap-bounded file listing, no Spark job);
-  * a table without it keeps the compiled path, as does every store
-  * above the bound ([[CodegenPosture]]).
+  * SMALL POSTURE for small stores: a cache miss over a main table whose
+  * stored bytes are at most the session's `autoBroadcastJoinThreshold`
+  * (the stores' small-regime bound; ≤ 0 means never small) runs in
+  * [[CodegenPosture]]'s window. The window sets four keys: adaptive
+  * query execution off, `spark.sql.shuffle.partitions` derived from
+  * the measured bytes ([[graft.ConfWindow.smallRegime]], the formula
+  * the durable stores use, here with a floor of 1, so a few-MB store
+  * runs every exchange as one partition), whole-stage codegen off and
+  * `spark.sql.codegen.factoryMode=NO_CODEGEN`.
+  *
+  * Why each half. AQE materializes every exchange as its own job, and
+  * each job costs driver time outside any task. In a traced console
+  * benchmark run over a few-MB store, the median miss ran 5 Spark jobs
+  * and 280 ms of driver time outside them; in this posture, 2 jobs and
+  * 209 ms (the reference runs one ClickHouse query per request).
+  * Spark compiles Java for every plan it has not seen, and console
+  * plans are rarely seen twice: range bounds arrive as long/timestamp
+  * literals inlined into the generated code, and the JVM-wide codegen
+  * cache (100 entries) evicts the rest. At console-store scale that
+  * compile time was most of a miss, while interpreting a few MB costs
+  * less than compiling for it (ClickHouse likewise interprets and
+  * compiles only expressions it has seen repeatedly). Rollups are
+  * reductions of the main table, so its size bounds every table the
+  * resolver can route to.
+  *
+  * The size comes from [[FlowTable.bytesUpTo]]: a cap-bounded
+  * `listStatus` walk, no Spark job and no process start (on a JVM
+  * without the native Hadoop library, the `listFiles` walk it replaced
+  * forked `ls -ld` once per file and directory of the main table on
+  * every miss: 90 forks in one 6.7 s console benchmark window).
+  * A table without the probe keeps the session's own conf, as does
+  * every store above the bound.
   *
   * The posture is a session-wide [[graft.ConfWindow]]. That is safe
   * because `HttpServer` dispatches requests on one thread, so requests
   * never overlap, and stream micro-batches run in a cloned session the
   * window does not touch. The remaining caveat: an ad-hoc query run on
-  * the same session while a request is in flight also runs interpreted
-  * — correct, only slower. Give such traffic its own
-  * `spark.newSession()`.
+  * the same session while a request is in flight also runs in the
+  * posture — interpreted, non-adaptive, at the narrow width: correct,
+  * only slower. Give such traffic its own `spark.newSession()`.
   */
 final class ConsoleApi(spark: SparkSession, schema: Schema,
     tables: Seq[FlowTable], port: Int = 0,
@@ -88,11 +103,6 @@ final class ConsoleApi(spark: SparkSession, schema: Schema,
   private def ts(node: JsonNode, field: String): Timestamp =
     Timestamp.from(Instant.parse(node.get(field).asText()))
 
-  /** One request envelope for every endpoint: JSON in/out, errors as
-    * `{"error": …}` with status 400. The callback sees the HTTP method,
-    * the URL-decoded query parameters, and the parsed body (`{}` when
-    * empty).
-    */
   /** A request as the endpoint callbacks see it: HTTP method, full request
     * path, URL-decoded query parameters, parsed JSON body (`{}` if empty).
     */

@@ -395,6 +395,7 @@ final class ReleaseStore(protected val spark: SparkSession,
   }
 
   def docs: DataFrame = {
+    checkShape(pin = false)
     recoverTable("docs")
     readInferred(s"$path/docs")
   }
@@ -403,7 +404,11 @@ final class ReleaseStore(protected val spark: SparkSession,
     * generated each row (−1 for un-id'd batch calls) — the water mark
     * [[productsCached]]'s incremental clustering folds by.
     */
-  def scored: DataFrame = { recoverTable("scored"); readInferred(s"$path/scored") }
+  def scored: DataFrame = {
+    checkShape(pin = false)
+    recoverTable("scored")
+    readInferred(s"$path/scored")
+  }
 
   /** Whether collapse-front membership EXISTS — healing a compact-crash
     * aside first, exactly like the shingles exists-wins read: every

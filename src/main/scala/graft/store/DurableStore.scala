@@ -51,7 +51,7 @@ private[graft] trait DurableStore {
     if (!fs.exists(dir)) return 0
     var bytes = 0L
     var files = 0L
-    val it = fs.listFiles(dir, true)
+    val it = StoreListing.files(fs, dir)
     while (it.hasNext) {
       val st = it.next()
       if (StoreListing.isDataFile(st)) {
@@ -107,7 +107,7 @@ private[graft] trait DurableStore {
     * collected, so one listing serves both gates.
     */
   private def footerRowsAtMost(
-      stats: Seq[org.apache.hadoop.fs.LocatedFileStatus],
+      stats: Seq[org.apache.hadoop.fs.FileStatus],
       cap: Long): Boolean = {
     var rows = 0L
     stats.foreach { st =>
@@ -126,7 +126,7 @@ private[graft] trait DurableStore {
     * footers only for the files the LAST append added.
     */
   private def footerRecordCount(
-      st: org.apache.hadoop.fs.LocatedFileStatus): Long = {
+      st: org.apache.hadoop.fs.FileStatus): Long = {
     val key = st.getPath.toString
     val cached = DurableStore.footerRows.get(key)
     if (cached != null && cached._1 == st.getLen &&
@@ -154,7 +154,7 @@ private[graft] trait DurableStore {
     if (!fs.exists(dir)) return Some(0L)
     var rows = 0L
     var coldReads = 0
-    val it = fs.listFiles(dir, true)
+    val it = StoreListing.files(fs, dir)
     while (it.hasNext) {
       val st = it.next()
       if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
@@ -197,11 +197,11 @@ private[graft] trait DurableStore {
     */
   protected def invertStoreRows: Long = 4000000L
 
-  /** Whether `table`'s data bytes are ≤ `cap` ([[StoreListing.bytesAtMost]]:
+  /** Whether `table`'s data bytes are ≤ `cap` ([[StoreListing.bytesUpTo]]:
     * one cap-bounded listing; a missing table counts as small).
     */
   protected def tableBytesAtMost(table: String, cap: Long): Boolean =
-    StoreListing.bytesAtMost(fs, hPath(s"$path/$table"), cap)
+    StoreListing.bytesUpTo(fs, hPath(s"$path/$table"), cap).isDefined
 
   /** [[probeAntiJoin]]'s size-regime dispatch: whether `table` is
     * SMALL enough that the plain `probe LEFT ANTI stored` beats the
@@ -224,7 +224,7 @@ private[graft] trait DurableStore {
     * shuffle-width derivation ([[withSmallRegimeScheduling]]) from the
     * SAME single listing the dispatch already pays.
     */
-  private def storedSmallBytes(table: String): Option[Long] = {
+  protected def storedSmallBytes(table: String): Option[Long] = {
     val thr = spark.sessionState.conf.autoBroadcastJoinThreshold
     if (thr <= 0) return None
     val dir = hPath(s"$path/$table")
@@ -234,13 +234,13 @@ private[graft] trait DurableStore {
     // statuses kept for the footer-row gate are COUNT-bounded: past
     // the cap the buffer is dropped and the footer gate skipped — a
     // many-tiny-file store between compactions could otherwise hold
-    // hundreds of thousands of LocatedFileStatus per guard dispatch
+    // hundreds of thousands of FileStatus per guard dispatch
     // on the driver, several times per ingest. Skipping only biases
     // the dispatch toward the inversion (result-identical).
     var statsOverflow = false
     val stats = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.LocatedFileStatus]
-    val it = fs.listFiles(dir, true)
+      .empty[org.apache.hadoop.fs.FileStatus]
+    val it = StoreListing.files(fs, dir)
     while (it.hasNext) {
       val st = it.next()
       if (StoreListing.isDataFile(st)) {
@@ -295,7 +295,7 @@ private[graft] trait DurableStore {
     // Past the cold-read cap, bail to None (the one-row Spark probe);
     // the files read so far are cached, so repeated calls converge.
     var coldReads = 0
-    val it = fs.listFiles(dir, true)
+    val it = StoreListing.files(fs, dir)
     while (it.hasNext) {
       val st = it.next()
       if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
@@ -330,7 +330,7 @@ private[graft] trait DurableStore {
     * "contains nothing".
     */
   private def readBatchMinMax(
-      st: org.apache.hadoop.fs.LocatedFileStatus): Option[(Long, Long)] = {
+      st: org.apache.hadoop.fs.FileStatus): Option[(Long, Long)] = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
       .fromStatus(st, spark.sparkContext.hadoopConfiguration)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -374,22 +374,21 @@ private[graft] trait DurableStore {
         df.where(col("batch") === -1L).limit(1).count() > 0
     }
 
-  /** Run `f` (one ingest's or compaction's write actions) with
-    * adaptive query execution SUSPENDED when every table in `tables`
-    * is in the small regime ([[storedIsSmall]] — the same gates that
-    * pick the plain anti-join): AQE materializes every exchange as a
-    * separately scheduled job, and at micro-batch scale its
-    * adaptations (post-shuffle coalescing, skew splits, runtime join
-    * switches) operate on stats that are uniformly "tiny" — the
-    * per-exchange job floor IS the measured scheduling cost of a
-    * composed store drive (q_store_collapse: 162 driver jobs with AQE
-    * vs 93 without, identical results). The moment any consulted
-    * table leaves the small regime, AQE stays on — the 10⁸-row
-    * regimes keep their adaptivity. A bulk-sized batch into a still-
-    * small store foregoes AQE for that one ingest (bounded: the
-    * tables cross the ceiling and the next ingest adapts again);
-    * bulk loads are the from-scratch pipelines' territory by the
-    * stores' own scaladoc. Suspension is a reference-counted
+  /** Run `f` (one ingest's or compaction's write actions) in the
+    * small-data posture — [[graft.ConfWindow.smallRegime]]: AQE off
+    * and a shuffle width derived from the measured bytes, at least
+    * [[smallRegimeMinPartitions]]; why, and the width formula, are
+    * there — when every table in `tables` is in the small regime
+    * ([[storedIsSmall]] — the same gates that pick the plain
+    * anti-join). For a composed store drive the per-exchange job floor
+    * AQE adds IS the measured scheduling cost (q_store_collapse: 162
+    * driver jobs with AQE vs 93 without, identical results). The
+    * moment any consulted table leaves the small regime, AQE stays on
+    * — the 10⁸-row regimes keep their adaptivity. A bulk-sized batch
+    * into a still-small store foregoes AQE for that one ingest
+    * (bounded: the tables cross the ceiling and the next ingest adapts
+    * again); bulk loads are the from-scratch pipelines' territory by
+    * the stores' own scaladoc. The posture is a reference-counted
     * session-conf window ([[graft.ConfWindow]]) — concurrent ingests
     * (two streams, one session) may overlap, and AQE-off is always
     * CORRECT (execution granularity, not semantics), so an overlap at
@@ -417,37 +416,10 @@ private[graft] trait DurableStore {
       case Some(b) => sizes += b
       case None => big = true
     }
+    // the window's width comes from the bytes the dispatch just walked
     if (big) f
-    else {
-      // shuffle width for the window, derived from the MEASURED bytes
-      // the regime dispatch just walked (guide §2.2 "fewer, larger
-      // partitions", done by the window instead of the suspended AQE):
-      // at micro-batch scale every exchange in these write actions
-      // carries KB–MB, and a session-default width (cores locally,
-      // hundreds on a cluster) makes the dominant cost the shuffle
-      // FILE MACHINERY itself — stack-sampled at gate scale: the top
-      // CPU frames of a composed store drive were
-      // DiskBlockObjectWriter.initialize / BypassMergeSortShuffle-
-      // Writer.writePartitionedDataWithChannel / HadoopOutputFile
-      // .create, i.e. one shuffle file per (map task × partition) and
-      // one parquet file per write partition, for single-digit-KB
-      // frames (q_store_collapse CPU 182 s → 69 s at width 8, wall
-      // 25.0 → 15.3 s, identical results — the A/B lanes in
-      // OPTIMIZATION_r16.md). Width grows with the measured bytes at
-      // the SAME advisory size AQE would use, so a store nearing the
-      // regime ceiling is back at the session default before the
-      // regime disengages — never a constant tuned to the local box.
-      val advisory = math.max(1L, spark.sessionState.conf.getConf(
-        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-      val sessionParts = spark.sessionState.conf.numShufflePartitions
-      val width = math.min(sessionParts.toLong, math.max(
-        smallRegimeMinPartitions.toLong,
-        (sizes.sum + advisory - 1) / advisory)).toInt
-      // the OUTERMOST window's width holds — a nested window shares
-      // its ingest's consulted tables
-      graft.ConfWindow(spark, "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> width.toString)(f)
-    }
+    else graft.ConfWindow.smallRegime(spark, sizes.sum,
+      smallRegimeMinPartitions)(f)
   }
 
   /** Floor of the small-regime shuffle width: keeps the BATCH side of
@@ -583,15 +555,8 @@ private[graft] trait DurableStore {
     writeLock.synchronized {
       val dir = s"$path/$name"
       recoverTable(name)
-      if (!fs.exists(hPath(dir))) return
-      val it = fs.listFiles(hPath(dir), true)
-      var bytes = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) bytes += f.getLen
-      }
-      if (bytes == 0L) return
-      val k = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+      val k = compactedFileCount(dir, targetBytes)
+      if (k == 0) return
       // COALESCE, not repartition: compaction only needs to
       // concatenate small files into ≤k bigger ones, and coalesce does
       // it with a narrow dependency — no shuffle of the whole table (at
@@ -599,6 +564,18 @@ private[graft] trait DurableStore {
       // the network twice), and no AQE stage jobs on the driver
       installTable(dir, readInferred(dir).coalesce(k), ".compact")
     }
+
+  /** The file count [[compactTable]] rewrites `dir` to: its parquet
+    * bytes over `targetBytes`, rounded up; 0 when `dir` is missing or
+    * holds no parquet bytes.
+    */
+  protected def compactedFileCount(dir: String, targetBytes: Long): Int = {
+    if (!fs.exists(hPath(dir))) return 0
+    val bytes = StoreListing.files(fs, hPath(dir))
+      .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
+    if (bytes == 0L) 0
+    else math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+  }
 
   /** A batch's ACCEPTED ids: in-batch-deduped, minus ids already in the
     * store's `storedTable` — resolved once and persisted per batch id
@@ -709,8 +686,8 @@ private[graft] trait DurableStore {
     val df = spark.read.schema(schema).parquet(side)
     def local(d: DataFrame): DataFrame =
       spark.createDataFrame(java.util.Arrays.asList(d.collect(): _*), d.schema)
-    if (!StoreListing.bytesAtMost(fs, hPath(side),
-        DurableStore.localAcceptBytes)) df
+    if (StoreListing.bytesUpTo(fs, hPath(side),
+        DurableStore.localAcceptBytes).isEmpty) df
     else
       // type-mismatch safety net: the explicit schema comes from the
       // REPLAYING batch's id column — if a replay ever presents the id

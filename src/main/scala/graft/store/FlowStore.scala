@@ -381,7 +381,7 @@ final class FlowStore(spark: SparkSession, root: String) {
       FlowTable(name, sec, oldestOf(name), () => readTable(name),
         Some((s, e) => readRange(name, s, e)),
         Some(() => newest(name)),
-        Some(cap => StoreListing.bytesAtMost(hadoopFs,
+        Some(cap => StoreListing.bytesUpTo(hadoopFs,
           new org.apache.hadoop.fs.Path(s"$root/$name"), cap)))
     }
   }
@@ -390,18 +390,14 @@ final class FlowStore(spark: SparkSession, root: String) {
     * analogue of `TTL ... ttl_only_drop_parts`).
     */
   def retention(table: String, cutoff: java.time.LocalDate): Unit = {
-    val dir = new java.io.File(s"$root/$table")
-    if (!dir.isDirectory) return
-    dir.listFiles().filter(_.getName.startsWith("p_date=")).foreach { part =>
-      val date = java.time.LocalDate.parse(part.getName.stripPrefix("p_date="))
-      if (date.isBefore(cutoff)) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(part)
+    val fs = hadoopFs
+    val dir = new org.apache.hadoop.fs.Path(s"$root/$table")
+    if (!fs.exists(dir)) return
+    fs.listStatus(dir).map(_.getPath)
+      .filter(_.getName.startsWith("p_date=")).foreach { part =>
+        val date = java.time.LocalDate.parse(part.getName.stripPrefix("p_date="))
+        if (date.isBefore(cutoff)) fs.delete(part, true)
       }
-    }
   }
 
   /** The reference's per-table TTL schedule applied in one call

@@ -279,59 +279,105 @@ class ConsoleApiSpec extends SparkSpec {
       "GET" -> "/api/v0/console/widget/flow-rate" -> "",
       "GET" -> "/api/v0/console/widget/flow-last" -> "",
       "GET" -> "/api/v0/console/widget/exporters" -> "")
-    // which executions ran whole-stage generated code
+    // per execution: whether it ran whole-stage generated code, whether
+    // it ran adaptive, and the partition count of each shuffle
     import scala.jdk.CollectionConverters._
-    val compiled = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    final case class Ran(compiled: Boolean, adaptive: Boolean,
+        shuffleParts: Seq[Int])
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[Ran]()
     object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String,
           qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
-        compiled.add(Plans.collectWithSubqueries(qe.executedPlan) {
-          case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
-        }.nonEmpty)
+        val plan = qe.executedPlan
+        ran.add(Ran(
+          Plans.collectWithSubqueries(plan) {
+            case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+          }.nonEmpty,
+          Plans.collectWithSubqueries(plan) {
+            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a
+          }.nonEmpty,
+          Plans.collectWithSubqueries(plan) {
+            case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+              e.numPartitions
+          }))
         ()
       }
       override def onFailure(f: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
-    val codegenKeys = Seq("spark.sql.codegen.factoryMode",
-      "spark.sql.codegen.wholeStage")
-    val codegenBefore = codegenKeys.map(spark.conf.getAll.get)
+    // Spark jobs per request
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobCounter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def flushed(): Unit =
+      org.apache.spark.graft.ListenerFlush.waitUntilEmpty(spark.sparkContext)
+    // the posture's keys, restored after every window; AQE starts
+    // unset, so its restore must unset it again
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val aqeBefore = spark.conf.getAll.get(aqeKey)
+    spark.conf.unset(aqeKey)
+    val postureKeys = Seq("spark.sql.codegen.factoryMode",
+      "spark.sql.codegen.wholeStage", aqeKey, "spark.sql.shuffle.partitions")
+    val postureBefore = postureKeys.map(spark.conf.getAll.get)
     val thrKey = "spark.sql.autoBroadcastJoinThreshold"
     val thrBefore = spark.conf.getAll.get(thrKey)
-    def answers(threshold: String): (Seq[String], Seq[Boolean]) = {
+    def answers(threshold: String): (Seq[String], Seq[Ran], Seq[Int]) = {
       spark.conf.set(thrKey, threshold)
       posed.cache.invalidateAll()
-      org.apache.spark.graft.ListenerFlush.waitUntilEmpty(spark.sparkContext)
-      compiled.clear()
-      val out = requests.map { case ((method, path), body) =>
+      flushed()
+      ran.clear()
+      val (out, jobsPer) = requests.map { case ((method, path), body) =>
+        val before = jobs.get()
         val (code, json) = sendTo(posed, method, path, body)
         assert(code == 200, s"$path answered $code: $json")
-        json.toString
-      }
-      org.apache.spark.graft.ListenerFlush.waitUntilEmpty(spark.sparkContext)
-      (out, compiled.asScala.toSeq)
+        flushed()
+        (json.toString, jobs.get() - before)
+      }.unzip
+      (out, ran.asScala.toSeq, jobsPer)
     }
     spark.listenerManager.register(listener)
+    spark.sparkContext.addSparkListener(jobCounter)
     try {
-      val (interpreted, onPlans) = answers((1L << 30).toString)
-      val (generated, offPlans) = answers("-1")
-      assert(onPlans.nonEmpty && !onPlans.contains(true),
+      val (interpreted, onPlans, onJobs) = answers((1L << 30).toString)
+      val afterSmall = postureKeys.map(spark.conf.getAll.get)
+      val (generated, offPlans, _) = answers("-1")
+      assert(onPlans.nonEmpty && !onPlans.exists(_.compiled),
         "a small store must run its requests without generated code")
-      assert(offPlans.contains(true),
+      assert(!onPlans.exists(_.adaptive),
+        "a small store must run its requests without AQE")
+      assert(onPlans.flatMap(_.shuffleParts).forall(_ == 1),
+        s"a small store shuffles into one partition: ${onPlans.flatMap(_.shuffleParts)}")
+      assert(offPlans.exists(_.compiled),
         "a store past the threshold must keep the compiled path")
+      assert(offPlans.exists(_.adaptive),
+        "a store past the threshold must keep AQE")
       requests.zip(interpreted.zip(generated)).foreach {
         case ((_, body), (a, b)) =>
           assert(a == b, s"posture changed the answer to $body")
       }
-      // the posture window closed with its requests
-      assert(codegenKeys.map(spark.conf.getAll.get) == codegenBefore)
+      // one graph miss is a few jobs, not one per exchange: the sankey
+      // and the bidirectional line
+      Seq(3, 1).foreach { i =>
+        assert(onJobs(i) <= 3,
+          s"${requests(i)._2} ran ${onJobs(i)} Spark jobs on a small store")
+      }
+      // the posture window closed with its requests; AQE, unset
+      // before, is unset again
+      assert(afterSmall == postureBefore && postureBefore(2).isEmpty)
+      assert(postureKeys.map(spark.conf.getAll.get) == postureBefore)
     } finally {
+      spark.sparkContext.removeSparkListener(jobCounter)
       spark.listenerManager.unregister(listener)
       thrBefore match {
         case Some(v) => spark.conf.set(thrKey, v)
         case None => spark.conf.unset(thrKey)
       }
+      aqeBefore.foreach(spark.conf.set(aqeKey, _))
       posed.stop()
     }
   }

@@ -939,6 +939,9 @@ class ReleaseStoreSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("buckets=8"))
     intercept[IllegalStateException](store.compact())
+    // the readers refuse too, instead of reading the layout as flat
+    intercept[IllegalStateException](store.docs)
+    intercept[IllegalStateException](store.scored)
     assert(store.lastCommitted("docs") == 0L)
   }
 
