@@ -205,8 +205,11 @@ object Bench {
     // The harness keeps only the tail of stdout, so the printed line must
     // stay well under 2000 chars: report a headline subset inline (one
     // query per major area) and dump the complete per-query map to
-    // BENCH_DETAIL.json next to the build.
-    val headlinePairs = results.filter { case (k, _) => headline(k) }
+    // BENCH_DETAIL.json next to the build. A run over named queries
+    // reports every one of them inline instead.
+    val headlinePairs =
+      if (only.isEmpty) results.filter { case (k, _) => headline(k) }
+      else results
     // per-drive driver-job counts for the expensive (≥3 s) drives go in
     // the ONE-LINE artifact itself: with calibration_sec they are the
     // two lenses that separate machine drift from plan changes in one
@@ -221,7 +224,8 @@ object Bench {
       s""","heap_peak_mb":$peakMbMax,"contended_queries":$contendedN""" +
       s""","queries":${fmt(headlinePairs)}""" +
       s""","jobs":${fmtL(jobPairs)}""" +
-      s""","detail":"BENCH_DETAIL.json","sf":"$sfDir"}"""
+      (if (only.isEmpty) s""","detail":"BENCH_DETAIL.json"""" else "") +
+      s""","sf":"$sfDir"}"""
     // only a FULL run may refresh the committed per-query record — a
     // filtered smoke run ("Bench q_x") would silently clobber it with a
     // near-empty map and a subset total. `queries` is min-of-reps;

@@ -93,12 +93,6 @@ object DecodePipeline {
         }
     }
 
-  /** Flows-only view of [[decodeOneCounted]] (drop rows filtered out). */
-  def decodeOne(state: TemplateState, data: Array[Byte]): (TemplateState, Seq[DecodedFlow]) = {
-    val (st, outs) = decodeOneCounted(state, data)
-    (st, outs.collect { case DecodeOut(f, null) => f })
-  }
-
   private def outcomeRows(flows: Seq[DecodedFlow], error: Option[String],
       templatesMissing: Boolean, nonEncapDrops: Long): Seq[DecodeOut] = {
     val flowRows = flows.map(DecodeOut(_, null))

@@ -17,7 +17,6 @@ final class Wire(val bytes: Array[Byte], var pos: Int, val end: Int) {
       ((bytes(pos + 2) & 0xffL) << 8) | (bytes(pos + 3) & 0xffL)
     pos += 4; v
   }
-  def u64(): Long = { val hi = u32(); val lo = u32(); (hi << 32) | lo }
 
   // a corrupted u32 length narrowed to Int can be negative; copyOfRange
   // would then throw IllegalArgumentException, which the decoders' malformed

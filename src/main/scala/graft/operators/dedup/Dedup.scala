@@ -262,7 +262,7 @@ object Dedup {
     * This is how the cap gets CHOSEN at 100 TB instead of guessed:
     * [[defaultShingleDfCap]] is a corpus-shape heuristic; the frontier
     * prices every cap against the actual histogram for the cost ceiling
-    * the cluster can pay ([[suggestDfCap]] picks the largest cap within
+    * the cluster can pay (the largest cap whose `est_pairs` fits the
     * budget). One extra aggregation over the inverted index the pair
     * join builds anyway — the histogram (distinct df values) is tiny, so
     * the cumulative window runs over a value table, never the corpus
@@ -293,20 +293,6 @@ object Dedup {
       .crossJoin(broadcast(total))
       .withColumn("shingles_dropped", col("__t") - col("shingles_kept"))
       .drop("__t")
-  }
-
-  /** Largest df-cap whose exact candidate-pair volume stays within
-    * `pairBudget` ([[dfCapFrontier]] row selection). Returns 1 when even
-    * the smallest frontier step exceeds the budget (a cap of 1 admits no
-    * pairs at all — every pair needs df ≥ 2). Driver-side collect of ONE
-    * aggregated row.
-    */
-  def suggestDfCap(df: DataFrame, idCol: String, textCol: String,
-      pairBudget: Long): Int = {
-    val r = dfCapFrontier(df, idCol, textCol)
-      .where(col("est_pairs") <= pairBudget)
-      .agg(max("df_cap")).head()
-    if (r.isNullAt(0)) 1 else r.getLong(0).toInt
   }
 
   /** MinHash hash-family parameters h_i(x) = (a_i·x + b_i) mod p over
@@ -874,30 +860,22 @@ object Dedup {
       .crossJoin(idxRows).crossJoin(collapse).crossJoin(nDocs)
   }
 
-  /** Should a release over `df` run the LSH front? Prices both fronts
-    * with [[lshFrontCostPlan]] (fast hash family — counting
-    * aggregations only, no candidate materialized) and applies the
-    * measured crossover: the LSH front pays a fixed per-index-row toll
-    * (signatures + banding + the prefix window ≈ a few passes over the
-    * index), so it wins only when the candidate pairs it AVOIDS exceed
-    * that toll. Calibrated against the ×10 rehearsal pair
-    * (PLANS.md round 10): sf0.1 — 1.13M exact vs 0.18M LSH candidates
-    * over ~1M index rows → exact front faster (measured), margin 0.95M
-    * < 5M; ×10 — 113.3M vs 18.3M over ~10M rows → LSH 17× faster
-    * (measured), margin 95M > 50M. The factor-5 toll sits comfortably
-    * between the two measured regimes.
-    */
-  def lshFrontWorthwhile(df: DataFrame, idCol: String, textCol: String,
-      containThreshold: Double = 0.8, maxShingleDf: Option[Int] = None,
-      k: Int = 128, bands: Int = 32, seed: Long = 42L): Boolean =
-    frontDecisions(df, idCol, textCol, containThreshold, maxShingleDf,
-      k, bands, seed)._1
-
   /** Both priced front decisions from ONE counting plan:
-    * `(lsh front worthwhile, exact-dup collapse worthwhile)`.
+    * `(lsh front worthwhile, exact-dup collapse worthwhile)`. Both
+    * fronts are priced with [[lshFrontCostPlan]] (fast hash family —
+    * counting aggregations only, no candidate materialized).
     *
-    * The LSH call applies [[lshFrontWorthwhile]]'s measured factor-5
-    * crossover. The collapse call is volume-based: the collapse front
+    * The LSH call applies the measured crossover: the LSH front pays a
+    * fixed per-index-row toll (signatures + banding + the prefix window
+    * ≈ a few passes over the index), so it wins only when the candidate
+    * pairs it AVOIDS exceed that toll. Calibrated against the ×10
+    * rehearsal pair (PLANS.md round 10): sf0.1 — 1.13M exact vs 0.18M
+    * LSH candidates over ~1M index rows → exact front faster
+    * (measured), margin 0.95M < 5M; ×10 — 113.3M vs 18.3M over ~10M
+    * rows → LSH 17× faster (measured), margin 95M > 50M. The factor-5
+    * toll sits comfortably between the two measured regimes.
+    *
+    * The collapse call is volume-based: the collapse front
     * pays one sorted-set window over the corpus and wins when exact
     * duplicates are a nontrivial share of it — `collapsed_docs > 5%`
     * is the conservative threshold (the ×10 rehearsal corpus at ~90%
@@ -922,7 +900,7 @@ object Dedup {
     (useLsh, useCollapse)
   }
 
-  /** Planner-dispatched release: run [[lshFrontWorthwhile]]'s counting
+  /** Planner-dispatched release: run [[frontDecisions]]' counting
     * plan and pick [[releasePipelineLsh]] or [[releasePipeline]] —
     * the 100 TB default is self-tuning instead of a caller bet on
     * corpus shape. Products are identical either way whenever the
@@ -1154,7 +1132,8 @@ object Dedup {
   /** The distinct LSH-front candidate pair list (both fronts unioned) —
     * what [[lshScoredPairs]] verifies. Exposed for diagnostics: its
     * count against [[scoredPairs]]'s Σ df² join output is the candidate
-    * reduction the front buys (the ScaleRehearsal table).
+    * reduction the front buys. ReleaseSpec pins [[lshScoredPairs]] to
+    * the exact scores of exactly these candidates.
     */
   def lshCandidates(df: DataFrame, idCol: String, textCol: String,
       containThreshold: Double, maxShingleDf: Option[Int],

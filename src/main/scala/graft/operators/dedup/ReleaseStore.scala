@@ -100,9 +100,20 @@ final class ReleaseStore(protected val spark: SparkSession,
       */
     collapseFront: Boolean = false,
     /** Stored-corpus row count past which the EXACT front engages both
-      * its maintained sidecars ([[exactStateMinRows]]'s doc — the
-      * measured 50k default; exists-wins once created). A tuning knob,
-      * not a shape property: the sidecars' MEANING is
+      * its maintained sidecars (exists-wins once created): shingle state
+      * ([[storedExactDelta]]) and the `docids` sidecar. Below it the
+      * recompute delta is measured-cheaper. MEASURED bracket (PLANS
+      * round 16): at the 5k-doc gate the recompute path costs half the
+      * state path's CPU (26 s vs 51+ s — state writes and extra stored
+      * scans dominate a corpus whose full re-tokenize is trivial); at
+      * the ×10 rehearsal's 50k docs the state path already wins and the
+      * gap WIDENS with the stored corpus (500-doc steady-state batch
+      * walls [4.5→5.7] s flat-ish vs [4.8→7.8] s corpus-linear, pair
+      * parity exact at 250,600). 50k is the measured win point; past it
+      * the recompute's per-batch corpus re-tokenize only grows. The
+      * `docids` sidecar shares the threshold (the gate A/B priced its
+      * maintenance at +15% CPU on a corpus whose fat scan is trivial).
+      * A tuning knob, not a shape property: the sidecars' MEANING is
       * threshold-independent, so it is not pinned and reopens may
       * restate it (an already-created sidecar keeps maintaining
       * regardless).
@@ -183,7 +194,7 @@ final class ReleaseStore(protected val spark: SparkSession,
 
   /** EXACT-FRONT SIDECARS (round-16), two independent accelerations,
     * BOTH engaged by the same measured corpus-size dispatch
-    * ([[exactStateMinRows]], exists-wins — below it the store runs
+    * ([[exactSidecarMinRows]], exists-wins — below it the store runs
     * the round-15 shape exactly: recompute deltas, guards consulting
     * `docs`, zero sidecar maintenance, which the gate-scale A/B
     * measured cheapest at 5k docs; past it maintenance pays off and
@@ -214,7 +225,7 @@ final class ReleaseStore(protected val spark: SparkSession,
     * table the LSH front maintains (identical
     * [[Dedup.hashedShingles]] content, so a later lshFront upgrade
     * backfills only bands/prefixes) — engaged only once the stored
-    * corpus crosses [[exactStateMinRows]] (or the table already
+    * corpus crosses [[exactSidecarMinRows]] (or the table already
     * exists: once created it is maintained forever). Below the
     * threshold the recompute delta wins: the state path pays
     * per-batch state writes plus multiple stored-array scans, and at
@@ -231,26 +242,6 @@ final class ReleaseStore(protected val spark: SparkSession,
     */
   private def exactDocIdsEnabled: Boolean = !lshFront
 
-  /** Stored-corpus row threshold above which the uncapped exact front
-    * maintains shingle state ([[storedExactDelta]]); below it the
-    * recompute delta is measured-cheaper. MEASURED bracket (PLANS
-    * round 16): at the 5k-doc gate the recompute path costs half the
-    * state path's CPU (26 s vs 51+ s — state writes and extra stored
-    * scans dominate a corpus whose full re-tokenize is trivial); at
-    * the ×10 rehearsal's 50k docs the state path already wins and the
-    * gap WIDENS with the stored corpus (500-doc steady-state batch
-    * walls [4.5→5.7] s flat-ish vs [4.8→7.8] s corpus-linear, pair
-    * parity exact at 250,600). 50k is the measured win point; past it
-    * the recompute's per-batch corpus re-tokenize only grows. The
-    * SAME threshold gates the `docids` sidecar (the gate A/B priced
-    * its maintenance at +15% CPU on a corpus whose fat scan is
-    * trivial — one dispatch, one story: past 50k rows the exact front
-    * flips BOTH maintenance paths on). (The class is final, so the
-    * spec override lives on the companion.)
-    */
-  private def exactStateMinRows: Long =
-    ReleaseStore.exactStateMinRowsForTests.getOrElse(exactSidecarMinRows)
-
   /** Whether THIS ingest maintains exact-front shingle state: uncapped
     * exact front, and (already created) OR (corpus provably past the
     * threshold — zero-job footer count; an undecidable walk defers).
@@ -258,7 +249,7 @@ final class ReleaseStore(protected val spark: SparkSession,
   private def exactShinglesLive: Boolean =
     !lshFront && maxShingleDf.isEmpty && (
       fs.exists(hPath(s"$path/shingles")) ||
-      tableFooterRows("docs").exists(_ >= exactStateMinRows))
+      tableFooterRows("docs").exists(_ >= exactSidecarMinRows))
 
   /** Whether THIS ingest's id guards may consult the `docids` sidecar
     * (set by [[ensureDocIds]] under the writeLock; single-writer per
@@ -289,7 +280,7 @@ final class ReleaseStore(protected val spark: SparkSession,
   /** Decide the sidecar dispatch, then prove (or restore) `docids` ==
     * `docs`' id set for this ingest. Dispatch (shared threshold with
     * the shingle state, exists-wins): a store below
-    * [[exactStateMinRows]] with no sidecar skips maintenance entirely
+    * [[exactSidecarMinRows]] with no sidecar skips maintenance entirely
     * and its guards consult `docs` — the round-15 shape, measured
     * cheapest at gate scale. Once live: footer row counts equal →
     * usable as-is (zero jobs; steady state pays footer reads only for
@@ -307,7 +298,7 @@ final class ReleaseStore(protected val spark: SparkSession,
     recoverTable("docids") // heal a compact-crash aside BEFORE exists
     val docsRows = tableFooterRows("docs")
     val exists = fs.exists(hPath(s"$path/docids"))
-    if (!exists && !docsRows.exists(_ >= exactStateMinRows)) return
+    if (!exists && !docsRows.exists(_ >= exactSidecarMinRows)) return
     docIdsLive = true
     val sideRows = if (exists) tableFooterRows("docids") else Some(-1L)
     (docsRows, sideRows) match {
@@ -524,8 +515,7 @@ final class ReleaseStore(protected val spark: SparkSession,
     // the sidecar's own append — run non-adaptively: their plans
     // consult statically-small scans where static == adaptive.
     def narrowRegime[T](f: => T): T =
-      if (!lshFront && exactDocIdsEnabled && docIdsUsable &&
-          !ReleaseStore.exactRegimeOff)
+      if (!lshFront && exactDocIdsEnabled && docIdsUsable)
         withSmallRegimeScheduling(Seq("docids"))(f)
       else f
     val (accepted, bState, bShExact) = regime {
@@ -1144,22 +1134,6 @@ final class ReleaseStore(protected val spark: SparkSession,
 }
 
 object ReleaseStore {
-  /** Measurement escape hatch (env var, visible through sbt's forked
-    * JVM): keep AQE for exact-front ingests even when the state path
-    * could suspend it — isolates "state path cost" from "scheduling
-    * regime cost" in A/B runs.
-    */
-  private[dedup] def exactRegimeOff: Boolean =
-    sys.env.get("GRAFT_EXACT_REGIME_OFF").exists(_.toBoolean)
-
-  /** Spec hook for the exact-state size dispatch ([[ReleaseStore]] is
-    * final): ReleaseStoreSpec lowers it to force the stored-state
-    * delta at fixture scale and pin its parity with the recompute
-    * path. Production never sets it.
-    */
-  @volatile private[graft] var exactStateMinRowsForTests
-      : Option[Long] = None
-
   // the key=value pin parse lives in graft.store.DurableStore.readMeta,
   // shared by instance validation (readShape) and the operational
   // reopen ([[open]]) so the two can never disagree about the same file

@@ -44,11 +44,6 @@ object TextAnalysis {
       .otherwise("es")
   }
 
-  /** Per-language stopword hits, exposed for scoring pipelines. */
-  def langScores(text: Column): Seq[(String, Column)] = Seq(
-    "en" -> hitCount(text, stopEn), "de" -> hitCount(text, stopDe),
-    "fr" -> hitCount(text, stopFr), "es" -> hitCount(text, stopEs))
-
   /** Quality metrics in exact integer per-mille (cross-engine safe:
     * integer floor division only, no raw ratios).
     */

@@ -252,7 +252,7 @@ final class FlowStore(spark: SparkSession, root: String) {
     * fact rows are aggregated once, coarser resolutions re-aggregate the
     * already-small 1m output (resolutions divide evenly: 60 | 300 | 3600).
     */
-  def writeRollups(batch: DataFrame, batchId: Option[Long] = None): Unit = {
+  private def writeRollups(batch: DataFrame, batchId: Option[Long]): Unit = {
     val r1m = rollupDelta(batch, 60L).cache()
     try {
       guarded("flows_1m", batchId)(writePartitioned(r1m, "flows_1m"))
@@ -274,10 +274,6 @@ final class FlowStore(spark: SparkSession, root: String) {
 
   /** Last streaming batch id durably written to `table`, −1 if none. */
   def lastCommitted(table: String): Long = markers.lastCommitted(table)
-
-  /** Materialize a single rollup resolution from a batch. */
-  def writeRollup(name: String, sec: Long, batch: DataFrame): Unit =
-    writePartitioned(rollupDelta(batch, sec), name)
 
   /** Scan one stored table (schema without the partition column). */
   def read(name: String): DataFrame = readTable(name)

@@ -211,7 +211,7 @@ class DedupSpec extends SparkSpec {
     assert(uncapped.size > 1, "planted shingle should inflate uncapped pairs")
   }
 
-  test("df-cap frontier prices every cap exactly; suggestDfCap honors the budget") {
+  test("df-cap frontier prices every cap exactly") {
     // one shingle per doc (3-word texts): "a a a" df=3, "b b b" df=2,
     // "c c c" df=1 → histogram {1:1, 2:1, 3:1}; pair fuel 0 / 1 / 3
     val corpus = Seq(
@@ -227,11 +227,6 @@ class DedupSpec extends SparkSpec {
       (1L, 1L, 0L, 1L, 2L),
       (2L, 1L, 1L, 2L, 1L),
       (3L, 1L, 4L, 3L, 0L)))
-    assert(Dedup.suggestDfCap(corpus, "doc_id", "text", pairBudget = 3L) == 2)
-    assert(Dedup.suggestDfCap(corpus, "doc_id", "text", pairBudget = 10L) == 3)
-    // every frontier step over budget → cap 1 (no pairs at all)
-    val allDup = Seq((1L, "d d d"), (2L, "d d d")).toDF("doc_id", "text")
-    assert(Dedup.suggestDfCap(allDup, "doc_id", "text", pairBudget = 0L) == 1)
   }
 
   test("df-cap carries through the clusters/purge path unchanged") {

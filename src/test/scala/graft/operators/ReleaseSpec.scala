@@ -401,7 +401,7 @@ class ReleaseSpec extends SparkSpec {
   test("releaseAuto picks the exact front on small corpora, the LSH front on big ones") {
     // tiny corpus: the pairs the LSH front would avoid cannot pay its
     // per-index-row toll — exact front
-    assert(!Dedup.lshFrontWorthwhile(corpus, "doc_id", "text"))
+    assert(!Dedup.frontDecisions(corpus, "doc_id", "text")._1)
     // heavily replicated corpus of long docs: the index self-join's
     // Σ df² dwarfs the banding+prefix volume — LSH front
     val base = (0 until 7).map(d =>
@@ -412,8 +412,8 @@ class ReleaseSpec extends SparkSpec {
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .withColumn("source", concat(lit("src"), pmod(col("doc_id"), lit(2))))
-    assert(Dedup.lshFrontWorthwhile(repl, "doc_id", "text",
-      k = 64, bands = 8))
+    assert(Dedup.frontDecisions(repl, "doc_id", "text",
+      k = 64, bands = 8)._1)
     // collapse decision from the same counting plan: the replicated
     // corpus is ~97% exact duplicates (collapse fires, and the auto
     // dispatch below therefore exercises the collapsed pipeline); with

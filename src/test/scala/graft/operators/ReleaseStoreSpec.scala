@@ -516,10 +516,9 @@ class ReleaseStoreSpec extends SparkSpec {
     // narrow rebuild — accepted-id resolution stays correct throughout.
     // The dispatch is forced at fixture scale; the sidecar backfills
     // on the first past-threshold ingest (no corpus exists before it)
-    ReleaseStore.exactStateMinRowsForTests = Some(1L)
-    try {
     val dir = Files.createTempDirectory("reldocids").toFile.getAbsolutePath
-    val store = new ReleaseStore(spark, dir, "doc_id", "text")
+    val store = new ReleaseStore(spark, dir, "doc_id", "text",
+      exactSidecarMinRows = 1L)
     store.ingest(b0, batchId = Some(0L))
     store.ingest(b2, batchId = Some(1L)) // corpus now past the dispatch
     assert(spark.read.parquet(s"$dir/docids").count() ==
@@ -530,18 +529,19 @@ class ReleaseStoreSpec extends SparkSpec {
       .delete(fsp, true)
     // heal must survive the dispatch reading "below threshold" now:
     // exists-wins is what keeps a damaged-but-created sidecar coming
-    // back, not the current corpus size
-    ReleaseStore.exactStateMinRowsForTests = Some(Long.MaxValue)
+    // back, not the current corpus size. The threshold is not pinned,
+    // so the same directory reopens with it raised
+    val raised = new ReleaseStore(spark, dir, "doc_id", "text",
+      exactSidecarMinRows = Long.MaxValue)
     // next ingest: the sidecar is GONE and the corpus reads below the
     // raised threshold, so this ingest legitimately consults docs and
-    // skips maintenance (dispatch-off equals the r15 shape) — then a
-    // re-lowered threshold rebuilds it in one narrow pass
+    // skips maintenance (dispatch-off equals the r15 shape) — then the
+    // lowered-threshold instance rebuilds it in one narrow pass
     val dup = b0.limit(1).withColumn("text", lit("recrawled body"))
-    store.ingest(b1.unionByName(dup), batchId = Some(2L))
+    raised.ingest(b1.unionByName(dup), batchId = Some(2L))
     assert(!new java.io.File(s"$dir/docids").exists(),
       "a deleted sidecar below the dispatch stays off — no maintenance")
-    assert(store.docs.count() == 7, "docs after the dispatch-off ingest")
-    ReleaseStore.exactStateMinRowsForTests = Some(1L)
+    assert(raised.docs.count() == 7, "docs after the dispatch-off ingest")
     val dup2 = b1.limit(1).withColumn("text", lit("recrawled again"))
     store.ingest(dup2, batchId = Some(3L)) // all ids known: rebuild only
     val all = b0.unionByName(b1).unionByName(b2)
@@ -554,7 +554,6 @@ class ReleaseStoreSpec extends SparkSpec {
       threshold = 0.5, maxShingleDf = None, quality = q)
     assert(rows(got.pairs) == rows(want.pairs))
     assert(rows(got.survivors) == rows(want.survivors))
-    } finally ReleaseStore.exactStateMinRowsForTests = None
     graft.ScratchCache.releaseAll(spark)
   }
 
@@ -563,47 +562,47 @@ class ReleaseStoreSpec extends SparkSpec {
     // state from the first ingest and scores increments from STORED
     // state (no corpus re-shingle) — replay, re-crawl, mid-stream
     // compaction and products must all equal the from-scratch release
-    ReleaseStore.exactStateMinRowsForTests = Some(1L)
-    try {
-      val dir = Files.createTempDirectory("relexst").toFile.getAbsolutePath
-      val store = new ReleaseStore(spark, dir, "doc_id", "text")
-      store.ingest(b0, batchId = Some(0L))
-      store.ingest(b0, batchId = Some(0L)) // at-least-once replay
-      assert(spark.read.parquet(s"$dir/shingles").count() == b0.count(),
-        "state maintained from the first ingest past the dispatch")
-      store.ingest(b1, batchId = Some(1L))
-      store.compact(targetFileBytes = 1L) // post-compact stored reads
-      // a re-crawled id (different text) is ignored mid-stream
-      val dup = b0.limit(1).withColumn("text", lit("recrawled body"))
-      store.ingest(b2.unionByName(dup), batchId = Some(2L))
-      val all = b0.unionByName(b1).unionByName(b2)
-      assert(spark.read.parquet(s"$dir/shingles").count() == all.count())
-      val q = all.select(col("doc_id").as("id"), col("n_chars").as("q"))
-      val got = store.products(threshold = 0.5, quality = q)
-      val want = Dedup.releasePipeline(all, "doc_id", "text",
-        threshold = 0.5, maxShingleDf = None, quality = q)
-      assert(rows(got.pairs) == rows(want.pairs))
-      assert(rows(got.clusters) == rows(want.clusters))
-      assert(rows(got.keepers) == rows(want.keepers))
-      assert(rows(got.containment) == rows(want.containment))
-      assert(rows(got.survivors) == rows(want.survivors))
-      // a store that crossed the dispatch KEEPS its state even when a
-      // later reading says "below threshold" (exists-wins)
-      ReleaseStore.exactStateMinRowsForTests = Some(Long.MaxValue)
-      val late = doc(
-        (60L, "alpha beta gamma delta epsilon zeta"), // joins 1/2's group
-        (61L, "fresh words never seen anywhere before here"))
-      store.ingest(late, batchId = Some(3L))
-      assert(spark.read.parquet(s"$dir/shingles").count() ==
-        all.count() + late.count(), "existing state keeps appending")
-      val all4 = all.unionByName(late)
-      val q4 = all4.select(col("doc_id").as("id"), col("n_chars").as("q"))
-      val got4 = store.products(threshold = 0.5, quality = q4)
-      val want4 = Dedup.releasePipeline(all4, "doc_id", "text",
-        threshold = 0.5, maxShingleDf = None, quality = q4)
-      assert(rows(got4.pairs) == rows(want4.pairs))
-      assert(rows(got4.survivors) == rows(want4.survivors))
-    } finally ReleaseStore.exactStateMinRowsForTests = None
+    val dir = Files.createTempDirectory("relexst").toFile.getAbsolutePath
+    val store = new ReleaseStore(spark, dir, "doc_id", "text",
+      exactSidecarMinRows = 1L)
+    store.ingest(b0, batchId = Some(0L))
+    store.ingest(b0, batchId = Some(0L)) // at-least-once replay
+    assert(spark.read.parquet(s"$dir/shingles").count() == b0.count(),
+      "state maintained from the first ingest past the dispatch")
+    store.ingest(b1, batchId = Some(1L))
+    store.compact(targetFileBytes = 1L) // post-compact stored reads
+    // a re-crawled id (different text) is ignored mid-stream
+    val dup = b0.limit(1).withColumn("text", lit("recrawled body"))
+    store.ingest(b2.unionByName(dup), batchId = Some(2L))
+    val all = b0.unionByName(b1).unionByName(b2)
+    assert(spark.read.parquet(s"$dir/shingles").count() == all.count())
+    val q = all.select(col("doc_id").as("id"), col("n_chars").as("q"))
+    val got = store.products(threshold = 0.5, quality = q)
+    val want = Dedup.releasePipeline(all, "doc_id", "text",
+      threshold = 0.5, maxShingleDf = None, quality = q)
+    assert(rows(got.pairs) == rows(want.pairs))
+    assert(rows(got.clusters) == rows(want.clusters))
+    assert(rows(got.keepers) == rows(want.keepers))
+    assert(rows(got.containment) == rows(want.containment))
+    assert(rows(got.survivors) == rows(want.survivors))
+    // a store that crossed the dispatch KEEPS its state even when a
+    // later reading says "below threshold" (exists-wins): reopen the
+    // same directory with the threshold raised
+    val raised = new ReleaseStore(spark, dir, "doc_id", "text",
+      exactSidecarMinRows = Long.MaxValue)
+    val late = doc(
+      (60L, "alpha beta gamma delta epsilon zeta"), // joins 1/2's group
+      (61L, "fresh words never seen anywhere before here"))
+    raised.ingest(late, batchId = Some(3L))
+    assert(spark.read.parquet(s"$dir/shingles").count() ==
+      all.count() + late.count(), "existing state keeps appending")
+    val all4 = all.unionByName(late)
+    val q4 = all4.select(col("doc_id").as("id"), col("n_chars").as("q"))
+    val got4 = raised.products(threshold = 0.5, quality = q4)
+    val want4 = Dedup.releasePipeline(all4, "doc_id", "text",
+      threshold = 0.5, maxShingleDf = None, quality = q4)
+    assert(rows(got4.pairs) == rows(want4.pairs))
+    assert(rows(got4.survivors) == rows(want4.survivors))
     graft.ScratchCache.releaseAll(spark)
   }
 
@@ -806,30 +805,30 @@ class ReleaseStoreSpec extends SparkSpec {
     // silently abandons state while docs keeps growing, and a LATER
     // read-path recovery resurrects a STALE shingles table whose
     // missing rows drop scored pairs durably
-    ReleaseStore.exactStateMinRowsForTests = Some(1L)
-    try {
-      val dir = Files.createTempDirectory("relexheal").toFile.getAbsolutePath
-      val store = new ReleaseStore(spark, dir, "doc_id", "text")
-      store.ingest(b0, batchId = Some(0L))
-      store.ingest(b1, batchId = Some(1L)) // crosses the dispatch: state backfills
-      assert(new java.io.File(s"$dir/shingles").exists())
-      assert(new java.io.File(s"$dir/shingles")
-        .renameTo(new java.io.File(s"$dir/shingles.compact.old")))
-      // raise the dispatch so ONLY the healed exists-wins read can keep
-      // the state path live — the footer-count route cannot save it
-      ReleaseStore.exactStateMinRowsForTests = Some(Long.MaxValue)
-      store.ingest(b2, batchId = Some(2L))
-      assert(!new java.io.File(s"$dir/shingles.compact.old").exists())
-      val all = b0.unionByName(b1).unionByName(b2)
-      assert(spark.read.parquet(s"$dir/shingles").count() == all.count(),
-        "healed state kept appending through the crash window")
-      val q = all.select(col("doc_id").as("id"), col("n_chars").as("q"))
-      val got = store.products(threshold = 0.5, quality = q)
-      val want = Dedup.releasePipeline(all, "doc_id", "text",
-        threshold = 0.5, maxShingleDf = None, quality = q)
-      assert(rows(got.pairs) == rows(want.pairs))
-      assert(rows(got.survivors) == rows(want.survivors))
-    } finally ReleaseStore.exactStateMinRowsForTests = None
+    val dir = Files.createTempDirectory("relexheal").toFile.getAbsolutePath
+    val store = new ReleaseStore(spark, dir, "doc_id", "text",
+      exactSidecarMinRows = 1L)
+    store.ingest(b0, batchId = Some(0L))
+    store.ingest(b1, batchId = Some(1L)) // crosses the dispatch: state backfills
+    assert(new java.io.File(s"$dir/shingles").exists())
+    assert(new java.io.File(s"$dir/shingles")
+      .renameTo(new java.io.File(s"$dir/shingles.compact.old")))
+    // reopen with the dispatch raised so ONLY the healed exists-wins
+    // read can keep the state path live — the footer-count route
+    // cannot save it
+    val raised = new ReleaseStore(spark, dir, "doc_id", "text",
+      exactSidecarMinRows = Long.MaxValue)
+    raised.ingest(b2, batchId = Some(2L))
+    assert(!new java.io.File(s"$dir/shingles.compact.old").exists())
+    val all = b0.unionByName(b1).unionByName(b2)
+    assert(spark.read.parquet(s"$dir/shingles").count() == all.count(),
+      "healed state kept appending through the crash window")
+    val q = all.select(col("doc_id").as("id"), col("n_chars").as("q"))
+    val got = raised.products(threshold = 0.5, quality = q)
+    val want = Dedup.releasePipeline(all, "doc_id", "text",
+      threshold = 0.5, maxShingleDf = None, quality = q)
+    assert(rows(got.pairs) == rows(want.pairs))
+    assert(rows(got.survivors) == rows(want.survivors))
     graft.ScratchCache.releaseAll(spark)
   }
 
