@@ -108,11 +108,14 @@ object Bench {
     } catch { case scala.util.control.NonFatal(_) => None }
     val cores = Runtime.getRuntime.availableProcessors.toLong
     // Driver-JOB counter per repetition (kept in the
-    // committed artifact): job counts are MACHINE-INVARIANT — identical
-    // plans schedule identical jobs regardless of machine-day — so a
-    // wall-clock move at an unchanged job count reads as machine drift
-    // (cross-checked against calibration_sec), while a job-count move
-    // is a plan/scheduling change by construction. The listener bus is
+    // committed artifact): identical plans schedule nearly identical
+    // jobs regardless of machine-day — so a wall-clock move at an
+    // unchanged job count reads as machine drift (cross-checked against
+    // calibration_sec), while a job-count move is a plan/scheduling
+    // change. Reps of one plan can still differ by a job, so a query
+    // reports the FEWEST jobs of its successful reps, not the fastest
+    // rep's count, which would make the number depend on which rep
+    // won. The listener bus is
     // async; each delta brackets with a bounded flush.
     val jobCounter = new java.util.concurrent.atomic.AtomicInteger
     spark.sparkContext.addSparkListener(
@@ -176,11 +179,11 @@ object Bench {
           s"(ext ${basis.minBy(_.sec).extMs} ms) — re-running")
         times :+= oneRep(); extraLeft -= 1; retryBudget -= 1
       }
-      val bestRep = basis.minBy(_.sec)
+      val bestRep = basis.minBy(_.sec).copy(jobs = basis.map(_.jobs).min)
       val worstRep = basis.maxBy(_.sec)
       System.err.println(
         f"[bench] $name%-22s ${bestRep.sec}%8.2f s  (worst ${worstRep.sec}%.2f, " +
-          f"jobs ${bestRep.jobs}, " +
+          f"jobs ${bestRep.jobs} (reps ${times.map(_.jobs).mkString("/")}), " +
           f"gc ${bestRep.gcMs}/${worstRep.gcMs} ms, " +
           f"cpu ${bestRep.cpuMs}/${worstRep.cpuMs} ms, " +
           f"ext ${bestRep.extMs} ms${if (bestRep.contended) " CONTENDED" else ""}, " +

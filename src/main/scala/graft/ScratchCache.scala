@@ -33,8 +33,8 @@ object ScratchCache {
   /** The CURRENT THREAD's open [[scoped]] blocks, innermost on top:
     * each records the frames persisted by this thread while it was
     * open, so a scope releases exactly its own thread's scratch. Two
-    * concurrent streams (MediaStore.start + KeyframeSink.start in one
-    * process) each ingest on their own micro-batch thread — a global
+    * concurrent streams (MediaStore.start + startClips in one process)
+    * each ingest on their own micro-batch thread — a global
     * before/after snapshot would let one ingest's cleanup unpersist
     * the other's in-flight frames.
     */

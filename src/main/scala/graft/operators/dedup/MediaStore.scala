@@ -315,11 +315,8 @@ final class MediaStore(protected val spark: SparkSession,
 
   /** Start the continuous durable dedup over a raw media stream: each
     * micro-batch real-decodes to per-kind fingerprints and ingests
-    * exactly-once ([[ingestMedia]] under the checkpoint's batch ids) —
-    * the durable complement of the within-watermark
-    * [[graft.streaming.StreamImageDedup]] twins: pairs against the
-    * WHOLE stored history accumulate here, not just the watermark
-    * window.
+    * exactly-once ([[ingestMedia]] under the checkpoint's batch ids):
+    * pairs against the WHOLE stored history accumulate here.
     */
   def start(stream: Dataset[Multimodal.MediaRow], checkpoint: String,
       trigger: org.apache.spark.sql.streaming.Trigger =

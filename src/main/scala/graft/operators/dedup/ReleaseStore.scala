@@ -940,14 +940,11 @@ final class ReleaseStore(protected val spark: SparkSession,
   /** Start the continuous durable release over a document STREAM: each
     * micro-batch ingests exactly-once under the checkpoint's batch ids
     * ([[ingest]] with `foreachBatch`'s id — the dedupAppend markers
-    * make the sink's at-least-once replays no-ops). This is the durable
-    * complement of the within-watermark streaming dedup twins
-    * ([[graft.streaming.StreamDedup]] and friends): pairs accumulate
-    * against the WHOLE stored corpus here, not just the watermark
-    * window, and [[products]]/[[productsCached]] read the release at
-    * any time while the stream runs (reads are driver-sequential per
-    * store by the DurableStore contract). One active stream per store
-    * per process — same contract as
+    * make the sink's at-least-once replays no-ops). Pairs accumulate
+    * against the WHOLE stored corpus, and [[products]]/[[productsCached]]
+    * read the release at any time while the stream runs (reads are
+    * driver-sequential per store by the DurableStore contract). One
+    * active stream per store per process — same contract as
     * [[graft.operators.dedup.MediaStore.start]].
     */
   def start(stream: DataFrame, checkpoint: String,

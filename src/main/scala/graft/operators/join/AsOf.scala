@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** As-of (event-time nearest-neighbor-in-time) join: for each left row,
   * attach the single right row with the greatest timestamp at or before
-  * the left row's timestamp (backward), or the earliest at or after it
-  * (forward), per key — "what was the most recent X when Y happened".
+  * the left row's timestamp, per key — "what was the most recent X when
+  * Y happened".
   * The temporal-attribution primitive behind enrichment against
   * slowly-changing state (the most recent config/announcement/session
   * marker at flow time).
@@ -23,8 +23,7 @@ import org.apache.spark.sql.functions._
   * Determinism: ties resolve structurally. At equal timestamps, right
   * rows sort before left rows (inclusive semantics) or after (strict),
   * and equal-timestamp right rows resolve to the greatest tiebreak value
-  * (backward) / smallest (forward) — so an SQL window oracle reproduces
-  * every match exactly.
+  * — so an SQL window oracle reproduces every match exactly.
   */
 object AsOf {
 
@@ -52,25 +51,7 @@ object AsOf {
       leftTs: String, rightTs: String, payload: Seq[String],
       rightTie: String, strict: Boolean = false,
       tolerance: Option[Long] = None,
-      matchedTs: String = "asof_ts"): DataFrame =
-    sweep(left, right, keyCols, leftTs, rightTs, payload, rightTie,
-      strict, tolerance, matchedTs, forward = false)
-
-  /** Forward as-of join: earliest rightTs >= leftTs (or > when strict) —
-    * "what happened next". Same single-shuffle sweep, ordered descending.
-    */
-  def joinForward(left: DataFrame, right: DataFrame, keyCols: Seq[String],
-      leftTs: String, rightTs: String, payload: Seq[String],
-      rightTie: String, strict: Boolean = false,
-      tolerance: Option[Long] = None,
-      matchedTs: String = "asof_ts"): DataFrame =
-    sweep(left, right, keyCols, leftTs, rightTs, payload, rightTie,
-      strict, tolerance, matchedTs, forward = true)
-
-  private def sweep(left: DataFrame, right: DataFrame, keyCols: Seq[String],
-      leftTs: String, rightTs: String, payload: Seq[String],
-      rightTie: String, strict: Boolean, tolerance: Option[Long],
-      matchedTs: String, forward: Boolean): DataFrame = {
+      matchedTs: String = "asof_ts"): DataFrame = {
     require(keyCols.nonEmpty, "as-of join needs at least one key column")
     require(payload.nonEmpty, "as-of join needs at least one payload column")
     val collisions = (matchedTs +: payload).toSet.intersect(left.columns.toSet)
@@ -95,28 +76,21 @@ object AsOf {
       keyCols.map(col) ++ Seq(
         col(rightTs).as("__ts"),
         lit(rightSide).as("__side"),
-        // the descending (forward) sweep carries the LAST row in frame
-        // order, so negating the tie there makes the smallest value win —
-        // mirroring backward's greatest-wins under ascending order
-        (if (forward) -col(rightTie).cast("long")
-         else col(rightTie).cast("long")).as("__rtie"),
+        col(rightTie).cast("long").as("__rtie"),
         lit(null).cast(left.schema).as("__lrow"),
         struct((rightTs +: payload).map(col).toIndexedSeq: _*)
           .as("__rrow")): _*)
 
     val ord = Window
       .partitionBy(keyCols.map(col): _*)
-      .orderBy(if (forward) col("__ts").desc else col("__ts").asc,
-        col("__side").asc, col("__rtie").asc)
+      .orderBy(col("__ts").asc, col("__side").asc, col("__rtie").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
     val carried = lTagged.unionByName(rTagged)
       .withColumn("__match", last(col("__rrow"), ignoreNulls = true).over(ord))
       .where(col("__lrow").isNotNull)
 
-    val gap =
-      if (forward) col("__match").getField(rightTs).cast("long") - col("__ts").cast("long")
-      else col("__ts").cast("long") - col("__match").getField(rightTs).cast("long")
+    val gap = col("__ts").cast("long") - col("__match").getField(rightTs).cast("long")
     val inRange = tolerance match {
       case Some(tol) => carried.withColumn("__match", when(gap <= tol, col("__match")))
       case None => carried

@@ -28,8 +28,7 @@ import org.apache.spark.sql.functions._
   * ([[resizeImages]]): `java.awt.Graphics2D` bilinear scaling with an
   * integer-exact output-dimension contract and lossless PNG re-encode.
   * [[decodeMedia]] dispatches a mixed-modality table across the three
-  * real decoders onto one feature schema; [[resizeStub]] remains as
-  * the kind-agnostic binary downsampler.
+  * real decoders onto one feature schema.
   */
 object Multimodal {
 
@@ -479,10 +478,8 @@ object Multimodal {
     }
   }
 
-  /** One payload's envelope hash — the shared core under [[audioDHash]]
-    * and [[graft.streaming.StreamImageDedup]]'s audio path.
-    */
-  private[graft] def audioDHashOne(r: MediaRow, bits: Int,
+  /** One payload's envelope hash, the per-row core of [[audioDHash]]. */
+  private def audioDHashOne(r: MediaRow, bits: Int,
       maxFrames: Long): AudioHash = {
     val none = AudioHash(r.media_id, "", None, None, None, None, None)
     if (r.payload == null || r.payload.isEmpty) none.copy(cause = "empty")
@@ -1649,10 +1646,8 @@ object Multimodal {
     }
   }
 
-  /** One payload's clip hash — the shared core under [[videoDHash]] and
-    * [[graft.streaming.StreamImageDedup]]'s video path.
-    */
-  private[graft] def clipDHashOne(r: MediaRow, hashW: Int, hashH: Int,
+  /** One payload's clip hash, the per-row core of [[videoDHash]]. */
+  private def clipDHashOne(r: MediaRow, hashW: Int, hashH: Int,
       stride: Int, maxSampledFrames: Int, maxPixels: Long): VideoHash = {
     val hashes = scala.collection.mutable.ArrayBuffer.empty[Long]
     val vd = walkOneVideo(r, maxPixels, stride, maxSampledFrames) {
@@ -2131,11 +2126,10 @@ object Multimodal {
     }
   }
 
-  /** One payload's dHash: (cause, width, height, bits) — the shared
-    * decode under [[imageDHash]] and
-    * [[graft.streaming.StreamImageDedup]].
+  /** One payload's dHash: (cause, width, height, bits), the per-row
+    * decode of [[imageDHash]].
     */
-  private[graft] def dhashOne(payload: Array[Byte], hashW: Int, hashH: Int,
+  private def dhashOne(payload: Array[Byte], hashW: Int, hashH: Int,
       maxPixels: Long): (String, Option[Int], Option[Int], Option[Long]) = {
     if (payload == null || payload.isEmpty) ("empty", None, None, None)
     else {
@@ -2205,34 +2199,6 @@ object Multimodal {
       y += 1
     }
     bits
-  }
-
-  /** A resized ("thumbnail") media row. */
-  final case class MediaThumb(media_id: Long, kind: String,
-      thumb: Array[Byte])
-
-  /** Resize plumbing: deterministic stub "scaler" — the thumbnail is
-    * `targetBytes` evenly-spaced bytes of the payload (payloads already
-    * at or under the target pass through). A real implementation swaps
-    * the per-row function for an image scaler; the batch shape
-    * (iterator→iterator per partition, codec initialized once) and the
-    * output schema are what this exercises.
-    */
-  def resizeStub(media: Dataset[MediaRow],
-      targetBytes: Int = 32): Dataset[MediaThumb] = {
-    require(targetBytes > 0)
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      // a real implementation would initialize the scaler here, once
-      rows.map { r =>
-        val n = r.payload.length
-        val t =
-          if (n <= targetBytes) r.payload
-          else Array.tabulate(targetBytes)(i =>
-            r.payload((i.toLong * n / targetBytes).toInt))
-        MediaThumb(r.media_id, r.kind, t)
-      }
-    }
   }
 
   /** Build a media dataset from the documents table (text bytes play the

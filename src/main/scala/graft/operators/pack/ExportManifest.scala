@@ -3,24 +3,22 @@ package graft.operators.pack
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Deterministic sharded corpus export with a verification manifest —
-  * the write side of a training-data release. Documents are assigned to
-  * shards by a portable content-independent id hash (stable across
-  * engines and releases: adding documents never moves existing ones
-  * between shards), and the manifest records per shard the row count,
-  * byte volume, id range, and an order-insensitive content checksum so
-  * a downstream consumer can verify every shard it reads — the
-  * train-data analog of the flow plane's exactly-once commit markers
-  * ([[graft.store.FlowStore]]).
+/** Deterministic shard manifest of a training-data release. Documents
+  * are assigned to shards by a portable content-independent id hash
+  * (stable across engines and releases: adding documents never moves
+  * existing ones between shards), and the manifest records per shard
+  * the row count, byte volume, id range, and an order-insensitive
+  * content checksum so a downstream consumer can verify every shard
+  * it reads — the train-data analog of the flow plane's exactly-once
+  * commit markers ([[graft.store.FlowStore]]).
   *
   * Scale shape: shard assignment is a codegen'd projection; the
   * manifest is one keyed aggregate (map-side combine) with `nShards`
-  * output rows; the physical write is `repartition(shard)` +
-  * `partitionBy(shard)` so each shard lands as one contiguous file set.
-  * The checksum is a SUM of per-row 48-bit content hashes — associative
-  * and commutative, so partition order, task retries, and AQE
-  * coalescing cannot change it, and two engines agree bit-for-bit
-  * (the same reason the KMV estimator and DSIR use integer forms).
+  * output rows. The checksum is a SUM of per-row 48-bit content hashes
+  * — associative and commutative, so partition order, task retries,
+  * and AQE coalescing cannot change it, and two engines agree
+  * bit-for-bit (the same reason the KMV estimator and DSIR use integer
+  * forms).
   */
 object ExportManifest {
 
@@ -81,20 +79,5 @@ object ExportManifest {
           .when(col("ck_v1") === col("ck_v2") &&
             col("n_v1") === col("n_v2"), "unchanged")
           .otherwise("rewrite"))
-  }
-
-  /** Write the corpus sharded to `path` (parquet, one directory per
-    * shard) and return the manifest OF WHAT WAS WRITTEN — computed from
-    * the same projection, so a consumer re-deriving the manifest from
-    * the files must reproduce it exactly (ExportManifestSpec proves the
-    * round trip).
-    */
-  def writeSharded(df: DataFrame, idCol: String, textCol: String,
-      nShards: Int, path: String): DataFrame = {
-    val sharded = df.withColumn("shard", shardOf(col(idCol), nShards))
-    sharded
-      .repartition(nShards, col("shard"))
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
-    manifest(df, idCol, textCol, nShards)
   }
 }

@@ -420,9 +420,9 @@ object CosineSearch {
 
   /** IVF (inverted-file) approximate top-k: a coarse quantizer of `nlist`
     * centroids partitions the corpus into cells; each corpus vector is
-    * assigned to its nearest centroid ONCE (one projection — at scale this
-    * is the stored cell id), and each query probes only its `nprobe`
-    * nearest cells with an exact cosine re-rank inside.
+    * assigned to its nearest centroid ONCE (one projection), and each
+    * query probes only its `nprobe` nearest cells with an exact cosine
+    * re-rank inside.
     *
     * Centroids here are the `nlist` lowest-id corpus vectors — a
     * deterministic stand-in for a k-means codebook (the Spark plumbing is
@@ -453,105 +453,11 @@ object CosineSearch {
       .select(col("qid"), col("rank"), col("id"), col("sim_e6"))
   }
 
-  /** Materialize an IVF index on disk — the "build once, probe many"
-    * production path that [[ivfTopK]]'s Scaladoc promises ("at scale this
-    * is the stored cell id"). The corpus is assigned to cells ONCE and
-    * written parquet-partitioned BY cell (vectors pre-cast, norms
-    * precomputed), with the codebook stored alongside; every subsequent
-    * [[searchIvfIndex]] reads only the probed cells' directories via
-    * partition pruning — I/O per query batch ≈ nprobe/nlist of the
-    * corpus, instead of re-scanning and re-assigning everything per
-    * search, which is what makes repeated ANN serving viable at 100 TB.
-    */
-  def buildIvfIndex(corpus: DataFrame, path: String, nlist: Int = 16,
-      idCol: String = "id", embCol: String = "embedding",
-      codebook: Option[Array[Array[Double]]] = None): Unit = {
-    val spark = corpus.sparkSession
-    val cents = codebook.getOrElse(
-      KMeans.seedCentroids(corpus, nlist, idCol, embCol))
-    withNorm(corpus, idCol, "id", embCol, "cv")
-      .withColumn("cell",
-        cellOf(cents, col("cv")))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    import spark.implicits._
-    cents.zipWithIndex.toIndexedSeq.map { case (v, i) => (i, v.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-  }
-
-  /** Probe a persisted IVF index: rank the stored codebook per query,
-    * collect the (≤ nlist) probed cell ids driver-side, and read the
-    * index with a LITERAL `cell IN (...)` predicate — a partition filter
-    * the scan resolves at planning time, so unprobed cells' files are
-    * never listed, opened, or read (IvfIndexSpec asserts the
-    * PartitionFilters line). Scoring is bit-identical to [[ivfTopK]]
-    * (same projections, same FP order — doubles round-trip parquet
-    * exactly), so index-based search returns the same rows.
-    */
-  /** The stored codebook, ordered by cell id. */
-  private def readCodebook(spark: org.apache.spark.sql.SparkSession,
-      path: String): Array[Array[Double]] =
-    spark.read.parquet(s"$path/codebook")
-      .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
-
-  /** Append a micro-batch of vectors into a persisted IVF index:
-    * assignment uses the STORED codebook (the build-once contract — new
-    * vectors land in the cells every past and future probe ranks over;
-    * nobody re-clusters), the projection matches the cells schema
-    * bit-for-bit, and the write appends only the touched cell
-    * partitions. `batchId` makes `foreachBatch` replays idempotent via
-    * the same per-table commit markers as the flow store — continuous
-    * vector ingest (`writeStream.foreachBatch((b, id) =>
-    * appendIvfIndex(spark, path, b, batchId = Some(id)))`) keeps the ANN
-    * serving index fresh without ever rebuilding it. Rebalance (cells
-    * drifting oversized as the distribution shifts) stays an offline
-    * [[buildIvfIndex]] with a retrained codebook, exactly like the
-    * reference's schema-migration rebuilds.
-    */
-  def appendIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame, idCol: String = "id", embCol: String = "embedding",
-      batchId: Option[Long] = None): Unit = {
-    val cents = readCodebook(spark, path)
-    new graft.store.CommitMarkers(spark, path).guarded("cells", batchId) {
-      withNorm(batch, idCol, "id", embCol, "cv")
-        .withColumn("cell",
-          cellOf(cents, col("cv")))
-        .repartition(col("cell"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("cell").parquet(s"$path/cells")
-    }
-  }
-
-  def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, k: Int, nprobe: Int = 4, qidCol: String = "qid",
-      embCol: String = "embedding"): DataFrame = {
-    val cents: Array[Array[Double]] = readCodebook(spark, path)
-    val q = withNorm(queries, qidCol, "qid", embCol, "qv")
-      .withColumn("cell", explode(probeCells(cents, col("qv"), nprobe)))
-    val probed = q.select("cell").distinct().collect().map(_.getInt(0))
-    val c = spark.read.parquet(s"$path/cells")
-      .where(col("cell").isin(probed.map(Int.box).toIndexedSeq: _*))
-    val w = Window.partitionBy("qid").orderBy(desc("sim_e6"), asc("id"))
-    c.join(broadcast(q), Seq("cell"))
-      .where(col("qid") =!= col("id"))
-      .select(col("qid"), col("id"), pairSimE6.as("sim_e6"))
-      .distinct()
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("id"), col("sim_e6"))
-  }
-
-  /** Per-cell occupancy of the IVF coarse quantizer: (cell, n, share_pm)
-    * — the serving-ops diagnostic behind [[appendIvfIndex]]'s rebalance
-    * note. Cells drift oversized as the ingested distribution shifts; a
-    * hot cell means every probe that ranks it scans disproportionate
-    * rows, so this histogram (plus [[imbalanceFactor]]) is what decides
-    * when the offline codebook rebuild actually runs. One assignment
-    * projection + one count aggregation; the share denominator broadcasts
-    * back as a 1-row literal.
+  /** Per-cell occupancy of the IVF coarse quantizer: (cell, n, share_pm).
+    * A hot cell means every probe that ranks it scans disproportionate
+    * rows, so this histogram is what shows when the codebook needs
+    * retraining. One assignment projection + one count aggregation; the
+    * share denominator broadcasts back as a 1-row literal.
     */
   def ivfCellStats(corpus: DataFrame, nlist: Int = 16,
       idCol: String = "id", embCol: String = "embedding",
@@ -564,22 +470,6 @@ object CosineSearch {
     occ.crossJoin(broadcast(occ.agg(sum("n").as("__t"))))
       .select(col("cell"), col("n"),
         expr("n * 1000 div __t").as("share_pm"))
-  }
-
-  /** FAISS-style imbalance factor of an IVF assignment:
-    * nlist · Σ n_c² / (Σ n_c)² — 1.0 for perfectly balanced cells, k for
-    * everything in one cell. Probe cost scales with it: expected rows
-    * scanned per probe ≈ imbalance · corpus/nlist. A factor creeping
-    * past ~2 is the usual retrain trigger. Driver-side single-row agg.
-    */
-  def imbalanceFactor(corpus: DataFrame, nlist: Int = 16,
-      idCol: String = "id", embCol: String = "embedding",
-      codebook: Option[Array[Array[Double]]] = None): Double = {
-    val stats = ivfCellStats(corpus, nlist, idCol, embCol, codebook)
-      .agg(sum(col("n") * col("n")).cast("double").as("s"),
-        sum("n").cast("double").as("t")).head()
-    val k = codebook.map(_.length).getOrElse(nlist)
-    k * stats.getDouble(0) / (stats.getDouble(1) * stats.getDouble(1))
   }
 
   /** kNN majority-vote label prediction — the embedding-space analog of a

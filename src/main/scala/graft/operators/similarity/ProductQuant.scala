@@ -1,6 +1,6 @@
 package graft.operators.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.expressions.Sketches
@@ -18,10 +18,10 @@ import graft.expressions.Sketches
   * Scale shape: the codebook is an m×ksub×dsub literal in the task
   * closure (kilobytes); encoding is ONE codegen'd projection over the
   * corpus (m independent argmins of ksub quantized L2 scores — no join,
-  * no shuffle, done once and stored at scale); search broadcasts the
-  * (small) query set with a per-query LUT of round(dot(q_j, cent) · 1e6)
-  * longs, and per-pair work is m array lookups + an integer sum — no
-  * float math per candidate at all. The integer LUT terms make scores
+  * no shuffle); search broadcasts the (small) query set with a
+  * per-query LUT of round(dot(q_j, cent) · 1e6) longs, and per-pair
+  * work is m array lookups + an integer sum — no float math per
+  * candidate at all. The integer LUT terms make scores
   * bit-reproducible across engines regardless of summation order.
   *
   * Determinism: the codebook derives from the ksub lowest-id corpus rows
@@ -110,9 +110,7 @@ object ProductQuant {
     val cents = KMeans.seedCentroids(corpus, nlist, idCol, embCol)
     val cb = codebook(corpus, m, ksub, idCol, embCol)
     val cv = col(embCol).cast("array<double>")
-    // the stored index row — (cell, codes) in ONE projection; at scale
-    // this is parquet partitioned by cell (buildIvfIndex's layout) and
-    // the probe join below becomes partition pruning
+    // (cell, codes) in ONE projection
     val enc = corpus.select(col(idCol).as("id"),
       CosineSearch.cellOf(cents, cv)
         .as("cell"),
@@ -124,108 +122,6 @@ object ProductQuant {
       CosineSearch.probeCells(cents, qv, nprobe).as("cells"))
     // each corpus row lives in exactly ONE cell, so multi-probe never
     // duplicates a candidate — no distinct needed
-    val probe = q.select(col("qid"), col("lut"),
-      explode(col("cells")).as("cell"))
-    val cand = adcTopCandidates(
-      enc.join(broadcast(probe), Seq("cell")), m, ksub, rerank)
-    rerankExact(cand, corpus, q, k, idCol, embCol)
-  }
-
-  /** Materialize an IVF-PQ index on disk: (id, codes) rows
-    * parquet-partitioned BY cell, with both codebooks (coarse cells, PQ
-    * sub-spaces) stored alongside — [[CosineSearch.buildIvfIndex]]'s
-    * build-once contract, but the stored rows are m-byte codes instead
-    * of float vectors, so the index is ~64× smaller and a probe scans
-    * codes only. Re-rank fetches exact vectors from the CORPUS (the
-    * vector store) by candidate id at search time — the index never
-    * stores a float vector at all.
-    */
-  def buildIvfPqIndex(corpus: DataFrame, path: String, nlist: Int = 16,
-      m: Int = 4, ksub: Int = 16, idCol: String = "id",
-      embCol: String = "embedding"): Unit = {
-    val spark = corpus.sparkSession
-    val cents = KMeans.seedCentroids(corpus, nlist, idCol, embCol)
-    val cb = codebook(corpus, m, ksub, idCol, embCol)
-    val cv = col(embCol).cast("array<double>")
-    corpus.select(col(idCol).as("id"),
-        CosineSearch.cellOf(cents, cv)
-          .as("cell"),
-        Sketches.pqEncode(cv, cb).as("codes"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    import spark.implicits._
-    cents.zipWithIndex.toIndexedSeq.map { case (v, i) => (i, v.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-    (for { j <- 0 until m; c <- 0 until ksub } yield (j, c, cb(j)(c).toSeq))
-      .toDF("j", "c", "sub")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/pq")
-  }
-
-  /** Append a micro-batch into a persisted IVF-PQ index: cell assignment
-    * AND codes use the STORED codebooks (the build-once contract — new
-    * vectors land where every probe ranks, and their codes score against
-    * every existing LUT), writes append only the touched cell
-    * partitions, and `batchId` rides the same per-table commit markers
-    * as [[CosineSearch.appendIvfIndex]] so `foreachBatch` replays are
-    * exactly-once. Rebalance on drift stays an offline
-    * [[buildIvfPqIndex]] — [[CosineSearch.imbalanceFactor]] is the
-    * trigger.
-    */
-  def appendIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: DataFrame, idCol: String = "id",
-      embCol: String = "embedding", batchId: Option[Long] = None): Unit = {
-    val (cents, cb) = readCodebooks(spark, path)
-    val cv = col(embCol).cast("array<double>")
-    new graft.store.CommitMarkers(spark, path).guarded("cells", batchId) {
-      batch.select(col(idCol).as("id"),
-          CosineSearch.cellOf(cents, cv)
-            .as("cell"),
-          Sketches.pqEncode(cv, cb).as("codes"))
-        .repartition(col("cell"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("cell").parquet(s"$path/cells")
-    }
-  }
-
-  private def readCodebooks(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val cents = spark.read.parquet(s"$path/coarse").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).map(_._2)
-    val flat = spark.read.parquet(s"$path/pq").collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray)
-      .toMap
-    val m = flat.keysIterator.map(_._1).max + 1
-    val ksub = flat.keysIterator.map(_._2).max + 1
-    (cents, Array.tabulate(m, ksub)((j, c) => flat((j, c))))
-  }
-
-  /** Probe a persisted IVF-PQ index: the probed cell ids collect
-    * driver-side into a literal `cell IN (...)` partition filter (the
-    * [[CosineSearch.searchIvfIndex]] discipline — unprobed cells' files
-    * are never listed, opened, or read), ADC scoring reads only those
-    * cells' codes, and the exact re-rank joins the ≤ queries·rerank
-    * candidate ids against `corpus`. Returns the same shape as
-    * [[ivfPqSearch]] and — given the same knobs — the same rows
-    * bit-for-bit (integer ADC terms and parquet-exact doubles make the
-    * round trip lossless).
-    */
-  def searchIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, corpus: DataFrame, k: Int,
-      nprobe: Int = 4, rerank: Int = 50, qidCol: String = "qid",
-      idCol: String = "id", embCol: String = "embedding"): DataFrame = {
-    val (cents, cb) = readCodebooks(spark, path)
-    val (m, ksub) = (cb.length, cb.head.length)
-    val qv = col(embCol).cast("array<double>")
-    val q = queries.select(col(qidCol).as("qid"),
-      Sketches.pqLut(qv, cb).as("lut"),
-      qv.as("qv"), sqrt(Sketches.dotProduct(qv, qv)).as("qv_n"),
-      CosineSearch.probeCells(cents, qv, nprobe).as("cells"))
-    val probed = q.select(explode(col("cells")).as("cell"))
-      .distinct().collect().map(_.getInt(0))
-    val enc = spark.read.parquet(s"$path/cells")
-      .where(col("cell").isin(probed.map(Int.box).toIndexedSeq: _*))
     val probe = q.select(col("qid"), col("lut"),
       explode(col("cells")).as("cell"))
     val cand = adcTopCandidates(

@@ -36,10 +36,4 @@ object CorpusDiff {
           .when(col("h1") === col("h2"), "unchanged")
           .otherwise("changed").as("change"))
   }
-
-  /** The release-note rollup: change-type counts. */
-  def summary(v1: DataFrame, v2: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    diff(v1, v2, idCol, textCol)
-      .groupBy("change").agg(count(lit(1)).as("n"))
 }

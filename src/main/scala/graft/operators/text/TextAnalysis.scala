@@ -128,22 +128,6 @@ object TextAnalysis {
       "redacted_md5" -> md5(redacted))
   }
 
-  /** Within-document repetition (Gopher-style repetition signal):
-    * sentence count, distinct-sentence count, and the duplicate fraction
-    * in exact integer per-mille.
-    */
-  def sentenceStats(text: Column): Seq[(String, Column)] = {
-    val sents = filter(transform(split(text, "\\. "), s => trim(s)),
-      s => length(s) > 0)
-    val total = size(sents).cast("long")
-    val distinctN = size(array_distinct(sents)).cast("long")
-    Seq(
-      "sentences" -> total,
-      "distinct_sentences" -> distinctN,
-      "dup_pm" -> when(total > 0, floor((total - distinctN) * 1000 / total))
-        .otherwise(0L).cast("long"))
-  }
-
   /** Cross-corpus boilerplate scrub (the CCNet/RefinedWeb line-level
     * dedup, REWRITING variant): sentences that occur in more than `maxDf`
     * distinct documents are navigation chrome / legal footers / template
@@ -704,16 +688,5 @@ object TextAnalysis {
       .agg(count(lit(1)).as("total_tris"),
         sum(when(col("c") <= maxCount, 1L).otherwise(0L)).as("rare_tris"))
       .withColumn("rare_ppm", expr("rare_tris * 1000000 div total_tris"))
-  }
-
-  /** Convenience: attach all analysis columns to a documents DataFrame. */
-  def analyze(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    val withQuality = qualityColumns(t).foldLeft(df) { case (d, (n, c)) =>
-      d.withColumn(n, c)
-    }
-    withQuality
-      .withColumn("lang_guess", langGuess(t))
-      .withColumn("fingerprint", fingerprint(t))
   }
 }

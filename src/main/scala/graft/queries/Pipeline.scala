@@ -313,8 +313,7 @@ object Pipeline {
     }),
 
     // IVF serving-ops diagnostic: per-cell occupancy + probe-cost share
-    // — the histogram (with CosineSearch.imbalanceFactor) that decides
-    // when the appended index's offline codebook rebuild actually runs
+    // — the histogram that shows when the codebook needs retraining
     "q_ivf_cells" -> ((s, dir) =>
       CosineSearch.ivfCellStats(
         embs(s, dir).select(col("vec_id").as("id"), col("embedding")),

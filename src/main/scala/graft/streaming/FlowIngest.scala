@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.store.FlowStore
 
@@ -13,8 +12,7 @@ import graft.store.FlowStore
   * MVs bucket whatever arrives and SummingMergeTree merges late rows
   * silently. The faithful translation is [[start]]: per-batch appends with
   * query-time re-aggregation, so late data lands in its true bucket no
-  * matter when it arrives. [[windowedRollup]] is the bounded-state
-  * alternative when a watermark is acceptable.
+  * matter when it arrives.
   */
 object FlowIngest {
 
@@ -38,25 +36,4 @@ object FlowIngest {
         store.writeBatch(enrich(batch), Some(id))
       }
       .start()
-
-  /** Watermarked tumbling-window rollup as a continuous streaming
-    * aggregation (A9): bounded state, late rows beyond the watermark are
-    * dropped — pair with merge-on-read re-aggregation if exactness for
-    * very-late data matters.
-    */
-  def windowedRollup(stream: DataFrame, resolutionSec: Long,
-      watermark: String = "10 minutes"): DataFrame = {
-    val dims = stream.columns
-      .filterNot(graft.schema.FlowSchema.schema.columns.filter(_.mainOnly)
-        .map(_.name).toSet)
-      .filterNot(Seq("TimeReceived", "Bytes", "Packets").contains)
-    stream
-      .withWatermark("TimeReceived", watermark)
-      .groupBy(
-        window(col("TimeReceived"), s"$resolutionSec seconds").as("w") +:
-          dims.map(col).toIndexedSeq: _*)
-      .agg(sum("Bytes").as("Bytes"), sum("Packets").as("Packets"))
-      .select(col("w.start").as("TimeReceived") +:
-        (dims.map(col) :+ col("Bytes") :+ col("Packets")): _*)
-  }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.operators.join.AsOf
-import org.apache.spark.sql.Row
 
 class AsOfSpec extends SparkSpec {
   import spark.implicits._
@@ -52,31 +51,6 @@ class AsOfSpec extends SparkSpec {
       r2, Seq("k"), "ts", "rts", Seq("attr"), rightTie = "rid")
       .collect()
     assert(out.length == 1 && out.head.getAs[String]("attr") == "high")
-  }
-
-  test("forward picks the earliest at-or-after row; strict skips equality") {
-    val incl = AsOf.joinForward(left, right, Seq("k"), "ts", "rts",
-      Seq("attr"), rightTie = "rid")
-      .collect().map(r => r.getAs[String]("tag") ->
-        Option(r.getAs[String]("attr"))).toMap
-    assert(incl("l0") == Some("r@60"))               // earliest >= 50
-    assert(incl("l1") == Some("r@100"))              // equality visible
-    assert(incl("l2") == None)                       // nothing at or after 200
-    val strict = AsOf.joinForward(left, right, Seq("k"), "ts", "rts",
-      Seq("attr"), rightTie = "rid", strict = true)
-      .collect().map(r => r.getAs[String]("tag") ->
-        Option(r.getAs[String]("attr"))).toMap
-    assert(strict("l1") == Some("r@150"))            // 100 skipped, next is 150
-  }
-
-  test("forward equal-timestamp ties resolve to the smallest tiebreak") {
-    val r2 = Seq(("a", 100L, 5L, "low"), ("a", 100L, 9L, "high"))
-      .toDF("k", "rts", "rid", "attr")
-    val out = AsOf.joinForward(
-      Seq(("a", 80L, "l")).toDF("k", "ts", "tag"),
-      r2, Seq("k"), "ts", "rts", Seq("attr"), rightTie = "rid")
-      .collect()
-    assert(out.length == 1 && out.head.getAs[String]("attr") == "low")
   }
 
   test("all left columns and rows are preserved") {

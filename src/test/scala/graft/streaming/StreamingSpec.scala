@@ -541,25 +541,6 @@ class FlowStoreSpec extends SparkSpec {
     val nonZero = rows.filter(_.getAs[Double]("xps") > 0)
     assert(nonZero.forall(_.getAs[Long]("time_s") == 1709251200L)) // 00:00 hour
   }
-
-  test("windowed rollup aggregates with watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val mem = MemoryStream[(Timestamp, String, Long, Long)]
-    val stream = mem.toDF()
-      .toDF("TimeReceived", "ExporterName", "Bytes", "Packets")
-    val agg = FlowIngest.windowedRollup(stream, 60L, "1 minute")
-    val q = agg.writeStream.format("memory").queryName("roll1m")
-      .outputMode("append").start()
-    mem.addData(
-      (ts("2024-03-01T00:00:10Z"), "e1", 100L, 1L),
-      (ts("2024-03-01T00:00:40Z"), "e1", 50L, 1L),
-      (ts("2024-03-01T00:05:00Z"), "e1", 7L, 1L)) // advances watermark
-    q.processAllAvailable()
-    val rows = spark.table("roll1m").collect()
-    q.stop()
-    assert(rows.exists(r => r.getAs[Long]("Bytes") == 150L))
-  }
 }
 
 class StreamingTopKSpec extends SparkSpec {
@@ -595,262 +576,5 @@ class StreamingTopKSpec extends SparkSpec {
     // the sketch must surface the true heavy hitters in weight order
     assert(rows.take(2).map(_._1) == Seq("a", "b"), s"got $rows")
     assert(rows.head._2 == 60L)
-  }
-}
-
-class StreamSessionSpec extends SparkSpec {
-  import StreamSession._
-
-  test("sessions close inline on gap and by event-time timeout") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val base = 1700000000L
-    def ev(u: Long, s: Long, id: Long) =
-      SessionEvent(u, new java.sql.Timestamp(s * 1000L), id)
-    val mem = MemoryStream[SessionEvent]
-    val q = StreamSession.sessionize(
-        mem.toDS().withWatermark("ts", "0 seconds"), gapSec = 3600)
-      .writeStream.format("memory").queryName("ssess")
-      .outputMode("append").start()
-    // batch 1: one open session for user 1 (two events, 10 s apart)
-    mem.addData(ev(1L, base, 1L), ev(1L, base + 10, 2L))
-    q.processAllAvailable()
-    assert(spark.table("ssess").isEmpty) // still open, nothing emitted
-    // batch 2: a user-1 event past the gap closes session 1 inline
-    mem.addData(ev(1L, base + 5000, 3L))
-    q.processAllAvailable()
-    val afterInline = spark.table("ssess").as[ClosedSession].collect().toSet
-    assert(afterInline == Set(ClosedSession(1L, base, base + 10, 2L, 10L)))
-    // batch 3+4: another user far in the future advances the watermark
-    // past user 1's gap horizon → the open session closes by timeout
-    // (watermark advances at batch END, so a second batch fires it)
-    mem.addData(ev(2L, base + 20000, 4L))
-    q.processAllAvailable()
-    mem.addData(ev(2L, base + 20001, 5L))
-    q.processAllAvailable()
-    q.stop()
-    val all = spark.table("ssess").as[ClosedSession].collect().toSet
-    assert(all.contains(ClosedSession(1L, base + 5000, base + 5000, 1L, 0L)),
-      s"timeout close missing: $all")
-  }
-}
-
-class StreamDedupSpec extends SparkSpec {
-
-  test("duplicates within the watermark drop, within and across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
-    val mem = MemoryStream[(java.sql.Timestamp, Long, String)]
-    // one continuous query, two micro-batches: dedup state persists in
-    // the state store between batches
-    val q = StreamDedup.exactWithinWatermark(
-        mem.toDF().toDF("ts", "doc_id", "text"), "text", "ts", "10 minutes")
-      .writeStream
-      .format("memory").queryName("sdedup")
-      .outputMode("append").start()
-    mem.addData(
-      (ts("2024-03-01T00:00:00Z"), 1L, "alpha"),
-      (ts("2024-03-01T00:00:10Z"), 2L, "alpha"), // dup within batch
-      (ts("2024-03-01T00:00:20Z"), 3L, "beta"))
-    q.processAllAvailable()
-    assert(spark.table("sdedup").select("doc_id").as[Long].collect().toSet
-      == Set(1L, 3L))
-    mem.addData(
-      (ts("2024-03-01T00:01:00Z"), 4L, "alpha"), // dup across batches
-      (ts("2024-03-01T00:01:10Z"), 5L, "gamma"))
-    q.processAllAvailable()
-    q.stop()
-    assert(spark.table("sdedup").select("doc_id").as[Long].collect().toSet
-      == Set(1L, 3L, 5L))
-    // the hash helper column does not leak into the output
-    assert(!spark.table("sdedup").columns.contains("__content_hash"))
-  }
-}
-
-class StreamImageDedupSpec extends SparkSpec {
-
-  test("perceptual dupes drop across batches; undecodable rows pass through") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamImageDedup.MediaEvent
-    def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
-    val key = 0x5a5a0f0f33cc55aaL & ~(1L << 63)
-    val png = graft.operators.multimodal.Multimodal.encodePathPng(key)
-    // a brightness-shifted twin: every byte differs, the dHash does not
-    val shifted = {
-      val img = new java.awt.image.BufferedImage(9, 8,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 8) {
-        var v = 150
-        img.setRGB(0, y, (v << 16) | (v << 8) | v)
-        for (x <- 0 until 8) {
-          v += (if (((key >>> (y * 8 + x)) & 1L) == 1L) -8 else 8)
-          img.setRGB(x + 1, y, (v << 16) | (v << 8) | v)
-        }
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
-    }
-    assert(!java.util.Arrays.equals(png, shifted))
-    val other = graft.operators.multimodal.Multimodal.encodePathPng(key ^ 7L)
-    val mem = MemoryStream[MediaEvent]
-    val q = graft.streaming.StreamImageDedup.dhashWithinWatermark(
-        mem.toDS(), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("simgdedup")
-      .outputMode("append").start()
-    mem.addData(
-      MediaEvent(1L, ts("2024-03-01T00:00:00Z"), png, "s"),
-      MediaEvent(2L, ts("2024-03-01T00:00:10Z"), shifted, "s"), // perceptual dup
-      MediaEvent(3L, ts("2024-03-01T00:00:20Z"), Array.emptyByteArray, "s"),
-      MediaEvent(4L, ts("2024-03-01T00:00:30Z"),
-        Array.fill(16)(0x55.toByte), "s"))
-    q.processAllAvailable()
-    val b1 = spark.table("simgdedup").select("media_id").as[Long]
-      .collect().toSet
-    // the re-encoded copy dropped; both undecodable rows passed through
-    assert(b1 == Set(1L, 3L, 4L), s"got $b1")
-    mem.addData(
-      MediaEvent(5L, ts("2024-03-01T00:01:00Z"), png, "s"), // dup across batches
-      MediaEvent(6L, ts("2024-03-01T00:01:10Z"), other, "s"),
-      // another undecodable row: the unique fallback key must not dedup
-      // it against batch 1's
-      MediaEvent(7L, ts("2024-03-01T00:01:20Z"), Array.emptyByteArray, "s"))
-    q.processAllAvailable()
-    q.stop()
-    val all = spark.table("simgdedup").select("media_id").as[Long]
-      .collect().toSet
-    assert(all == Set(1L, 3L, 4L, 6L, 7L), s"got $all")
-    val causes = spark.table("simgdedup").select("media_id", "cause")
-      .as[(Long, String)].collect().toMap
-    assert(causes(1L) == "ok" && causes(3L) == "empty" &&
-      causes(4L) == "no_reader")
-    assert(!spark.table("simgdedup").columns.contains("__k"))
-  }
-
-  test("video and audio clips dedup on their perceptual fingerprints in-stream") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamImageDedup.MediaEvent
-    import graft.operators.multimodal.Multimodal
-    def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
-    val k = 0x3c5a96e1d2b4078L
-    // two clips with DIFFERENT divergent middle frames: same majority
-    // fingerprint, every payload byte stream distinct
-    val clipA = Multimodal.encodePathAvi(Seq(k, k ^ 0xff00L, k))
-    val clipB = Multimodal.encodePathAvi(Seq(k, k ^ 0x33L, k))
-    val clipC = Multimodal.encodePathAvi(Seq(k ^ 0xf0f0f0L, k ^ 0xf0f0f0L))
-    val memV = MemoryStream[MediaEvent]
-    val qv = graft.streaming.StreamImageDedup.videoWithinWatermark(
-        memV.toDS(), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("svideodedup")
-      .outputMode("append").start()
-    memV.addData(
-      MediaEvent(1L, ts("2024-03-01T00:00:00Z"), clipA, "s"),
-      MediaEvent(2L, ts("2024-03-01T00:00:10Z"), clipB, "s"), // same majority
-      MediaEvent(3L, ts("2024-03-01T00:00:20Z"), clipC, "s"),
-      MediaEvent(4L, ts("2024-03-01T00:00:30Z"), Array.emptyByteArray, "s"))
-    qv.processAllAvailable()
-    qv.stop()
-    val gotV = spark.table("svideodedup").select("media_id").as[Long]
-      .collect().toSet
-    assert(gotV == Set(1L, 3L, 4L), s"got $gotV")
-    // audio: gain-shifted twin dedups, distinct envelope passes
-    val wavA = Multimodal.encodeStepWav(k)
-    val wavB = Multimodal.encodeStepWav(k, base = 4000, step = 32)
-    val wavC = Multimodal.encodeStepWav(k ^ 0x5555L)
-    val memA = MemoryStream[MediaEvent]
-    val qa = graft.streaming.StreamImageDedup.audioWithinWatermark(
-        memA.toDS(), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("saudiodedup")
-      .outputMode("append").start()
-    memA.addData(
-      MediaEvent(1L, ts("2024-03-01T00:00:00Z"), wavA, "s"),
-      MediaEvent(2L, ts("2024-03-01T00:00:10Z"), wavB, "s"), // gain twin
-      MediaEvent(3L, ts("2024-03-01T00:00:20Z"), wavC, "s"),
-      MediaEvent(4L, ts("2024-03-01T00:00:30Z"),
-        Multimodal.encodeConstWav(8000, 32, 500), "s")) // too_short passes
-    qa.processAllAvailable()
-    qa.stop()
-    val gotA = spark.table("saudiodedup").select("media_id").as[Long]
-      .collect().toSet
-    assert(gotA == Set(1L, 3L, 4L), s"got $gotA")
-  }
-}
-
-class StreamNearDupSpec extends SparkSpec {
-
-  test("near-dup candidates surface across batches with a stable keeper") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
-    val base = "spark shuffles data across the cluster when wide dependencies appear " +
-      "and the scheduler plans stages from the lineage graph of the job"
-    val other = "completely unrelated content about cooking pasta with garlic " +
-      "and olive oil in a large pan over medium heat until golden"
-    val mem = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val q = StreamNearDup.candidates(
-        mem.toDF().toDF("ts", "doc_id", "text"), "doc_id", "ts", "text",
-        watermark = "10 minutes")
-      .writeStream.format("memory").queryName("sneardup")
-      .outputMode("append").start()
-    // batch 1: the keeper arrives alone — nothing emitted
-    mem.addData((ts("2024-03-01T00:00:00Z"), 1L, base))
-    q.processAllAvailable()
-    assert(spark.table("sneardup").isEmpty)
-    // batch 2: an exact dup and an unrelated doc — only the dup pairs,
-    // against state persisted from batch 1
-    mem.addData(
-      (ts("2024-03-01T00:00:30Z"), 2L, base),
-      (ts("2024-03-01T00:00:40Z"), 3L, other))
-    q.processAllAvailable()
-    val pairs = spark.table("sneardup")
-      .select("doc_id", "keeper_id").as[(Long, Long)].collect().toSet
-    assert(pairs == Set((2L, 1L)), s"got $pairs")
-    // batch 3: a near dup (one appended word) still collides on >=1 band
-    mem.addData((ts("2024-03-01T00:01:00Z"), 4L, base + " sometimes"))
-    q.processAllAvailable()
-    q.stop()
-    val all = spark.table("sneardup")
-      .select("doc_id", "keeper_id").as[(Long, Long)].collect().toSet
-    assert(all.contains((4L, 1L)), s"near dup missed: $all")
-    assert(!all.exists(p => p._1 == 3L || p._2 == 3L),
-      "unrelated doc must not pair")
-  }
-
-  test("bucket state expires once the watermark passes its horizon") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
-    val base = "spark shuffles data across the cluster when wide dependencies appear " +
-      "and the scheduler plans stages from the lineage graph of the job"
-    val mem = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val q = StreamNearDup.candidates(
-        mem.toDF().toDF("ts", "doc_id", "text"), "doc_id", "ts", "text",
-        watermark = "1 minute", horizonMs = 60000L)
-      .writeStream.format("memory").queryName("sneardup_exp")
-      .outputMode("append").start()
-    // the keeper arrives; a far-future unrelated doc then pushes the
-    // watermark well past the keeper's expiry horizon (two batches —
-    // the watermark advances at batch END)
-    mem.addData((ts("2024-03-01T00:00:00Z"), 1L, base))
-    q.processAllAvailable()
-    mem.addData((ts("2024-03-01T09:00:00Z"), 50L,
-      "completely different text about gardening and soil and compost heaps"))
-    q.processAllAvailable()
-    mem.addData((ts("2024-03-01T09:00:01Z"), 51L,
-      "another unrelated line with many plain words in it for padding"))
-    q.processAllAvailable()
-    // an exact dup of doc 1 arrives AFTER expiry: its bucket state is
-    // gone, so no candidate pairs against the evicted keeper — the new
-    // doc becomes the fresh keeper instead (bounded state, not a miss)
-    mem.addData((ts("2024-03-01T09:00:02Z"), 60L, base))
-    q.processAllAvailable()
-    q.stop()
-    val pairs = spark.table("sneardup_exp")
-      .select("doc_id", "keeper_id").as[(Long, Long)].collect().toSet
-    assert(!pairs.exists(p => p._2 == 1L || p._1 == 1L),
-      s"expired keeper still pairing: $pairs")
   }
 }
