@@ -15,8 +15,13 @@ regression by the driver's ground truth (the round-16 lesson).
 
 Usage: benchdiff.py BASELINE.json CANDIDATE.json [--top N]
 
-Exits 1, naming the query, when a headline query is missing from either
-file.
+Each file is a full run's BENCH_DETAIL.json or JSON line, or the JSON
+line of a named run (`graft.Bench q_a q_b ...`; a file whose last line is
+that JSON, such as a captured stdout, also reads). Full runs are compared
+over all common queries and must both hold the 24 headline queries; when
+either side is a named run, the comparison is query by query over the
+named queries, and each of them must be on both sides. Exits 1, naming
+the query, when a required query is missing from either file.
 """
 import json
 import math
@@ -37,24 +42,65 @@ def geomean(xs):
     return math.exp(sum(math.log(x) for x in xs) / len(xs)) if xs else float("nan")
 
 
+def load(path):
+    """A bench JSON object: the whole file, else its last JSON line."""
+    text = open(path).read()
+    try:
+        return json.loads(text)
+    except json.JSONDecodeError:
+        lines = [ln for ln in text.splitlines() if ln.startswith("{")]
+        if not lines:
+            raise
+        return json.loads(lines[-1])
+
+
+def is_named(run):
+    """A named run's line carries neither the full run's detail pointer
+    nor BENCH_DETAIL.json's per-rep maps."""
+    return "detail" not in run and "worst" not in run
+
+
+def compare_named(base, cand, bq, cq):
+    """Query-by-query table over the named queries."""
+    bj, cj = base.get("jobs", {}), cand.get("jobs", {})
+    print(f"{'query':28s} {'baseline':>9s} {'candidate':>9s} {'speedup':>8s}  jobs")
+    for q in sorted(set(bq) | set(cq)):
+        jobs = f"{bj.get(q, '-')} -> {cj.get(q, '-')}" if q in bj or q in cj else ""
+        print(f"  {q:26s} {bq[q]:9.3f} {cq[q]:9.3f}  x{bq[q] / cq[q]:6.2f}  {jobs}")
+    speedups = [bq[q] / cq[q] for q in bq if cq[q] > 0]
+    print(f"geomean speedup ({len(speedups)} named): {geomean(speedups):.3f}")
+    slow = [q for q in bq if cq[q] > 0 and bq[q] / cq[q] < 0.9]
+    print(f"regressed>10%: {len(slow)} {slow}")
+
+
 def main():
     base_path, cand_path = sys.argv[1], sys.argv[2]
     top_n = int(sys.argv[sys.argv.index("--top") + 1]) if "--top" in sys.argv else 12
-    base = json.load(open(base_path))
-    cand = json.load(open(cand_path))
+    base = load(base_path)
+    cand = load(cand_path)
     bq, cq = base["queries"], cand["queries"]
     bcal, ccal = base.get("calibration_sec", 1.0), cand.get("calibration_sec", 1.0)
+    named = is_named(base) or is_named(cand)
+    # a named run must be compared on every query it names; a full run on
+    # the headline set: a geomean over a subset silently leaves the
+    # missing queries out
+    required = sorted(set().union(*[r["queries"] for r in (base, cand) if is_named(r)])
+                      if named else HEADLINE)
+    missing = [(side, q) for side, qs in (("baseline", bq), ("candidate", cq))
+               for q in required if q not in qs]
+    if missing:
+        kind = "named" if named else "headline"
+        for side, q in missing:
+            print(f"!! {kind} query {q} missing from {side}", file=sys.stderr)
+        sys.exit(1)
+    if named:
+        compare_named(base, cand, {q: bq[q] for q in required},
+                      {q: cq[q] for q in required})
+        return
     common = sorted(set(bq) & set(cq))
     dropped = sorted(set(bq) - set(cq))
     if dropped:
         print(f"!! queries dropped from candidate: {dropped}")
-    # a headline geomean over a subset silently leaves the missing queries out
-    missing = [(side, q) for side, qs in (("baseline", bq), ("candidate", cq))
-               for q in HEADLINE if q not in qs]
-    if missing:
-        for side, q in missing:
-            print(f"!! headline query {q} missing from {side}", file=sys.stderr)
-        sys.exit(1)
     speedups = {q: bq[q] / cq[q] for q in common if cq[q] > 0}
     norm = {q: (bq[q] / bcal) / (cq[q] / ccal) for q in common if cq[q] > 0}
     head = [q for q in HEADLINE if q in speedups]

@@ -5,13 +5,12 @@ import org.apache.spark.storage.StorageLevel
 
 /** Registry of query-scoped scratch persists.
   *
-  * Aggregate-first query paths (LineQuery, SankeyQuery) and multi-pass
-  * operators (Dedup, SequencePacking, Decontamination) persist a bounded
-  * intermediate so the ranking job and the final series derive from one
-  * fact scan. A persisted `Dataset` holds executor block-manager memory
-  * until someone unpersists it — and the builder returning a lazy
-  * DataFrame cannot know when its consumer is done. Left alone, a
-  * long-lived session (the console API, a bench loop, any notebook)
+  * Multi-pass operators (Dedup, SequencePacking, Decontamination, the
+  * durable stores' ingests) persist a bounded intermediate so several
+  * passes derive from one evaluation. A persisted `Dataset` holds
+  * executor block-manager memory until someone unpersists it — and the
+  * builder returning a lazy DataFrame cannot know when its consumer is
+  * done. Left alone, a long-lived session (a bench loop, any notebook)
   * accumulates dead cache entries until real workloads fight eviction
   * churn; on a shared 1000-executor cluster that is unbounded storage
   * growth.
@@ -19,11 +18,13 @@ import org.apache.spark.storage.StorageLevel
   * So scratch persists register here instead of calling
   * `Dataset.persist` directly, and each execution entry point releases
   * them once the query's terminal action has run:
-  * [[graft.Bench]]/[[graft.Verify]] after each query, the console API
-  * after each request (its handlers collect driver-side, so the result
-  * no longer references the cache). Long-lived deliberate caches (none
-  * today — `EventFlows` intentionally stays a lazy projection) simply
-  * keep using `persist` and are untouched by [[releaseAll]].
+  * [[graft.Bench]]/[[graft.Verify]] after each query, the stores through
+  * [[scoped]]. The console's graph queries persist nothing (each is one
+  * plan), so the console API releases nothing: a session-wide release
+  * there would unpersist frames a concurrent store ingest still reads.
+  * Long-lived deliberate caches (none today — `EventFlows`
+  * intentionally stays a lazy projection) simply keep using `persist`
+  * and are untouched by [[releaseAll]].
   */
 object ScratchCache {
   private val tracked: java.util.Set[Dataset[_]] =

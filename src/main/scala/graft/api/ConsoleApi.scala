@@ -133,11 +133,6 @@ final class ConsoleApi(spark: SparkSession, schema: Schema,
           val err = mapper.createObjectNode()
           err.put("error", Option(e.getMessage).getOrElse(e.getClass.getName))
           (400, mapper.writeValueAsBytes(err))
-      } finally {
-        // handlers collect driver-side before responding, so the query's
-        // scratch persists are dead once f returns — release them here
-        // rather than letting a long-lived server accumulate cache
-        graft.ScratchCache.releaseAll(spark)
       }
       ex.getResponseHeaders.set("Content-Type", "application/json")
       ex.sendResponseHeaders(out._1, out._2.length)
@@ -320,7 +315,7 @@ final class ConsoleApi(spark: SparkSession, schema: Schema,
     val widgets = new Widgets(schema, tables)
     val now = widgets.dataNow()
     val start = new java.sql.Timestamp(now.getTime - 24 * 3600 * 1000L)
-    val rows = widgets.graph(spark, start, now, points).collect()
+    val rows = widgets.graph(spark, start, now, points).collect().sortBy(_.getLong(0))
     val resp = mapper.createObjectNode()
     val arr = resp.putArray("data")
     rows.foreach { r =>

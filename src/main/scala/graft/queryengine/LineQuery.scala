@@ -1,7 +1,8 @@
 package graft.queryengine
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.filter.{CompiledFilter, FilterCompiler, FilterParseError}
 import graft.schema.Schema
@@ -26,15 +27,15 @@ final case class LineInput(
   require(limit >= 1 && limit <= 50, "limit must be in 1..50")
 }
 
-/** DataFrame pipeline for the line graph: scan routing → filter → top-N →
-  * "Other" folding → aligned time buckets → gap fill → axis union
-  * (reference `console/line.go:107-216`, SURVEY §3.1). Everything stays a
-  * declarative plan: the only driver-side materialization is the bounded
-  * top-N row set (≤ limit rows, as the reference's `rows` CTE).
+/** The line graph as one plan (reference `console/line.go:107-216`,
+  * SURVEY §3.1): one scan for all axes aggregates per (axis, bucket,
+  * rendered dims); each axis ranks its top-N inside the plan
+  * (`row_number`, or the topKWeighted sketch for a raw-table "avg");
+  * the top set joins back to fold the rest into "Other"; the series
+  * sums per bucket and fills the calendar's gaps. [[build]] runs no
+  * Spark job: the caller's collect runs the whole plan.
   */
 final class LineQuery(schema: Schema, tables: Seq[FlowTable]) {
-
-  private case class AxisSpec(axis: Int, reverse: Boolean, shiftSec: Long)
 
   def build(spark: SparkSession, in: LineInput): DataFrame = {
     val compiled: Option[CompiledFilter] =
@@ -47,380 +48,111 @@ final class LineQuery(schema: Schema, tables: Seq[FlowTable]) {
       compiled.exists(_.mainTableRequired) || in.dimensions.exists(schema.isMainOnly)
     val resolved = TableResolver.resolve(tables, in.start, in.end, in.points, mainRequired)
     val interval = resolved.intervalSec
-
-    val specs = {
-      val b = scala.collection.mutable.ArrayBuffer(AxisSpec(1, reverse = false, 0))
-      if (in.bidirectional) b += AxisSpec(2, reverse = true, 0)
-      if (in.previousPeriod) {
-        val shift = previousPeriodShiftSec(in)
-        b += AxisSpec(3, reverse = false, shift)
-        if (in.bidirectional) b += AxisSpec(4, reverse = true, shift)
-      }
-      b.toSeq
-    }
-
-    // previous-period axes are dimensionless: the overlay is a single
-    // total line (reference line.go:80 strips Dimensions in previousPeriod)
-    def dimsOf(sp: AxisSpec): Seq[String] =
-      if (in.dimensions.isEmpty || sp.shiftSec > 0) Nil
-      else if (sp.reverse) in.dimensions.map(schema.reverseName) else in.dimensions
-
-    def unitOf(sp: AxisSpec): Unit =
-      if (sp.reverse) Unit.fromName(in.unit).reversed else Unit.fromName(in.unit)
-
-    def scanFor(sp: AxisSpec): DataFrame = {
-      val rangeStart = new Timestamp(in.start.getTime - sp.shiftSec * 1000)
-      val rangeEnd = new Timestamp(in.end.getTime - sp.shiftSec * 1000)
-      val pred = compiled.map(cf => if (sp.reverse) cf.reversePredicate else cf.predicate)
-      val scan0 = resolved.table.scan(rangeStart, rangeEnd)
-        .where(col("TimeReceived") >= lit(rangeStart) &&
-          col("TimeReceived") < lit(rangeEnd))
-      // IP truncation REPLACE over the source CTE: dimension columns
-      // only, filter evaluated over the replaced source (shared helper —
-      // see Schema.truncateDims)
-      val truncated =
-        schema.truncateDims(scan0, dimsOf(sp), in.truncateV4, in.truncateV6)
-      pred.fold(truncated)(truncated.where)
-    }
-
-    // aligned bucket: start + floor((t-start)/interval)*interval — same as
-    // the reference's offset-adjusted toStartOfInterval (clickhouse.go:262-268)
-    def bucketFor(sp: AxisSpec): Column = {
-      val startSec = (in.start.getTime - sp.shiftSec * 1000) / 1000
-      (lit(startSec) +
-        floor((unix_timestamp(col("TimeReceived")) - startSec) / interval) * interval)
-        .cast("long")
-    }
-
-    // Multi-axis fast path: ONE scan of the fact table for all axes.
-    // The reference (SQL UNION ALL) scans once per axis; here each row
-    // explodes into (axis, bucket, dims, weight) tuples for the axes whose
-    // range+filter it satisfies — at scale this is axes× fewer scans.
-    // Requires per-row weights (summable units) and "avg" ranking; other
-    // shapes fall back to the per-axis branches below.
-    // (filter + truncation must take the per-axis branch: each axis
-    // truncates ITS OWN dimension set before the filter evaluates, and
-    // the shared multi-axis scan cannot hold both axes' views at once)
-    val truncationActive = in.truncateV4 < 32 || in.truncateV6 < 128
-    if (specs.size > 1 && in.limitType == "avg" &&
-        specs.forall(sp => unitOf(sp).rowWeight.isDefined) &&
-        !(compiled.isDefined && truncationActive))
-      return buildMultiAxis(spark, in, specs, resolved, interval,
-        compiled, dimsOf, unitOf)
-
-    // Aggregate-first fast path (single axis, rollup scan, summable unit,
-    // avg/max ranking): ONE fact scan builds the (bucket, dims) partial
-    // aggregate — bounded, because the rollup already reduced row
-    // cardinality — and ranking, folding, and the final series all derive
-    // from that persisted partial (MEMORY_AND_DISK: lineage stays live, so an
-    // executor loss recomputes instead of failing). The reference (and the
-    // branch below)
-    // scans the fact table twice: once for the `rows` CTE, once for the
-    // series; at 100 TB this halves the IO for the most common query.
-    // Exact: row weights are integer sums, so sum-of-partial-sums is
-    // bit-identical to the one-shot aggregation. Raw-table scans keep the
-    // sketch path (their (bucket, dims) cardinality is unreduced), "last"
-    // keeps the reference's tail-window semantics on the raw rows.
-    if (specs.size == 1 && in.dimensions.nonEmpty &&
-        resolved.table.resolutionSec > 0L &&
-        (in.limitType == "avg" || in.limitType == "max") &&
-        unitOf(specs.head).rowWeight.isDefined) {
-      val sp = specs.head
-      val dims = dimsOf(sp)
-      val w = unitOf(sp).rowWeight.get
-      val rangeStart = new Timestamp(in.start.getTime - sp.shiftSec * 1000)
-      val rangeEnd = new Timestamp(in.end.getTime - sp.shiftSec * 1000)
-      val perBD = graft.ScratchCache.persist(scanFor(sp)
-        .groupBy(bucketFor(sp).as("time_s") +: dims.map(col): _*)
-        .agg(sum(w).as("w")))
-      val ranked = (in.limitType match {
-        case "avg" => perBD.groupBy(dims.map(col): _*).agg(sum("w").as("tw"))
-        case _ => perBD.groupBy(dims.map(col): _*).agg(max("w").as("tw"))
-      })
-        .orderBy(desc("tw") +: dims.map(asc): _*)
-        .limit(in.limit)
-        .select(array(dims.map(schema.renderDim): _*).as("ds"))
-      val topRows = ranked.collect()
-        .map(_.getSeq[String](0).map(v => Option(v).getOrElse("")))
-      val dimsArray = array(dims.map(schema.renderDim): _*)
-      val topLit = topRows.map(r => array(r.map(lit): _*))
-      val folded = (if (topLit.isEmpty) lit(false)
-        else dimsArray.isin(topLit.toIndexedSeq: _*))
-      val perBucket = perBD
-        .withColumn("dimensions", when(folded, dimsArray)
-          .otherwise(array(dims.map(_ => lit("Other")): _*)))
-        .groupBy(col("time_s"), col("dimensions"))
-        .agg((sum("w") / interval).as("xps"))
-      return gapfill(spark, perBucket, rangeStart, rangeEnd, interval,
-        in.dimensions.map(_ => "Other"))
-        .select(lit(sp.axis).as("axis"),
-          (col("time_s") + sp.shiftSec).as("time_s"),
-          col("dimensions"), col("xps"))
-    }
-
-    // top-N row-sets for ALL axes in ONE collected job (the reference emits
-    // one `rows` CTE per axis inside a single UNION ALL statement); each
-    // branch keeps its own ORDER BY ... LIMIT — order across branches is
-    // irrelevant because the rows only feed a membership test.
-    val topByAxis: Map[Int, Array[Seq[String]]] =
-      if (in.dimensions.isEmpty) Map.empty
-      else {
-        // approx-for-exact substitution (reference console/query.go:80-90):
-        // on a raw-table scan with a summable unit, rank via the
-        // topKWeighted sketch — rows fold into fixed-size sketches
-        // map-side instead of shuffling the full dimensionality
-        val useSketch = resolved.table.resolutionSec == 0L &&
-          in.limitType == "avg"
-        val ranked = specs.filter(sp => dimsOf(sp).nonEmpty).map { sp =>
-          val rangeEnd = new Timestamp(in.end.getTime - sp.shiftSec * 1000)
-          val unit = unitOf(sp)
-          val base = (useSketch, unit.rowWeight) match {
-            case (true, Some(w)) =>
-              topNSketch(scanFor(sp), dimsOf(sp), w, in.limit)
-            case _ =>
-              topNRanked(scanFor(sp), dimsOf(sp), unit, in, bucketFor(sp),
-                rangeEnd, interval)
-          }
-          base.select(lit(sp.axis).as("axis"), col("ds"))
-        }.reduce(_ unionAll _)
-        ranked.collect()
-          .groupBy(_.getInt(0))
-          .map { case (axis, rows) =>
-            axis -> rows.map(_.getSeq[String](1).map(v => Option(v).getOrElse("")))
-          }
-      }
-
-    def axisDf(sp: AxisSpec): DataFrame = {
-      val rangeStart = new Timestamp(in.start.getTime - sp.shiftSec * 1000)
-      val rangeEnd = new Timestamp(in.end.getTime - sp.shiftSec * 1000)
-      val dims = dimsOf(sp)
-      val unit = unitOf(sp)
-      val scan = scanFor(sp)
-      val bucket = bucketFor(sp)
-
-      if (dims.isEmpty) {
-        val perBucket = scan
-          .groupBy(bucket.as("time_s"))
-          .agg((unit.agg / interval).as("xps"))
-        return gapfill(spark, perBucket, rangeStart, rangeEnd, interval, Seq.empty)
-          .select(lit(sp.axis).as("axis"),
-            (col("time_s") + sp.shiftSec).as("time_s"),
-            array().cast("array<string>").as("dimensions"),
-            col("xps"))
-      }
-
-      val topRows = topByAxis.getOrElse(sp.axis, Array.empty[Seq[String]])
-      val dimsArray = array(dims.map(schema.renderDim): _*)
-      val topLit = topRows.map(r => array(r.map(lit): _*))
-      val folded = (if (topLit.isEmpty) lit(false)
-        else dimsArray.isin(topLit.toIndexedSeq: _*))
-      val withDims = scan.withColumn("dimensions",
-        when(folded, dimsArray)
-          .otherwise(array(dims.map(_ => lit("Other")): _*)))
-
-      val perBucket = withDims
-        .groupBy(bucket.as("time_s"), col("dimensions"))
-        .agg((unit.agg / interval).as("xps"))
-
-      gapfill(spark, perBucket, rangeStart, rangeEnd, interval,
-        in.dimensions.map(_ => "Other"))
-        .select(lit(sp.axis).as("axis"), (col("time_s") + sp.shiftSec).as("time_s"),
-          col("dimensions"), col("xps"))
-    }
-
-    specs.map(axisDf).reduce(_ unionAll _)
-  }
-
-  /** Single-scan multi-axis pipeline: each fact row explodes into the
-    * (axis, bucket, rendered-dims, weight) tuples of every axis whose
-    * range+filter it satisfies; ranking, folding, aggregation and gap fill
-    * then run over the union with `axis` as an ordinary grouping column.
-    * One scan and one windowed top-N job regardless of axis count —
-    * long-integer weight sums keep results bit-identical to the branch
-    * path. Output times carry each axis's overlay shift, so all axes share
-    * the [start, end) output calendar.
-    */
-  private def buildMultiAxis(
-      spark: SparkSession, in: LineInput, specs: Seq[AxisSpec],
-      resolved: ResolvedQuery, interval: Long,
-      compiled: Option[CompiledFilter],
-      dimsOf: AxisSpec => Seq[String],
-      unitOf: AxisSpec => Unit): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-
-    val unionStart = new Timestamp(
-      specs.map(sp => in.start.getTime - sp.shiftSec * 1000).min)
-    val unionEnd = new Timestamp(
-      specs.map(sp => in.end.getTime - sp.shiftSec * 1000).max)
-    val base0 = resolved.table.scan(unionStart, unionEnd)
-      .where(col("TimeReceived") >= lit(unionStart) &&
-        col("TimeReceived") < lit(unionEnd))
-    // source REPLACE over the union of the axes' dimension columns
-    // (shared helper — see Schema.truncateDims); this path never runs
-    // with a filter + truncation together (build() routes those
-    // per-axis), so the union set is exact for every axis
-    val base = schema.truncateDims(base0, specs.flatMap(dimsOf).distinct,
-      in.truncateV4, in.truncateV6)
-
-    val axisStructs = specs.map { sp =>
-      val rangeStartMs = in.start.getTime - sp.shiftSec * 1000
-      val rangeEndMs = in.end.getTime - sp.shiftSec * 1000
-      val startSec = rangeStartMs / 1000
-      val inRange = col("TimeReceived") >= lit(new Timestamp(rangeStartMs)) &&
-        col("TimeReceived") < lit(new Timestamp(rangeEndMs))
-      val keep = compiled
-        .map(cf => if (sp.reverse) cf.reversePredicate else cf.predicate)
-        .fold(inRange)(p => inRange && p)
-      val bucketOut = ((lit(startSec) +
-        floor((unix_timestamp(col("TimeReceived")) - startSec) / interval) * interval)
-        .cast("long") + sp.shiftSec)
-      struct(
-        lit(sp.axis).as("axis"),
-        coalesce(keep, lit(false)).as("keep"),
-        bucketOut.as("time_s"),
-        array(dimsOf(sp).map(schema.renderDim): _*)
-          .cast("array<string>").as("ds"),
-        unitOf(sp).rowWeight.get.as("w"))
-    }
-    // ONE fact scan: the exploded axis tuples reduce straight to the
-    // (axis, bucket, dims) partial aggregate, persisted (recomputable
-    // lineage) so the ranking
-    // job and the final series derive from it without re-scanning (integer
-    // weights — sum-of-partials is exact)
-    val rows = graft.ScratchCache.persist(base
-      .select(explode(array(axisStructs: _*)).as("e"))
-      .where(col("e.keep"))
-      .groupBy(col("e.axis").as("axis"), col("e.time_s").as("time_s"),
-        col("e.ds").as("ds"))
-      .agg(sum(col("e.w")).as("w")))
-
-    val otherArray = array(in.dimensions.map(_ => lit("Other")): _*)
-
-    val dimful = specs.filter(sp => dimsOf(sp).nonEmpty)
-    val folded: Column =
-      if (dimful.isEmpty) col("ds")
-      else {
-        // one windowed top-N job for all dimful axes ("avg" ranking =
-        // total weight); dimensionless (previous-period) axes keep their
-        // empty dims untouched
-        val win = Window.partitionBy("axis").orderBy(desc("tw"), asc("ds"))
-        val topByAxis: Map[Int, Array[Seq[String]]] = rows
-          .where(col("axis").isin(dimful.map(_.axis): _*))
-          .groupBy("axis", "ds").agg(sum("w").as("tw"))
-          .withColumn("rn", row_number().over(win))
-          .where(col("rn") <= in.limit)
-          .select("axis", "ds")
-          .collect()
-          .groupBy(_.getInt(0))
-          .map { case (axis, rs) =>
-            axis -> rs.map(_.getSeq[String](1).map(v => Option(v).getOrElse("")))
-          }
-        specs.foldLeft(when(lit(false), col("ds"))) { (acc, sp) =>
-          if (dimsOf(sp).isEmpty) acc.when(col("axis") === sp.axis, col("ds"))
-          else {
-            val tops = topByAxis.getOrElse(sp.axis, Array.empty[Seq[String]])
-            if (tops.isEmpty) acc
-            else acc.when(col("axis") === sp.axis &&
-              col("ds").isin(tops.map(r => array(r.map(lit): _*)).toIndexedSeq: _*),
-              col("ds"))
-          }
-        }.otherwise(otherArray)
-      }
-
-    val perBucket = rows
-      .withColumn("dimensions", folded)
-      .groupBy("axis", "time_s", "dimensions")
-      .agg((sum("w") / interval).as("xps"))
-
-    // shared output calendar across axes (shifts already applied)
+    val unit = Unit.fromName(in.unit)
     val startSec = in.start.getTime / 1000
-    val endSec = (in.end.getTime / 1000 - 1).max(startSec)
-    val cal = spark.range(1)
-      .select(explode(sequence(lit(startSec), lit(endSec), lit(interval))).as("time_s"))
-      .select(col("time_s"),
-        explode(array(specs.map(sp => lit(sp.axis)): _*)).as("axis"))
-    // gap rows carry Other for dimful axes, [] for dimensionless ones
-    val emptyDims = array().cast("array<string>")
-    val fillDims = specs.foldLeft(when(lit(false), emptyDims)) { (acc, sp) =>
-      if (dimsOf(sp).isEmpty) acc.when(col("axis") === sp.axis, emptyDims)
-      else acc
-    }.otherwise(if (in.dimensions.isEmpty) emptyDims else otherArray)
-    val missing = cal
-      .join(perBucket.select("axis", "time_s").distinct(),
-        Seq("axis", "time_s"), "left_anti")
-      .select(col("axis"), col("time_s"), fillDims.as("dimensions"),
-        lit(0.0).as("xps"))
 
-    perBucket.select("axis", "time_s", "dimensions", "xps").unionAll(missing)
-  }
-
-  /** Sketch-ranked top rows: dims pack into a NUL-separated key (rendered
-    * exactly like the exact path: cast to string, null → ''), capacity =
-    * limit × 20 (the reference's load factor, `console/query.go:95`).
-    * Returns a rendered `ds` array per winning key.
-    */
-  private def topNSketch(scan: DataFrame, dims: Seq[String], weight: Column,
-      limit: Int): DataFrame = {
-    val key = concat_ws("\u0000",
-      dims.map(d => coalesce(schema.renderDim(d), lit(""))): _*)
-    scan.select(key.as("k"), weight.as("w"))
-      .agg(graft.expressions.TopKWeighted(col("k"), col("w"), limit, 20).as("top"))
-      .select(explode(col("top")).as("e"))
-      .select(split(col("e.key"), "\u0000", -1).as("ds"))
-  }
-
-  /** Ranked-and-limited top rows per limitType; bounded by `limit` ≤ 50, so
-    * collecting it is the same driver-side cardinality as the reference's
-    * `rows` CTE (reference console/query.go:48-90). Returns a rendered
-    * `ds` array per row.
-    */
-  private def topNRanked(scan: DataFrame, dims: Seq[String], unit: Unit,
-      in: LineInput, bucket: Column, rangeEnd: Timestamp,
-      intervalSec: Long): DataFrame = {
-    val dimCols = dims.map(col)
-    val ranked = in.limitType match {
-      case "avg" =>
-        scan.groupBy(dimCols: _*).agg(unit.agg.as("w"))
-      case "max" =>
-        scan.groupBy(bucket.as("b") +: dimCols: _*).agg(unit.agg.as("wb"))
-          .groupBy(dims.map(col): _*).agg(max("wb").as("w"))
-      case "last" =>
-        // last RESOLVED bucket of this axis's (possibly shifted) range
-        // (reference query.go:76: TimeReceived >= end - r.Interval)
-        val lastStart = new Timestamp(rangeEnd.getTime - intervalSec * 1000)
-        scan.where(col("TimeReceived") >= lit(lastStart))
-          .groupBy(dimCols: _*).agg(unit.agg.as("w"))
+    // direct, reverse, then the previous-period overlays; those are
+    // dimensionless, a single total line (reference line.go:80 strips
+    // Dimensions in previousPeriod)
+    val axes = {
+      val shift = if (in.previousPeriod) previousPeriodShiftSec(in) * 1000 else 0L
+      def axis(id: Int, reverse: Boolean, shiftMs: Long) = Axis(id, reverse,
+        new Timestamp(in.start.getTime - shiftMs), new Timestamp(in.end.getTime - shiftMs),
+        if (shiftMs > 0) Nil
+        else if (reverse) in.dimensions.map(schema.reverseName) else in.dimensions)
+      Seq(axis(1, reverse = false, 0L)) ++
+        (if (in.bidirectional) Seq(axis(2, reverse = true, 0L)) else Nil) ++
+        (if (in.previousPeriod) Seq(axis(3, reverse = false, shift)) else Nil) ++
+        (if (in.previousPeriod && in.bidirectional) Seq(axis(4, reverse = true, shift)) else Nil)
+    }
+    val dimful = axes.filter(_.dims.nonEmpty).map(_.id)
+    val last = in.limitType match {
+      case "avg" | "max" => false
+      case "last" => true
       case other => throw new IllegalArgumentException(s"unknown limitType $other")
     }
-    ranked
-      .orderBy(desc("w") +: dims.map(asc): _*)
-      .limit(in.limit)
-      .select(array(dims.map(schema.renderDim): _*).as("ds"))
+
+    // aligned bucket: start + floor((t-start)/interval)*interval, the
+    // reference's offset-adjusted toStartOfInterval (clickhouse.go:262-268),
+    // moved by the axis's shift onto the request's calendar; "last" ranks
+    // the rows at or after end - interval (reference query.go:76)
+    val rows = GraphScan.rows(schema, resolved.table, axes, compiled, unit,
+        in.truncateV4, in.truncateV6) { ax =>
+      val axisStart = ax.start.getTime / 1000
+      // never null (a row without a time fails the range test), so no
+      // consumer of the partial infers a null filter of its own and all
+      // of them share the partial's exchange
+      val bucket = coalesce((lit(axisStart) + floor((unix_timestamp(col("TimeReceived")) -
+        axisStart) / interval) * interval).cast("long") + (startSec - axisStart), lit(0L))
+      bucket.as("time_s") +: (if (last) Seq((col("TimeReceived") >=
+        lit(new Timestamp(ax.end.getTime - interval * 1000))).as("tail")) else Nil)
+    }
+    val partial = rows
+      .groupBy((Seq("axis", "time_s", "ds") ++ unit.distinctKey.map(_ => "k") ++
+        (if (last) Seq("tail") else Nil)).map(col): _*)
+      .agg(sum("w").as("w"))
+    val merged = unit.merge(col("w"), col("k"))
+
+    val otherArray = array(in.dimensions.map(_ => lit("Other")): _*).cast("array<string>")
+    // every consumer reads the partial unfiltered, so they share its
+    // exchange and the plan scans the fact table once
+    val series =
+      if (dimful.isEmpty) partial.withColumnRenamed("ds", "dimensions")
+      else {
+        val top =
+          // approx-for-exact substitution (reference console/query.go:80-90):
+          // a raw-table "avg" of a plain sum ranks through the topKWeighted
+          // sketch, so the ranking shuffles fixed-size sketches instead of
+          // every dimension tuple
+          if (resolved.table.resolutionSec == 0L && in.limitType == "avg" &&
+              unit.distinctKey.isEmpty)
+            topNSketch(partial, in.limit)
+          else GraphScan.top(in.limitType match {
+            case "avg" => partial.groupBy("axis", "ds").agg(merged.as("tw"))
+            case "max" => partial.groupBy("axis", "ds", "time_s").agg(merged.as("wb"))
+              .groupBy("axis", "ds").agg(max("wb").as("tw"))
+            // a tuple with no row in the tail has no weight and no rank
+            case _ => partial.groupBy("axis", "ds")
+              .agg(unit.merge(when(col("tail"), col("w")), when(col("tail"), col("k"))).as("tw"))
+              .where(col("tw").isNotNull)
+          }, in.limit)
+        // a dimensionless (previous-period) axis keeps its []
+        partial.join(top.hint("shuffle_hash"), Seq("axis", "ds"), "left")
+          .withColumn("dimensions", when(col("top") || !col("axis").isin(dimful: _*),
+            col("ds")).otherwise(otherArray))
+      }
+    val perBucket = series.groupBy("axis", "time_s", "dimensions")
+      .agg((merged / interval).as("xps"))
+
+    // WITH FILL + INTERPOLATE (reference line.go:159-163): every bucket
+    // of the request's calendar gets a filler, 'Other' at 0 ([] on a
+    // dimensionless axis), kept only where the bucket has no row
+    val endSec = (in.end.getTime / 1000 - 1).max(startSec)
+    val fillers = spark.range(0, 1, 1, 1)
+      .select(explode(sequence(lit(startSec), lit(endSec), lit(interval))).as("time_s"))
+      .select(explode(array(axes.map(ax => lit(ax.id)): _*)).as("axis"), col("time_s"))
+      .select(col("axis"), col("time_s"), when(col("axis").isin(dimful: _*), otherArray)
+        .otherwise(array().cast("array<string>")).as("dimensions"),
+        lit(0.0).as("xps"), lit(true).as("fill"))
+    perBucket.select(col("axis"), col("time_s"), col("dimensions"), col("xps"),
+        lit(false).as("fill"))
+      .unionAll(fillers)
+      .withColumn("empty", min("fill").over(Window.partitionBy("axis", "time_s")))
+      .where(!col("fill") || col("empty"))
+      .drop("fill", "empty")
   }
 
-  /** WITH FILL + INTERPOLATE (reference `console/line.go:159-163`): dense
-    * calendar left-join, zero-filled values, missing dimensions = 'Other'.
+  /** Sketch-ranked top tuples per axis: the labels pack into a
+    * NUL-separated key, capacity = limit × 20 (the reference's load
+    * factor, `console/query.go:95`); the sketch orders ties on the key,
+    * which orders like the labels.
     */
-  private def gapfill(spark: SparkSession, perBucket: DataFrame, start: Timestamp,
-      end: Timestamp, intervalSec: Long, otherDims: Seq[String]): DataFrame = {
-    val startSec = start.getTime / 1000
-    val endSec = (end.getTime / 1000 - 1).max(startSec)
-    val calendar = spark.range(1).select(
-      explode(sequence(lit(startSec), lit(endSec), lit(intervalSec))).as("time_s"))
-    if (otherDims.isEmpty) {
-      calendar.join(perBucket, Seq("time_s"), "left")
-        .select(col("time_s"), coalesce(col("xps"), lit(0.0)).as("xps"))
-    } else {
-      // fill rows carry the 'Other' dimension tuple, matching INTERPOLATE
-      // (dimensions AS ['Other',...])
-      val existing = perBucket.select(col("time_s")).distinct()
-      val missing = calendar.join(existing, Seq("time_s"), "left_anti")
-        .select(col("time_s"),
-          array(otherDims.map(lit): _*).as("dimensions"),
-          lit(0.0).as("xps"))
-      perBucket.select("time_s", "dimensions", "xps").unionAll(missing)
-    }
-  }
+  private def topNSketch(partial: DataFrame, limit: Int): DataFrame =
+    partial.groupBy("axis")
+      .agg(graft.expressions.TopKWeighted(concat_ws("\u0000", col("ds")), col("w"), limit, 20)
+        .as("top"))
+      .select(col("axis"), explode(col("top")).as("e"))
+      .select(col("axis"), split(col("e.key"), "\u0000", -1).as("ds"), lit(true).as("top"))
 
   /** Shift distance for the previous-period axis (reference `nearestPeriod`
     * + `previousPeriod`, `console/line.go:55-95`): hour below 2 h, day

@@ -23,9 +23,13 @@ final case class SankeyInput(
   require(limit >= 1 && limit <= 50, "limit must be in 1..50")
 }
 
-/** Sankey pipeline (reference `console/sankey.go:56-147`): per-dimension
-  * "Other" folding via membership in each column's top set, GROUP BY the
-  * folded dimension tuple, weight = SUM(unit) / (MAX(time)-MIN(time)).
+/** The sankey graph as one plan (reference `console/sankey.go:56-147`):
+  * one scan for both axes aggregates per rendered dimension tuple; the
+  * direct axis ranks its top tuples inside the plan; each position of a
+  * row, on either axis, keeps its value when the top tuples hold it at
+  * that position and folds to "Other" otherwise; weight = the folded
+  * sum ÷ the direct axis's observed span (MAX(time)-MIN(time), at least
+  * 1 s). [[build]] runs no Spark job; its rows come in no set order.
   */
 final class SankeyQuery(schema: Schema, tables: Seq[FlowTable]) {
 
@@ -37,104 +41,53 @@ final class SankeyQuery(schema: Schema, tables: Seq[FlowTable]) {
       in.dimensions.exists(schema.isMainOnly)
     // routing with points fixed at 20 (reference sankey.go:127-134)
     val resolved = TableResolver.resolve(tables, in.start, in.end, 20, mainRequired)
-
-    // source REPLACE (shared helper — see Schema.truncateDims): dimension
-    // columns only, filter evaluated over the replaced source
-    def truncated(df: DataFrame, dims: Seq[String]): DataFrame =
-      schema.truncateDims(df, dims, in.truncateV4, in.truncateV6)
-    val scan0 = resolved.table.scan(in.start, in.end)
-      .where(col("TimeReceived") >= lit(in.start) && col("TimeReceived") < lit(in.end))
-    val scanT = truncated(scan0, in.dimensions)
-    val scan = compiled.map(_.predicate).fold(scanT)(scanT.where)
     val unit = Unit.fromName(in.unit)
 
-    // Aggregate-first (summable units): ONE fact scan builds the raw-dims
-    // partial aggregate carrying the weight sum and the time extrema;
-    // ranking, the span scalar, and the folded direct axis all derive from
-    // the persisted partial (recomputable lineage) instead of re-scanning
-    // (integer weights, so
-    // sum-of-partials is exact). Ratio units keep the two-scan shape.
-    val perDims = unit.rowWeight.map { w =>
-      graft.ScratchCache.persist(scan.groupBy(in.dimensions.map(col): _*)
-        .agg(sum(w).as("w"),
-          max(col("TimeReceived")).as("tmax"), min(col("TimeReceived")).as("tmin")))
-    }
+    // the reverse axis reads the swapped columns under the swapped
+    // filter, merged with an axis literal (reference sankey.go:139-147)
+    val axes = Axis(1, reverse = false, in.start, in.end, in.dimensions) +:
+      (if (in.bidirectional)
+        Seq(Axis(2, reverse = true, in.start, in.end, in.dimensions.map(schema.reverseName)))
+      else Nil)
+    val partial = GraphScan.rows(schema, resolved.table, axes, compiled, unit,
+        in.truncateV4, in.truncateV6)(_ => Seq(unix_timestamp(col("TimeReceived")).as("t")))
+      .groupBy((Seq("axis", "ds") ++ unit.distinctKey.map(_ => "k")).map(col): _*)
+      .agg(sum("w").as("w"), min("t").as("tmin"), max("t").as("tmax"))
+    val merged = unit.merge(col("w"), col("k"))
+    val direct = col("axis") === 1
 
-    // ONE collected job for both driver-side scalars: the top row tuples
-    // (the `rows` CTE) and the observed-span scalar CTE (reference
-    // sankey.go:110-118) union into a single bounded result
-    val rankedPart = perDims.getOrElse(
-        scan.groupBy(in.dimensions.map(col): _*).agg(unit.agg.as("w")))
-      .orderBy(desc("w") +: in.dimensions.map(asc): _*)
-      .limit(in.limit)
-      .select(lit(1).as("k"),
-        array(in.dimensions.map(schema.renderDim): _*).as("ds"),
-        col("w").cast("double").as("w"))
-    val spanPart = perDims match {
-      case Some(p) => p.agg(
-          (unix_timestamp(max(col("tmax"))) -
-            unix_timestamp(min(col("tmin")))).cast("double").as("w"))
-        .select(lit(0).as("k"), array().cast("array<string>").as("ds"), col("w"))
-      case None => scan.agg(
-          (unix_timestamp(max(col("TimeReceived"))) -
-            unix_timestamp(min(col("TimeReceived")))).cast("double").as("w"))
-        .select(lit(0).as("k"), array().cast("array<string>").as("ds"), col("w"))
-    }
-    val collected = rankedPart.unionAll(spanPart).collect()
-    val ranked = collected.filter(_.getInt(0) == 1).map(_.getSeq[String](1))
-    // per-column membership sets (reference uses IN (SELECT col FROM rows))
-    val perColumnTop: Seq[Set[String]] = in.dimensions.indices
-      .map(i => ranked.map(r => Option(r(i)).getOrElse("")).toSet)
-    val spanSec = collected.find(_.getInt(0) == 0)
-      .filterNot(_.isNullAt(2))
-      .map(r => math.max(1L, r.getDouble(2).toLong))
-      .getOrElse(1L)
-
-    // fold one axis: read `srcCols(i)`, probe the DIRECT axis's membership
-    // set for position i, output under the direct label `in.dimensions(i)`
-    // (reference sankey.go:85-94: the reverse axis probes the same `rows`
-    // CTE positionally)
-    def foldAxis(axisScan: DataFrame, srcCols: Seq[String],
-        aggExpr: org.apache.spark.sql.Column): DataFrame = {
-      val folded = srcCols.zipWithIndex.foldLeft(axisScan) {
-        case (d, (srcCol, i)) =>
-          val members = perColumnTop(i)
-          d.withColumn(in.dimensions(i) + "__out",
-            if (members.isEmpty) lit("Other")
-            else when(schema.renderDim(srcCol).isin(members.toSeq.map(lit): _*),
-              schema.renderDim(srcCol)).otherwise(lit("Other")))
-      }
-      folded
-        .groupBy(in.dimensions.map(d => col(d + "__out").as(d)): _*)
-        .agg((aggExpr / spanSec).as("weight"))
-        .withColumn("span_sec", lit(spanSec))
-    }
-
-    val direct = perDims match {
-      case Some(p) => foldAxis(p, in.dimensions, sum(col("w")))
-      case None => foldAxis(scan, in.dimensions, unit.agg)
-    }
-    if (!in.bidirectional)
-      return direct.orderBy(desc("weight") +: in.dimensions.map(asc): _*)
-
-    // reverse axis: swapped columns + swapped filter over the same range,
-    // merged UNION ALL with an axis literal (reference sankey.go:139-147)
-    val scanRev0 = resolved.table.scan(in.start, in.end)
-      .where(col("TimeReceived") >= lit(in.start) && col("TimeReceived") < lit(in.end))
-    val scanRevT = truncated(scanRev0, in.dimensions.map(schema.reverseName))
-    val scanRev = compiled.map(_.reversePredicate).fold(scanRevT)(scanRevT.where)
-    val reverse = foldAxis(scanRev,
-      in.dimensions.map(schema.reverseName), unit.reversed.agg)
-    direct.withColumn("axis", lit(1))
-      .unionAll(reverse.withColumn("axis", lit(2)))
-      .orderBy(asc("axis") +: desc("weight") +: in.dimensions.map(asc): _*)
+    // each axis's top tuples (the reference's `rows` CTE; only the direct
+    // axis's are read), then one probe row: each position's set of top values
+    // (reference: IN (SELECT col FROM rows); the reverse axis probes the
+    // same sets positionally, sankey.go:85-94) and the direct axis's
+    // observed span (sankey.go:110-118), at least 1 s. The probe pairs
+    // with every partition of the partial where it lies: no exchange, no
+    // broadcast.
+    val top = GraphScan.top(partial.groupBy("axis", "ds").agg(merged.as("tw")), in.limit)
+    val noTime = lit(null).cast("long")
+    val probe = top.select(col("axis"), col("ds"), noTime.as("tmin"), noTime.as("tmax"))
+      .unionAll(partial.select(col("axis"), lit(null).cast("array<string>").as("ds"),
+        col("tmin"), col("tmax")))
+      .agg(greatest(lit(1L), coalesce(max(when(direct, col("tmax"))) -
+          min(when(direct, col("tmin"))), lit(1L))).as("span_sec"),
+        in.dimensions.indices.map(i =>
+          collect_set(when(direct, col("ds")(i))).as(s"m$i")): _*)
+    partial.crossJoin(probe.hint("shuffle_replicate_nl"))
+      .groupBy(Seq(col("axis"), col("span_sec")) ++ in.dimensions.indices.map(i =>
+        when(array_contains(col(s"m$i"), col("ds")(i)), col("ds")(i))
+          .otherwise(lit("Other")).as(in.dimensions(i))): _*)
+      .agg(merged.as("w"))
+      .select(in.dimensions.map(col) ++ Seq((col("w") / col("span_sec")).as("weight"),
+        col("span_sec")) ++ (if (in.bidirectional) Seq(col("axis")) else Nil): _*)
   }
 
   /** Driver-side node/link construction (reference `sankey.go:197-273`):
-    * consecutive dimension pairs become edges; duplicate edges sum.
+    * consecutive dimension pairs become edges; duplicate edges sum, in
+    * the order of the rows by weight, then labels.
     */
   def links(df: DataFrame, dimensions: Seq[String]): Seq[((String, String), Double)] = {
-    val rows = df.collect()
+    val rows = df.collect().sortBy(r =>
+      (-r.getAs[Double]("weight"), dimensions.map(r.getAs[String]).mkString("\u0000")))
     val acc = scala.collection.mutable.LinkedHashMap[(String, String), Double]()
     rows.foreach { r =>
       val w = r.getAs[Double]("weight")

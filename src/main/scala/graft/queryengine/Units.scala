@@ -4,55 +4,57 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Aggregation units (reference `console/clickhouse.go:186-199`; direction
-  * swap `console/graph.go:31-40`).
+  * swap `console/graph.go:31-40`). A unit is a per-row value and how
+  * partial sums of it combine, so a graph can aggregate its rows once
+  * per (axis, bucket, dimensions) and rank, fold and sum the partials.
   */
 sealed abstract class Unit(val name: String) {
-  /** the aggregate over the scanned rows */
-  def agg: Column
-  /** per-row integer weight, when the unit is a plain weighted sum — feeds
-    * the topKWeighted sketch (reference `clickhouse.go:206-213` weight
-    * expressions); None for units the sketch cannot rank (ratios).
+  /** the per-row value the unit sums (an integer weight for plain sums) */
+  def value: Column
+  /** for ratio units, the key whose distinct count divides the sum; a
+    * partial must group on it, since distinct counts do not add up.
+    * None for plain sums.
     */
-  def rowWeight: Option[Column] = None
+  def distinctKey: Option[Column] = None
+  /** the unit over partial rows carrying the sum `w` of [[value]] and,
+    * for ratio units, the distinct key `k`
+    */
+  def merge(w: Column, k: Column): Column = sum(w)
   /** unit for the reverse-direction axis (In↔Out swap for l2% units) */
   def reversed: Unit = this
 }
 
 object Unit {
   case object Fps extends Unit("fps") {
-    def agg: Column = count(lit(1))
-    override def rowWeight: Option[Column] = Some(lit(1L))
+    def value: Column = lit(1L)
   }
   case object Pps extends Unit("pps") {
-    def agg: Column = sum(col("Packets") * col("SamplingRate"))
-    override def rowWeight: Option[Column] =
-      Some((col("Packets") * col("SamplingRate")).cast("long"))
+    def value: Column = (col("Packets") * col("SamplingRate")).cast("long")
   }
   case object L3Bps extends Unit("l3bps") {
-    def agg: Column = sum(col("Bytes") * col("SamplingRate") * 8)
-    override def rowWeight: Option[Column] =
-      Some((col("Bytes") * col("SamplingRate") * 8).cast("long"))
+    def value: Column = (col("Bytes") * col("SamplingRate") * 8).cast("long")
   }
   /** Ethernet overhead model: +38 bytes per packet
     * (reference `clickhouse.go:189-194`).
     */
   case object L2Bps extends Unit("l2bps") {
-    def agg: Column =
-      sum((col("Bytes") + lit(38) * col("Packets")) * col("SamplingRate") * 8)
-    override def rowWeight: Option[Column] = Some(
-      ((col("Bytes") + lit(38) * col("Packets")) * col("SamplingRate") * 8)
-        .cast("long"))
+    def value: Column =
+      ((col("Bytes") + lit(38) * col("Packets")) * col("SamplingRate") * 8).cast("long")
   }
   /** percent of interface speed; multi-arg count-distinct, NaN→0
-    * (reference `clickhouse.go:195-199`).
+    * (reference `clickhouse.go:195-199`). A row with a null key part
+    * counts for no interface, as in a multi-argument count distinct.
     */
   final case class L2Percent(in: Boolean) extends Unit(if (in) "inl2%" else "outl2%") {
-    private def speed = col(if (in) "InIfSpeed" else "OutIfSpeed")
-    def agg: Column = nanvl(
-      sum((col("Bytes") + lit(38) * col("Packets")) * col("SamplingRate") * 800 /
-        (speed * 1e6)) /
-        count_distinct(col("ExporterAddress"), col(if (in) "InIfName" else "OutIfName")),
-      lit(0.0))
+    private def ifName = col(if (in) "InIfName" else "OutIfName")
+    def value: Column =
+      (col("Bytes") + lit(38) * col("Packets")) * col("SamplingRate") * 800 /
+        (col(if (in) "InIfSpeed" else "OutIfSpeed") * 1e6)
+    override def distinctKey: Option[Column] = Some(
+      when(col("ExporterAddress").isNotNull && ifName.isNotNull,
+        struct(col("ExporterAddress").as("exporter"), ifName.as("ifName"))))
+    override def merge(w: Column, k: Column): Column =
+      nanvl(sum(w) / count_distinct(k), lit(0.0))
     override def reversed: Unit = L2Percent(!in)
   }
 

@@ -105,10 +105,9 @@ final case class Schema(columns: Seq[ColumnSpec],
     */
   def renderDim(name: String): Column = {
     import graft.functions.{Ip, Render}
-    // never NULL: a null dimension renders as "" so the driver-collected
-    // top-N row sets and the DataFrame-side membership tests compare the
-    // SAME value — an un-coalesced null would never match its collected ""
-    // twin and the group would silently fold into 'Other'
+    // never NULL: a null dimension renders as "", so the line sketch's
+    // NUL-joined key (concat_ws skips nulls) keeps one slot per dimension
+    // and splits back into the label tuple the top-N join matches
     coalesce(renderDim0(name), lit(""))
   }
 

@@ -54,6 +54,28 @@ class PlanPropertiesSpec extends SparkSpec {
     }
   }
 
+  test("console graph plans rank inside the plan, persisting nothing") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // the sankey's observed span reads the times its ranking does not,
+    // so it reads its source twice (the span's pass without the weights);
+    // a line's partial is planned once
+    for ((name, factScans) <- Seq("q_line" -> 1, "q_line_bidir" -> 1, "q_sankey" -> 2)) {
+      // the console's small posture plans without AQE, where the ranking
+      // and the fold share the partial's exchange
+      val qe = ConfWindow(spark, "spark.sql.adaptive.enabled" -> "false") {
+        val qe = SparkEntry.queries(name)(spark, sf).queryExecution
+        qe.executedPlan
+        qe
+      }
+      val cached = qe.optimizedPlan.collect { case r: InMemoryRelation => r }
+      assert(cached.isEmpty, s"$name reads ${cached.size} persisted frame(s)")
+      val scans = qe.executedPlan.collect { case s: FileSourceScanExec => s }
+      assert(scans.size == factScans,
+        s"$name scans the fact table ${scans.size} times:\n${qe.executedPlan}")
+    }
+  }
+
   private object aqe
     extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
