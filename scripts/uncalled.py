@@ -2,8 +2,8 @@
 """List public Scala definitions that no program code calls.
 
 For every public `def` and `object` in src/main, count the references to
-its name in the comment-stripped sources of src/main and perfbench/src,
-minus its own definition sites. A name with no reference left is printed
+its name in the code of src/main and perfbench/src (comments and literal
+contents blanked, see strip_comments), minus its own definition sites. A name with no reference left is printed
 as `path:line Owner.name`, unless the allowlist below names it (an
 object is kept with its `main` or an allowed member). Specs do
 not count as callers: a name only a test calls is exactly what the scan
@@ -38,53 +38,120 @@ ALLOW = {
     # durable stores' streaming entry points through kill/replay/heal.
     "Dedup.lshCandidates",
     "MediaStore.startClips",
+    # Store reads a deployment calls and no engine path does; specs pin
+    # each (the exporters table's replacing read, the purge decisions
+    # against their from-scratch twins).
+    "FlowStore.exporters",
+    "MediaStore.purge",
+    "EmbedStore.purge",
+    # The offline codebook trainer the IVF and product-quantizer docs
+    # name; KMeansSpec pins its Lloyd iterations.
+    "KMeans.fit",
 }
 
 DEFN = re.compile(r"^(\s*)((?:(?:private|protected)(?:\[\w+\])?|override|final|"
                   r"implicit|lazy|sealed|abstract|case)\s+)*"
                   r"(def|object|class|trait|val|var)\s+([A-Za-z_]\w*)")
 IDENT = re.compile(r"[A-Za-z_]\w*")
+CHAR = re.compile(r"'(?:\\u[0-9a-fA-F]{4}|\\.|[^'\\\n])'")
 
 
 def strip_comments(text):
-    """Blank out // and /* */ comments, keeping string literals and line
-    numbers intact."""
-    out, i, n = [], 0, len(text)
-    depth = 0
+    """Blank out // and /* */ comments and the contents of string and
+    character literals, keeping line numbers intact. A name inside a
+    literal is text, not a reference: an error message that names its
+    own method must not count as that method's caller. An interpolated
+    string (s"", f"", raw"") keeps its `$name` and `${expr}` splices,
+    which are code. A `//` inside a literal is not read as a comment."""
+    out = []
+    _code(text, 0, out, splice=False)
+    return "".join(out)
+
+
+def _blank(s):
+    return "".join("\n" if c == "\n" else " " for c in s)
+
+
+def _code(text, i, out, splice):
+    """Copy code from `i`, blanking comments and literal contents. Inside
+    a `${` splice, stop after the brace that closes it."""
+    n, depth = len(text), 0
     while i < n:
         c = text[i]
         two = text[i:i + 2]
-        if depth:
-            if two == "/*":
-                depth += 1
-                i += 2
-            elif two == "*/":
-                depth -= 1
-                i += 2
-            else:
-                out.append("\n" if c == "\n" else " ")
-                i += 1
-        elif text.startswith('"""', i):
-            j = text.find('"""', i + 3)
-            j = n if j < 0 else j + 3
-            out.append(text[i:j])
-            i = j
-        elif c == '"':
-            j = i + 1
-            while j < n and text[j] != '"' and text[j] != "\n":
-                j += 2 if text[j] == "\\" else 1
-            out.append(text[i:j + 1])
-            i = j + 1
-        elif two == "//":
+        if two == "//":
             j = text.find("\n", i)
             i = n if j < 0 else j
         elif two == "/*":
-            depth = 1
-            i += 2
+            nest, j = 1, i + 2
+            while j < n and nest:
+                if text.startswith("/*", j):
+                    nest, j = nest + 1, j + 2
+                elif text.startswith("*/", j):
+                    nest, j = nest - 1, j + 2
+                else:
+                    j += 1
+            out.append(_blank(text[i:j]))
+            i = j
+        elif c == '"':
+            interp = i > 0 and (text[i - 1].isalnum() or text[i - 1] == "_")
+            i = _string(text, i, out, interp)
+        elif c == "'" and CHAR.match(text, i):
+            m = CHAR.match(text, i)
+            out.append("'" + " " * (len(m.group(0)) - 2) + "'")
+            i = m.end()
+        elif splice and c == "{":
+            depth += 1
+            out.append(c)
+            i += 1
+        elif splice and c == "}":
+            if depth == 0:
+                out.append(" ")
+                return i + 1
+            depth -= 1
+            out.append(c)
+            i += 1
         else:
             out.append(c)
             i += 1
-    return "".join(out)
+    return i
+
+
+def _string(text, i, out, interp):
+    """Blank the string literal opening at `i` (keeping the splices of an
+    interpolated one) and return the index after it."""
+    n = len(text)
+    q = '"""' if text.startswith('"""', i) else '"'
+    out.append(q)
+    j = i + len(q)
+    while j < n:
+        if text.startswith(q, j):
+            # a triple-quoted string ends at the last quote of a run
+            while len(q) == 3 and text.startswith('"', j + 3):
+                out.append(" ")
+                j += 1
+            out.append(q)
+            return j + len(q)
+        c = text[j]
+        if len(q) == 1 and c == "\n":  # unterminated: stop at the line end
+            return j
+        if len(q) == 1 and c == "\\":
+            out.append(_blank(text[j:j + 2]))
+            j += 2
+        elif interp and c == "$" and text[j + 1:j + 2] in ("$", '"'):
+            out.append("  ")
+            j += 2
+        elif interp and text.startswith("${", j):
+            out.append("  ")
+            j = _code(text, j + 2, out, splice=True)
+        elif interp and c == "$" and IDENT.match(text, j + 1):
+            m = IDENT.match(text, j + 1)
+            out.append(" " + m.group(0))
+            j = m.end()
+        else:
+            out.append(_blank(c))
+            j += 1
+    return j
 
 
 def scala_files(root, sub):

@@ -74,10 +74,4 @@ object Render {
       when(c.bitwiseAND(lit(1 << i)) > 0, lit(l)).otherwise(lit(""))
     }: _*)
   }
-
-  /** P1/P3-style dictionary label: "key: name" with '???' default after a
-    * broadcast left join has attached `nameCol`.
-    */
-  def dictLabel(key: Column, nameCol: Column): Column =
-    concat(key.cast("string"), lit(": "), coalesce(nameCol, lit("???")))
 }

@@ -492,21 +492,6 @@ object Dedup {
       .where(col("rn") <= prefLen(ctPm) + extraRows)
       .select(filtered.columns.map(col).toIndexedSeq: _*)
 
-  /** Prefix rows probing an index: every (prefix doc, index doc) pair
-    * sharing a shingle, canonicalized to (min, max). NOT distinct —
-    * callers union fronts first and distinct once. The plain probe —
-    * exact recall, no positional pruning — used where the two sides'
-    * rankings come from different eras (the stored-state increment
-    * path, where a coherent single ranking would cost the corpus-wide
-    * window the path exists to avoid).
-    */
-  private[dedup] def prefixProbe(pref: DataFrame, index: DataFrame): DataFrame =
-    pref.select(col("id"), col("s")).as("p")
-      .join(index.select(col("id"), col("s")).as("f"),
-        col("p.s") === col("f.s") && col("p.id") =!= col("f.id"))
-      .select(least(col("p.id"), col("f.id")).as("id_a"),
-        greatest(col("p.id"), col("f.id")).as("id_b"))
-
   /** COUNT-FILTERED plain prefix probe — the [[PrefixMinShared]] fuel
     * cut for the stored-state path, where per-doc ranks come from
     * different ingest eras so positional bounds don't apply but the

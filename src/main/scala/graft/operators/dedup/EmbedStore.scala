@@ -105,23 +105,11 @@ final class EmbedStore(protected val spark: SparkSession,
     readTable("pairs", pairsSchema)
   }
 
-  private def shapeMap: Map[String, String] =
+  protected override def shape: Map[String, String] =
     Map("thresholdE6" -> thresholdE6.toString, "bits" -> liveBits.toString,
       "tables" -> tables.toString, "seed" -> seed.toString,
       // one flat layout ([[ReleaseStore]]'s shape pin has why)
       "buckets" -> "0")
-
-  private def checkShape(pin: Boolean): Unit =
-    graft.store.DurableStore.readMeta(fs, hPath(s"$path/store.meta")) match {
-      case None => if (pin) writeShapePin(shapeMap)
-      case Some(m) =>
-        shapeMap.foreach { case (f, v) =>
-          val stored = m.getOrElse(f, v)
-          if (stored != v) throw new IllegalStateException(
-            s"EmbedStore at $path was created with $f=$stored but opened " +
-            s"with $f=$v; reopen with the stored shape")
-        }
-    }
 
   /** Ingest one micro-batch of embeddings (`id`, `embedding` — extra
     * columns are dropped): append the batch's accepted vector
@@ -149,8 +137,7 @@ final class EmbedStore(protected val spark: SparkSession,
         .collect().map(_.getInt(0)).toSeq.sorted
       require(bDims.size <= 1,
         s"mixed embedding dimensions in one batch: $bDims")
-      val meta = graft.store.DurableStore
-        .readMeta(fs, hPath(s"$path/store.meta")).getOrElse(Map.empty)
+      val meta = shapePin.getOrElse(Map.empty)
       val pinnedDim = meta.get("dim").map(_.toInt)
       (pinnedDim, bDims.headOption) match {
         case (Some(p), Some(d)) => require(p == d,
@@ -375,9 +362,7 @@ final class EmbedStore(protected val spark: SparkSession,
   def rehash(newBits: Int): Unit = writeLock.synchronized {
     require(newBits >= 1 && newBits <= 62,
       s"bits must be in [1, 62]: $newBits")
-    val meta = graft.store.DurableStore
-      .readMeta(fs, hPath(s"$path/store.meta"))
-      .getOrElse(throw new IllegalStateException(
+    val meta = shapePin.getOrElse(throw new IllegalStateException(
         s"no shape pin at $path/store.meta - a never-ingested store " +
         "has no postings to migrate: construct with the desired bits " +
         "instead"))
@@ -394,8 +379,7 @@ final class EmbedStore(protected val spark: SparkSession,
     * anywhere re-enters here on the next ingest or rehash call.
     */
   private def completeRehash(): Unit = {
-    val metaOpt = graft.store.DurableStore
-      .readMeta(fs, hPath(s"$path/store.meta"))
+    val metaOpt = shapePin
     metaOpt.flatMap(_.get("rehash_to")).map(_.toInt).foreach { nb =>
       val meta = metaOpt.get
       recoverTable("vecs"); recoverTable("postings")
@@ -458,20 +442,14 @@ object EmbedStore {
   }
 
   /** Reopen an existing store with its PINNED shape. Throws on a store
-    * with no pin (never ingested): construct explicitly once to pin.
+    * with no pin (never ingested) or a truncated one: construct
+    * explicitly once to pin.
     */
   def open(spark: SparkSession, path: String): EmbedStore = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/store.meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m = graft.store.DurableStore.readMeta(fs, p)
-      .getOrElse(throw new IllegalStateException(
-        s"no shape pin at $path/store.meta - construct EmbedStore " +
-        "explicitly (the first ingest records the shape)"))
-    def req(f: String): String = m.getOrElse(f,
-      throw new IllegalStateException(
-        s"shape pin at $path/store.meta carries no '$f'"))
-    new EmbedStore(spark, path, thresholdE6 = req("thresholdE6").toLong,
-      bits = req("bits").toInt, tables = req("tables").toInt,
-      seed = req("seed").toLong)
+    val m = graft.store.DurableStore.pinnedShape(spark, path, "EmbedStore",
+      Seq("thresholdE6", "bits", "tables", "seed"))
+    new EmbedStore(spark, path, thresholdE6 = m("thresholdE6").toLong,
+      bits = m("bits").toInt, tables = m("tables").toInt,
+      seed = m("seed").toLong)
   }
 }

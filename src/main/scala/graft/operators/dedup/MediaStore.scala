@@ -35,9 +35,7 @@ import graft.operators.multimodal.Multimodal
   * within one (`kind` joins the [[Dedup.hammingJoin]] blocking
   * equi-key — one more key column in the same join, no extra pass),
   * and [[purge]] can therefore never delete an image as a "duplicate"
-  * of an audio clip. The property is pinned in `store.meta`
-  * (`kinded=1`); a pre-kind store refuses every entry point until
-  * [[backfillKinds]] migrates it.
+  * of an audio clip.
   *
   * Each ingest pays the batch×stored two-sided [[Dedup.hammingJoin]]
   * (both sides 16-bit-chunk blocked — an equi-join, never a cross
@@ -55,15 +53,17 @@ import graft.operators.multimodal.Multimodal
   *
   * [[clusters]] maintains the CC label table incrementally per the
   * `pairs` water mark — prior components ride the merge as star edges
-  * (id → root), exactly [[ReleaseStore.productsCached]]'s fold — and
+  * (id → root), [[graft.store.DurableStore.foldClusterLabels]] — and
   * [[purge]] serves keeper decisions from the stored pairs without
   * re-pairing anything.
   *
   * SHAPE PIN: `maxHamming` and `chunks` determine what the persisted
   * `pairs` MEAN (a reopen at a different radius would silently mix pair
-  * sets); both are recorded in `store.meta` at first ingest and
-  * validated on every entry point — [[MediaStore.open]] reconstructs a
-  * store from its pin.
+  * sets), and the clip plane's radius and packing modulus what its
+  * `clippairs` mean; all are recorded in `store.meta` at first ingest
+  * and validated on every entry point
+  * ([[graft.store.DurableStore.checkShape]]) — [[MediaStore.open]]
+  * reconstructs a store from its pin.
   *
   * LAYOUT: every table is one flat parquet dir. The id-keyed replay
   * guards — accepted-id resolution, the prints dedup anti-join, the
@@ -147,34 +147,12 @@ final class MediaStore(protected val spark: SparkSession,
     readTable("clippairs", clipPairsSchema)
   }
 
-  private def shapeMap: Map[String, String] =
+  protected override def shape: Map[String, String] =
     Map("maxHamming" -> maxHamming.toString, "chunks" -> chunks.toString,
       // one flat layout ([[ReleaseStore]]'s shape pin has why)
-      "buckets" -> "0", "kinded" -> "1",
+      "buckets" -> "0",
       "clipHamming" -> clipMaxHamming.toString,
       "clipMaxFrames" -> clipMaxFrames.toString)
-
-  private def checkShape(pin: Boolean): Unit =
-    graft.store.DurableStore.readMeta(fs, hPath(s"$path/store.meta")) match {
-      case None => if (pin) writeShapePin(shapeMap)
-      case Some(m) =>
-        // a pinned store WITHOUT the kinded field predates the kind
-        // column: its prints/pairs rows carry no modality, so reading
-        // them under the current schema would silently null every kind
-        // and a mixed ingest could cross-pair modalities — refuse every
-        // entry point until the one-time [[backfillKinds]] migrates it
-        if (!m.contains("kinded")) throw new IllegalStateException(
-          s"MediaStore at $path predates the kind-safe pair schema " +
-          "(prints/pairs carry no modality column): run " +
-          "backfillKinds((id, kind)) once to migrate, or recreate the " +
-          "store")
-        shapeMap.foreach { case (f, v) =>
-          val stored = m.getOrElse(f, v)
-          if (stored != v) throw new IllegalStateException(
-            s"MediaStore at $path was created with $f=$stored but opened " +
-            s"with $f=$v; reopen with the stored shape")
-        }
-    }
 
   /** Ingest one micro-batch of fingerprints (`id`, `sh`, `kind` — extra
     * columns are dropped): append the batch's accepted rows to `prints`
@@ -365,15 +343,6 @@ final class MediaStore(protected val spark: SparkSession,
         "segments lit(\"audio\"), or use MediaStore.frameSequences")
       graft.ScratchCache.scoped {
       checkShape(pin = true)
-      // pre-clip pins lack the clip fields (checkShape tolerates absent
-      // fields) — record them the first time the clip plane is used so
-      // later reopens validate against them
-      graft.store.DurableStore.readMeta(fs, hPath(s"$path/store.meta"))
-        .foreach { m =>
-          if (!m.contains("clipHamming")) writeShapePin(
-            m + ("clipHamming" -> clipMaxHamming.toString)
-              + ("clipMaxFrames" -> clipMaxFrames.toString))
-        }
       recoverTable("clipframes"); recoverTable("clippairs")
       // micro-batch scheduling regime (see withSmallRegimeScheduling)
       withSmallRegimeScheduling(Seq("clipframes", "clippairs")) {
@@ -563,75 +532,6 @@ final class MediaStore(protected val spark: SparkSession,
     corpus.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** One-time migration of a PRE-KIND store (tables written before the
-    * `kind` column existed) to the kind-safe schema: every stored
-    * print gains its modality from the caller-supplied (`id`, `kind`)
-    * mapping, and stored pairs keep only rows whose BOTH ends share a
-    * kind — cross-kind rows were exactly the false pairs the kind
-    * guard exists to prevent, so dropping them is the correction, not
-    * a loss. The cached cluster labels are dropped (the next
-    * [[clusters]] rebuilds from the corrected pairs), and `kinded=1`
-    * moves into `store.meta` LAST — a crash anywhere re-enters
-    * idempotently (reads tolerate half-migrated tables: the legacy
-    * rows' null kinds are re-joined, already-kinded rows re-join to
-    * the same value).
-    *
-    * Refuses a mapping that does not cover every stored id: an
-    * unmapped print would carry a null kind, which pairs with nothing
-    * — silently dead to dedup forever.
-    */
-  def backfillKinds(kinds: DataFrame): Unit = writeLock.synchronized {
-    graft.ScratchCache.scoped {
-      val meta = graft.store.DurableStore
-        .readMeta(fs, hPath(s"$path/store.meta"))
-        .getOrElse(throw new IllegalStateException(
-          s"no shape pin at $path/store.meta - a never-ingested store " +
-          "has nothing to migrate"))
-      if (!meta.contains("kinded")) {
-        recoverTable("prints"); recoverTable("pairs")
-        // heal a prior backfill that died between installTable's two
-        // renames (complete table at `.kinds.old`, nothing live) — the
-        // schema'd read would otherwise see a MISSING table as empty
-        // and install the empty frame over the real data
-        Seq("prints", "pairs").foreach { t =>
-          val dir = hPath(s"$path/$t")
-          val old = hPath(s"$path/$t.kinds.old")
-          if (!fs.exists(dir) && fs.exists(old) && !fs.rename(old, dir))
-            throw new java.io.IOException(
-              s"cannot restore $t from .kinds.old")
-        }
-        val km = graft.ScratchCache.persist(
-          kinds.select(col("id"), col("kind")).dropDuplicates("id"))
-        def install(name: String, df: DataFrame): Unit =
-          if (fs.exists(hPath(s"$path/$name")))
-            installTable(s"$path/$name", df, ".kinds")
-        // legacy parquet footers lack `kind`: the schema'd read nulls
-        // it, the join refills it — so a re-entered half-migration
-        // re-derives the same rows
-        val pr = graft.ScratchCache.persist(
-          readTable("prints", printsSchema).drop("kind")
-            .join(km, Seq("id"), "left"))
-        if (pr.where(col("kind").isNull).limit(1).count() > 0)
-          throw new IllegalArgumentException(
-            s"backfillKinds mapping does not cover every stored id at " +
-            s"$path/prints - an unmapped print would carry a null kind " +
-            "and silently pair with nothing")
-        install("prints", pr.select(printsSchema.fieldNames.map(col): _*))
-        val ka = km.select(col("id").as("id_a"), col("kind"))
-        install("pairs",
-          readTable("pairs", pairsSchema).drop("kind")
-            .join(ka, Seq("id_a"))
-            .join(km.select(col("id").as("id_b"),
-              col("kind").as("__kb")), Seq("id_b"))
-            .where(col("kind") === col("__kb"))
-            .select(pairsSchema.fieldNames.map(col): _*))
-        // label water marks predate the pair correction — rebuild
-        fs.delete(hPath(s"$path/clusters"), true)
-        writeShapePin(meta + ("kinded" -> "1"))
-      }
-    }
-  }
-
   /** Small-file compaction for `prints`/`pairs`/`clusters` plus sidecar
     * pruning — the [[ReleaseStore.compact]] contract (including the
     * reader invalidation: re-resolve frames through the accessors after
@@ -707,23 +607,14 @@ object MediaStore {
 
   /** Reopen an existing store with its PINNED shape — every knob comes
     * from `store.meta`, not the caller's memory. Throws on a store with
-    * no pin (never ingested): construct explicitly once to pin it.
+    * no pin (never ingested) or a truncated one: construct explicitly
+    * once to pin it.
     */
   def open(spark: SparkSession, path: String): MediaStore = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/store.meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m = graft.store.DurableStore.readMeta(fs, p)
-      .getOrElse(throw new IllegalStateException(
-        s"no shape pin at $path/store.meta - construct MediaStore " +
-        "explicitly (the first ingest records the shape)"))
-    def req(f: String): Int = m.getOrElse(f,
-      throw new IllegalStateException(
-        s"shape pin at $path/store.meta carries no '$f'")).toInt
-    new MediaStore(spark, path, maxHamming = req("maxHamming"),
-      chunks = req("chunks"),
-      // clip-plane pins appear at first ingestClips; a pre-clip pin
-      // reopens with the defaults (validated when the plane is used)
-      clipMaxHamming = m.get("clipHamming").map(_.toInt).getOrElse(0),
-      clipMaxFrames = m.get("clipMaxFrames").map(_.toInt).getOrElse(4096))
+    val m = graft.store.DurableStore.pinnedShape(spark, path, "MediaStore",
+      Seq("maxHamming", "chunks", "clipHamming", "clipMaxFrames"))
+    new MediaStore(spark, path, maxHamming = m("maxHamming").toInt,
+      chunks = m("chunks").toInt, clipMaxHamming = m("clipHamming").toInt,
+      clipMaxFrames = m("clipMaxFrames").toInt)
   }
 }

@@ -45,13 +45,9 @@ import org.apache.spark.sql.functions._
   *
   * GROWTH DISCIPLINE (a year of 5-second batches must not mean ~6M
   * files): [[compact]] rewrites `docs`/`scored` to target-sized files
-  * with the FlowStore write-temp-then-swap install (no reader window
-  * over a half-written table) and prunes sidecars for fully-committed
-  * batches; and [[productsCached]] maintains the CC label table
-  * incrementally per threshold — new pairs merge into the persisted
-  * labels (prior components ride along as star edges), so a release
-  * over years of accumulated pairs re-clusters only what the latest
-  * batches added.
+  * with the shared write-temp-then-swap install (no reader window over
+  * a half-written table) and prunes sidecars for fully-committed
+  * batches.
   */
 final class ReleaseStore(protected val spark: SparkSession,
     protected val path: String,
@@ -147,49 +143,13 @@ final class ReleaseStore(protected val spark: SparkSession,
     * shared-row argument needs both sides ranked by ONE coherent
     * order, and stored prefixes deliberately keep their ingest-era
     * ranks), but the COUNT filter does: the subset argument is
-    * ranking-free, so stores whose prefixes were written
-    * [[Dedup.PrefixMinShared]] − 1 rows wide probe through
+    * ranking-free, so prefixes are written [[Dedup.PrefixMinShared]]
+    * − 1 rows wider than the theorem width and probe through
     * [[Dedup.prefixProbeCounted]] — single-collision fuel dies on the
-    * stored path too. The width is a STORE property persisted in
-    * `prefixes.meta` at state creation: legacy stores (no meta) keep
-    * theorem-width prefixes and the plain probe, because filtering
-    * against narrower stored rows would lose recall.
+    * stored path too.
     */
   private val stateTables = Seq("shingles", "bands", "prefixes")
 
-  /** Extra prefix rows beyond the theorem width in the STORED prefixes
-    * table: the `prefixes.meta` value; 0 (plain-probe legacy) when the
-    * table predates the meta file; the [[Dedup.PrefixMinShared]] width
-    * for state not yet created.
-    */
-  private def prefixExtra: Int = {
-    val meta = hPath(s"$path/prefixes.meta")
-    if (fs.exists(meta)) {
-      val in = fs.open(meta)
-      try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toInt
-      finally in.close()
-    } else if (fs.exists(hPath(s"$path/prefixes"))) 0
-    else Dedup.PrefixMinShared - 1
-  }
-
-  /** Pin the store's prefix width the moment state is first written
-    * (idempotent — replay writes the same value). Write-temp-then-rename
-    * like every other durable write here: a crash mid-write must not
-    * leave an empty meta file that [[prefixExtra]]'s toInt chokes on
-    * forever.
-    */
-  private def writePrefixMeta(extra: Int): Unit = {
-    val meta = hPath(s"$path/prefixes.meta")
-    if (!fs.exists(meta)) {
-      val tmp = hPath(s"$path/prefixes.meta.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(extra.toString.getBytes("UTF-8")) finally out.close()
-      // a lost rename race means another writer pinned the (identical)
-      // value first — drop the temp
-      if (!fs.rename(tmp, meta)) fs.delete(tmp, false)
-    }
-  }
   private def stateEnabled: Boolean = lshFront && maxShingleDf.isEmpty
 
   /** EXACT-FRONT SIDECARS (round-16), two independent accelerations,
@@ -319,8 +279,8 @@ final class ReleaseStore(protected val spark: SparkSession,
   /** SHAPE PIN (`store.meta`): every constructor knob that determines
     * what the persisted tables MEAN — hash/band shape behind `scored`
     * and `bands`, the df-cap, the containment floor, id/text columns,
-    * and the two front flags — recorded at first ingest and validated
-    * on every subsequent entry point. Without it a reopen with
+    * and the two front flags — validated by
+    * [[graft.store.DurableStore.checkShape]]. Without it a reopen with
     * different flags corrupts silently rather than failing loudly: a
     * collapse store opened `collapseFront = false` reads REP-level
     * scored rows as member-level (products quietly shrink); a
@@ -330,11 +290,9 @@ final class ReleaseStore(protected val spark: SparkSession,
     * batches in a different hash space than the accumulated pairs.
     * The two documented in-place UPGRADES stay legal (false → true on
     * either front — [[ensureState]] backfills), and the pin follows
-    * the upgrade; downgrades and every other mismatch throw. Legacy
-    * stores (no meta) pin the current shape on next write — nothing
-    * recorded means nothing to validate against.
+    * the upgrade; downgrades and every other mismatch throw.
     */
-  private def shapeMap: Map[String, String] = Map(
+  protected override def shape: Map[String, String] = Map(
     "idCol" -> idCol, "textCol" -> textCol,
     "maxShingleDf" -> maxShingleDf.map(_.toString).getOrElse("none"),
     "lshFront" -> lshFront.toString,
@@ -348,42 +306,8 @@ final class ReleaseStore(protected val spark: SparkSession,
     // instead of misread
     "buckets" -> "0")
 
-  private def shapePin = hPath(s"$path/store.meta")
-
-  private def readShape(): Option[Map[String, String]] =
-    graft.store.DurableStore.readMeta(fs, shapePin)
-
-  /** The shared write-temp-then-rename pin install
-    * ([[graft.store.DurableStore.writeShapePin]]); overwrite is legal
-    * here because front upgrades legitimately move the pin.
-    */
-  private def writeShape(): Unit = writeShapePin(shapeMap)
-
-  /** Validate this instance's shape against the pin; `pin = true`
-    * (write paths) records the shape when absent and moves it after a
-    * legal front upgrade. A field absent from an older pin adopts the
-    * current value — it was never recorded, so there is nothing to
-    * contradict.
-    */
-  private def checkShape(pin: Boolean): Unit = readShape() match {
-    case None => if (pin) writeShape()
-    case Some(m) =>
-      def bad(f: String, stored: String): Nothing =
-        throw new IllegalStateException(
-          s"ReleaseStore at $path was created with $f=$stored but opened " +
-          s"with $f=${shapeMap(f)}; reopen with the stored shape " +
-          "(fronts may only upgrade false -> true)")
-      Seq("idCol", "textCol", "maxShingleDf", "containPm", "k", "bands",
-        "seed", "portable", "buckets").foreach { f =>
-        val stored = m.getOrElse(f, shapeMap(f))
-        if (stored != shapeMap(f)) bad(f, stored)
-      }
-      Seq("lshFront" -> lshFront, "collapseFront" -> collapseFront)
-        .foreach { case (f, cur) =>
-          if (m.get(f).exists(_.toBoolean && !cur)) bad(f, "true")
-        }
-      if (pin && m != shapeMap) writeShape()
-  }
+  protected override def shapeUpgrades: Set[String] =
+    Set("lshFront", "collapseFront")
 
   def docs: DataFrame = {
     checkShape(pin = false)
@@ -392,8 +316,7 @@ final class ReleaseStore(protected val spark: SparkSession,
   }
 
   /** The accumulated scored pair set. `batch` records which ingest
-    * generated each row (−1 for un-id'd batch calls) — the water mark
-    * [[productsCached]]'s incremental clustering folds by.
+    * generated each row (−1 for un-id'd batch calls).
     */
   def scored: DataFrame = {
     checkShape(pin = false)
@@ -749,11 +672,9 @@ final class ReleaseStore(protected val spark: SparkSession,
     // enough for probe economy, and ANY prefix choice keeps recall
     val bdf = bIdx.groupBy("s").agg(count(lit(1)).as("df"))
     val bSizes = bsh.select(col("id"), size(col("sh")).cast("long").as("n"))
-    val pExtra = prefixExtra
-    writePrefixMeta(pExtra)
     val bPref = graft.ScratchCache.persist(
-      Dedup.rarestPrefix(bIdx, bSizes,
-        math.round(containThreshold * 1000), bdf, extraRows = pExtra))
+      Dedup.rarestPrefix(bIdx, bSizes, math.round(containThreshold * 1000),
+        bdf, extraRows = Dedup.PrefixMinShared - 1))
     markers.guarded("shingles", batchId) {
       dedupAppend(bsh, "shingles")
     }
@@ -805,9 +726,8 @@ final class ReleaseStore(protected val spark: SparkSession,
         val grouped = graft.ScratchCache.persist(shAll.withColumn("rep",
           min(col("id")).over(org.apache.spark.sql.expressions.Window
             .partitionBy(sort_array(col("sh"))))))
-        // batch = −2: pre-history membership, folded only by FULL label
-        // rebuilds (distinct from −1 = un-id'd ingest, which forces the
-        // full-CC fallback)
+        // batch = −2: pre-history membership, which no ingest generated
+        // (distinct from −1 = un-id'd ingest)
         (graft.ScratchCache.persist(grouped
             .where(col("id") === col("rep")).select(col("id"), col("sh"))),
           Some(grouped.select(col("id"), col("rep"))
@@ -822,15 +742,12 @@ final class ReleaseStore(protected val spark: SparkSession,
     if (missing.contains("bands"))
       install("bands", bandsOf(sh))
     if (missing.contains("prefixes")) {
-      // honor an existing width pin (meta is the single source of
-      // truth); a store with no pin yet rebuilds at the current width
-      val pExtra = prefixExtra
-      writePrefixMeta(pExtra)
       val idx = sh.select(col("id"), explode(col("sh")).as("s"))
       val dfs = idx.groupBy("s").agg(count(lit(1)).as("df"))
       val sizes = sh.select(col("id"), size(col("sh")).cast("long").as("n"))
       install("prefixes", Dedup.rarestPrefix(idx, sizes,
-        math.round(containThreshold * 1000), dfs, extraRows = pExtra))
+        math.round(containThreshold * 1000), dfs,
+        extraRows = Dedup.PrefixMinShared - 1))
     }
     members.foreach { m =>
       // rewrite the accumulated member-level pairs to rep level BEFORE
@@ -857,19 +774,6 @@ final class ReleaseStore(protected val spark: SparkSession,
           .agg(min("batch").as("batch"))
         install("scored", repScored)
       }
-      // cached label tables' water marks predate the rep-level rewrite
-      // and the backfilled membership — drop tables AND markers so the
-      // next productsCached folds from scratch (one-time upgrade cost).
-      // The schema-cache contract (DurableStore.readInferred: only the
-      // installers may rewrite a table wholesale) covers this delete
-      // too — invalidate alongside it (ADVICE r16)
-      fs.delete(hPath(s"$path/clusters"), true)
-      invalidateInferred(s"$path/clusters")
-      val cDir = hPath(s"$path/_commits")
-      if (fs.exists(cDir))
-        fs.listStatus(cDir).map(_.getPath)
-          .filter(_.getName.startsWith("clusters_t"))
-          .foreach(fs.delete(_, false))
       install("members", m)
     }
     // persists released by ingest's scoped block (ensureState only runs
@@ -912,23 +816,17 @@ final class ReleaseStore(protected val spark: SparkSession,
           col("a.id") =!= col("b.id"))
       .select(least(col("a.id"), col("b.id")).as("id_a"),
         greatest(col("a.id"), col("b.id")).as("id_b"))
-    // width-pinned stores probe through the count filter (exact recall
-    // by the ranking-free subset argument); legacy theorem-width
-    // prefixes keep the plain probe — filtering them would lose recall
-    val minShared = prefixExtra + 1
+    // the count filter keeps exact recall by the ranking-free subset
+    // argument (prefixes are written PrefixMinShared − 1 rows wide)
     val ctPm = math.round(containThreshold * 1000)
+    val bSizes = bsh.select(col("id"), size(col("sh")).cast("long").as("n"))
+    val sSizes =
+      storedSh.select(col("id"), size(col("sh")).cast("long").as("n"))
     val candC =
-      if (minShared <= 1)
-        Dedup.prefixProbe(bPref, storedIdx)
-          .unionAll(Dedup.prefixProbe(storedPref, bIdx))
-      else {
-        val bSizes = bsh.select(col("id"), size(col("sh")).cast("long").as("n"))
-        val sSizes =
-          storedSh.select(col("id"), size(col("sh")).cast("long").as("n"))
-        Dedup.prefixProbeCounted(bPref, storedIdx, bSizes, ctPm, minShared)
-          .unionAll(
-            Dedup.prefixProbeCounted(storedPref, bIdx, sSizes, ctPm, minShared))
-      }
+      Dedup.prefixProbeCounted(bPref, storedIdx, bSizes, ctPm,
+        Dedup.PrefixMinShared)
+        .unionAll(Dedup.prefixProbeCounted(storedPref, bIdx, sSizes, ctPm,
+          Dedup.PrefixMinShared))
     val cand = graft.ScratchCache.persist(candJ.unionAll(candC).distinct())
     val candIds = graft.ScratchCache.persist(
       cand.select(col("id_a").as("id"))
@@ -941,8 +839,7 @@ final class ReleaseStore(protected val spark: SparkSession,
     * micro-batch ingests exactly-once under the checkpoint's batch ids
     * ([[ingest]] with `foreachBatch`'s id — the dedupAppend markers
     * make the sink's at-least-once replays no-ops). Pairs accumulate
-    * against the WHOLE stored corpus, and [[products]]/[[productsCached]]
-    * read the release at any time while the stream runs (reads are
+    * against the WHOLE stored corpus, and [[products]] reads the release at any time while the stream runs (reads are
     * driver-sequential per store by the DurableStore contract). One
     * active stream per store per process — same contract as
     * [[graft.operators.dedup.MediaStore.start]].
@@ -999,112 +896,9 @@ final class ReleaseStore(protected val spark: SparkSession,
       clustersOverride = labels)
   }
 
-  /** [[products]] with store-maintained clustering: the CC label table
-    * persists per threshold under `clusters/`, and each call folds in
-    * only the scored rows appended SINCE the last call — prior
-    * components enter the merge as star edges (id → root), which
-    * preserves connectivity exactly, so the merged labels equal a
-    * from-scratch CC over all pairs (ReleaseStoreSpec pins it). At
-    * 100 TB this is what keeps release cadence flat as history grows:
-    * re-clustering cost tracks the increment, not the archive.
-    *
-    * Requires batch-id'd ingest ([[ingest]] with `batchId`): un-id'd
-    * rows (`batch = −1`) have no water mark to fold by, so their
-    * presence falls back to full CC for correctness.
-    */
-  def productsCached(threshold: Double, quality: DataFrame,
-      sourceCol: String = "source"): Dedup.ReleaseProducts = {
-    checkShape(pin = false)
-    val pm = math.round(threshold * 1000)
-    val table = s"clusters_t$pm"
-    val dir = s"$path/clusters/t=$pm"
-    // a marker WITHOUT its label table means a crash interrupted a prior
-    // install: folding "batch > water" against an empty prior would
-    // silently drop every pre-watermark pair from the clusters — treat
-    // it as no watermark and rebuild from everything
-    val water0 = markers.lastCommitted(table)
-    val water = if (water0 >= 0 && !fs.exists(hPath(dir))) -1L else water0
-    val top = markers.lastCommitted("scored")
-    val sc = graft.ScratchCache.persist(scored)
-    // collapse-front member edges (id ↔ rep): identical sets are
-    // jaccard-1 pairs, so membership IS connectivity — the fold adds
-    // them alongside the rep-level pairs instead of expanding the whole
-    // pair set. Backfilled rows (batch = −2) enter full rebuilds only;
-    // their connectivity is pre-history by construction.
-    def memberEdges(sinceExclusive: Option[Long]): DataFrame = {
-      val me = membersTable.where(col("id") =!= col("rep"))
-      sinceExclusive.fold(me)(w => me.where(col("batch") > w))
-        .select(col("id").as("id_a"), col("rep").as("id_b"))
-    }
-    val hasMembers = membersLive
-    val labels: DataFrame = writeLock.synchronized {
-      // footer-stat fast path (batchAllMarked): the common all-id'd
-      // store decides from parquet min/max stats alone — zero driver
-      // jobs per products call at streaming cadence
-      val unmarked = hasUnmarkedRows("scored", sc) ||
-        (hasMembers && hasUnmarkedRows("members", membersTable))
-      if (unmarked) {
-        // no water mark exists for un-id'd rows — full CC, no cache write
-        val base = jaccardPairs(sc.drop("batch"), threshold)
-        Dedup.connectedComponents(
-          if (hasMembers) base.unionAll(memberEdges(None)) else base)
-      } else if (water >= top && fs.exists(hPath(dir))) {
-        readInferred(dir) // nothing new since the last fold
-      } else {
-        val prior =
-          if (water >= 0 && fs.exists(hPath(dir))) readInferred(dir)
-          else spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("cluster",
-                org.apache.spark.sql.types.LongType))))
-        // prior components ride into the merge as star edges id→root:
-        // every old member stays reachable from its root, so CC over
-        // (stars ∪ new pairs) labels exactly like CC over all pairs
-        val newPairs = jaccardPairs(
-          sc.where(col("batch") > water).drop("batch"), threshold)
-          .select(col("id_a"), col("id_b"))
-        // water < 0 is a full rebuild: backfilled (−2) member edges fold
-        // in here and only here
-        val newEdges =
-          if (!hasMembers) newPairs
-          else newPairs.unionAll(
-            memberEdges(if (water < 0L) None else Some(water)))
-        val merged = Dedup.connectedComponents(
-          prior.select(col("id").as("id_a"), col("cluster").as("id_b"))
-            .unionAll(newEdges))
-        // move-aside install: no window where the marker is ahead of a
-        // MISSING table; a crash between the renames is healed by the
-        // water guard above (dir absent → full rebuild), and
-        // install-then-mark means a crash before the mark just re-folds
-        // idempotently (star edges)
-        installTable(dir, merged, "")
-        markers.markCommitted(table, top)
-        readInferred(dir)
-      }
-    }
-    Dedup.productsOf(
-      graft.ScratchCache.persist(expandedScored(sc.drop("batch"))), docs,
-      idCol, threshold, quality, sourceCol, containThreshold,
-      clustersOverride = Some(labels))
-  }
-
-  /** The verified near-dup pair filter over a scored frame — kept in the
-    * store so [[productsCached]]'s incremental fold applies the same
-    * threshold semantics as [[Dedup]]'s products.
-    */
-  private def jaccardPairs(sc: DataFrame, threshold: Double): DataFrame = {
-    val jac = col("common") * lit(1.0) /
-      (col("n_a") + col("n_b") - col("common"))
-    sc.where(jac >= threshold).select(col("id_a"), col("id_b"))
-  }
-
   /** Small-file compaction: rewrite `docs` and `scored` to
     * `targetFileBytes`-sized files via write-temp-then-swap (two
-    * renames; no reader window over a half-written table — the
-    * FlowStore.compactFiles discipline), then prune the accepted-id
+    * renames; no reader window over a half-written table), then prune the accepted-id
     * sidecars of fully-committed batches (a sidecar only matters while
     * its batch could still replay). Commit markers live under
     * `_commits/` and are untouched, so replay accounting survives
@@ -1131,80 +925,22 @@ final class ReleaseStore(protected val spark: SparkSession,
 }
 
 object ReleaseStore {
-  // the key=value pin parse lives in graft.store.DurableStore.readMeta,
-  // shared by instance validation (readShape) and the operational
-  // reopen ([[open]]) so the two can never disagree about the same file
-  private def readMeta(fs: org.apache.hadoop.fs.FileSystem,
-      pin: org.apache.hadoop.fs.Path): Option[Map[String, String]] =
-    graft.store.DurableStore.readMeta(fs, pin)
-
-  /** Construct a NEW store whose front flags come from the counting
-    * planner instead of a caller bet — [[Dedup.releaseAuto]]'s
-    * self-tuning dispatch extended to the DURABLE layout choice: price
-    * the fronts on `sample` (the first corpus slice the caller has —
-    * [[Dedup.frontDecisions]]' thresholds, counting aggregations only,
-    * no candidate pair materialized), construct with the chosen shape,
-    * and let the first ingest pin it. Collapse rides the LSH front
-    * exactly as in `releaseAuto`. If `path` already holds a pinned
-    * store the sample is IGNORED and [[open]] reconstructs it — the
-    * pin, once made, IS the layout; re-pricing a later corpus must not
-    * silently re-shape accumulated tables (a front change stays an
-    * explicit upgrade through the constructor).
-    */
-  def createAuto(spark: SparkSession, path: String, sample: DataFrame,
-      idCol: String, textCol: String,
-      maxShingleDf: Option[Int] = None,
-      containThreshold: Double = 0.8,
-      k: Int = 128, bands: Int = 32, seed: Long = 42L,
-      portable: Boolean = false): ReleaseStore = {
-    val pin = new org.apache.hadoop.fs.Path(s"$path/store.meta")
-    val fs = pin.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(pin)) return open(spark, path)
-    // tables without a pin = a legacy (pre-pin) store whose shape is
-    // UNKNOWN: re-pricing from the sample could construct the wrong
-    // fronts over existing tables — exactly the silent corruption the
-    // pin prevents. Refuse; an explicit construction with the original
-    // flags re-pins it on next write.
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/docs")))
-      throw new IllegalStateException(
-        s"$path holds tables but no shape pin - construct ReleaseStore " +
-        "explicitly with its original flags (the next write re-pins)")
-    val (useLsh, useCollapse) = Dedup.frontDecisions(sample, idCol,
-      textCol, containThreshold, maxShingleDf, k, bands, seed)
-    System.err.println(
-      s"[ReleaseStore.createAuto] lshFront = ${useLsh || useCollapse}, " +
-      s"collapseFront = $useCollapse")
-    new ReleaseStore(spark, path, idCol, textCol,
-      maxShingleDf = maxShingleDf, lshFront = useLsh || useCollapse,
-      containThreshold = containThreshold, k = k, bands = bands,
-      seed = seed, portable = portable, collapseFront = useCollapse)
-  }
-
   /** Reopen an existing store with its PINNED shape — the operational
     * entry point that cannot drift: every flag comes from `store.meta`,
     * not from the caller's memory of the original construction. Throws
-    * on a store with no pin (pre-pin history, or never ingested) —
+    * on a store with no pin (never ingested) or a truncated one —
     * construct explicitly once and ingest to pin it.
     */
   def open(spark: SparkSession, path: String): ReleaseStore = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/store.meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m = readMeta(fs, p).getOrElse(throw new IllegalStateException(
-      s"no shape pin at $path/store.meta - construct ReleaseStore " +
-      "explicitly (the first ingest records the shape)"))
-    def req(f: String): String = m.getOrElse(f,
-      throw new IllegalStateException(
-        s"shape pin at $path/store.meta carries no '$f' - the pin is " +
-        "truncated or predates the field; construct explicitly"))
-    new ReleaseStore(spark, path, req("idCol"), req("textCol"),
-      maxShingleDf = m.get("maxShingleDf").filter(_ != "none").map(_.toInt),
-      lshFront = m.get("lshFront").exists(_.toBoolean),
-      containThreshold =
-        m.get("containPm").map(_.toLong).getOrElse(800L) / 1000.0,
-      k = m.get("k").map(_.toInt).getOrElse(128),
-      bands = m.get("bands").map(_.toInt).getOrElse(32),
-      seed = m.get("seed").map(_.toLong).getOrElse(42L),
-      portable = m.get("portable").exists(_.toBoolean),
-      collapseFront = m.get("collapseFront").exists(_.toBoolean))
+    val m = graft.store.DurableStore.pinnedShape(spark, path, "ReleaseStore",
+      Seq("idCol", "textCol", "maxShingleDf", "lshFront", "collapseFront",
+        "portable", "containPm", "k", "bands", "seed"))
+    new ReleaseStore(spark, path, m("idCol"), m("textCol"),
+      maxShingleDf = Some(m("maxShingleDf")).filter(_ != "none").map(_.toInt),
+      lshFront = m("lshFront").toBoolean,
+      containThreshold = m("containPm").toLong / 1000.0,
+      k = m("k").toInt, bands = m("bands").toInt, seed = m("seed").toLong,
+      portable = m("portable").toBoolean,
+      collapseFront = m("collapseFront").toBoolean)
   }
 }

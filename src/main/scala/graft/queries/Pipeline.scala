@@ -730,7 +730,7 @@ object Pipeline {
         .select(col("id_a"), col("id_b"), col("hamming"))),
 
     // the store's INCREMENTALLY-maintained cluster labels (per-batch
-    // star-edge folds, the productsCached discipline) must equal the
+    // star-edge folds, DurableStore.foldClusterLabels) must equal the
     // from-scratch CC over the same pairs — the q_image_clusters oracle
     "q_media_clusters" -> ((s, dir) => {
       val sc = famScratchDir(s)

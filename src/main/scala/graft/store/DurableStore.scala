@@ -4,23 +4,34 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The durable-table plumbing every parquet-backed incremental store
-  * shares — extracted from [[graft.operators.dedup.ReleaseStore]] so
-  * its siblings (the perceptual-fingerprint
-  * [[graft.operators.dedup.MediaStore]]) ride the SAME commit-marker /
-  * accepted-id-sidecar / move-aside-install / compaction-healing
-  * discipline instead of re-deriving it: per-table [[CommitMarkers]]
-  * make at-least-once `foreachBatch` replays exactly-once, sidecars pin
-  * a batch's accepted-id membership across replays, [[installTable]]
-  * is the one two-rename table swap, and [[recoverTable]] heals the
-  * crash window between its renames.
+  * shares — the flow store ([[FlowStore]]) and the dedup stores
+  * ([[graft.operators.dedup.ReleaseStore]],
+  * [[graft.operators.dedup.MediaStore]],
+  * [[graft.operators.dedup.EmbedStore]]) ride the SAME commit-marker /
+  * accepted-id-sidecar / move-aside-install / compaction-healing /
+  * shape-pin discipline instead of re-deriving it: per-table
+  * [[CommitMarkers]] make at-least-once `foreachBatch` replays
+  * exactly-once, sidecars pin a batch's accepted-id membership across
+  * replays, [[installTable]] is the one two-rename table swap,
+  * [[recoverTable]] heals the crash window between its renames, and
+  * [[checkShape]] validates the `store.meta` shape pin.
   */
 private[graft] trait DurableStore {
   protected def spark: SparkSession
   protected def path: String
 
   protected lazy val markers = new CommitMarkers(spark, path)
-  /** Serializes table rewrites (compact) against each other; ingest and
-    * reads are driver-driven and sequential per store by contract.
+  /** Serializes appends against table rewrites from the same store
+    * instance. A rewrite ([[installTable]]) snapshots the live
+    * directory, then installs the rewritten copy by rename — an append
+    * landing anywhere in that window would be silently discarded by the
+    * swap (its rows are not in the snapshot). Ingest and maintenance
+    * both run from the driver of the one pipeline that owns a store, so
+    * a JVM lock covers the deployment reality: appends queue behind a
+    * running rewrite, and the commit markers keep the streaming
+    * engine's replays safe. Multi-process writers need external
+    * scheduling — the same single-writer contract as the markers and
+    * the checkpoint itself.
     */
   protected val writeLock = new Object
 
@@ -430,26 +441,6 @@ private[graft] trait DurableStore {
     */
   protected def smallRegimeMinPartitions: Int = 8
 
-  /** Heal ANY [[installTable]]-family swap that died between its two
-    * renames: the complete table sits at `<dir><suffix>.old` and
-    * nothing at the live path. This MUST run before any table access,
-    * not just inside the interrupted operation's re-entry: an ingest
-    * against the missing dir would rebuild the table from one batch
-    * (accepting re-crawled ids, scoring no cross-batch pairs, all
-    * under committed markers), and the next install — seeing a live
-    * dir again — would delete the real table at `.old`. Restoring is
-    * always the safe move: every installer deletes its aside up front
-    * and fully re-derives its temp, so a restored table never collides
-    * with a resumed install, and every interrupted operation re-enters
-    * idempotently (compaction re-runs; backfills and upgrades
-    * re-detect their missing commit point; a restored pre-rehash
-    * postings table still matches the pinned width, and the intent pin
-    * re-enters the migration). `.compact.old` is the common case;
-    * `.backfill.old` covers state/sidecar installs — including the
-    * collapse upgrade's ACCUMULATED `scored` rewrite, which no re-entry
-    * could re-derive — `.kinds.old` the MediaStore kind migration, and
-    * `.old` the bare-suffix label installs.
-    */
   /** Per-instance cache of INFERRED parquet schemas, for tables whose
     * logical schema is caller-defined (`docs` carries arbitrary
     * columns) or derived (label tables): a bare `spark.read.parquet`
@@ -484,6 +475,25 @@ private[graft] trait DurableStore {
     ()
   }
 
+  /** Heal ANY [[installTable]]-family swap that died between its two
+    * renames: the complete table sits at `<dir><suffix>.old` and
+    * nothing at the live path. This MUST run before any table access,
+    * not just inside the interrupted operation's re-entry: an ingest
+    * against the missing dir would rebuild the table from one batch
+    * (accepting re-crawled ids, scoring no cross-batch pairs, all
+    * under committed markers), and the next install — seeing a live
+    * dir again — would delete the real table at `.old`. Restoring is
+    * always the safe move: every installer deletes its aside up front
+    * and fully re-derives its temp, so a restored table never collides
+    * with a resumed install, and every interrupted operation re-enters
+    * idempotently (compaction re-runs; backfills and upgrades
+    * re-detect their missing commit point; a restored pre-rehash
+    * postings table still matches the pinned width, and the intent pin
+    * re-enters the migration). `.compact.old` is the common case;
+    * `.backfill.old` covers state/sidecar installs — including the
+    * collapse upgrade's ACCUMULATED `scored` rewrite, which no re-entry
+    * could re-derive — and `.old` the bare-suffix label installs.
+    */
   protected def recoverTable(name: String): Unit = {
     val dir = s"$path/$name"
     if (fs.exists(hPath(dir))) return
@@ -517,10 +527,21 @@ private[graft] trait DurableStore {
     * the restored copy.
     */
   protected def installTable(dir: String, df: DataFrame,
-      suffix: String): Unit = {
+      suffix: String): Unit =
+    installTable(dir, suffix)(df.write.mode(SaveMode.Overwrite).parquet(_))
+
+  /** [[installTable]] for a table whose writer is more than a plain
+    * parquet write (FlowStore's date partitioning and bloom options):
+    * `write` must fully write the table to the temp path it is given.
+    * Holds [[writeLock]] for the WHOLE rewrite, not just the renames —
+    * an append landing after `write` snapshots the live directory would
+    * be dropped by the install.
+    */
+  protected def installTable(dir: String, suffix: String)
+      (write: String => Unit): Unit = writeLock.synchronized {
     val tmp = s"$dir$suffix.tmp"
     val old = s"$dir$suffix.old"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
+    write(tmp)
     fs.delete(hPath(old), true)
     if (fs.exists(hPath(dir)) && !fs.rename(hPath(dir), hPath(old)))
       throw new java.io.IOException(s"installTable: cannot move $dir aside")
@@ -536,20 +557,17 @@ private[graft] trait DurableStore {
     // partitions it touched): refresh re-lists the path for every
     // matching cache entry so later plan substitutions rebuild from
     // the installed files. DataFrameWriter APPENDS refresh the path
-    // automatically; a rename swap must do it by hand. (Surfaced when
-    // the fold's unmarked probe moved to footer stats — its full-table
-    // limit scan had been accidentally materializing every partition
-    // of the persisted pair frame ahead of each compact.)
+    // automatically; a rename swap must do it by hand.
     spark.catalog.refreshByPath(dir)
     invalidateInferred(dir)
   }
 
   /** Rewrite `name` to `targetBytes`-sized files via the
     * write-temp-then-swap install (no reader window over a half-written
-    * table — the FlowStore.compactFiles discipline). A missing table is
-    * skipped; so is a dir with ZERO data files (an append of an
-    * all-empty frame writes only _SUCCESS) — legal store state but
-    * unreadable without a schema, and nothing to compact either way.
+    * table). A missing table is skipped; so is a dir with ZERO data
+    * files (an append of an all-empty frame writes only _SUCCESS) —
+    * legal store state but unreadable without a schema, and nothing to
+    * compact either way.
     */
   protected def compactTable(name: String, targetBytes: Long): Unit =
     writeLock.synchronized {
@@ -830,10 +848,53 @@ private[graft] trait DurableStore {
     }
   }
 
+  /** The constructor settings that give this store's tables their
+    * meaning, recorded in `store.meta` by [[checkShape]]; empty for a
+    * store without a shape pin.
+    */
+  protected def shape: Map[String, String] = Map.empty
+
+  /** Boolean [[shape]] fields that may move false → true in place (an
+    * upgrade the store backfills); every other field is immutable.
+    */
+  protected def shapeUpgrades: Set[String] = Set.empty
+
+  /** This store's `store.meta`, None before the first pinning write. */
+  protected def shapePin: Option[Map[String, String]] =
+    DurableStore.readMeta(fs, s"$path/store.meta")
+
+  /** Validate [[shape]] against the pin at every entry point, so a
+    * reopen with a different shape throws instead of silently
+    * misreading the tables. A store with no pin records [[shape]] on a
+    * write path (`pin`) and has nothing to validate on a read. A pinned
+    * store must carry every field at its current value, except a legal
+    * [[shapeUpgrades]] move, which a write path records (pin fields
+    * outside [[shape]], such as EmbedStore's `dim`, are kept).
+    */
+  protected def checkShape(pin: Boolean): Unit = shapePin match {
+    case None => if (pin) writeShapePin(shape)
+    case Some(m) =>
+      val store = getClass.getSimpleName
+      shape.foreach { case (f, v) =>
+        val stored = m.getOrElse(f, throw new IllegalStateException(
+          s"$store at $path has a shape pin without '$f' - recreate the " +
+          "store"))
+        val upgrade = shapeUpgrades(f) && stored == "false" && v == "true"
+        if (stored != v && !upgrade) throw new IllegalStateException(
+          s"$store at $path was created with $f=$stored but opened with " +
+          s"$f=$v; reopen with the stored shape" +
+          (if (shapeUpgrades.isEmpty) ""
+           else s" (${shapeUpgrades.toSeq.sorted.mkString(", ")} may " +
+             "only upgrade false -> true)"))
+      }
+      if (pin && shape.exists { case (f, v) => m(f) != v })
+        writeShapePin(m ++ shape)
+  }
+
   /** Install a `store.meta` shape pin: write-temp-then-rename like
     * every other durable write here; overwrite is legal because legal
     * shape upgrades move the pin, and a CRASH between delete and rename
-    * just demotes the store to legacy (the next write re-pins the same
+    * just leaves the store unpinned (the next write re-pins the same
     * shape). An in-process rename FAILURE is different: it is
     * observable, and swallowing it would leave the pin silently gone —
     * the mismatch detection disabled — so it throws.
@@ -891,7 +952,7 @@ private[graft] object DurableStore {
     * before installing).
     */
   val asideSuffixes: Seq[String] =
-    Seq(".compact.old", ".backfill.old", ".kinds.old", ".old")
+    Seq(".compact.old", ".backfill.old", ".old")
 
   /** Probe-size ceiling for [[DurableStore.probeAntiJoin]]'s broadcast
     * inversion: 5M ids ≈ 40 MB broadcast — comfortably under driver
@@ -992,14 +1053,16 @@ private[graft] object DurableStore {
     }
 
   /** The one key=value parse of a `store.meta` shape pin — shared by
-    * instance validation and operational reopen, so the two can never
-    * disagree about the same file.
+    * instance validation ([[DurableStore.checkShape]]) and the `open`
+    * factories ([[pinnedShape]]), so the two can never disagree about
+    * the same file.
     */
-  def readMeta(fs: org.apache.hadoop.fs.FileSystem,
-      pin: org.apache.hadoop.fs.Path): Option[Map[String, String]] =
-    if (!fs.exists(pin)) None
+  private def readMeta(fs: org.apache.hadoop.fs.FileSystem,
+      pin: String): Option[Map[String, String]] = {
+    val p = new org.apache.hadoop.fs.Path(pin)
+    if (!fs.exists(p)) None
     else {
-      val in = fs.open(pin)
+      val in = fs.open(p)
       val txt = try new String(
         org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
       finally in.close()
@@ -1009,4 +1072,26 @@ private[graft] object DurableStore {
           l.substring(0, i) -> l.substring(i + 1)
         }.toMap)
     }
+  }
+
+  /** The pin a `store`'s `open` factory reconstructs it from: the
+    * `store.meta` under `path`, which must exist (a store with no pin
+    * was never ingested) and carry every field in `required` (one that
+    * lacks a field is truncated).
+    */
+  def pinnedShape(spark: SparkSession, path: String, store: String,
+      required: Seq[String]): Map[String, String] = {
+    val pin = s"$path/store.meta"
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val m = readMeta(fs, pin).getOrElse(throw new IllegalStateException(
+      s"no shape pin at $pin - construct $store explicitly (the first " +
+      "ingest records the shape)"))
+    required.find(!m.contains(_)).foreach { f =>
+      throw new IllegalStateException(
+        s"shape pin at $pin carries no '$f' - the pin is truncated; " +
+        s"construct $store explicitly")
+    }
+    m
+  }
 }

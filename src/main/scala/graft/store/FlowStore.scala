@@ -18,6 +18,10 @@ import graft.queryengine.FlowTable
   *
   * One [[writeBatch]] fans a micro-batch into all tables — the Spark
   * analogue of the reference's Null-table + materialized views (I9).
+  * Durability is the [[DurableStore]] discipline: per-table commit
+  * markers, rewrites installed by the move-aside swap under the writer
+  * lock, and every read and append healing a swap that died between
+  * its renames.
   */
 object FlowStore {
   /** Reference retention defaults in days (raw 15 d; rollups 7 d / 90 d /
@@ -54,7 +58,10 @@ object FlowStore {
   val BloomFpp: Double = 0.001
 }
 
-final class FlowStore(spark: SparkSession, root: String) {
+final class FlowStore(protected val spark: SparkSession, root: String)
+    extends DurableStore {
+
+  protected def path: String = root
 
   // Spark's session default writes timestamps as INT96 (Hive compat),
   // which parquet treats as statless: no row-group min/max, no page
@@ -67,27 +74,6 @@ final class FlowStore(spark: SparkSession, root: String) {
 
   private val resolutions = Seq("flows_1m" -> 60L, "flows_5m" -> 300L,
     "flows_1h" -> 3600L)
-
-  /** Per-instance cache of inferred table schemas (the DurableStore
-    * readInferred discipline): a bare spark.read.parquet pays a
-    * schema-inference Spark job + footer read per call, and the query
-    * surface re-reads flows/rollups constantly. Appends and the slice
-    * compaction never change a table's schema; [[swapIn]] and
-    * [[recoverSwap]] invalidate their table on the rename swap.
-    */
-  private val inferredSchemas =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
-
-  private def readInferred(name: String): DataFrame = {
-    val cached = inferredSchemas.get(name)
-    if (cached != null) spark.read.schema(cached).parquet(s"$root/$name")
-    else {
-      val df = spark.read.parquet(s"$root/$name")
-      inferredSchemas.put(name, df.schema)
-      df
-    }
-  }
 
   private val mainOnly: Set[String] =
     graft.schema.FlowSchema.schema.columns.filter(_.mainOnly).map(_.name).toSet
@@ -102,21 +88,6 @@ final class FlowStore(spark: SparkSession, root: String) {
       date_add(to_date(lit("1970-01-01")),
         floor(unix_timestamp(col("TimeReceived")) / 86400L).cast("int"))
         .cast("string"))
-
-  /** Serializes batch appends against table rewrites from the same store
-    * instance. A rewrite ([[swapIn]]) snapshots the live directory, then
-    * installs the rewritten copy by rename — an append landing anywhere
-    * in that window is silently discarded by the swap (its rows are not
-    * in the snapshot), or recreates the live directory between the two
-    * renames and fails the install. Ingest and maintenance both run from
-    * the driver of the one pipeline that owns a store, so a JVM lock
-    * covers the deployment reality; appends queue behind a running
-    * rewrite and the streaming engine's buffered micro-batches catch up
-    * after (idempotence markers keep the replays safe). Multi-process
-    * writers need external scheduling — the same single-writer contract
-    * as the commit markers and the checkpoint itself.
-    */
-  private val writeLock = new Object
 
   /** Store-write indexing options: [[FlowStore.BloomColumns]] for the
     * columns the frame actually carries (rollups keep the dims;
@@ -133,49 +104,25 @@ final class FlowStore(spark: SparkSession, root: String) {
     }
 
   /** One shuffle partition per date partition — each `p_date=` directory
-    * gets one file instead of (shuffle.partitions) slivers.
+    * gets one file instead of (shuffle.partitions) slivers. Under the
+    * writer lock, so an append never lands inside a rewrite's window.
     */
   private def writePartitioned(df: DataFrame, name: String): Unit =
     writeLock.synchronized {
-      recoverSwap(name) // an append must NEVER seed a fresh table
+      recoverTable(name) // an append must NEVER seed a fresh table
       val dated = withDate(df)
       withBlooms(dated.repartition(col("p_date")).write, dated.columns.toSeq)
-        .mode(SaveMode.Append).partitionBy("p_date").parquet(s"$root/$name")
+        .mode(SaveMode.Append).partitionBy("p_date").parquet(s"$path/$name")
     }
 
-  /** The root path's OWN filesystem — `FileSystem.get` would return the
-    * default FS and "Wrong FS" on any non-default root scheme.
+  /** The `p_date=` partition directories of `name`; none for a table
+    * not written yet.
     */
-  private def hadoopFs =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Heal a [[swapIn]] crash window: the two-rename install can die
-    * with the table at `.compact.old` and NOTHING at the live path.
-    * Restore the aside copy — the rewrite sitting at `.compact.tmp`
-    * is disposable (the next compaction re-derives it; swapIn's write
-    * overwrites it). Without this, the next micro-batch's
-    * `SaveMode.Append` would seed a FRESH table beside the aside one
-    * and the prior corpus would be silently orphaned — reads that
-    * threw loudly while the path was missing would quietly return
-    * only post-crash data forever after. A live table with leftover
-    * `.old`/`.tmp` needs no action (swapIn deletes both up front).
-    */
-  private def recoverSwap(name: String): Unit = {
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = hadoopFs
-    val live = p(s"$root/$name")
-    val old = p(s"$root/$name.compact.old")
-    if (!fs.exists(live) && fs.exists(old)) writeLock.synchronized {
-      if (!fs.exists(live) && fs.exists(old)) {
-        if (!fs.rename(old, live))
-          throw new java.io.IOException(
-            s"recoverSwap: cannot restore $name from .compact.old")
-        spark.catalog.refreshByPath(s"$root/$name")
-        inferredSchemas.remove(name)
-        ()
-      }
-    }
+  private def datePartitions(name: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val dir = hPath(s"$path/$name")
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("p_date="))
   }
 
   /** Rollup delta of one batch: truncate time, drop main-only columns,
@@ -238,9 +185,9 @@ final class FlowStore(spark: SparkSession, root: String) {
       // partitions, which the writes below reuse, so the batch's plan —
       // and any observe() metric inside it — executes exactly once
       if (!cached.isEmpty) {
-        guarded("flows", batchId)(writePartitioned(cached, "flows"))
+        markers.guarded("flows", batchId)(writePartitioned(cached, "flows"))
         writeRollups(cached, batchId)
-        guarded("exporters", batchId)(
+        markers.guarded("exporters", batchId)(
           writePartitioned(exportersDelta(cached), "exporters"))
       }
     } finally cached.unpersist()
@@ -255,32 +202,18 @@ final class FlowStore(spark: SparkSession, root: String) {
   private def writeRollups(batch: DataFrame, batchId: Option[Long]): Unit = {
     val r1m = rollupDelta(batch, 60L).cache()
     try {
-      guarded("flows_1m", batchId)(writePartitioned(r1m, "flows_1m"))
-      guarded("flows_5m", batchId)(
+      markers.guarded("flows_1m", batchId)(writePartitioned(r1m, "flows_1m"))
+      markers.guarded("flows_5m", batchId)(
         writePartitioned(rollupDelta(r1m, 300L), "flows_5m"))
-      guarded("flows_1h", batchId)(
+      markers.guarded("flows_1h", batchId)(
         writePartitioned(rollupDelta(r1m, 3600L), "flows_1h"))
     } finally r1m.unpersist()
   }
 
-  /** Exactly-once markers (shared discipline: [[CommitMarkers]]). */
-  private val markers = new CommitMarkers(spark, root)
-
-  /** Run `write` unless `batchId` is already committed for `table`; mark
-    * it committed after. No-op guard when no id is given (batch callers).
-    */
-  private def guarded(table: String, batchId: Option[Long])
-      (write: => Unit): Unit = markers.guarded(table, batchId)(write)
-
-  /** Last streaming batch id durably written to `table`, −1 if none. */
-  def lastCommitted(table: String): Long = markers.lastCommitted(table)
-
   /** Scan one stored table (schema without the partition column). */
-  def read(name: String): DataFrame = readTable(name)
-
-  private def readTable(name: String): DataFrame = {
-    recoverSwap(name)
-    readInferred(name).drop("p_date")
+  def read(name: String): DataFrame = {
+    recoverTable(name)
+    readInferred(s"$path/$name").drop("p_date")
   }
 
   /** Range-pruned scan: bound `p_date` (a yyyy-MM-dd string — lexical
@@ -291,14 +224,14 @@ final class FlowStore(spark: SparkSession, root: String) {
     */
   private def readRange(name: String, start: Timestamp,
       end: Timestamp): DataFrame = {
-    recoverSwap(name)
+    recoverTable(name)
     def dateUtc(ms: Long): String =
       java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC)
         .toLocalDate.toString
     val lo = dateUtc(start.getTime)
     // end is exclusive: the last ms that can match is end - 1
     val hi = dateUtc(math.max(start.getTime, end.getTime - 1))
-    readInferred(name)
+    readInferred(s"$path/$name")
       .where(col("p_date") >= lo && col("p_date") <= hi)
       .drop("p_date")
   }
@@ -310,7 +243,7 @@ final class FlowStore(spark: SparkSession, root: String) {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("ExporterAddress", "IfName")
       .orderBy(desc("TimeReceived"))
-    readTable("exporters")
+    read("exporters")
       .withColumn("rn", row_number().over(w))
       .where(col("rn") === 1)
       .drop("rn")
@@ -335,21 +268,18 @@ final class FlowStore(spark: SparkSession, root: String) {
     * is returned without a Spark job.
     */
   private def boundaryOf(name: String, newest: Boolean): Option[Timestamp] = {
-    recoverSwap(name)
-    val fs = hadoopFs
-    val dir = new org.apache.hadoop.fs.Path(s"$root/$name")
-    if (!fs.isDirectory(dir)) return None
-    val dates = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("p_date=")).sorted
+    recoverTable(name)
+    val dates = datePartitions(name).map(_.getPath).sortBy(_.getName)
     if (dates.isEmpty) return None
-    val d = if (newest) dates.last else dates.head
-    val listing = d -> fs.listStatus(new org.apache.hadoop.fs.Path(dir, d))
+    val dir = if (newest) dates.last else dates.head
+    val d = dir.getName
+    val listing = d -> fs.listStatus(dir)
       .filter(StoreListing.isDataFile)
       .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
       .sorted.toSeq
     val memo = boundaries.get((name, newest))
     if (memo != null && memo._1 == listing) return memo._2
-    val r = readInferred(name)
+    val r = readInferred(s"$path/$name")
       .where(col("p_date") === d.stripPrefix("p_date="))
       .agg(if (newest) max("TimeReceived") else min("TimeReceived"))
       .collect()(0)
@@ -374,27 +304,21 @@ final class FlowStore(spark: SparkSession, root: String) {
       boundaryOf(name, newest = false)
         .getOrElse(Timestamp.valueOf("9999-01-01 00:00:00"))
     (("flows", 0L) +: resolutions).map { case (name, sec) =>
-      FlowTable(name, sec, oldestOf(name), () => readTable(name),
+      FlowTable(name, sec, oldestOf(name), () => read(name),
         Some((s, e) => readRange(name, s, e)),
         Some(() => newest(name)),
-        Some(cap => StoreListing.bytesUpTo(hadoopFs,
-          new org.apache.hadoop.fs.Path(s"$root/$name"), cap)))
+        Some(cap => StoreListing.bytesUpTo(fs, hPath(s"$path/$name"), cap)))
     }
   }
 
   /** Retention: drop partitions entirely older than `cutoff` (the parquet
     * analogue of `TTL ... ttl_only_drop_parts`).
     */
-  def retention(table: String, cutoff: java.time.LocalDate): Unit = {
-    val fs = hadoopFs
-    val dir = new org.apache.hadoop.fs.Path(s"$root/$table")
-    if (!fs.exists(dir)) return
-    fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("p_date=")).foreach { part =>
-        val date = java.time.LocalDate.parse(part.getName.stripPrefix("p_date="))
-        if (date.isBefore(cutoff)) fs.delete(part, true)
-      }
-  }
+  def retention(table: String, cutoff: java.time.LocalDate): Unit =
+    datePartitions(table).map(_.getPath).foreach { part =>
+      val date = java.time.LocalDate.parse(part.getName.stripPrefix("p_date="))
+      if (date.isBefore(cutoff)) fs.delete(part, true)
+    }
 
   /** The reference's per-table TTL schedule applied in one call
     * (`orchestrator/clickhouse/config.go:66-75`; exporters 1 d,
@@ -415,16 +339,20 @@ final class FlowStore(spark: SparkSession, root: String) {
 
   /** Rollup compaction (SummingMergeTree's background merge): re-aggregate
     * a rollup table's partitions in place to bound append growth. Readers
-    * re-aggregate anyway; this only reduces stored rows.
+    * re-aggregate anyway; this only reduces stored rows. A table with no
+    * partition yet (a fresh store, or one that saw only empty batches)
+    * is skipped.
     */
   def compactRollup(name: String): Unit = {
     val sec = resolutions.toMap.apply(name)
-    swapIn(name) { tmp =>
+    recoverTable(name) // a half-swapped table must compact its REAL copy
+    if (datePartitions(name).isEmpty) return
+    installTable(s"$path/$name", ".compact") { tmp =>
       // time-sorted within each written file so multi-row-group files keep
       // tight TimeReceived min/max stats (see compactFiles for the full
       // clustering rationale; rollups are small enough that slice-bucketed
       // files are not worth a second shuffle here)
-      val rolled = withDate(rollupDelta(readTable(name), sec))
+      val rolled = withDate(rollupDelta(read(name), sec))
         .sortWithinPartitions(col("p_date"), col("TimeReceived"))
       withBlooms(rolled.write, rolled.columns.toSeq)
         .mode(SaveMode.Overwrite).partitionBy("p_date").parquet(tmp)
@@ -460,17 +388,12 @@ final class FlowStore(spark: SparkSession, root: String) {
   def compactFiles(name: String,
       targetFileBytes: Long = 256L * 1024 * 1024): Unit = {
     import spark.implicits._
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = hadoopFs
-    recoverSwap(name) // a half-swapped table must compact its REAL copy
-    if (!fs.exists(p(s"$root/$name"))) return
-    val ks = fs.listStatus(p(s"$root/$name"))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("p_date="))
-      .map { d =>
-        val bytes = fs.listStatus(d.getPath).map(_.getLen).sum
-        d.getPath.getName.stripPrefix("p_date=") ->
-          math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      }.toSeq
+    recoverTable(name) // a half-swapped table must compact its REAL copy
+    val ks = datePartitions(name).map { d =>
+      val bytes = fs.listStatus(d.getPath).map(_.getLen).sum
+      d.getPath.getName.stripPrefix("p_date=") ->
+        math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+    }
     if (ks.isEmpty) return
     // per-date slice boundaries from one shared quantile grid: the grid
     // resolution adapts to the widest date (≥4 grid cells per slice keeps
@@ -483,7 +406,7 @@ final class FlowStore(spark: SparkSession, root: String) {
       else {
         val g = math.min(4096, math.max(64, 4 * maxK))
         val probs = (1 until g).map(_.toDouble / g).toArray
-        readInferred(name)
+        readInferred(s"$path/$name")
           .withColumn("p_date", col("p_date").cast("string"))
           .select(col("p_date"), col("TimeReceived").cast("long").as("__tl"))
           .groupBy("p_date")
@@ -504,13 +427,13 @@ final class FlowStore(spark: SparkSession, root: String) {
     val totalK = ks.map { case (d, _) =>
       bounds.get(d).map(_.length + 1).getOrElse(1)
     }.sum
-    swapIn(name) { tmp =>
-      val sliced = readInferred(name)
+    installTable(s"$path/$name", ".compact") { tmp =>
+      val sliced = readInferred(s"$path/$name")
         // partition discovery may infer p_date as DATE; normalize back to
         // the stored string form so the join and the rewrite agree
         .withColumn("p_date", col("p_date").cast("string"))
         // LEFT join: a date partition appended between the directory
-        // listing above and this locked rewrite has no bounds row — its
+        // listing above and the locked rewrite has no bounds row — its
         // rows must compact into one default slice, never silently drop
         .join(broadcast(bDf), Seq("p_date"), "left")
         .withColumn("__salt", coalesce(size(filter(col("__bounds"),
@@ -544,42 +467,5 @@ final class FlowStore(spark: SparkSession, root: String) {
     applyRetention(asOf, retentionDays)
     resolutions.foreach { case (name, _) => compactRollup(name) }
     Seq("flows", "exporters").foreach(compactFiles(_, targetFileBytes))
-  }
-
-  /** Write-temp-then-swap install of a rewritten table: cache()+count()
-    * does NOT sever lineage, so an overwrite of the directory still being
-    * lazily read would recompute lost cached blocks from already-deleted
-    * files mid-write. The rewritten copy lands in a sibling temp dir
-    * first; the swap is two renames (no reader window where the table is
-    * half-written).
-    *
-    * Holds [[writeLock]] for the WHOLE rewrite, not just the renames: an
-    * append landing after `write` snapshots the live directory would be
-    * silently dropped by the install. Appends queue behind the rewrite
-    * and drain after (see the lock's doc for why that is safe).
-    */
-  private def swapIn(name: String)(write: String => Unit): Unit =
-    writeLock.synchronized {
-    val tmp = s"$root/$name.compact.tmp"
-    val old = s"$root/$name.compact.old"
-    write(tmp)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val fs = hadoopFs
-    fs.delete(p(old), true)
-    if (!fs.rename(p(s"$root/$name"), p(old)))
-      throw new java.io.IOException(s"swapIn: cannot move $name aside")
-    if (!fs.rename(p(tmp), p(s"$root/$name"))) {
-      fs.rename(p(old), p(s"$root/$name")) // roll back
-      throw new java.io.IOException(s"swapIn: cannot install $tmp")
-    }
-    fs.delete(p(old), true)
-    // the DurableStore.installTable staleness contract: a cached plan
-    // over the table created BEFORE the swap can hold a partially-built
-    // buffer whose unbuilt partitions still reference the replaced
-    // files (splits freeze at the entry's first physical planning) —
-    // re-list the path for every matching cache entry
-    spark.catalog.refreshByPath(s"$root/$name")
-    inferredSchemas.remove(name)
-    ()
   }
 }

@@ -61,26 +61,6 @@ class MediaStoreSpec extends SparkSpec {
     assert(!p.exists { case (a, b) => a == 50L || b == 50L })
   }
 
-  test("a kind-migration crash (prints at .kinds.old) heals on a plain ingest") {
-    // backfillKinds installs via the move-aside swap; dying between its
-    // renames strands the WHOLE accumulated prints table at
-    // `.kinds.old`. Its own re-entry healed that — but the next
-    // operation is just as likely a plain ingest, whose append would
-    // seed a fresh prints table and silently orphan the corpus. The
-    // generic aside heal must cover it on every entry point.
-    val dir = Files.createTempDirectory("mediakheal").toFile.getAbsolutePath
-    val store = new MediaStore(spark, dir)
-    store.ingest(b0, batchId = Some(0L))
-    store.ingest(b1, batchId = Some(1L))
-    assert(new java.io.File(s"$dir/prints")
-      .renameTo(new java.io.File(s"$dir/prints.kinds.old")))
-    store.ingest(b2, batchId = Some(2L))
-    assert(!new java.io.File(s"$dir/prints.kinds.old").exists())
-    assert(store.prints.count() == allPrints.count(),
-      "the ingest appended to the HEALED corpus, not a fresh table")
-    assert(rows(store.pairs.drop("batch")) == rows(wantPairs))
-  }
-
   test("landed-but-unmarked appends do not duplicate on id'd replay") {
     // the crash window: prints/pairs parquet appends land, the JVM dies
     // BEFORE the markers commit, the batch replays — guarded re-runs
@@ -331,53 +311,6 @@ class MediaStoreSpec extends SparkSpec {
       store.ingest(Seq(1L -> K).toDF("id", "sh"), batchId = Some(0L))
     }
     assert(e.getMessage.contains("kind"))
-  }
-
-  test("a pre-kind store refuses every entry point until backfillKinds migrates it") {
-    // fabricate the LEGACY layout: old-schema tables (no kind column)
-    // whose pairs include a cross-kind false positive, plus a pin
-    // without the kinded field
-    val dir = Files.createTempDirectory("medialegacy").toFile.getAbsolutePath
-    val oldPrints = Seq((1L, K, 0L), (2L, flips(K, 0), 0L), (3L, K, 0L))
-      .toDF("id", "sh", "batch")
-    oldPrints.write.parquet(s"$dir/prints")
-    // legacy pairs: kind-blind — 1↔2 (true, both image), 1↔3 and 2↔3
-    // (false: 3 is audio)
-    Seq((1L, 2L, 1L, 0L), (1L, 3L, 0L, 0L), (2L, 3L, 1L, 0L))
-      .toDF("id_a", "id_b", "hamming", "batch").write.parquet(s"$dir/pairs")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/store.meta"),
-      "buckets=0\nchunks=4\nmaxHamming=3\n".getBytes("UTF-8"))
-    val store = new MediaStore(spark, dir)
-    val e = intercept[IllegalStateException] {
-      store.ingest(prints(9L -> K2), batchId = Some(1L))
-    }
-    assert(e.getMessage.contains("backfillKinds"))
-    intercept[IllegalStateException](store.clusters())
-    // a mapping that misses a stored id refuses (a null kind would
-    // silently never pair)
-    intercept[IllegalArgumentException] {
-      store.backfillKinds(Seq(1L -> "image").toDF("id", "kind"))
-    }
-    val kinds = Seq(1L -> "image", 2L -> "image", 3L -> "audio")
-      .toDF("id", "kind")
-    store.backfillKinds(kinds)
-    store.backfillKinds(kinds) // idempotent re-entry
-    // the cross-kind false pairs are gone, the true pair keeps its kind
-    assert(store.pairs.select("id_a", "id_b", "kind")
-      .as[(Long, Long, String)].collect().toSet == Set((1L, 2L, "image")))
-    assert(store.prints.where(col("kind").isNull).count() == 0)
-    // the store works again: a later batch pairs in-kind against
-    // migrated state (4 is audio at Hamming 0 from print 3)
-    store.ingest(prints(5L -> flips(K, 1)).unionByName(
-      Seq((4L, K)).toDF("id", "sh").withColumn("kind", lit("audio"))),
-      batchId = Some(1L))
-    val got = store.pairs.select("id_a", "id_b", "kind")
-      .as[(Long, Long, String)].collect().toSet
-    assert(got == Set((1L, 2L, "image"), (1L, 5L, "image"),
-      (2L, 5L, "image"), (3L, 4L, "audio")))
-    assert(rows(store.clusters()) == rows(Dedup.connectedComponents(
-      store.pairs.select(col("id_a"), col("id_b")))))
   }
 
   test("an all-duplicate batch appends nothing and the store keeps working") {

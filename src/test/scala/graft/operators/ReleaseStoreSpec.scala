@@ -136,37 +136,6 @@ class ReleaseStoreSpec extends SparkSpec {
     graft.ScratchCache.releaseAll(spark)
   }
 
-  test("incremental clustering folds only new batches and equals full CC") {
-    val dir = Files.createTempDirectory("relinc").toFile.getAbsolutePath
-    val store = new ReleaseStore(spark, dir, "doc_id", "text")
-    val all = b0.unionByName(b1).unionByName(b2)
-    val q = all.select(col("doc_id").as("id"), col("n_chars").as("q"))
-    store.ingest(b0, batchId = Some(0L))
-    store.ingest(b1, batchId = Some(1L))
-    // first fold: clusters persist, water mark = last scored batch
-    val r1 = store.productsCached(threshold = 0.5,
-      quality = b0.unionByName(b1)
-        .select(col("doc_id").as("id"), col("n_chars").as("q")))
-    assert(r1.clusters.count() > 0)
-    assert(store.lastCommitted("clusters_t500") == 1L)
-    graft.ScratchCache.releaseAll(spark)
-    // b2 joins 20's family (21) — the fold must MERGE old component
-    // {20} ∪ new pair (20,21) through the star edges
-    store.ingest(b2, batchId = Some(2L))
-    val r2 = store.productsCached(threshold = 0.5, quality = q)
-    val want = Dedup.releasePipeline(all, "doc_id", "text", threshold = 0.5,
-      maxShingleDf = None, quality = q)
-    assert(rows(r2.clusters) == rows(want.clusters))
-    assert(rows(r2.keepers) == rows(want.keepers))
-    assert(rows(r2.split) == rows(want.split))
-    assert(store.lastCommitted("clusters_t500") == 2L)
-    graft.ScratchCache.releaseAll(spark)
-    // nothing new: the cached labels serve as-is (marker unchanged)
-    val r3 = store.productsCached(threshold = 0.5, quality = q)
-    assert(rows(r3.clusters) == rows(want.clusters))
-    graft.ScratchCache.releaseAll(spark)
-  }
-
   test("LSH-fronted store ingest accumulates the same products") {
     // lshFront=true: each batch's delta comes from banded + prefix
     // candidates (batch-touching only) instead of the exact index
@@ -262,41 +231,6 @@ class ReleaseStoreSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(cont.contains((1L, 10L)), s"stored-in-batch direction lost: $cont")
     assert(cont.contains((10L, 12L)), s"batch-in-stored direction lost: $cont")
-    graft.ScratchCache.releaseAll(spark)
-  }
-
-  test("a legacy width pin (prefixes.meta = 0) keeps the plain probe and parity") {
-    // stores whose prefixes were written at theorem width must NOT be
-    // count-filtered (recall would break); the meta file is the single
-    // source of truth, so pin width 0 before any state exists and run
-    // the full two-direction scenario — parity must hold via the plain
-    // probe path
-    val bA = doc(
-      (1L, "red orange yellow green blue purple"),
-      (50L, "totally unrelated text about completely different things"))
-    val bB = doc(
-      (10L, "the quick brown fox jumps over red orange yellow green blue " +
-        "purple and then runs far away into the deep dark forest tonight"))
-    val bC = doc((12L, "runs far away into the deep dark forest"))
-    val dir = Files.createTempDirectory("rellegacy").toFile.getAbsolutePath
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/prefixes.meta"), true)
-    out.write("0".getBytes("UTF-8")); out.close()
-    val store = new ReleaseStore(spark, dir, "doc_id", "text", lshFront = true)
-    store.ingest(bA, batchId = Some(0L))
-    store.ingest(bB, batchId = Some(1L))
-    store.ingest(bC, batchId = Some(2L))
-    val all = bA.unionByName(bB).unionByName(bC)
-    val q = all.select(col("doc_id").as("id"), col("n_chars").as("q"))
-    val got = store.products(threshold = 0.5, quality = q)
-    val want = Dedup.releasePipeline(all, "doc_id", "text", threshold = 0.5,
-      maxShingleDf = None, quality = q)
-    assert(rows(got.pairs) == rows(want.pairs))
-    assert(rows(got.containment) == rows(want.containment))
-    val cont = got.containment.select("id_a", "id_b")
-      .as[(Long, Long)].collect().toSet
-    assert(cont.contains((1L, 10L)) && cont.contains((10L, 12L)))
     graft.ScratchCache.releaseAll(spark)
   }
 
@@ -415,10 +349,6 @@ class ReleaseStoreSpec extends SparkSpec {
       assert(rows(got.split) == rows(b.split))
       assert(rows(got.sourceOverlap) == rows(b.sourceOverlap))
     }
-    // the incrementally-folded clusters agree (member edges ride the fold)
-    val cached = store.productsCached(threshold = 0.5, quality = q)
-    assert(rows(cached.clusters) == rows(want.clusters))
-    assert(rows(cached.pairs) == rows(want.pairs))
     graft.ScratchCache.releaseAll(spark)
   }
 
@@ -426,7 +356,7 @@ class ReleaseStoreSpec extends SparkSpec {
     // history ingested per-doc (exact dups got their own state rows and
     // member-level pairs), then the store reopens with collapseFront:
     // the first ingest rebuilds state rep-level, rewrites scored to rep
-    // pairs, drops stale label tables, and installs members LAST — and
+    // pairs, and installs members LAST — and
     // every later product equals a from-scratch release
     val t1 = "alpha beta gamma delta epsilon zeta"
     val uA = doc((1L, t1), (2L, t1),
@@ -438,10 +368,6 @@ class ReleaseStoreSpec extends SparkSpec {
       lshFront = true)
     perDoc.ingest(uA, batchId = Some(0L))
     perDoc.ingest(uB, batchId = Some(1L))
-    // build a label table so the upgrade must invalidate it
-    val qAB = uA.unionByName(uB)
-      .select(col("doc_id").as("id"), col("n_chars").as("q"))
-    perDoc.productsCached(threshold = 0.5, quality = qAB)
     assert(spark.read.parquet(s"$dir/shingles").count() == 5) // per-doc rows
     val coll = new ReleaseStore(spark, dir, "doc_id", "text",
       lshFront = true, collapseFront = true)
@@ -464,10 +390,6 @@ class ReleaseStoreSpec extends SparkSpec {
     assert(rows(got.keepers) == rows(want.keepers))
     assert(rows(got.containment) == rows(want.containment))
     assert(rows(got.survivors) == rows(want.survivors))
-    // the stale label table was dropped: the cached path full-rebuilds
-    // (backfilled −2 member edges fold in) and agrees
-    val cached = coll.productsCached(threshold = 0.5, quality = q)
-    assert(rows(cached.clusters) == rows(want.clusters))
     graft.ScratchCache.releaseAll(spark)
   }
 
@@ -670,53 +592,6 @@ class ReleaseStoreSpec extends SparkSpec {
     graft.ScratchCache.releaseAll(spark)
   }
 
-  test("createAuto prices fronts on the sample and the pin owns later reopens") {
-    // b0 carries an exact-dup pair (1, 2): collapsed_docs · 20 > n_docs,
-    // so the planner picks collapse — and with it the LSH front, the
-    // releaseAuto dispatch made durable
-    val dupDir = Files.createTempDirectory("relauto1").toFile.getAbsolutePath
-    val s1 = ReleaseStore.createAuto(spark, dupDir, b0, "doc_id", "text")
-    s1.ingest(b0, batchId = Some(0L))
-    s1.ingest(b1.unionByName(b2), batchId = Some(1L))
-    val meta1 = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dupDir/store.meta")), "UTF-8")
-    assert(meta1.contains("collapseFront=true"))
-    assert(meta1.contains("lshFront=true"))
-    val all = b0.unionByName(b1).unionByName(b2)
-    val q = all.select(col("doc_id").as("id"), col("n_chars").as("q"))
-    val want = Dedup.releasePipeline(all, "doc_id", "text", threshold = 0.5,
-      maxShingleDf = None, quality = q)
-    val got = s1.products(threshold = 0.5, quality = q)
-    assert(rows(got.pairs) == rows(want.pairs))
-    assert(rows(got.containment) == rows(want.containment))
-    // an all-unique sample leaves both margins negative: the exact front
-    val uniqDir = Files.createTempDirectory("relauto2").toFile.getAbsolutePath
-    val s2 = ReleaseStore.createAuto(spark, uniqDir,
-      b1.unionByName(b2), "doc_id", "text")
-    s2.ingest(b1, batchId = Some(0L))
-    val meta2 = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$uniqDir/store.meta")), "UTF-8")
-    assert(meta2.contains("collapseFront=false"))
-    assert(meta2.contains("lshFront=false"))
-    // an existing pin WINS over any later sample: createAuto over the
-    // pinned collapse store ignores the all-unique sample, reopens by
-    // pin, and continues the release exactly (re-crawled ids ignored)
-    val s3 = ReleaseStore.createAuto(spark, dupDir,
-      b1.unionByName(b2), "doc_id", "text")
-    s3.ingest(b2, batchId = Some(2L))
-    val got3 = s3.products(threshold = 0.5, quality = q)
-    assert(rows(got3.pairs) == rows(want.pairs))
-    assert(rows(got3.clusters) == rows(want.clusters))
-    // a LEGACY store (tables, no pin) must REFUSE createAuto: its shape
-    // is unknown, and re-pricing from a sample could construct the
-    // wrong fronts over the existing tables
-    assert(new java.io.File(s"$dupDir/store.meta").delete())
-    intercept[IllegalStateException] {
-      ReleaseStore.createAuto(spark, dupDir, b0, "doc_id", "text")
-    }
-    graft.ScratchCache.releaseAll(spark)
-  }
-
   test("a landed-but-unmarked STATE append does not duplicate on id'd replay") {
     // the id'd crash window: shingles/bands/prefixes parquet appends
     // land, the JVM dies BEFORE their markers commit, the batch
@@ -847,7 +722,7 @@ class ReleaseStoreSpec extends SparkSpec {
     val q = all.select(col("doc_id").as("id"), col("n_chars").as("q"))
     val want = Dedup.releasePipeline(all, "doc_id", "text",
       threshold = 0.5, maxShingleDf = None, quality = q)
-    for (sfx <- Seq(".backfill.old", ".kinds.old", ".old")) {
+    for (sfx <- Seq(".backfill.old", ".old")) {
       assert(new java.io.File(s"$dir/scored")
         .renameTo(new java.io.File(s"$dir/scored$sfx")), sfx)
       val got = store.products(threshold = 0.5, quality = q)
@@ -870,12 +745,11 @@ class ReleaseStoreSpec extends SparkSpec {
 
   test("a compact crash on collapse MEMBERSHIP heals before every exists-branching path") {
     // members is compacted, so it has the same two-rename crash window
-    // as every table — but three DECISIONS branch on its existence:
-    // products' rep-level expansion, productsCached's member-edge
-    // fold, and ingest's upgrade probe + dedupAppend guard. Unhealed,
-    // the window would (a) read rep-level scored rows as member-level,
-    // (b) persist fold labels missing every member edge, (c) seed a
-    // FRESH members table beside the aside one — durable loss
+    // as every table — but two DECISIONS branch on its existence:
+    // products' rep-level expansion, and ingest's upgrade probe +
+    // dedupAppend guard. Unhealed, the window would (a) read rep-level
+    // scored rows as member-level, (b) seed a FRESH members table
+    // beside the aside one — durable loss
     val t1 = "alpha beta gamma delta epsilon zeta"
     val cA = doc((1L, t1), (2L, "alpha beta gamma delta epsilon eta"),
       (50L, "totally unrelated text about completely different things"))
@@ -900,11 +774,7 @@ class ReleaseStoreSpec extends SparkSpec {
     assert(rows(got.clusters) == rows(want.clusters))
     assert(!new java.io.File(s"$dir/members.compact.old").exists(),
       "the read healed the aside table")
-    // (b) the cached fold during the window: member edges must ride
-    crashAside()
-    val cached = store.productsCached(threshold = 0.5, quality = q)
-    assert(rows(cached.clusters) == rows(want.clusters))
-    // (c) an ingest during the window: an all-dup batch appends
+    // (b) an ingest during the window: an all-dup batch appends
     // membership to the HEALED table, never a fresh one
     crashAside()
     store.ingest(doc((4L, t1)), batchId = Some(2L))

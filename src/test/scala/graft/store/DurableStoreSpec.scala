@@ -301,4 +301,38 @@ class DurableStoreSpec extends SparkSpec {
         s"9 MB / minPartitionNum=1 plans one split: est=$est actual=$actual")
     } finally spark.conf.unset("spark.sql.files.minPartitionNum")
   }
+
+  test("open refuses a path with no shape pin, and a pin missing a required field") {
+    // the three dedup stores reopen through the one pinned-shape read:
+    // no store.meta (never ingested) and a truncated pin must both
+    // refuse with a message that names what is missing
+    import graft.operators.dedup.{EmbedStore, MediaStore, ReleaseStore}
+    val stores: Seq[(String, Map[String, String], String,
+        (SparkSession, String) => Any)] = Seq(
+      ("ReleaseStore", Map("idCol" -> "doc_id", "textCol" -> "text",
+        "maxShingleDf" -> "none", "lshFront" -> "false",
+        "collapseFront" -> "false", "portable" -> "false",
+        "containPm" -> "800", "k" -> "128", "bands" -> "32",
+        "seed" -> "42", "buckets" -> "0"), "textCol", ReleaseStore.open),
+      ("MediaStore", Map("maxHamming" -> "3", "chunks" -> "4",
+        "buckets" -> "0", "clipHamming" -> "0", "clipMaxFrames" -> "4096"),
+        "clipMaxFrames", MediaStore.open),
+      ("EmbedStore", Map("thresholdE6" -> "950000", "bits" -> "8",
+        "tables" -> "4", "seed" -> "7", "buckets" -> "0"), "bits",
+        EmbedStore.open))
+    for ((name, pin, dropped, open) <- stores) {
+      val dir = Files.createTempDirectory("pin").toFile.getAbsolutePath
+      val none = intercept[IllegalStateException](open(spark, dir))
+      assert(none.getMessage.contains(s"$dir/store.meta"), name)
+      Files.write(java.nio.file.Paths.get(s"$dir/store.meta"),
+        (pin - dropped).map { case (f, v) => s"$f=$v\n" }.mkString
+          .getBytes("UTF-8"))
+      val truncated = intercept[IllegalStateException](open(spark, dir))
+      assert(truncated.getMessage.contains(s"'$dropped'"), name)
+      // the complete pin reopens
+      Files.write(java.nio.file.Paths.get(s"$dir/store.meta"),
+        pin.map { case (f, v) => s"$f=$v\n" }.mkString.getBytes("UTF-8"))
+      assert(open(spark, dir) != null, name)
+    }
+  }
 }

@@ -446,6 +446,23 @@ class FlowStoreSpec extends SparkSpec {
       .where(col("p_date") === "2024-01-01").count() > 0)
   }
 
+  test("a maintenance pass on a store with no tables yet is a no-op") {
+    // a fresh root, or one that saw only empty batches, has no rollup
+    // table to re-aggregate: maintain skips it like the files compaction
+    val root = java.nio.file.Files.createTempDirectory("store").toString
+    val store = new FlowStore(spark, root)
+    store.writeBatch(mkFlows("2024-03-01", 1).limit(0), Some(0L))
+    store.maintain(java.time.LocalDate.parse("2024-03-02"))
+    assert(Seq("flows", "flows_1m", "flows_5m", "flows_1h", "exporters")
+      .forall(t => !new java.io.File(s"$root/$t").exists()))
+    // and the store still takes its first batch and maintains it
+    store.writeBatch(mkFlows("2024-03-01", 30), Some(1L))
+    store.maintain(java.time.LocalDate.parse("2024-03-02"))
+    assert(store.read("flows").count() == 30)
+    assert(store.read("flows_1m").agg(sum("Bytes")).collect()(0).getLong(0) ==
+      store.read("flows").agg(sum("Bytes")).collect()(0).getLong(0))
+  }
+
   test("dataNow follows appends to the newest partition, memoized between them") {
     val root = java.nio.file.Files.createTempDirectory("store").toString
     val store = new FlowStore(spark, root)
