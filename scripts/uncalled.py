@@ -34,15 +34,36 @@ ALLOW = {
     "FlowKafka.rawFlowSource",
     "FlowKafka.enrichedSink",
     "Lpm.fromCsv",
+    "FlowStore.maintain",          # the scheduled merge + TTL pass
+    "DocJsonl",                    # the corpus-drop JSONL source and
+    "DocJsonl.good",               # its clean and drop-count splits
+    "DocJsonl.dropCounts",
+    "MetadataCache.expireAndRefresh",  # the SNMP cache's sweep timer
+    "MetadataCache.toDim",         # the broadcast dimension enrichment reads
+    "Mmdb.prefixEntries",          # a GeoIP database into LPM entries
+    "Schema.withConfig",           # the deployment's schema config
+    "Live.tableNow",               # the RIB flush before a broadcast
+    "EmbedStore.rehash",           # the width migration the advisory names
     # Test references: specs check faster paths against them, or drive the
     # durable stores' streaming entry points through kill/replay/heal.
     "Dedup.lshCandidates",
     "MediaStore.startClips",
+    "SnmpCodec.getResponse",       # the agent side a spec's fake agent sends
+    "Ip.compareBytes",             # the uint128 order a property spec checks
+    "Schema.structType",           # the stored and rollup column sets
+    "Schema.rollupStructType",     # SchemaSpec pins
+    # Observables: monitoring and specs read a component's verdict here
+    # instead of scraping its logs.
+    "Live.rebuilds",
+    "EmbedStore.lastAdvisory",
+    "ConsoleApi.cacheTtls",
     # Store reads a deployment calls and no engine path does; specs pin
     # each (the exporters table's replacing read, the purge decisions
     # against their from-scratch twins).
     "FlowStore.exporters",
     "MediaStore.purge",
+    "MediaStore.clipFrames",
+    "EmbedStore.vectors",
     "EmbedStore.purge",
     # The offline codebook trainer the IVF and product-quantizer docs
     # name; KMeansSpec pins its Lloyd iterations.

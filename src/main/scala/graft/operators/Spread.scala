@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Round-robin-spread a FILE-BACKED frame across the session's cores
   * before an expensive per-row stage, when its scan would otherwise
@@ -15,6 +16,10 @@ import org.apache.spark.sql.DataFrame
   * group, so that stage runs one task while every other core idles
   * (measured: the single-task shingling stages were the serial wall
   * of q_incr_release_lsh and every portable store drive at sf0.1).
+  * The durable stores' probe fan-outs take the same rule for the same
+  * reason: compaction packs a state table into a few files, and the
+  * probe's explode, join and partial aggregation run on the scan's
+  * partitions.
   *
   * Scale posture, by construction rather than tuning:
   *  - a production corpus scan has ≥ cores input files (or enough
@@ -41,29 +46,22 @@ import org.apache.spark.sql.DataFrame
   */
 object Spread {
   /** The spread width when the narrow-scan trigger fires, 0 when the
-    * frame should be left alone. Cost of the decision: one cached file
-    * listing read (`inputFiles`) plus ≤ cores `getFileStatus` calls;
-    * any error (e.g. a file compacted away between listing and status)
-    * reads as "leave it alone".
+    * frame should be left alone. The file count and byte total come
+    * from the file indexes of the plan's parquet relations, which list
+    * their files when the frame is built, so the decision opens and
+    * stats no file.
     */
   private def targetFor(df: DataFrame): Int = {
-    try {
-      val sc = df.sparkSession.sparkContext
-      val target = sc.defaultParallelism
-      val files = df.inputFiles
-      if (files.isEmpty || files.length >= target) return 0
-      val hconf = sc.hadoopConfiguration
-      val maxPartBytes = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-      var bytes = 0L
-      var i = 0
-      while (i < files.length) {
-        val p = new org.apache.hadoop.fs.Path(files(i))
-        bytes += p.getFileSystem(hconf).getFileStatus(p).getLen
-        if (bytes > maxPartBytes * target) return 0
-        i += 1
-      }
-      target
-    } catch { case scala.util.control.NonFatal(_) => 0 }
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    val indexes = df.queryExecution.optimizedPlan.collect {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation => r.location }
+      .distinctBy(_.rootPaths.toSet)
+    val files = indexes.map(_.inputFiles.length).sum
+    val bytes = indexes.map(_.sizeInBytes).sum
+    val maxPartBytes = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    if (files == 0 || files >= target || bytes > maxPartBytes * target) 0
+    else target
   }
 
   /** `df` repartitioned to `defaultParallelism` when the trigger

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
   LongType, StructField, StructType}
 
 import graft.operators.similarity.CosineSearch
+import graft.operators.Spread
 
 /** Persisted, continuously-maintained EMBEDDING near-dup state — the
   * vector twin of [[MediaStore]]: where media dedup accumulates 64-bit
@@ -184,12 +185,11 @@ final class EmbedStore(protected val spark: SparkSession,
       }
       markers.guarded("pairs", batchId) {
         // the stored probe side is postings MINUS this batch's accepted
-        // ids (the replay view); widened post-compact like every stored
+        // ids (the replay view); spread post-compact like every stored
         // probe fan-out
         val storedPost =
           if (fs.exists(hPath(s"$path/postings")))
-            widen("postings",
-              readTable("postings", postingsSchema))
+            Spread.wide(readTable("postings", postingsSchema))
               .join(broadcast(accepted), col("id") === col("__bid"),
                 "left_anti")
           else bPost.limit(0)
@@ -283,7 +283,7 @@ final class EmbedStore(protected val spark: SparkSession,
         s"EmbedStore at $path: corpus has outgrown the pinned LSH width " +
         s"(bits=$liveBits, recommended=$rec) - candidate volume per " +
         "ingest degrades toward corpus-linear; run rehash(" + rec + ") " +
-        "or compact(autoRehash = true) to migrate (one postings rebuild)")
+        "to migrate (one postings rebuild)")
     }
   }
 
@@ -400,19 +400,9 @@ final class EmbedStore(protected val spark: SparkSession,
     }
   }
 
-  /** Small-file compaction + sidecar pruning — the shared contract.
-    * `autoRehash` (opt-in) additionally migrates the LSH width when
-    * [[widthAdvisory]] says the corpus has outgrown the pin: compaction
-    * already owns the whole-table rewrite window, so the one postings
-    * rebuild rides the maintenance slot the operator scheduled anyway —
-    * equal to a manual `rehash(widthAdvisory().get)` (spec-pinned).
-    * Runs BEFORE the table compaction so the rebuilt postings are
-    * compacted in the same pass.
-    */
-  def compact(targetFileBytes: Long = 256L * 1024 * 1024,
-      autoRehash: Boolean = false): Unit = {
+  /** Small-file compaction + sidecar pruning — the shared contract. */
+  def compact(targetFileBytes: Long = 256L * 1024 * 1024): Unit = {
     checkShape(pin = false)
-    if (autoRehash) widthAdvisory().foreach(rehash)
     Seq("vecs", "postings", "pairs", "clusters")
       .foreach(compactTable(_, targetFileBytes))
     pruneSidecars(Seq("vecs", "postings", "pairs"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.operators.Spread
 import graft.operators.multimodal.Multimodal
 
 /** Persisted, continuously-maintained PERCEPTUAL near-dup state — the
@@ -392,7 +393,7 @@ final class MediaStore(protected val spark: SparkSession,
         // the batch's own frames on the stored side)
         val storedF =
           if (fs.exists(hPath(s"$path/clipframes")))
-            widen("clipframes", readTable("clipframes", clipFramesSchema))
+            Spread.wide(readTable("clipframes", clipFramesSchema))
               .join(broadcast(accepted), col("id") === col("__bid"),
                 "left_anti")
           else bFrames.limit(0)

@@ -3,6 +3,8 @@ package graft.operators.dedup
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Spread
+
 /** Persisted, continuously-maintained dedup release: the storage twin of
   * [[Dedup.incrementalRelease]] for streaming corpus ingest
   * (`writeStream.foreachBatch((b, id) => store.ingest(b, Some(id)))`).
@@ -600,7 +602,7 @@ final class ReleaseStore(protected val spark: SparkSession,
     */
   private def storedExactDelta(bsh: DataFrame,
       accepted: DataFrame): DataFrame = {
-    val storedSh = widen("shingles", readTable("shingles", bsh.schema))
+    val storedSh = Spread.wide(readTable("shingles", bsh.schema))
     // corpus side = stored state MINUS the batch's accepted ids (their
     // state rows were appended above; without the anti-join a
     // batch-internal pair would count once from the self-join and once
@@ -791,23 +793,20 @@ final class ReleaseStore(protected val spark: SparkSession,
     */
   private def storedStateDelta(bsh: DataFrame, bBands: DataFrame,
       bPref: DataFrame): DataFrame = {
-    // WIDEN the stored-side scans: a state table compacted to
+    // Spread the stored-side scans: a state table compacted to
     // ≲ cores × maxPartitionBytes reads as a handful of partitions, and
     // the probe pipelines here keep that partitioning through their
     // whole fan-out — the batch side broadcasts, so the explode + join
     // + partial pair-count aggregation all execute on the SCAN's
     // partitions. Measured at ×100 right after the mid-stream compact:
     // one task aggregating the probe fan-out for 20+ minutes while 31
-    // cores idled (per-batch wall 156 s → 1214/1415 s). A bounded
-    // shuffle of the stored side (its pre-fan-out scan size) restores
-    // width; once the table outgrows cores × maxPartitionBytes the scan
-    // is naturally wide and this is a no-op. Width comes from the
-    // FileIndex side (DurableStore.widen's one listing), not from
-    // df.rdd.getNumPartitions — instantiating the RDD forces split
-    // planning on the driver per ingest.
-    val storedSh = widen("shingles", readTable("shingles", bsh.schema))
-    val storedBands = widen("bands", readTable("bands", bBands.schema))
-    val storedPref = widen("prefixes", readTable("prefixes", bPref.schema))
+    // cores idled (per-batch wall 156 s → 1214/1415 s). Spread.wide's
+    // bounded shuffle of the stored side (its pre-fan-out scan size)
+    // restores width; once the table outgrows cores × maxPartitionBytes
+    // or cores files, the scan is naturally wide and it is a no-op.
+    val storedSh = Spread.wide(readTable("shingles", bsh.schema))
+    val storedBands = Spread.wide(readTable("bands", bBands.schema))
+    val storedPref = Spread.wide(readTable("prefixes", bPref.schema))
     val storedIdx = storedSh.select(col("id"), explode(col("sh")).as("s"))
     val bIdx = bsh.select(col("id"), explode(col("sh")).as("s"))
     val candJ = bBands.as("a")

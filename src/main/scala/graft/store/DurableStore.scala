@@ -3,6 +3,8 @@ package graft.store
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** The durable-table plumbing every parquet-backed incremental store
   * shares — the flow store ([[FlowStore]]) and the dedup stores
   * ([[graft.operators.dedup.ReleaseStore]],
@@ -42,70 +44,6 @@ private[graft] trait DurableStore {
   /** Last streaming batch id durably written to `table` (−1 if none). */
   def lastCommitted(table: String): Long = markers.lastCommitted(table)
 
-  /** The scan width Spark would PLAN for `table`, estimated from one
-    * recursive file listing instead of instantiating the scan's RDD
-    * (`df.rdd.getNumPartitions` forces split planning through a fresh
-    * RDD lineage on every ingest — driver work that grows with the
-    * table's file count). Reproduces `FilePartition.maxSplitBytes`:
-    * splits pack up to `min(maxPartitionBytes, max(openCostInBytes,
-    * Σ(size + openCost) / defaultParallelism))`, so planned width ≈
-    * `ceil(Σ(size + openCost) / maxSplitBytes)`. The estimate errs LOW
-    * (file boundaries can only split a packing further), which is the
-    * safe direction for its one consumer — the post-compact widen
-    * compares it against `defaultParallelism` and repartitions when
-    * narrow, so an underestimate can only widen a scan that was
-    * already wide enough (a bounded no-op-ish shuffle), never skip a
-    * widen the real plan needed.
-    */
-  protected def plannedScanWidth(table: String): Int = {
-    val dir = hPath(s"$path/$table")
-    if (!fs.exists(dir)) return 0
-    var bytes = 0L
-    var files = 0L
-    val it = StoreListing.files(fs, dir)
-    while (it.hasNext) {
-      val st = it.next()
-      if (StoreListing.isDataFile(st)) {
-        bytes += st.getLen
-        files += 1
-      }
-    }
-    if (files == 0) return 0
-    val conf = spark.sessionState.conf
-    val openCost = conf.filesOpenCostInBytes
-    val total = bytes + files * openCost
-    // the same divisor FilePartition.maxSplitBytes uses —
-    // filesMinPartitionNum, falling back to leafNodeDefaultParallelism
-    // (itself defaulting to defaultParallelism). Dividing by
-    // defaultParallelism unconditionally broke the 'errs LOW' guarantee
-    // whenever spark.sql.files.minPartitionNum was configured below it:
-    // the real maxSplitBytes would be LARGER, the real scan NARROWER
-    // than the estimate, and a needed post-compact widen skipped.
-    val minPartNum = conf.filesMinPartitionNum.getOrElse(
-      spark.conf.getOption("spark.sql.leafNodeDefaultParallelism")
-        .map(_.toInt)
-        .getOrElse(spark.sparkContext.defaultParallelism))
-    val perCore = total / math.max(1, minPartNum)
-    val maxSplit =
-      math.max(1L, math.min(conf.filesMaxPartitionBytes,
-        math.max(openCost, perCore)))
-    math.ceil(total.toDouble / maxSplit).toInt
-  }
-
-  /** Widen a possibly-compacted stored scan before a probe fan-out:
-    * compaction packs a table into few large files, so the scan Spark
-    * plans for it can be narrower than the cores available — a
-    * store-wide probe (candidate scoring, a hammingJoin's stored side)
-    * would then run on a handful of tasks. One FileIndex-side estimate
-    * ([[plannedScanWidth]] — no RDD instantiation), one repartition
-    * only when narrow. The ONE copy of the post-compact scan-width
-    * rule; every store's probe fan-out calls it.
-    */
-  protected def widen(table: String, df: DataFrame): DataFrame = {
-    val cores = spark.sparkContext.defaultParallelism
-    if (plannedScanWidth(table) < cores) df.repartition(cores) else df
-  }
-
   /** Whether the files in `stats` hold at most `cap` ROWS — exact
     * parquet footer record counts, walked with an early exit at the
     * cap, so a huge store reads one or two footers before bailing.
@@ -115,71 +53,78 @@ private[graft] trait DurableStore {
     * ~10⁵ — and the cost the inversion avoids (the plain anti-join's
     * forced shuffle+sort of the stored side) scales with ROWS, not
     * bytes. Takes the statuses the dispatch's byte walk already
-    * collected, so one listing serves both gates.
+    * collected, so one listing serves both gates. A walk cut short by
+    * the cold-read cap answers false (the inversion, result-identical).
     */
   private def footerRowsAtMost(
       stats: Seq[org.apache.hadoop.fs.FileStatus],
       cap: Long): Boolean = {
     var rows = 0L
-    stats.foreach { st =>
-      if (st.getPath.getName.endsWith(".parquet")) {
-        rows += footerRecordCount(st)
-        if (rows > cap) return false
-      }
-    }
-    true
+    walkFooters(stats.iterator) { f => rows += f.rows; rows <= cap }
+      .contains(true)
   }
 
-  /** One parquet file's exact footer record count, cached JVM-wide:
-    * parquet data files are immutable once visible (writes land under
-    * temp names and rename in), so a (length, mtime)-keyed count is
-    * safe to cache for the JVM's life — steady-state guards pay
+  /** One parquet file's footer facts, read by one open and cached
+    * JVM-wide: parquet data files are immutable once visible (writes
+    * land under temp names and rename in), so a (length, mtime)-keyed
+    * entry is safe to cache for the JVM's life — steady-state walks pay
     * footers only for the files the LAST append added.
     */
-  private def footerRecordCount(
-      st: org.apache.hadoop.fs.FileStatus): Long = {
-    val key = st.getPath.toString
-    val cached = DurableStore.footerRows.get(key)
-    if (cached != null && cached._1 == st.getLen &&
-        cached._2 == st.getModificationTime) cached._3
-    else {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromStatus(st, spark.sparkContext.hadoopConfiguration)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val c = try r.getRecordCount finally r.close()
-      DurableStore.footerRows.put(key,
-        (st.getLen, st.getModificationTime, c))
-      c
+  private def readFooter(
+      st: org.apache.hadoop.fs.FileStatus): DurableStore.Footer = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromStatus(st, spark.sparkContext.hadoopConfiguration)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val f = try DurableStore.Footer(st.getLen, st.getModificationTime,
+      r.getRecordCount, DurableStore.batchMinMax(r.getFooter.getBlocks))
+    finally r.close()
+    DurableStore.footers.put(st.getPath.toString, f)
+    f
+  }
+
+  /** Feed the footer of each parquet file in `files` to `visit` until it
+    * returns false. Cold footers are opened SEQUENTIALLY on the driver —
+    * free in the steady state (only the last append's files are
+    * uncached) but a first pass over a huge table would pay file-count
+    * × metadata latency serially — so past [[footerColdReadCap]]
+    * uncached files the walk stops with None, and callers fall back to
+    * their conservative verdict; the files read so far stay cached, so
+    * repeated calls converge. Otherwise Some(whether the walk reached
+    * the end).
+    */
+  private def walkFooters(files: Iterator[org.apache.hadoop.fs.FileStatus])
+      (visit: DurableStore.Footer => Boolean): Option[Boolean] = {
+    var coldReads = 0
+    while (files.hasNext) {
+      val st = files.next()
+      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
+        val cached = DurableStore.footers.get(st.getPath.toString)
+        val f =
+          if (cached != null && cached.len == st.getLen &&
+              cached.mtime == st.getModificationTime) cached
+          else {
+            coldReads += 1
+            if (coldReads > footerColdReadCap) return None
+            readFooter(st)
+          }
+        if (!visit(f)) return Some(false)
+      }
     }
+    Some(true)
   }
 
   /** `table`'s exact row count from parquet footer record counts — the
     * ZERO-JOB corpus-size read behind capacity advisories (EmbedStore's
-    * width watch): steady-state calls are all cache hits (only the last
-    * append's files are cold), and a cold pass is bounded by the same
-    * cap as [[batchAllMarked]] — None past it (callers treat "unknown"
-    * as "no advisory", never as a number). Some(0) for a missing table.
+    * width watch): steady-state calls are all cache hits, and a cold
+    * pass past the cap is None (callers treat "unknown" as "no
+    * advisory", never as a number). Some(0) for a missing table.
     */
   protected def tableFooterRows(table: String): Option[Long] = {
     val dir = hPath(s"$path/$table")
     if (!fs.exists(dir)) return Some(0L)
     var rows = 0L
-    var coldReads = 0
-    val it = StoreListing.files(fs, dir)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val key = st.getPath.toString
-        val cached = DurableStore.footerRows.get(key)
-        if (cached == null || cached._1 != st.getLen ||
-            cached._2 != st.getModificationTime) {
-          coldReads += 1
-          if (coldReads > footerColdReadCap) return None
-        }
-        rows += footerRecordCount(st)
-      }
-    }
-    Some(rows)
+    walkFooters(StoreListing.files(fs, dir)) { f => rows += f.rows; true }
+      .map(_ => rows)
   }
 
   /** [[DurableStore.footerWalkMaxFiles]], overridable for tests. */
@@ -290,86 +235,27 @@ private[graft] trait DurableStore {
     * none (min > −1, or max < −1: backfill-only files), None when any
     * file is undecidable (stats absent, or min < −1 < max — e.g. a
     * compacted file mixing −2 backfill with id'd rows) — callers fall
-    * back to the one-row Spark probe. Per-file verdicts are cached
-    * like [[footerRowsAtMost]]'s counts (immutable-once-visible
-    * files), so steady-state folds pay footer reads only for the
-    * files the last append added.
+    * back to the one-row Spark probe, as they do past the walk's
+    * cold-read cap ([[walkFooters]]).
     */
   protected def batchAllMarked(table: String): Option[Boolean] = {
     val dir = hPath(s"$path/$table")
     if (!fs.exists(dir)) return Some(true)
     var indeterminate = false
-    // cold footer reads are opened SEQUENTIALLY on the driver — free in
-    // the steady state (only the last append's files are uncached) but
-    // a first pass over a huge table would pay file-count × metadata
-    // latency serially, replacing what was one PARALLEL Spark probe.
-    // Past the cold-read cap, bail to None (the one-row Spark probe);
-    // the files read so far are cached, so repeated calls converge.
-    var coldReads = 0
-    val it = StoreListing.files(fs, dir)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val key = st.getPath.toString
-        val cached = DurableStore.footerBatchStats.get(key)
-        val mm =
-          if (cached != null && cached._1 == st.getLen &&
-              cached._2 == st.getModificationTime) cached._3
-          else {
-            coldReads += 1
-            if (coldReads > footerColdReadCap) return None
-            val read = readBatchMinMax(st)
-            DurableStore.footerBatchStats.put(key,
-              (st.getLen, st.getModificationTime, read))
-            read
-          }
-        mm match {
-          case Some((mn, mx)) =>
-            if (mn == -1L || mx == -1L) return Some(false)
-            if (mn < -1L && mx > -1L) indeterminate = true
-          case None => indeterminate = true
-        }
+    walkFooters(StoreListing.files(fs, dir)) { f =>
+      f.batch match {
+        case Some((mn, mx)) if mn == -1L || mx == -1L => false
+        case Some((mn, mx)) =>
+          if (mn < -1L && mx > -1L) indeterminate = true
+          true
+        case None =>
+          indeterminate = true
+          true
       }
+    } match {
+      case Some(true) if indeterminate => None
+      case verdict => verdict
     }
-    if (indeterminate) None else Some(true)
-  }
-
-  /** One file's (min, max) of its `batch` column, combined across row
-    * groups from the footer alone; None when the column is missing or
-    * any row group lacks usable stats. A zero-row-group file returns
-    * the empty sentinel (min > max), which every caller reads as
-    * "contains nothing".
-    */
-  private def readBatchMinMax(
-      st: org.apache.hadoop.fs.FileStatus): Option[(Long, Long)] = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromStatus(st, spark.sparkContext.hadoopConfiguration)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      var mn = Long.MaxValue
-      var mx = Long.MinValue
-      val blocks = r.getFooter.getBlocks
-      var i = 0
-      while (i < blocks.size()) {
-        val cols = blocks.get(i).getColumns
-        var s: org.apache.parquet.column.statistics.Statistics[_] = null
-        var j = 0
-        while (j < cols.size()) {
-          val c = cols.get(j)
-          if (c.getPath.toDotString == "batch") s = c.getStatistics
-          j += 1
-        }
-        s match {
-          case ls: org.apache.parquet.column.statistics.LongStatistics
-              if !ls.isEmpty && ls.hasNonNullValue =>
-            mn = math.min(mn, ls.getMin)
-            mx = math.max(mx, ls.getMax)
-          case _ => return None
-        }
-        i += 1
-      }
-      Some((mn, mx))
-    } finally r.close()
   }
 
   /** The `unmarked` probe every incremental fold gates on: does
@@ -983,44 +869,60 @@ private[graft] object DurableStore {
     */
   val footerWalkMaxFiles: Int = 16384
 
-  /** Cold-read ceiling per [[DurableStore.batchAllMarked]] call: at
-    * most this many UNCACHED footers are opened (sequentially, on the
-    * driver) before the verdict falls back to the one-row parallel
-    * Spark probe. Steady-state folds stay zero-job (only the last
-    * append's files are cold); a huge table's first fold pays one
-    * bounded walk — or the Spark job it always used to.
+  /** Cold-read ceiling per footer walk ([[DurableStore.walkFooters]]):
+    * at most this many UNCACHED footers are opened (sequentially, on the
+    * driver) before the walk gives up and its caller falls back — for
+    * [[DurableStore.batchAllMarked]], the one-row parallel Spark probe.
+    * Steady-state folds stay zero-job (only the last append's files are
+    * cold); a huge table's first fold pays one bounded walk — or the
+    * Spark job it always used to.
     */
   val footerColdReadCap: Int = 1024
 
-  /** JVM-wide parquet footer row-count cache for
-    * [[DurableStore.footerRowsAtMost]], keyed by file path with
-    * (length, mtime) validity — parquet data files are immutable once
-    * visible, so entries only go stale when a path is REUSED by a
-    * compaction swap, which the (length, mtime) check catches.
-    * Size-bounded by ACCESS-ORDER LRU eviction (a full clear at the
-    * cap made a long-lived many-small-files process re-pay every
-    * footer read on the next guard; evicting only the coldest entry
-    * keeps the steady-state working set warm).
+  /** One parquet file's footer facts: its record count and the (min,
+    * max) of its `batch` column combined across row groups — None when
+    * the column is missing or any row group lacks usable stats (the
+    * conservative "can't tell" verdict). A zero-row-group file holds
+    * the empty sentinel (min > max), which every caller reads as
+    * "contains nothing". `len` and `mtime` are the validity key.
     */
-  private[store] val footerRows: java.util.Map[String, (Long, Long, Long)] =
-    lruCache[(Long, Long, Long)](100000)
+  private case class Footer(len: Long, mtime: Long, rows: Long,
+      batch: Option[(Long, Long)])
 
-  /** JVM-wide per-file (min, max) footer statistics of a store
-    * table's `batch` column, for [[DurableStore.batchAllMarked]] —
-    * same key/validity discipline as [[footerRows]]. The value's
-    * Option is None when any row group lacks usable stats for the
-    * column (the conservative "can't tell" verdict).
+  /** JVM-wide [[Footer]] cache, keyed by file path with (length, mtime)
+    * validity — parquet data files are immutable once visible, so
+    * entries only go stale when a path is REUSED by a compaction swap,
+    * which the (length, mtime) check catches. Size-bounded by
+    * ACCESS-ORDER LRU eviction (a full clear at the cap made a
+    * long-lived many-small-files process re-pay every footer read on
+    * the next guard; evicting only the coldest entry keeps the
+    * steady-state working set warm).
     */
-  private[store] val footerBatchStats
-      : java.util.Map[String, (Long, Long, Option[(Long, Long)])] =
-    lruCache[(Long, Long, Option[(Long, Long)])](100000)
-
-  private def lruCache[V](cap: Int): java.util.Map[String, V] =
+  private val footers: java.util.Map[String, Footer] =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, V](1024, 0.75f, true) {
+      new java.util.LinkedHashMap[String, Footer](1024, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[String, V]): Boolean = size() > cap
+            e: java.util.Map.Entry[String, Footer]): Boolean = size() > 100000
       })
+
+  private def batchMinMax(blocks: java.util.List[
+      org.apache.parquet.hadoop.metadata.BlockMetaData])
+      : Option[(Long, Long)] = {
+    var mn = Long.MaxValue
+    var mx = Long.MinValue
+    val it = blocks.iterator()
+    while (it.hasNext) {
+      it.next().getColumns.asScala
+        .find(_.getPath.toDotString == "batch").map(_.getStatistics) match {
+        case Some(ls: org.apache.parquet.column.statistics.LongStatistics)
+            if !ls.isEmpty && ls.hasNonNullValue =>
+          mn = math.min(mn, ls.getMin)
+          mx = math.max(mx, ls.getMax)
+        case _ => return None
+      }
+    }
+    Some((mn, mx))
+  }
 
   /** Whether `e` (or any cause in its chain) is a read-side type
     * mismatch: parquet data whose physical type cannot convert to the

@@ -253,7 +253,7 @@ final class FlowStore(protected val spark: SparkSession, root: String)
     * directory with its data files as (name, length, mtime), and the
     * boundary read from them. Parquet files are immutable once visible,
     * so an append, a compaction swap or a retention drop changes the
-    * listing (the `DurableStore.footerRows` discipline) and forces a
+    * listing (the `DurableStore.footers` discipline) and forces a
     * re-read.
     */
   private val boundaries =

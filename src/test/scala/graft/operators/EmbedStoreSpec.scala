@@ -209,46 +209,35 @@ class EmbedStoreSpec extends SparkSpec {
     assert(EmbedStore.bitsFor(10L) == 8) // clamped floor
   }
 
-  test("the width watch surfaces an outgrown pin on ingest; compact(autoRehash) equals a manual rehash") {
+  test("the width watch surfaces an outgrown pin on ingest; rehash to the advised width quiets it") {
     // a bits = 2 store is outgrown by ANY corpus (bitsFor floors at 8,
     // more than one doubling above the pin) — the miniature of a
     // bits = 8 store past ~10⁵ vectors, where a batch's candidates
     // blanket every bucket (the ×100 rehearsal's measured trap)
     val dirA = Files.createTempDirectory("embadvA").toFile.getAbsolutePath
-    val dirB = Files.createTempDirectory("embadvB").toFile.getAbsolutePath
     val a = new EmbedStore(spark, dirA, thresholdE6 = T, bits = 2)
     a.ingest(b0, batchId = Some(0L))
     assert(a.lastAdvisory == Some(8),
       "the ingest itself must surface the advisory")
     assert(a.widthAdvisory() == Some(8))
     a.ingest(b1, batchId = Some(1L))
-    // opt-in auto-rehash rides the compaction's rewrite window…
-    a.compact(targetFileBytes = 1L, autoRehash = true)
+    // the advised migration, mid-stream: the watch goes quiet and the
+    // pairs still equal the from-scratch truth
+    a.rehash(a.widthAdvisory().get)
+    a.compact(targetFileBytes = 1L)
     assert(a.widthAdvisory() == None, "migrated: the watch goes quiet")
     a.ingest(b2, batchId = Some(2L))
-    // …and equals the manual migration exactly
-    val b = new EmbedStore(spark, dirB, thresholdE6 = T, bits = 2)
-    b.ingest(b0, batchId = Some(0L))
-    b.ingest(b1, batchId = Some(1L))
-    b.rehash(8)
-    b.compact(targetFileBytes = 1L)
-    b.ingest(b2, batchId = Some(2L))
-    assert(rows(spark.read.parquet(s"$dirA/postings")) ==
-      rows(spark.read.parquet(s"$dirB/postings")))
-    assert(rows(a.pairs.drop("batch")) == rows(b.pairs.drop("batch")))
+    assert(a.lastAdvisory == None)
     assert(rows(a.pairs.drop("batch")) == rows(want))
-    // both pins moved to 8; a plain compact() never migrates
-    Seq(dirA, dirB).foreach { d =>
-      val meta = new String(java.nio.file.Files.readAllBytes(
-        new java.io.File(s"$d/store.meta").toPath), "UTF-8")
-      assert(meta.contains("bits=8"), meta)
-    }
+    val metaA = new String(java.nio.file.Files.readAllBytes(
+      new java.io.File(s"$dirA/store.meta").toPath), "UTF-8")
+    assert(metaA.contains("bits=8"), metaA)
     // an adequately-sized store stays advisory-free end to end
     val dirC = Files.createTempDirectory("embadvC").toFile.getAbsolutePath
     val c = new EmbedStore(spark, dirC, thresholdE6 = T) // default bits = 8
     c.ingest(b0, batchId = Some(0L))
     assert(c.lastAdvisory == None && c.widthAdvisory() == None)
-    c.compact(targetFileBytes = 1L, autoRehash = true) // no-op migration
+    c.compact(targetFileBytes = 1L)
     val metaC = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(s"$dirC/store.meta").toPath), "UTF-8")
     assert(metaC.contains("bits=8"))

@@ -345,7 +345,7 @@ class MediaStoreSpec extends SparkSpec {
     val c1 = clipRows("video", 11L -> Seq(fh(1), fh(2)),
       13L -> Seq(fh(2), fh(3)))
     store.ingestClips(c0, batchId = Some(0L))
-    store.compact(targetFileBytes = 1L) // the post-compact widen path
+    store.compact(targetFileBytes = 1L) // the post-compact spread path
     store.ingestClips(c1, batchId = Some(1L))
     store.ingestClips(c1, batchId = Some(1L)) // at-least-once replay
     assert(store.lastCommitted("clipframes") == 1L &&

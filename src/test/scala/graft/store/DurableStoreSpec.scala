@@ -8,10 +8,10 @@ import java.nio.file.Files
 
 /** The shared [[DurableStore]] machinery the durable stores' ingest
   * posture rests on: the replay-guard anti-join dispatch, the footer-
-  * stat unmarked probe, the small-regime scheduling window (AQE and
-  * shuffle width, session-scoped, restored by unset) and the scan-width
-  * estimate — each pinned on a bare test store over hand-written
-  * tables.
+  * stat unmarked probe, the footer cache both footer decisions share
+  * and the small-regime scheduling window (AQE and shuffle width,
+  * session-scoped, restored by unset) — each pinned on a bare test
+  * store over hand-written tables.
   */
 class DurableStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -30,7 +30,7 @@ class DurableStoreSpec extends SparkSpec {
     def guardAnti(pr: DataFrame, stored: DataFrame, keys: Seq[String],
         table: String): DataFrame =
       probeAntiJoin(pr, stored, keys, table)
-    def scanWidth(table: String): Int = plannedScanWidth(table)
+    def footerRows(table: String): Option[Long] = tableFooterRows(table)
     def allMarked(table: String): Option[Boolean] = batchAllMarked(table)
     def unmarkedProbe(table: String, df: DataFrame): Boolean =
       hasUnmarkedRows(table, df)
@@ -278,28 +278,17 @@ class DurableStoreSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
   }
 
-  test("plannedScanWidth divides by the divisor Spark uses (minPartitionNum aware)") {
-    // the ADVICE fix: with spark.sql.files.minPartitionNum configured
-    // BELOW defaultParallelism the real maxSplitBytes grows and the
-    // real scan narrows — the estimate must still err LOW (≤ the
-    // planned width), or a needed post-compact widen gets skipped.
-    val dir = Files.createTempDirectory("bt5").toFile.getAbsolutePath
-    val probe = new Probe(spark, dir)
-    // ~9 MB of incompressible longs in ONE file: big enough that
-    // total/minPartitionNum dominates the 4 MB open cost
-    spark.range(1150000).select(xxhash64(col("id")).as("id"))
-      .coalesce(1).write.parquet(s"$dir/t")
-    try {
-      spark.conf.set("spark.sql.files.minPartitionNum", "1")
-      val actual = spark.read.parquet(s"$dir/t").rdd.getNumPartitions
-      val est = probe.scanWidth("t")
-      assert(est <= actual,
-        s"estimate must err low: est=$est actual=$actual")
-      // pre-fix arithmetic (divide by defaultParallelism) would
-      // estimate ≥ 2 here while Spark plans 1 partition
-      assert(est == actual,
-        s"9 MB / minPartitionNum=1 plans one split: est=$est actual=$actual")
-    } finally spark.conf.unset("spark.sql.files.minPartitionNum")
+  test("one footer open serves both decisions: a row count leaves the batch stats cached") {
+    // tableFooterRows and batchAllMarked read the same footers: the
+    // walk that counts rows caches each file's batch min/max too, so a
+    // later unmarked probe decides with no cold read at all
+    val dir = Files.createTempDirectory("bt11").toFile.getAbsolutePath
+    Seq(0L, 1L, 7L).toDF("batch").select(col("batch").cast(LongType))
+      .coalesce(1).write.parquet(s"$dir/m")
+    assert(new Probe(spark, dir).footerRows("m") == Some(3L))
+    val noColdReads = new Probe(spark, dir, coldCap = 0)
+    assert(noColdReads.allMarked("m") == Some(true),
+      "the row count's footer read must serve the batch-stat verdict")
   }
 
   test("open refuses a path with no shape pin, and a pin missing a required field") {

@@ -28,7 +28,6 @@ class StoreListingSpec extends SparkSpec {
       tableBytesAtMost(table, cap)
     def footerRows(table: String): Option[Long] = tableFooterRows(table)
     def allMarked(table: String): Option[Boolean] = batchAllMarked(table)
-    def scanWidth(table: String): Int = plannedScanWidth(table)
     def compactCount(table: String, target: Long): Int =
       compactedFileCount(s"$p/$table", target)
   }
@@ -85,7 +84,6 @@ class StoreListingSpec extends SparkSpec {
           probe.bytesAtMost("t", Long.MaxValue),
           probe.footerRows("t"),
           probe.allMarked("t"),
-          probe.scanWidth("t"),
           probe.compactCount("t", target))
       }
     } finally spark.conf.set(thrKey, thr)
@@ -109,15 +107,10 @@ class StoreListingSpec extends SparkSpec {
           spark.sparkContext.hadoopConfiguration))
       try r.getRecordCount finally r.close()
     }.sum
-    val conf = spark.sessionState.conf
-    val openCost = conf.filesOpenCostInBytes
-    val total = dataBytes + data.size * openCost
-    val maxSplit = math.max(1L, math.min(conf.filesMaxPartitionBytes,
-      math.max(openCost, total / spark.sparkContext.defaultParallelism)))
     val parquetBytes = parquet.map(_.getLen).sum
 
-    val (listed, flowBytes, small, atMost, footerRows, marked, width,
-      compactK) = got
+    val (listed, flowBytes, small, atMost, footerRows, marked, compactK) =
+      got
     assert(listed == old.map(st => st.getPath.toString -> st.getLen).toSet)
     assert(old.exists(_.getPath.getName == ".side.crc") &&
       old.exists(_.getPath.getName == "_SUCCESS"))
@@ -127,7 +120,6 @@ class StoreListingSpec extends SparkSpec {
     assert(atMost)
     assert(rows == 3000L && footerRows == Some(rows))
     assert(marked == Some(true))
-    assert(width == math.ceil(total.toDouble / maxSplit).toInt)
     assert(compactK == ((parquetBytes + target - 1) / target).toInt &&
       compactK > 1)
   }
